@@ -41,8 +41,9 @@ def _gram_bucket_sign(gram: str, dim: int) -> tuple:
 # (string-key memo measured 2.5x on the pure-Python loop, bit-identical
 # output). Module state persists across Arrow batches in a reused Python
 # worker — the same heavyweight-init-once pattern as the neural-model
-# singleton. Size-capped as a safety valve; at the cap new grams are
-# hashed directly (never evicted, never wrong).
+# singleton. Keyed by dim, and each dim's memo is size-capped at
+# _GRAM_CACHE_MAX grams as a safety valve; at the cap new grams are hashed
+# directly (never evicted, never wrong).
 _GRAM_CACHE: dict = {}
 _GRAM_CACHE_MAX = 1 << 20
 

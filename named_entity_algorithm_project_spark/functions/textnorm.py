@@ -2,11 +2,15 @@
 
 Each has a pure-python form (used inside Arrow-batched UDFs and the pandas
 test oracle) and, where useful, a Column-expression form so Catalyst can run
-it JVM-side in relational stages.
+it JVM-side in relational stages. The linking rules (norm trim, short-vs-long
+guard, adaptive threshold, type compatibility) have exactly one definition
+each here; the oracle, the driver-local linker and the distributed gate all
+use them.
 """
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import Column
@@ -35,11 +39,22 @@ def normalize_text_col(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
+#: Whitespace a linking norm or entity type is trimmed of: ASCII
+#: whitespace, the set normalize_text collapses inside detector entities.
+NORM_WS = " \t\n\r\x0b\x0c"
+
+
 def normalize_entity(value: object) -> str:
     """Trim surrounding whitespace only (app.py:2946-2961)."""
     if value is None:
         return ""
-    return str(value).strip()
+    return str(value).strip(NORM_WS)
+
+
+def normalize_entity_col(col: Column) -> Column:
+    """Column form of :func:`normalize_entity`. ``btrim`` with an explicit
+    set, not a regex: it runs in the corpus-scale vocabulary scan."""
+    return F.btrim(col, F.lit(NORM_WS))
 
 
 def normalize_phrase(text: object) -> str:
@@ -83,6 +98,16 @@ def can_merge_terms(a: str, b: str) -> bool:
     return True
 
 
+def can_merge_terms_col(a: Column, b: Column) -> Column:
+    """Column form of :func:`can_merge_terms`."""
+    min_len = F.least(F.length(a), F.length(b))
+    return (
+        (a != b)
+        & (min_len > 0)
+        & ((min_len > 2) | (F.length(a) == F.length(b)))
+    )
+
+
 def adaptive_threshold(term: str, base: float) -> float:
     """Per-term similarity floor by compact length (app.py:3003-3012)."""
     length = len((term or "").replace(" ", ""))
@@ -106,7 +131,7 @@ def adaptive_threshold_floor(base: float) -> float:
 
 def adaptive_threshold_col(term: Column, base: float) -> Column:
     """Column form of :func:`adaptive_threshold` for the candidate-pair table."""
-    length = F.length(F.regexp_replace(term, r"\s", ""))
+    length = F.length(F.replace(term, F.lit(" "), F.lit("")))
     b = F.lit(float(base))
     return (
         F.when(length <= 3, F.greatest(F.lit(0.95), b))
@@ -117,15 +142,31 @@ def adaptive_threshold_col(term: Column, base: float) -> Column:
 
 
 def types_compatible(types_a, types_b) -> bool:
-    """Non-UNKNOWN type sets must intersect (app.py:3015-3024)."""
-    types_a = set(types_a or ())
-    types_b = set(types_b or ())
-    if not types_a and not types_b:
-        return True
-    clean_a = {t for t in types_a if t and t != "UNKNOWN"}
-    clean_b = {t for t in types_b if t and t != "UNKNOWN"}
+    """Non-UNKNOWN type sets must intersect (app.py:3015-3024); empty type
+    strings count as unknown, and so does a missing set."""
+    clean_a = {t for t in types_a or () if t and t != "UNKNOWN"}
+    clean_b = {t for t in types_b or () if t and t != "UNKNOWN"}
     if clean_a and clean_b:
         return not clean_a.isdisjoint(clean_b)
-    if not clean_a and not clean_b:
-        return True
-    return False
+    return not clean_a and not clean_b
+
+
+def types_compatible_col(types_a: Column, types_b: Column) -> Column:
+    """Column form of :func:`types_compatible` on two array<string>
+    columns (NULL = missing set)."""
+    unknown = F.array(F.lit(""), F.lit("UNKNOWN"))
+    clean_a = F.array_except(F.coalesce(types_a, F.array()), unknown)
+    clean_b = F.array_except(F.coalesce(types_b, F.array()), unknown)
+    both_clean = (F.size(clean_a) > 0) & (F.size(clean_b) > 0)
+    both_empty = (F.size(clean_a) == 0) & (F.size(clean_b) == 0)
+    return F.when(both_clean, F.arrays_overlap(clean_a, clean_b)).otherwise(
+        both_empty
+    )
+
+
+def compute_base_threshold(n_rows: int) -> float:
+    """app.py:3275-3280 — corpus-size-adaptive base threshold. Python only:
+    every path computes it once on the driver from the linkable row count."""
+    if n_rows <= 0:
+        return 0.80
+    return 0.80 + min(0.05, 0.02 * math.log10(max(n_rows / 1000, 1e-6)))

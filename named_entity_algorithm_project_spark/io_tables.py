@@ -42,10 +42,9 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
-# On disk the bucket lives ONLY in the directory name (bucket=K) — both the
-# sequential per-bucket markers and the batch partitionBy write then share
-# one file layout, and read_lineage recovers the column via partition
-# discovery.
+# On disk the bucket lives ONLY in the directory name (bucket=K) — one
+# marker directory per bucket, and read_lineage recovers the column via
+# partition discovery.
 LINEAGE_FILE_SCHEMA = T.StructType(
     [f for f in LINEAGE_SCHEMA.fields if f.name != "bucket"]
 )
@@ -134,50 +133,6 @@ def read_lineage(spark: SparkSession, paths: StageAPaths) -> Optional[DataFrame]
     )
 
 
-def commit_bucket(
-    spark: SparkSession,
-    paths: StageAPaths,
-    bucket: int,
-    extracted: DataFrame,
-    run_id: str,
-) -> dict:
-    """Write one bucket's combined extraction output; the single write job
-    also collects the lineage metrics via ``observe`` (no extra count jobs),
-    and the lineage marker write is the commit point."""
-    from pyspark.sql import Observation
-
-    t0 = time.time()
-    obs = Observation(f"stage_a_bucket_{bucket}")
-    observed = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum(F.size("ex.mentions")).alias("n_mentions"),
-        F.sum(F.size("ex.abbreviations")).alias("n_abbrevs"),
-    )
-    observed.write.mode("overwrite").parquet(paths.extraction_bucket(bucket))
-    metrics = obs.get
-    n_turns = metrics["n_turns"] or 0
-    n_mentions = metrics["n_mentions"] or 0
-    n_abbrevs = metrics["n_abbrevs"] or 0
-    wall_ms = int((time.time() - t0) * 1000)
-
-    row = [(n_turns, n_mentions, n_abbrevs, wall_ms, None, run_id)]
-    lineage = local_df(spark, row, LINEAGE_FILE_SCHEMA).withColumn(
-        "committed_at", F.current_timestamp()
-    )
-    # marker write is the commit point
-    lineage.coalesce(1).write.mode("overwrite").parquet(
-        paths.lineage_bucket(bucket)
-    )
-    return {
-        "bucket": bucket,
-        "n_turns": n_turns,
-        "n_mentions": n_mentions,
-        "n_abbrevs": n_abbrevs,
-        "wall_ms": wall_ms,
-    }
-
-
 def _reread_bucket_stats(
     spark: SparkSession, paths: StageAPaths, written: List[str]
 ) -> dict:
@@ -217,10 +172,10 @@ def commit_buckets_batch(
     the per-bucket lineage markers (each marker write stays the commit point
     for its bucket, so the read side's contract is unchanged).
 
-    Rationale: the per-bucket loop (commit_bucket) runs n_buckets sequential
-    Spark jobs — at 1000 buckets the per-job fixed cost dominates the stage.
-    This path amortizes it: 1 extraction+write job + 1 stats job + n tiny
-    1-row marker writes. A crash before any marker leaves the bucket
+    Rationale: a per-bucket loop would run n_buckets sequential Spark jobs
+    — at 1000 buckets the per-job fixed cost dominates the stage. This
+    path amortizes it: 1 extraction+write job + 1 stats job + n tiny 1-row
+    marker writes. A crash before any marker leaves the bucket
     uncommitted (data present but invisible to readers) and resume rewrites
     it in place via the same dynamic overwrite.
 

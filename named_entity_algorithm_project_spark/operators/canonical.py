@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..dictionaries import ACRONYM_SET
 from ..functions.localrel import local_df
+from ..functions.textnorm import normalize_entity_col
 from .linking import SKIP_TYPES
 
 #: the reference's apply_canonical_merge_map skip set (app.py:1824) is
@@ -80,7 +81,7 @@ def apply_canonical_map(
     ``canonical_map`` is small relative to the corpus (one row per unique
     non-value norm) — broadcast it.
     """
-    linkable_norm = F.trim(F.col("entity"))
+    linkable_norm = normalize_entity_col(F.col("entity"))
     is_value = F.upper(F.col("entity_type")).isin(*SKIP_TYPES)
 
     with_norm = mentions.withColumn("norm", linkable_norm)

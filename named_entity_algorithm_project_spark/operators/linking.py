@@ -14,12 +14,13 @@ This is exact (same formula as sklearn TfidfVectorizer char_wb 3-5 +
 cosine_similarity) but never materializes N² — only pairs that share at
 least one n-gram, which is also the only set that can score > 0.
 
-The DEFAULT candidate strategy tightens this further with ppjoin-style
-prefix filtering (:func:`similarity_pairs_prefix`): only pairs sharing a
-gram in one side's high-weight PREFIX can reach the gate floor
-(Cauchy–Schwarz over the low-weight suffixes), so the join volume falls
-from Σ_g df_g² to Σ_g df_g·prefix_df_g — measured 15× on a 62k-norm
-corpus with the identical gated edge set (scripts/prefix_bench.py).
+The candidate join tightens this further with ppjoin-style prefix
+filtering (:func:`similarity_pairs_prefix`): only pairs sharing a gram in
+one side's high-weight PREFIX can reach the gate floor (Cauchy–Schwarz
+over the low-weight suffixes), so the join volume falls from Σ_g df_g² to
+Σ_g df_g·prefix_df_g — measured 15× on a 62k-norm corpus with the
+identical gated edge set (scripts/prefix_bench.py). The naive
+:func:`similarity_pairs` stays as the tests' reference for it.
 
 Skew: ubiquitous n-grams (" po", "ly") make some (a, b) partial products
 land on few reducers; the pair-sum aggregation is explicitly salted
@@ -28,8 +29,8 @@ splitting. But salting only fixes the REDUCE side — the join *output* is
 quadratic in per-n-gram document frequency: an n-gram present in 10⁶ norms
 emits ~10¹² candidate rows before any aggregation. ``candidate_max_df``
 drops such n-grams from the join entirely (the classic prefix-filtered
-similarity join). It is AUTO-ENABLED above ``auto_block_min_vocab`` unique
-norms (default 50k) at ``min(5% of the vocabulary, auto_block_df_abs)`` —
+similarity join). It is AUTO-ENABLED above ``AUTO_BLOCK_MIN_VOCAB`` unique
+norms (50k) at ``min(5% of the vocabulary, AUTO_BLOCK_DF_ABS)`` —
 the absolute bound matters because the join output is Σ_g df_g², quadratic
 in per-gram df whatever the fraction: below the threshold the
 small-corpus reference parity is exact; above
@@ -41,37 +42,48 @@ the exact cosine, measured short by <=0.06 with >=0.99 retention of pairs
 and the abbreviation/alias edge unions carry most true merges anyway
 (SURVEY §7.4).
 
-Edge gates (reference parity, app.py:3140-3183):
+Edge gates (reference parity, app.py:3140-3183; each scalar rule has one
+Python and one Column definition in functions/textnorm.py):
   * protected-term pairs never merge (both endpoints protected)
   * score >= min(adaptive_threshold(a), adaptive_threshold(b))   [sic — the
     reference takes the *min* of the two per-term floors, app.py:3172-3176]
-  * short-vs-long guard (_can_merge_terms, app.py:2993-3000)
+  * short-vs-long guard (can_merge_terms, app.py:2993-3000)
   * non-UNKNOWN type sets must intersect (app.py:3015-3024), after one round
     of abbreviation-link type-union propagation (app.py:3151-3156; the
     reference mutates type sets sequentially per link — we pin the
     order-free one-round union, gated on the original sets)
+
+Small uncapped vocabularies skip Spark and run the same cascade in Python
+(:func:`oracle.link_vocabulary`, shared with the pandas oracle).
 """
 
 from __future__ import annotations
 
-import math
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Optional, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark.sql import Window
-
 from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
+from ..functions.localrel import local_df
 from ..functions.ngrams import char_wb_ngrams_col
-from ..functions.textnorm import adaptive_threshold_col, adaptive_threshold_floor
+from ..functions.textnorm import (
+    adaptive_threshold_col,
+    adaptive_threshold_floor,
+    can_merge_terms_col,
+    compute_base_threshold,
+    normalize_entity_col,
+    types_compatible_col,
+)
 
 SKIP_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
 
-#: Under cap_scope="candidates" a heavy df-cap can strip so much squared
-#: mass that the Cauchy–Schwarz suffix rule yields an EMPTY prefix; this
+#: A heavy df-cap can strip so much squared mass that the
+#: Cauchy–Schwarz suffix rule yields an EMPTY prefix; this
 #: guarantees the top-MIN_PREFIX_RANK sub-cap grams (rarest, most
 #: identity-carrying) always join the prefix so case/morphology variants
 #: stay reachable. Covered by tests/test_linking.py's planted-pair recall
@@ -89,8 +101,15 @@ MIN_PREFIX_RANK = 4
 #: both safe (actual sizes, not estimates, and well under the 64 MiB
 #: session threshold) and shuffle-free. 50k norms ≈ 650k grams ≈ ~20 MB
 #: exchange-side — inside the broadcast envelope with the measured 5-10x
-#: inflation on an 8g driver; the cap aligns with auto_block_min_vocab.
+#: inflation on an 8g driver; the cap aligns with AUTO_BLOCK_MIN_VOCAB.
 MERGE_HINT_MIN_VOCAB = 50_000
+
+#: AUTO df-cap: above AUTO_BLOCK_MIN_VOCAB unique norms the similarity join
+#: drops n-grams with df > min(max(AUTO_BLOCK_DF_FRAC·N, 100),
+#: AUTO_BLOCK_DF_ABS) from candidate generation (see the module docstring)
+AUTO_BLOCK_MIN_VOCAB = 50_000
+AUTO_BLOCK_DF_FRAC = 0.05
+AUTO_BLOCK_DF_ABS = 4_000
 
 #: Second, higher bound for the prefix score SIDES (the weights views):
 #: below it they stay UNPINNED — they read the materialized weights
@@ -145,7 +164,7 @@ def linkable_mentions(mentions: DataFrame) -> DataFrame:
     display entity — app.py:3256, normalize_entity app.py:2946-2961)."""
     return (
         mentions.filter(~F.upper(F.col("entity_type")).isin(*SKIP_TYPES))
-        .withColumn("norm", F.trim(F.col("entity")))
+        .withColumn("norm", normalize_entity_col(F.col("entity")))
         .filter(F.col("norm") != "")
     )
 
@@ -155,16 +174,9 @@ def norm_profiles(linkable: DataFrame) -> DataFrame:
     return linkable.groupBy("norm").agg(
         F.count(F.lit(1)).alias("freq"),
         F.array_sort(
-            F.collect_set(F.upper(F.trim(F.col("entity_type"))))
+            F.collect_set(F.upper(normalize_entity_col(F.col("entity_type"))))
         ).alias("types"),
     )
-
-
-def compute_base_threshold(n_rows: int) -> float:
-    """app.py:3275-3280 — corpus-size-adaptive base threshold."""
-    if n_rows <= 0:
-        return 0.80
-    return 0.80 + min(0.05, 0.02 * math.log10(max(n_rows / 1000, 1e-6)))
 
 
 def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
@@ -258,8 +270,6 @@ def similarity_pairs_prefix(
     salt_partitions: int = 16,
     candidate_max_df: Optional[int] = None,
     df_counts: Optional[DataFrame] = None,
-    cap_scope: str = "candidates",
-    weights_materialized: bool = False,
     large_vocab: bool = True,
     score_pin: bool = False,
 ) -> DataFrame:
@@ -284,31 +294,23 @@ def similarity_pairs_prefix(
     the gated edge set is IDENTICAL to the naive join's (pinned in
     tests/test_linking.py).
 
-    ``candidate_max_df`` composes via ``cap_scope``:
+    ``candidate_max_df`` bounds CANDIDATE GENERATION only (grams with
+    df>cap never join), while scoring runs over the FULL vectors — every
+    emitted score is the EXACT cosine. The gated edge set is a SUPERSET of
+    the naive capped path's: a naive-capped edge shares a sub-cap gram
+    scoring ≥ the gate, which cannot happen with all shared sub-cap grams
+    in both suffixes (the Cauchy–Schwarz bound), so the pair is a
+    candidate here too, and its exact score ≥ the naive lower bound. This
+    closes the measured quality hole where a morphology-heavy vocabulary
+    (every gram of a planted alias pair moderately common) drove even
+    cosine-1.0 case variants' capped lower-bound scores under the gate —
+    planted-pair recall collapsed to 0 while the exact join held 0.5+
+    (test_planted_pair_recall_under_cap pins the recovery).
 
-    * ``"candidates"`` (default): the cap bounds CANDIDATE GENERATION
-      only (grams with df>cap never join), while scoring runs over the
-      FULL vectors — every emitted score is the EXACT cosine. The gated
-      edge set is a SUPERSET of the naive capped path's: a naive-capped
-      edge shares a sub-cap gram scoring ≥ the gate, which cannot happen
-      with all shared sub-cap grams in both suffixes (the Cauchy–Schwarz
-      bound), so the pair is a candidate here too, and its exact score
-      ≥ the naive lower bound. This closes the measured quality hole
-      where a morphology-heavy vocabulary (every gram of a planted alias
-      pair moderately common) drove even cosine-1.0 case variants' capped
-      lower-bound scores under the gate — planted-pair recall collapsed
-      to 0 while the exact join held 0.5+ (test_planted_pair_recall_
-      under_cap pins the recovery).
-    * ``"all"``: the cap drops grams from scoring too — term-for-term
-      equal to the naive capped path's lower-bound scores, identical
-      gated edges (the A/B parity mode scripts/prefix_bench.py hashes).
+    ``weights`` feeds several consumers (prefix marking, the candidate
+    join, the score sides): pass it materialized (``localCheckpoint``) so
+    the TF-IDF explode/agg DAG runs once.
     """
-    # the weights feed several consumers below (prefix marking, the
-    # candidate join, score sides) — materialize once instead of
-    # re-running the TF-IDF explode/agg/join DAG per consumer (skipped
-    # when the caller already checkpointed them, e.g. to derive df_counts)
-    if not weights_materialized:
-        weights = weights.localCheckpoint(eager=True)
     cand_weights = weights
     if candidate_max_df is not None and df_counts is not None:
         # merge-join hint (large vocab only) — gram-vocabulary-sized; see
@@ -318,7 +320,6 @@ def similarity_pairs_prefix(
             large_vocab,
         )
         cand_weights = weights.join(keep, "ngram")
-    score_weights = weights if cap_scope == "candidates" else cand_weights
     # float-safety margin widens prefixes slightly (never prunes a pair the
     # exact arithmetic could pass)
     t_eff = max(gate_floor - 1e-9, 0.0)
@@ -333,17 +334,16 @@ def similarity_pairs_prefix(
     # the prefix while the not-yet-covered tail could still reach the floor
     marked = cand_weights.withColumn("_suffix_before", total - cum + w2)
     keep_prefix = F.col("_suffix_before") >= t_eff
-    if cap_scope == "candidates" and candidate_max_df is not None:
+    if candidate_max_df is not None:
         # Under a heavy cap a vector can lose so much squared mass that the
         # suffix rule yields an EMPTY prefix (capped total < gate floor) —
         # consistent with the naive capped gate (its lower-bound score
-        # cannot pass either) but fatal for exact scoring, which this
-        # scope exists to provide. Guarantee a minimum prefix of the
-        # top-weight SUB-CAP grams: those are the rarest, most
-        # identity-carrying grams (df of a few), so the extra candidate
-        # volume is tiny while pairs whose similarity lives in rare grams
-        # (case/morphology variants of the same surface form) stay
-        # reachable.
+        # cannot pass either) but fatal for exact scoring. Guarantee a
+        # minimum prefix of the top-weight SUB-CAP grams: those are the
+        # rarest, most identity-carrying grams (df of a few), so the extra
+        # candidate volume is tiny while pairs whose similarity lives in
+        # rare grams (case/morphology variants of the same surface form)
+        # stay reachable.
         rank = F.row_number().over(order_win)
         keep_prefix = keep_prefix | (rank <= F.lit(MIN_PREFIX_RANK))
     marked = marked.withColumn("_keep", keep_prefix)
@@ -376,11 +376,10 @@ def similarity_pairs_prefix(
     # min(n_a,n_b)·maxw(a)·maxw(b)  — both exact inequalities, so pruning
     # on their min keeps the gated edge set IDENTICAL (the binary-cosine
     # √(n_a/n_b) count-ratio bound is NOT sound for TF-IDF weights and is
-    # deliberately not used). Stats come from the SCORE vectors (full
-    # vectors under cap_scope="candidates") because the emitted score is
-    # the full cosine.
+    # deliberately not used). Stats come from the full vectors because the
+    # emitted score is the full cosine.
     stats = _dim_hint(  # vocabulary-sized — sort-merge at large vocab
-        score_weights.groupBy("norm").agg(
+        weights.groupBy("norm").agg(
             F.max("w").alias("_maxw"),
             F.sum("w").alias("_l1"),
             F.count(F.lit(1)).alias("_n"),
@@ -430,13 +429,13 @@ def similarity_pairs_prefix(
     # adaptive broadcast threshold while the string-keyed hash relation it
     # would build is 512 MB+ — the r6 tier-4 OOM (see the constant's doc).
     left = _dim_hint(
-        score_weights.select(
+        weights.select(
             F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
         ),
         score_pin,
     )
     right = _dim_hint(
-        score_weights.select(
+        weights.select(
             F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
         ),
         score_pin,
@@ -594,8 +593,6 @@ def domain_alias_edges(all_nodes: DataFrame) -> DataFrame:
             ).select(F.col("norm").alias("src"), F.lit(alias).alias("dst"))
         )
     if not frames:
-        from ..functions.localrel import local_df
-
         return local_df(
             all_nodes.sparkSession, [], "src string, dst string"
         )
@@ -648,28 +645,9 @@ def gate_scored_pairs(
                 adaptive_threshold_col(F.col("b"), base),
             )
         )
-        # short-vs-long guard (_can_merge_terms): min length <= 2 with a
-        # longer partner never merges
-        .filter(
-            ~(
-                (F.least(F.length("a"), F.length("b")) <= 2)
-                & (F.length("a") != F.length("b"))
-            )
-        )
-        .filter(_types_compatible_cols(F.col("types_a"), F.col("types_b")))
+        .filter(can_merge_terms_col(F.col("a"), F.col("b")))
+        .filter(types_compatible_col(F.col("types_a"), F.col("types_b")))
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-
-
-def _types_compatible_cols(types_a, types_b):
-    """Column form of _types_compatible (app.py:3015-3024) on two
-    array<string> columns (missing/empty treated as {UNKNOWN})."""
-    clean_a = F.array_remove(F.coalesce(types_a, F.array()), "UNKNOWN")
-    clean_b = F.array_remove(F.coalesce(types_b, F.array()), "UNKNOWN")
-    both_clean = (F.size(clean_a) > 0) & (F.size(clean_b) > 0)
-    both_empty = (F.size(clean_a) == 0) & (F.size(clean_b) == 0)
-    return F.when(both_clean, F.arrays_overlap(clean_a, clean_b)).otherwise(
-        both_empty
     )
 
 
@@ -689,8 +667,8 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
             F.coalesce(F.col("ex.mentions"), F.array()),
             lambda m: F.struct(
                 F.lit("M").alias("kind"),
-                F.trim(m["entity"]).alias("k1"),
-                F.upper(F.trim(m["entity_type"])).alias("k2"),
+                normalize_entity_col(m["entity"]).alias("k1"),
+                F.upper(normalize_entity_col(m["entity_type"])).alias("k2"),
                 F.upper(m["entity_type"]).alias("_raw"),
             ),
         ),
@@ -703,8 +681,8 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
             F.coalesce(F.col("ex.abbreviations"), F.array()),
             lambda a: F.struct(
                 F.lit("A").alias("kind"),
-                F.trim(a["abbr"]).alias("k1"),
-                F.trim(a["expansion"]).alias("k2"),
+                normalize_entity_col(a["abbr"]).alias("k1"),
+                normalize_entity_col(a["expansion"]).alias("k2"),
                 F.lit("").alias("_raw"),
             ),
         ),
@@ -723,7 +701,8 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
 #: cascade on it is pure scheduling overhead — measured ~5-7s at a
 #: 26-norm bench vocabulary for edge sets a python loop builds in
 #: milliseconds). Above it — or under an explicit/AUTO df-cap or a
-#: non-tfidf scorer — the distributed path runs unchanged.
+#: non-tfidf scorer — the distributed path runs. Read at call time, so
+#: tests force the distributed path by setting it to 0.
 TFIDF_LOCAL_MAX_VOCAB = 5_000
 #: bounded-collect guard for the fused table (norm-type rows + abbrev
 #: pairs); at TFIDF_LOCAL_MAX_VOCAB norms the fused table is a few times
@@ -732,48 +711,23 @@ TFIDF_LOCAL_MAX_VOCAB = 5_000
 LOCAL_FUSED_ROW_CAP = 60_000
 
 
-def _types_compatible_py(types_a, types_b) -> bool:
-    """Python mirror of _types_compatible_cols — COLUMN-form semantics
-    (only the literal "UNKNOWN" is removed; empty strings are real types,
-    unlike functions.textnorm.types_compatible which drops falsy values)."""
-    a = [t for t in (types_a or []) if t != "UNKNOWN"]
-    b = [t for t in (types_b or []) if t != "UNKNOWN"]
-    if a and b:
-        return not set(a).isdisjoint(b)
-    return not a and not b
+def auto_df_cap(n_norms: int) -> Optional[int]:
+    """The AUTO df-cap for a vocabulary size, None while the join runs exact."""
+    if n_norms <= AUTO_BLOCK_MIN_VOCAB:
+        return None
+    return min(max(int(AUTO_BLOCK_DF_FRAC * n_norms), 100), AUTO_BLOCK_DF_ABS)
 
 
-_WS_JAVA = __import__("re").compile(r"[ \t\n\x0b\f\r]")
-
-
-def _adaptive_threshold_py(term: str, base: float) -> float:
-    """Python mirror of adaptive_threshold_col — Java-\\s semantics for the
-    compact length (the scalar helper in textnorm strips only spaces)."""
-    length = len(_WS_JAVA.sub("", term or ""))
-    if length <= 3:
-        return max(0.95, base)
-    if length <= 4:
-        return max(0.92, base)
-    if length <= 6:
-        return max(0.88, base)
-    return max(base, 0.82)
-
-
-def _build_linking_tables_local(
-    spark, fused_rows, base: float, n_norms: int
-) -> LinkingTables:
-    """Driver-side construction of the LinkingTables from the COLLECTED
-    fused (kind, k1, k2, cnt) table — a faithful python re-expression of
-    the distributed steps below (gated-abbrev edges, one-round type-union
-    propagation, domain-alias edges, exact TF-IDF cosine + gate cascade),
-    sharing the scalar helpers and the oracle's scorer. Engages only
-    uncapped (the AUTO df-cap cannot trigger at this size) with the tfidf
-    scorer, where every candidate strategy yields the identical gated
-    edge set (pinned in tests). Output parity with the distributed path
-    is pinned by tests/test_linking.py::test_local_path_parity."""
+def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
+    """Driver-side LinkingTables from the COLLECTED fused (kind, k1, k2,
+    cnt) table: the oracle's cascade (:func:`oracle.link_vocabulary`) over
+    the collected vocabulary, returned as local relations. Engages only
+    uncapped with the tfidf scorer; parity with the distributed path is
+    pinned by tests/test_linking.py::test_local_path_parity and the
+    adversarial differential test."""
     from collections import defaultdict
 
-    from ..oracle import _tfidf_cosine_pairs
+    from ..oracle import link_vocabulary
 
     freq: dict = defaultdict(int)
     types: dict = defaultdict(set)
@@ -784,89 +738,18 @@ def _build_linking_tables_local(
             types[r["k1"]].add(r["k2"])
         else:
             abbr_pairs.add((r["k1"], r["k2"]))
-
-    protected = PROTECTED_TERMS
-    norms = sorted(freq)
-
-    # --- abbreviation edges, gated on ORIGINAL type sets -------------------
-    gated_abbr = set()
-    for s, t in abbr_pairs:
-        if s in protected and t in protected:
-            continue
-        # left-join semantics: a missing profile is a NULL side (empty list)
-        if not _types_compatible_py(
-            sorted(types[s]) if s in types else None,
-            sorted(types[t]) if t in types else None,
-        ):
-            continue
-        gated_abbr.add((s, t))
-
-    # --- one-round abbreviation type-union propagation ---------------------
-    # distributed equivalent: abbr_sym ⟕ profiles(dst).types, exploded,
-    # unioned with own types, re-collected per norm; only profile norms
-    # keep a row after the profiles_eff left join
-    neighbor_gain: dict = defaultdict(set)
-    for s, t in gated_abbr:
-        for src, dst in ((s, t), (t, s)):
-            if dst in types:
-                neighbor_gain[src] |= types[dst]
-    profiles_eff = {}
-    for n in norms:
-        eff = types[n] | neighbor_gain.get(n, set())
-        profiles_eff[n] = sorted(eff) if eff else ["UNKNOWN"]
-
-    # --- node universe + domain alias edges --------------------------------
-    all_nodes = set(norms)
-    for s, t in gated_abbr:
-        all_nodes.add(s)
-        all_nodes.add(t)
-    alias_edges = set()
-    all_nodes_full = set(all_nodes)
-    for needle, alias in sorted(DOMAIN_ALIAS_SUBSTRINGS.items()):
-        if alias in protected:
-            continue
-        for node in all_nodes:
-            if needle in node and node != alias and node not in protected:
-                alias_edges.add((node, alias))
-                all_nodes_full.add(alias)
-
-    # --- similarity edges (exact cosine, shared oracle scorer) -------------
-    sim_edges = set()
-    for (a, b), score in _tfidf_cosine_pairs(norms).items():
-        if a in protected and b in protected:
-            continue
-        if score < min(
-            _adaptive_threshold_py(a, base), _adaptive_threshold_py(b, base)
-        ):
-            continue
-        la, lb = len(a), len(b)
-        if min(la, lb) <= 2 and la != lb:
-            continue
-        if not _types_compatible_py(profiles_eff[a], profiles_eff[b]):
-            continue
-        sim_edges.add((a, b))
-
-    edges = sorted(
-        {
-            (min(s, t), max(s, t))
-            for s, t in (gated_abbr | alias_edges | sim_edges)
-            if s != t
-        }
-    )
-    extra = sorted(all_nodes_full - set(norms))
-
-    from ..functions.localrel import local_df
-
+    base = compute_base_threshold(sum(freq.values()))
+    eff_types, edges, extra = link_vocabulary(freq, types, abbr_pairs, base)
     return LinkingTables(
         norms=local_df(
             spark,
-            [(n, freq[n], profiles_eff[n]) for n in norms],
+            [(n, freq[n], eff_types[n]) for n in sorted(freq)],
             "norm string, freq bigint, types array<string>",
         ),
-        edges=local_df(spark, edges, "src string, dst string"),
-        extra_nodes=local_df(spark, [(n,) for n in extra], "norm string"),
+        edges=local_df(spark, sorted(edges), "src string, dst string"),
+        extra_nodes=local_df(spark, [(n,) for n in sorted(extra)], "norm string"),
         base_threshold=base,
-        n_norms=n_norms,
+        n_norms=len(freq),
         candidate_max_df=None,
     )
 
@@ -876,16 +759,10 @@ def build_linking_tables(
     abbrevs: DataFrame,
     salt_partitions: int = 16,
     candidate_max_df: Optional[int] = None,
-    auto_block_min_vocab: int = 50_000,
-    auto_block_df_frac: float = 0.05,
-    auto_block_df_abs: int = 4_000,
     score_source: str = "tfidf",
-    embed_dim: int = 64,
     embed_bands: Optional[int] = None,
     embed_band_bits: Optional[int] = None,
-    tfidf_candidates: str = "prefix",
     extracted: Optional[DataFrame] = None,
-    local_max_vocab: int = TFIDF_LOCAL_MAX_VOCAB,
 ) -> LinkingTables:
     """Assemble the full gated edge list for connected components.
 
@@ -901,14 +778,13 @@ def build_linking_tables(
     as the TF-IDF df-cap AUTO keys off ``n_norms``; an explicit int wins.
 
     ``candidate_max_df=None`` means AUTO: exact (no n-gram dropped) while the
-    vocabulary is under ``auto_block_min_vocab`` unique norms, else capped at
-    ``min(auto_block_df_frac * n_norms, auto_block_df_abs)``. The join's
+    vocabulary is under ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else capped at
+    ``min(AUTO_BLOCK_DF_FRAC * n_norms, AUTO_BLOCK_DF_ABS)``. The join's
     output is Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic in N
     (5% of 10⁶ is a 50k-df gram emitting 2.5G candidate rows), so the
     absolute bound is what actually caps per-gram fanout at web scale;
     scripts/linking_bench.py records the measured curves. Pass an explicit
-    int to force a cap, or ``auto_block_min_vocab=0`` to force exact at any
-    size.
+    int to force a cap.
     """
     spark = mentions.sparkSession
     # ONE corpus pass total for BOTH corpus-scale inputs: the norm profiles
@@ -929,12 +805,12 @@ def build_linking_tables(
         m_rows = linkable.select(
             F.lit("M").alias("kind"),
             F.col("norm").alias("k1"),
-            F.upper(F.trim(F.col("entity_type"))).alias("k2"),
+            F.upper(normalize_entity_col(F.col("entity_type"))).alias("k2"),
         )
         a_rows = abbrevs.select(
             F.lit("A").alias("kind"),
-            F.trim(F.col("abbr")).alias("k1"),
-            F.trim(F.col("expansion")).alias("k2"),
+            normalize_entity_col(F.col("abbr")).alias("k1"),
+            normalize_entity_col(F.col("expansion")).alias("k2"),
         ).filter((F.col("k1") != "") & (F.col("k2") != ""))
         fused_rows = m_rows.unionByName(a_rows)
     fused = (
@@ -944,33 +820,19 @@ def build_linking_tables(
     )
     # --- driver-local path for small UNCAPPED tfidf vocabularies -----------
     # (see TFIDF_LOCAL_MAX_VOCAB). One bounded collect of the fused table
-    # doubles as the size gate and the data; the distributed cascade runs
-    # whenever the gate, an explicit df-cap, a low auto_block_min_vocab, or
-    # a non-tfidf scorer says so.
+    # doubles as the size gate and the data.
     if (
         score_source == "tfidf"
         and candidate_max_df is None
-        and local_max_vocab > 0
+        and TFIDF_LOCAL_MAX_VOCAB > 0
     ):
         sample = fused.limit(LOCAL_FUSED_ROW_CAP + 1).collect()
         if len(sample) <= LOCAL_FUSED_ROW_CAP:
-            m_norm_set = {r["k1"] for r in sample if r["kind"] == "M"}
-            n_norms_l = len(m_norm_set)
-            auto_cap_would_engage = bool(
-                auto_block_min_vocab and n_norms_l > auto_block_min_vocab
-            )
-            if n_norms_l <= local_max_vocab and not auto_cap_would_engage:
-                n_rows_l = sum(
-                    int(r["cnt"]) for r in sample if r["kind"] == "M"
-                )
-                return _build_linking_tables_local(
-                    spark,
-                    sample,
-                    compute_base_threshold(n_rows_l),
-                    n_norms_l,
-                )
+            n_local = len({r["k1"] for r in sample if r["kind"] == "M"})
+            if n_local <= TFIDF_LOCAL_MAX_VOCAB and auto_df_cap(n_local) is None:
+                return _build_linking_tables_local(spark, sample)
     # identical to norm_profiles(linkable): freq = mention count per norm,
-    # types = sorted set of upper(trim(entity_type))
+    # types = sorted set of upper(normalize_entity(entity_type))
     profiles = (
         fused.filter(F.col("kind") == "M")
         .groupBy(F.col("k1").alias("norm"))
@@ -985,14 +847,8 @@ def build_linking_tables(
     ).collect()[0]
     n_rows, n_norms = int(stats["n_rows"]), int(stats["n_norms"])
     base = compute_base_threshold(n_rows)
-    if (
-        candidate_max_df is None
-        and auto_block_min_vocab
-        and n_norms > auto_block_min_vocab
-    ):
-        candidate_max_df = min(
-            max(int(auto_block_df_frac * n_norms), 100), auto_block_df_abs
-        )
+    if candidate_max_df is None:
+        candidate_max_df = auto_df_cap(n_norms)
 
     protected = sorted(PROTECTED_TERMS)
     # all vocabulary-sized dim hints key off the MEASURED vocabulary — the
@@ -1030,7 +886,7 @@ def build_linking_tables(
         .filter(
             ~(F.col("src").isin(*protected) & F.col("dst").isin(*protected))
         )
-        .filter(_types_compatible_cols(F.col("types_src"), F.col("types_dst")))
+        .filter(types_compatible_col(F.col("types_src"), F.col("types_dst")))
         .select("src", "dst")
     ).persist()
 
@@ -1085,62 +941,36 @@ def build_linking_tables(
 
     # --- similarity edges -----------------------------------------------------
     if score_source == "semantic_exact":
-        scored = semantic_pairs_exact(profiles.select("norm"), dim=embed_dim)
+        scored = semantic_pairs_exact(profiles.select("norm"))
     elif score_source == "semantic_lsh":
         tier_bands, tier_bits = semantic_lsh_tier(n_norms)
         scored = semantic_pairs_lsh(
             profiles.select("norm"),
-            dim=embed_dim,
             bands=embed_bands if embed_bands is not None else tier_bands,
             band_bits=(
                 embed_band_bits if embed_band_bits is not None else tier_bits
             ),
         )
     else:
-        weights = tfidf_weights(profiles.select("norm"), n_norms)
-        weights_materialized = False
-        if (
-            candidate_max_df is not None
-            and tfidf_candidates in ("prefix", "prefix_parity")
-        ):
-            # the df-cap keep-list AND the prefix join both consume the
-            # weights — checkpoint once here so the TF-IDF explode/agg DAG
-            # doesn't execute twice on the capped path
-            weights = weights.localCheckpoint(eager=True)
-            weights_materialized = True
+        # the df-cap keep-list and the prefix join both consume the weights
+        # — materialize them once
+        weights = tfidf_weights(profiles.select("norm"), n_norms).localCheckpoint(
+            eager=True
+        )
         tf_df_counts = (
             weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
             if candidate_max_df is not None
             else None
         )
-        if tfidf_candidates in ("prefix", "prefix_parity"):
-            # default "prefix": ppjoin-style prefix filtering — identical
-            # gated edges uncapped, EXACT-scored superset under the df-cap
-            # (cap bounds candidate generation only); "prefix_parity"
-            # reproduces the naive capped lower-bound scores bit-for-bit
-            # (A/B hashing); "all" keeps the plain inverted-index join
-            # (oracle tests / benchmarking baseline).
-            scored = similarity_pairs_prefix(
-                weights,
-                gate_floor=adaptive_threshold_floor(base),
-                salt_partitions=salt_partitions,
-                candidate_max_df=candidate_max_df,
-                df_counts=tf_df_counts,
-                cap_scope=(
-                    "candidates" if tfidf_candidates == "prefix" else "all"
-                ),
-                weights_materialized=weights_materialized,
-                large_vocab=large_vocab,
-                score_pin=n_norms > SCORE_PIN_MIN_VOCAB,
-            )
-        else:
-            scored = similarity_pairs(
-                weights,
-                salt_partitions=salt_partitions,
-                candidate_max_df=candidate_max_df,
-                df_counts=tf_df_counts,
-                large_vocab=large_vocab,
-            )
+        scored = similarity_pairs_prefix(
+            weights,
+            gate_floor=adaptive_threshold_floor(base),
+            salt_partitions=salt_partitions,
+            candidate_max_df=candidate_max_df,
+            df_counts=tf_df_counts,
+            large_vocab=large_vocab,
+            score_pin=n_norms > SCORE_PIN_MIN_VOCAB,
+        )
 
     sim_edges = gate_scored_pairs(
         scored, profiles_eff, protected, base, large_vocab=large_vocab
@@ -1166,16 +996,16 @@ def build_linking_tables(
     # repeated invocations in one session don't accumulate cache blocks.
     # The three materializations are independent — submit them from a small
     # thread pool so their stages back-fill each other's scheduling gaps
-    # (guide §2.6); Spark's scheduler handles concurrent jobs natively.
-    from concurrent.futures import ThreadPoolExecutor
+    # (guide §2.6); Spark's scheduler handles concurrent jobs natively. The
+    # pool threads inherit the caller's local properties (the kg:<phase>
+    # job description), which a plain thread does not.
+    def checkpoint(frame: DataFrame) -> DataFrame:
+        return frame.localCheckpoint(eager=True)
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_norms = pool.submit(
-            lambda: profiles_eff.localCheckpoint(eager=True)
-        )
-        f_edges = pool.submit(lambda: edges.localCheckpoint(eager=True))
-        f_extra = pool.submit(
-            lambda: extra_nodes.localCheckpoint(eager=True)
+        f_norms, f_edges, f_extra = (
+            pool.submit(inheritable_thread_target(spark)(checkpoint), frame)
+            for frame in (profiles_eff, edges, extra_nodes)
         )
         out = LinkingTables(
             norms=f_norms.result(),

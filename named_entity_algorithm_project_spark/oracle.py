@@ -7,16 +7,18 @@ oracle's (subj, pred, obj) set at P/R >= 0.95 (BASELINE.md); mention and
 canonical-map parity are tested exactly.
 
 Shared with Spark: the per-turn detector (detector.py), scalar functions
-(functions/), n-gram generator (functions/ngrams.py). Independent here: the
-orchestration — pandas groupbys, N² numpy cosine, DFS components — so a
-mismatch isolates Spark plumbing bugs.
+(functions/), n-gram generator (functions/ngrams.py), and the linking edge
+cascade :func:`link_vocabulary`, which the driver-local linker also runs.
+Independent here: the orchestration — pandas groupbys, N² numpy cosine, DFS
+components — so a mismatch with the distributed linker isolates Spark
+plumbing bugs.
 """
 
 from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
-from typing import Dict, List, Mapping, Optional, Set, Tuple
+from typing import Callable, Dict, Iterable, List, Mapping, Optional, Set, Tuple
 
 import numpy as np
 import pandas as pd
@@ -24,7 +26,13 @@ import pandas as pd
 from .detector import DEFAULT_CONFIDENCE_THRESHOLD, compile_user_patterns, extract_turn
 from .dictionaries import ACRONYM_SET, DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
 from .functions.ngrams import tf_counts
-from .functions.textnorm import adaptive_threshold, can_merge_terms, types_compatible
+from .functions.textnorm import (
+    adaptive_threshold,
+    can_merge_terms,
+    compute_base_threshold,
+    normalize_entity,
+    types_compatible,
+)
 
 SKIP_TYPES = {"PROP_VALUE", "MATERIAL_AMOUNT"}
 
@@ -139,6 +147,95 @@ def _semantic_cosine_pairs(norms: List[str]) -> Dict[Tuple[str, str], float]:
     return out
 
 
+def link_vocabulary(
+    freq: Mapping[str, int],
+    types: Mapping[str, Set[str]],
+    abbr_pairs: Iterable[Tuple[str, str]],
+    base: float,
+    pair_scores: Callable = _tfidf_cosine_pairs,
+) -> Tuple[Dict[str, List[str]], Set[Tuple[str, str]], Set[str]]:
+    """The edge cascade (app.py:3140-3183) over a collected vocabulary: the
+    one Python form of the rules the distributed gate runs as Columns.
+
+    ``freq`` keys are the trimmed linkable norms, ``types`` their trimmed
+    upper-cased type sets, ``abbr_pairs`` the trimmed non-empty
+    (abbr, expansion) pairs. Returns the effective types per norm (sorted,
+    ``["UNKNOWN"]`` when empty), the edges as ``(min, max)`` pairs without
+    self-loops, and the extra nodes: abbreviation or alias endpoints that
+    are not norms.
+    """
+    norms = sorted(freq)
+    # abbreviation links, gated on the original type sets
+    gated_abbr = {
+        (s, t)
+        for s, t in abbr_pairs
+        if not (s in PROTECTED_TERMS and t in PROTECTED_TERMS)
+        and types_compatible(types.get(s), types.get(t))
+    }
+    # one round of type-union propagation over the gated links
+    # (app.py:3151-3156, pinned order-free on the original sets)
+    effective = {n: set(types.get(n, ())) for n in norms}
+    for s, t in gated_abbr:
+        if s in effective:
+            effective[s] |= types.get(t, set())
+        if t in effective:
+            effective[t] |= types.get(s, set())
+    eff_types = {n: sorted(e) or ["UNKNOWN"] for n, e in effective.items()}
+
+    # domain-alias edges (app.py:2976-2982, 3157-3164)
+    nodes = set(norms).union(*gated_abbr)
+    alias_edges: Set[Tuple[str, str]] = set()
+    for needle, alias in sorted(DOMAIN_ALIAS_SUBSTRINGS.items()):
+        if alias in PROTECTED_TERMS:
+            continue
+        alias_edges |= {
+            (n, alias)
+            for n in nodes
+            if needle in n and n != alias and n not in PROTECTED_TERMS
+        }
+
+    # similarity edges over corpus norms
+    sim_edges = {
+        (a, b)
+        for (a, b), score in pair_scores(norms).items()
+        if not (a in PROTECTED_TERMS and b in PROTECTED_TERMS)
+        and score >= min(adaptive_threshold(a, base), adaptive_threshold(b, base))
+        and can_merge_terms(a, b)
+        and types_compatible(eff_types[a], eff_types[b])
+    }
+    edges = {
+        (min(s, t), max(s, t))
+        for s, t in gated_abbr | alias_edges | sim_edges
+        if s != t
+    }
+    extra = nodes.union(alias for _, alias in alias_edges) - set(norms)
+    return eff_types, edges, extra
+
+
+def oracle_vocabulary(
+    mentions: pd.DataFrame, abbrevs: pd.DataFrame
+) -> Tuple[Counter, Dict[str, Set[str]], Set[Tuple[str, str]]]:
+    """The linking vocabulary of a mention/abbreviation table: mention count
+    and type set per trimmed linkable norm (value types skipped, app.py:
+    3256-3263), and the trimmed non-empty abbreviation pairs."""
+    linkable = mentions[~mentions["entity_type"].str.upper().isin(SKIP_TYPES)]
+    norms = linkable["entity"].map(normalize_entity)
+    keep = norms != ""
+    freq = Counter(norms[keep])
+    types: Dict[str, Set[str]] = defaultdict(set)
+    for norm, etype in zip(norms[keep], linkable["entity_type"][keep]):
+        types[norm].add(normalize_entity(etype).upper())
+    abbr_pairs = {
+        (s, t)
+        for s, t in zip(
+            map(normalize_entity, abbrevs["abbr"]),
+            map(normalize_entity, abbrevs["expansion"]),
+        )
+        if s and t
+    }
+    return freq, types, abbr_pairs
+
+
 def oracle_linking(
     mentions: pd.DataFrame,
     abbrevs: pd.DataFrame,
@@ -148,93 +245,23 @@ def oracle_linking(
     build_linking_tables: "tfidf" or "semantic" (both feed the same gates,
     exactly as the reference's _build_cluster_maps treats its
     similarity_lookup regardless of origin)."""
-    linkable = mentions[
-        ~mentions["entity_type"].str.upper().isin(SKIP_TYPES)
-    ].copy()
-    linkable["norm"] = linkable["entity"].map(lambda s: str(s).strip())
-    linkable = linkable[linkable["norm"] != ""]
-    n_rows = len(linkable)
-
-    freq_map = Counter(linkable["norm"])
-    unique_norms = sorted(set(linkable["norm"]))
-    type_lookup: Dict[str, Set[str]] = defaultdict(set)
-    for norm, etype in zip(linkable["norm"], linkable["entity_type"]):
-        t = str(etype).strip().upper()
-        if t:
-            type_lookup[norm].add(t)
-
-    base = 0.80
-    if n_rows > 0:
-        base = 0.80 + min(0.05, 0.02 * math.log10(max(n_rows / 1000, 1e-6)))
-
-    # abbreviation links, gated on original type sets
-    abbr_links: Set[Tuple[str, str]] = set()
-    if len(abbrevs):
-        for abbr, expansion in zip(abbrevs["abbr"], abbrevs["expansion"]):
-            s, t = str(abbr).strip(), str(expansion).strip()
-            if s and t and s != t:
-                abbr_links.add((s, t))
-    gated_abbr: Set[Tuple[str, str]] = set()
-    for s, t in sorted(abbr_links):
-        if s in PROTECTED_TERMS and t in PROTECTED_TERMS:
-            continue
-        ts = type_lookup.get(s) or {"UNKNOWN"}
-        tt = type_lookup.get(t) or {"UNKNOWN"}
-        if not types_compatible(ts, tt):
-            continue
-        gated_abbr.add((s, t))
-
-    # one-round type-union propagation over gated abbrev edges
-    original_types = {k: set(v) for k, v in type_lookup.items()}
-    effective: Dict[str, Set[str]] = defaultdict(set)
-    for norm in unique_norms:
-        effective[norm] |= original_types.get(norm, set())
-    for s, t in gated_abbr:
-        effective[s] |= original_types.get(s, set()) | original_types.get(t, set())
-        effective[t] |= original_types.get(t, set()) | original_types.get(s, set())
-    for k in list(effective):
-        if not effective[k]:
-            effective[k] = {"UNKNOWN"}
-
-    all_terms: Set[str] = set(unique_norms)
-    for s, t in gated_abbr:
-        all_terms.add(s)
-        all_terms.add(t)
-
-    # domain-alias edges (all skipped in practice: aliases are protected)
-    alias_edges: Set[Tuple[str, str]] = set()
-    for term in sorted(all_terms):
-        for needle, alias in sorted(DOMAIN_ALIAS_SUBSTRINGS.items()):
-            if needle in term and alias != term:
-                if term in PROTECTED_TERMS or alias in PROTECTED_TERMS:
-                    continue
-                alias_edges.add((term, alias))
-                all_terms.add(alias)
-
-    # similarity edges over corpus norms
-    if score_source == "semantic":
-        pair_scores = _semantic_cosine_pairs(unique_norms)
-    else:
-        pair_scores = _tfidf_cosine_pairs(unique_norms)
-    sim_edges: Set[Tuple[str, str]] = set()
-    for (a, b), score in pair_scores.items():
-        if a in PROTECTED_TERMS and b in PROTECTED_TERMS:
-            continue
-        floor = min(adaptive_threshold(a, base), adaptive_threshold(b, base))
-        if score < floor:
-            continue
-        if not can_merge_terms(a, b):
-            continue
-        ea = effective.get(a) or {"UNKNOWN"}
-        eb = effective.get(b) or {"UNKNOWN"}
-        if not types_compatible(ea, eb):
-            continue
-        sim_edges.add((a, b) if a < b else (b, a))
+    freq_map, type_lookup, abbr_pairs = oracle_vocabulary(mentions, abbrevs)
+    scorer = (
+        _semantic_cosine_pairs if score_source == "semantic" else _tfidf_cosine_pairs
+    )
+    _, edges, extra = link_vocabulary(
+        freq_map,
+        type_lookup,
+        abbr_pairs,
+        compute_base_threshold(sum(freq_map.values())),
+        scorer,
+    )
+    all_terms = set(freq_map) | extra
 
     adjacency: Dict[str, Set[str]] = defaultdict(set)
     for term in all_terms:
         adjacency[term]
-    for s, t in gated_abbr | alias_edges | sim_edges:
+    for s, t in edges:
         adjacency[s].add(t)
         adjacency[t].add(s)
 
@@ -272,7 +299,7 @@ def oracle_apply_canonical(
     mentions: pd.DataFrame, canonical_map: Mapping[str, str]
 ) -> pd.DataFrame:
     df = mentions.copy()
-    df["norm"] = df["entity"].map(lambda s: str(s).strip())
+    df["norm"] = df["entity"].map(normalize_entity)
     is_value = df["entity_type"].str.upper().isin(SKIP_TYPES)
     df["canonical"] = np.where(
         is_value,

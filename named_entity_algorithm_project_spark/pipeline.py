@@ -22,9 +22,11 @@ from __future__ import annotations
 
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Dict, List, Mapping, Optional, Tuple
+from typing import List, Mapping, Optional, Tuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,7 +34,6 @@ from .detector import DEFAULT_CONFIDENCE_THRESHOLD
 from .functions.localrel import local_df
 from .io_tables import (
     StageAPaths,
-    commit_bucket,
     commit_buckets_batch,
     committed_buckets,
     read_stage_a_extracted,
@@ -54,19 +55,9 @@ from .operators.triples import build_triples, mention_triples, same_as_triples
 class PipelineConfig:
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD
     n_buckets: int = 8
-    salt_partitions: int = 16
-    candidate_max_df: Optional[int] = None
     user_entities: List[Tuple[str, str]] = field(default_factory=list)
     user_canonical: Optional[Mapping[str, List[str]]] = None
     merge_map: Optional[Mapping[str, str]] = None
-    # Stage-A commit strategy. "batch" (default) writes every pending bucket
-    # in ONE job (partitionBy(bucket) + dynamic overwrite) and then commits
-    # the per-bucket lineage markers — at 1000 buckets the per-job fixed
-    # cost of the sequential loop would dominate the stage. "sequential"
-    # keeps the one-job-per-bucket loop: finer mid-stage failure granularity
-    # (a crash loses at most one bucket's work instead of the in-flight
-    # batch), useful when extraction wall >> job overhead.
-    stage_a_mode: str = "batch"
     # replicate the reference's OBSERVED lonely-unit pass (a no-op) instead
     # of the pinned self-excluded semantics — detector._postfilter docstring
     reference_strict: bool = False
@@ -82,10 +73,6 @@ class PipelineConfig:
     # "semantic_exact" (L4 embedding cosine, O(N²) — small vocab), or
     # "semantic_lsh" (L4 banded-LSH blocked — the scale path)
     score_source: str = "tfidf"
-    # tfidf candidate strategy: "prefix" (default — ppjoin prefix filter,
-    # exact-scored under the df-cap), "prefix_parity" (cap lower-bound
-    # parity with the naive join), or "all" (naive inverted-index join)
-    tfidf_candidates: str = "prefix"
     # semantic_lsh recall dials (candidate prob at cosine c is
     # 1-(1-p^band_bits)^bands with p = 1-acos(c)/pi): more bands = more
     # recall & more candidates; more band_bits = tighter blocks. None =
@@ -169,7 +156,7 @@ def run_pipeline(
     done = set(committed_buckets(spark, paths)) if resume else set()
     lineage_rows: List[dict] = []
     pending = [b for b in range(config.n_buckets) if b not in done]
-    if pending and config.stage_a_mode == "batch":
+    if pending:
         subset = (
             bucketed.filter(F.col("bucket").isin(pending)) if done else bucketed
         )
@@ -190,29 +177,6 @@ def run_pipeline(
             run_id,
             fail_after_buckets=fail_after_buckets,
         )
-    elif pending:
-        # Cache the bucketed input once; each bucket job filters it.
-        bucketed = bucketed.persist()
-        try:
-            for i, bucket in enumerate(pending):
-                if fail_after_buckets is not None and i >= fail_after_buckets:
-                    raise RuntimeError(
-                        f"injected failure after {fail_after_buckets} buckets"
-                    )
-                subset = bucketed.filter(F.col("bucket") == bucket)
-                extracted = extract_combined(
-                    subset,
-                    confidence_threshold=config.confidence_threshold,
-                    user_entities=config.user_entities,
-                    reference_strict=config.reference_strict,
-                    detector=config.detector,
-                    added_tokens=added_tokens,
-                )
-                lineage_rows.append(
-                    commit_bucket(spark, paths, bucket, extracted, run_id)
-                )
-        finally:
-            bucketed.unpersist()
 
     _mark("stage_a")
     _phase("stage_b_linking")
@@ -225,12 +189,9 @@ def run_pipeline(
     linking = build_linking_tables(
         mentions_raw,
         abbrevs,
-        salt_partitions=config.salt_partitions,
-        candidate_max_df=config.candidate_max_df,
         score_source=config.score_source,
         embed_bands=config.embed_bands,
         embed_band_bits=config.embed_band_bits,
-        tfidf_candidates=config.tfidf_candidates,
         extracted=extracted_committed,
     )
 
@@ -411,24 +372,19 @@ def run_pipeline(
     metrics = local_df(spark, metrics_rows, "metric string, value double")
     # three independent small-table writes — overlap them from a thread
     # pool (guide §2.6) so the driver-side commit latency of one doesn't
-    # serialize the others
-    from concurrent.futures import ThreadPoolExecutor
-
+    # serialize the others; the pool threads inherit the phase label
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
             pool.submit(
-                write_table,
-                metrics.coalesce(1),
-                os.path.join(output_dir, "metrics"),
-            ),
-            pool.submit(
-                write_table, canonical_map, os.path.join(output_dir, "canonical_map")
-            ),
-            pool.submit(
-                write_table,
-                alias_groups(canonical_map),
-                os.path.join(output_dir, "alias_groups"),
-            ),
+                inheritable_thread_target(spark)(write_table),
+                frame,
+                os.path.join(output_dir, name),
+            )
+            for frame, name in (
+                (metrics.coalesce(1), "metrics"),
+                (canonical_map, "canonical_map"),
+                (alias_groups(canonical_map), "alias_groups"),
+            )
         ]
         for f in futs:
             f.result()

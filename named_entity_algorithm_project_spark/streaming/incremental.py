@@ -9,7 +9,8 @@ to the extraction table. Spark's checkpoint directory tracks consumed files
 from making each batch write IDEMPOTENT: extraction rows land in a
 ``batch_id=K`` partition via dynamic partition overwrite (a retried batch
 replaces, never duplicates, its own partition) and the per-batch lineage
-marker — written LAST, exactly like io_tables.commit_bucket — gates replay:
+marker — written LAST, exactly like the Stage-A lineage markers of
+io_tables.commit_buckets_batch — gates replay:
 a batch whose marker already exists is skipped entirely.
 Downstream stages (linking, components, triples)
 are corpus-global — they rerun over the accumulated extraction table per
@@ -18,7 +19,7 @@ over cached extraction results.
 
 ``foreachBatch`` is used (not a plain writeStream sink) so each batch write
 also appends a lineage/metrics row — the streaming twin of
-io_tables.commit_bucket.
+io_tables.commit_buckets_batch.
 """
 
 from __future__ import annotations

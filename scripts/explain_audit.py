@@ -133,8 +133,11 @@ def main() -> None:
     out.extend(key_lines(formatted(scored.filter(F.col("score") >= 0.8))))
     out.append("```")
 
+    # the linker hands the prefix join materialized weights (one TF-IDF
+    # pass for its several consumers) — audit the same shape
+    weights_ckpt = weights.localCheckpoint(eager=True)
     scored_prefix = similarity_pairs_prefix(
-        weights, gate_floor=0.82, salt_partitions=16, large_vocab=False
+        weights_ckpt, gate_floor=0.82, salt_partitions=16, large_vocab=False
     )
     out.append(
         "\n## kg: tfidf similarity scoring, DEFAULT prefix-filtered path\n"
@@ -159,7 +162,7 @@ def main() -> None:
     # checkpoint (accurate statistics), so AQE's runtime-size broadcast of
     # them is allowed — pinning them measured 2.2x slower at the 62k tier.
     scored_prefix_large = similarity_pairs_prefix(
-        weights, gate_floor=0.82, salt_partitions=16, large_vocab=True
+        weights_ckpt, gate_floor=0.82, salt_partitions=16, large_vocab=True
     )
     plan_large = formatted(scored_prefix_large)
     n_smj = plan_large.count(") SortMergeJoin")

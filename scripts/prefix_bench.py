@@ -1,29 +1,29 @@
-"""A/B/C: naive inverted-index similarity join vs the prefix-filtered one
-(VERDICT r3 items 1+2 — cut the vocab-scale linking wall, measure linking
-QUALITY under the engaged cap, not just cost).
+"""A/B: naive inverted-index similarity join vs the prefix-filtered one, at
+operator level (VERDICT r3 items 1+2 — cut the vocab-scale linking wall,
+measure linking QUALITY under the engaged cap, not just cost).
 
-Same corpus, same AUTO df-cap, three strategies through the full
-build_linking_tables:
+Same corpus, same TF-IDF weights (materialized once), same df-cap and the
+same gate cascade (``gate_scored_pairs`` over the corpus norm profiles —
+without the abbreviation type propagation the full linker adds, identical
+for both legs):
 
-  all           the naive Σ df² inverted-index join (r3 baseline)
-  prefix_parity ppjoin prefix filtering, cap on candidates AND scoring —
-                bit-for-bit the naive capped lower-bound scores; the gated
-                edge md5 must be IDENTICAL to `all`
-  prefix        (default) cap bounds candidate generation only, scoring is
-                EXACT — gated edges are a measured SUPERSET of `all`; the
-                planted-pair recall shows what the superset buys
+  naive   ``similarity_pairs``: the Σ df² inverted-index join; under a cap
+          its scores are lower bounds (dropped grams score nothing)
+  prefix  ``similarity_pairs_prefix``: the production join; the cap bounds
+          candidate generation only and every score is exact — uncapped
+          its gated edges equal naive's, capped they are a superset
 
-Reports wall seconds per strategy, edge md5s, the speedup, and the
+Reports wall seconds per leg, gated edge md5s, the speedup, and the
 planted mergeable/hard pair stats for each leg.
 
 Run serially (no concurrent Spark jobs). Usage:
-  PYTHONPATH=/root/repo python scripts/prefix_bench.py [n_convs] [vocab_scale] [strategies]
+  PYTHONPATH=. python scripts/prefix_bench.py [n_convs] [vocab_scale] [legs] [cap]
 
-``strategies`` is a comma list (default "all,prefix_parity,prefix").
-At the top vocabulary tiers the naive Σ df² leg is the measurement that
-does NOT finish in bench budget — pass "prefix_parity,prefix" there; the
-cross-strategy md5/superset summary lines are emitted only for the
-strategies actually run.
+``legs`` is a comma list (default "naive,prefix"). At the top vocabulary
+tiers the naive Σ df² leg does NOT finish in bench budget — pass "prefix"
+there; the cross-leg summary line is emitted only when both legs ran.
+``cap`` is the df-cap: "auto" (default — the linker's AUTO rule for the
+vocabulary size), "none", or an int.
 """
 
 from __future__ import annotations
@@ -36,18 +36,31 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F
+
 from named_entity_algorithm_project_spark.datagen import (
     generate_transcripts,
     planted_alias_pairs,
     planted_hard_pairs,
     planted_pair_edge_stats,
 )
+from named_entity_algorithm_project_spark.dictionaries import PROTECTED_TERMS
+from named_entity_algorithm_project_spark.functions.textnorm import (
+    adaptive_threshold_floor,
+    compute_base_threshold,
+)
 from named_entity_algorithm_project_spark.operators.extract import (
-    extract_combined,
-    split_extraction,
+    extract_mentions,
 )
 from named_entity_algorithm_project_spark.operators.linking import (
-    build_linking_tables,
+    MERGE_HINT_MIN_VOCAB,
+    auto_df_cap,
+    gate_scored_pairs,
+    linkable_mentions,
+    norm_profiles,
+    similarity_pairs,
+    similarity_pairs_prefix,
+    tfidf_weights,
 )
 from named_entity_algorithm_project_spark.session import get_spark
 
@@ -55,11 +68,8 @@ from named_entity_algorithm_project_spark.session import get_spark
 def main():
     n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 30_000
     vocab_scale = int(sys.argv[2]) if len(sys.argv) > 2 else 1_250
-    strategies = (
-        sys.argv[3].split(",")
-        if len(sys.argv) > 3
-        else ["all", "prefix_parity", "prefix"]
-    )
+    legs = sys.argv[3].split(",") if len(sys.argv) > 3 else ["naive", "prefix"]
+    cap_arg = sys.argv[4] if len(sys.argv) > 4 else "auto"
     # shuffle partitions are scale-set by the caller (guide §2.2): 32 is
     # right up to the ~460k-norm tier; the 917k-norm tier packs ~1M weight
     # rows per partition per join side at 32, which starves the score
@@ -77,41 +87,75 @@ def main():
     transcripts = generate_transcripts(
         spark, n_convs=n_convs, seed=42, vocab_scale=vocab_scale
     )
-    extracted = extract_combined(transcripts).localCheckpoint(eager=True)
-    mentions, abbrevs = split_extraction(extracted)
+    mentions, _ = extract_mentions(transcripts)
+    profiles = norm_profiles(linkable_mentions(mentions)).localCheckpoint(
+        eager=True
+    )
+    stats = profiles.agg(
+        F.coalesce(F.sum("freq"), F.lit(0)).alias("n_rows"),
+        F.count(F.lit(1)).alias("n_norms"),
+    ).collect()[0]
+    n_norms = int(stats["n_norms"])
+    base = compute_base_threshold(int(stats["n_rows"]))
+    large_vocab = n_norms > MERGE_HINT_MIN_VOCAB
+    if cap_arg == "auto":
+        cap = auto_df_cap(n_norms)
+    elif cap_arg == "none":
+        cap = None
+    else:
+        cap = int(cap_arg)
+    weights = tfidf_weights(profiles.select("norm"), n_norms).localCheckpoint(
+        eager=True
+    )
+    df_counts = (
+        weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
+        if cap is not None
+        else None
+    )
+
+    def scored(leg):
+        if leg == "naive":
+            return similarity_pairs(
+                weights, candidate_max_df=cap, df_counts=df_counts,
+                large_vocab=large_vocab,
+            )
+        return similarity_pairs_prefix(
+            weights,
+            gate_floor=adaptive_threshold_floor(base),
+            candidate_max_df=cap,
+            df_counts=df_counts,
+            large_vocab=large_vocab,
+        )
 
     results = {}
     edge_sets = {}
-    for strategy in strategies:
+    for leg in legs:
         t0 = time.time()
-        linking = build_linking_tables(
-            mentions, abbrevs, tfidf_candidates=strategy
-        )
-        edge_rows = sorted(
-            (r["src"], r["dst"]) for r in linking.edges.collect()
-        )
+        edges = gate_scored_pairs(
+            scored(leg), profiles, sorted(PROTECTED_TERMS), base,
+            large_vocab=large_vocab,
+        ).localCheckpoint(eager=True)
+        edge_rows = sorted((r["src"], r["dst"]) for r in edges.collect())
         wall = time.time() - t0
         digest = hashlib.md5(
             "\n".join(f"{a}\t{b}" for a, b in edge_rows).encode()
         ).hexdigest()
         mp, mh = planted_pair_edge_stats(
-            spark, linking.norms, linking.edges,
-            planted_alias_pairs(vocab_scale),
+            spark, profiles, edges, planted_alias_pairs(vocab_scale)
         )
         hp, hh = planted_pair_edge_stats(
-            spark, linking.norms, linking.edges,
-            planted_hard_pairs(vocab_scale),
+            spark, profiles, edges, planted_hard_pairs(vocab_scale)
         )
-        edge_sets[strategy] = set(edge_rows)
-        results[strategy] = {"wall_s": round(wall, 1)}
+        edge_sets[leg] = set(edge_rows)
+        results[leg] = {"wall_s": round(wall, 1)}
         print(
             json.dumps(
                 {
-                    "strategy": strategy,
+                    "leg": leg,
                     "n_convs": n_convs,
                     "vocab_scale": vocab_scale,
-                    "n_norms": linking.n_norms,
-                    "auto_df_cap": linking.candidate_max_df,
+                    "n_norms": n_norms,
+                    "df_cap": cap,
                     "n_edges": len(edge_rows),
                     "edge_md5": digest,
                     "wall_s": round(wall, 1),
@@ -124,29 +168,16 @@ def main():
             ),
             flush=True,
         )
-    summary = {}
-    if "all" in edge_sets and "prefix_parity" in edge_sets:
-        summary["parity_md5_identical"] = (
-            edge_sets["all"] == edge_sets["prefix_parity"]
-        )
-        summary["speedup_parity"] = round(
-            results["all"]["wall_s"]
-            / max(results["prefix_parity"]["wall_s"], 1e-9),
-            2,
-        )
-    if "all" in edge_sets and "prefix" in edge_sets:
-        summary["exact_superset_of_naive"] = (
-            edge_sets["all"] <= edge_sets["prefix"]
-        )
-        summary["speedup_exact"] = round(
-            results["all"]["wall_s"] / max(results["prefix"]["wall_s"], 1e-9),
-            2,
-        )
-    if "prefix_parity" in edge_sets and "prefix" in edge_sets:
-        summary["exact_superset_of_parity"] = (
-            edge_sets["prefix_parity"] <= edge_sets["prefix"]
-        )
-    if summary:
+    if "naive" in edge_sets and "prefix" in edge_sets:
+        summary = {
+            "identical": edge_sets["naive"] == edge_sets["prefix"],
+            "prefix_superset_of_naive": edge_sets["naive"] <= edge_sets["prefix"],
+            "speedup": round(
+                results["naive"]["wall_s"]
+                / max(results["prefix"]["wall_s"], 1e-9),
+                2,
+            ),
+        }
         print(json.dumps(summary), flush=True)
     spark.stop()
 

@@ -33,42 +33,49 @@ from named_entity_algorithm_project_spark.session import get_spark
 from scripts.linking_bench import build_vocab
 
 DIM = 64
+#: a score within EPS of a threshold counts as reaching it: the numpy
+#: matmul and Spark's per-pair dot sum in different orders
+EPS = 1e-12
 
 
-def exact_pairs(norms: list, threshold: float) -> set:
-    """Blocked numpy matmul ground truth: {(a, b)} with cosine >= t, a<b."""
+def exact_pairs(norms: list, threshold: float) -> dict:
+    """Blocked numpy matmul ground truth: {(a, b): cosine} for a<b with
+    cosine >= t - EPS."""
     mat = embed_batch(norms, DIM)
     n = len(norms)
-    out = set()
+    out = {}
     block = 4096
     for i0 in range(0, n, block):
         sims = mat[i0 : i0 + block] @ mat.T
-        ii, jj = np.nonzero(sims >= threshold)
+        ii, jj = np.nonzero(sims >= threshold - EPS)
         for di, j in zip(ii, jj):
             i = i0 + int(di)
             j = int(j)
             if i < j:
-                out.add((norms[i], norms[j]))
+                out[(norms[i], norms[j])] = float(sims[di, j])
     return out
+
+
+def at_least(scores: dict, t: float) -> set:
+    return {k for k, s in scores.items() if s >= t - EPS}
 
 
 def recall_arm(spark, n: int, thresholds=(0.80, 0.90)) -> list:
     norms = build_vocab(n, seed=5)
-    truth = {t: exact_pairs(norms, t) for t in thresholds}
+    exact = exact_pairs(norms, min(thresholds))
+    truth = {t: at_least(exact, t) for t in thresholds}
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
     rows = []
     for bands, band_bits in ((4, 4), (8, 4)):
         t0 = time.time()
         got = (
             semantic_pairs_lsh(df, dim=DIM, bands=bands, band_bits=band_bits)
-            .filter(F.col("score") >= min(thresholds))
+            .filter(F.col("score") >= min(thresholds) - EPS)
             .collect()
         )
         wall = time.time() - t0
-        got_pairs = {
-            t: {(r["a"], r["b"]) for r in got if r["score"] >= t}
-            for t in thresholds
-        }
+        scores = {(r["a"], r["b"]): r["score"] for r in got}
+        got_pairs = {t: at_least(scores, t) for t in thresholds}
         row = {
             "arm": "recall",
             "n_norms": n,
@@ -103,7 +110,7 @@ def scale_arm(spark, n: int, bands: int = 10, band_bits: int = 6) -> dict:
     t0 = time.time()
     got = (
         semantic_pairs_lsh(df, dim=DIM, bands=bands, band_bits=band_bits)
-        .filter(F.col("score") >= 0.8)
+        .filter(F.col("score") >= 0.8 - EPS)
         .collect()
     )
     row = {
@@ -115,9 +122,11 @@ def scale_arm(spark, n: int, bands: int = 10, band_bits: int = 6) -> dict:
         "pairs_ge_0.8": len(got),
     }
     if os.environ.get("KG_SEMANTIC_SCALE_RECALL"):
+        exact = exact_pairs(norms, 0.80)
+        scores = {(r["a"], r["b"]): r["score"] for r in got}
         for t in (0.80, 0.90):
-            truth = exact_pairs(norms, t)
-            got_pairs = {(r["a"], r["b"]) for r in got if r["score"] >= t}
+            truth = at_least(exact, t)
+            got_pairs = at_least(scores, t)
             assert got_pairs <= truth, "LSH emitted a non-exact pair?!"
             row[f"exact_pairs_ge_{t}"] = len(truth)
             row[f"recall_at_{t}"] = (

@@ -10,11 +10,11 @@ from named_entity_algorithm_project_spark.functions.ngrams import char_wb_ngrams
 from named_entity_algorithm_project_spark.functions.textnorm import (
     adaptive_threshold,
     can_merge_terms,
+    compute_base_threshold,
     types_compatible,
 )
 from named_entity_algorithm_project_spark.operators.canonical import pick_canonicals
 from named_entity_algorithm_project_spark.operators.linking import (
-    compute_base_threshold,
     similarity_pairs,
     tfidf_weights,
 )
@@ -240,7 +240,7 @@ def test_fused_one_scan_parity(spark):
     assert fused_lt.n_norms == split_lt.n_norms
 
 
-def test_local_path_parity(spark):
+def test_local_path_parity(spark, monkeypatch):
     """The driver-local small-vocab linking path (collected fused table +
     python gate cascade) must produce the identical LinkingTables as the
     distributed cascade: same (norm, freq, effective-types) rows, same
@@ -253,9 +253,7 @@ def test_local_path_parity(spark):
         extract_combined,
         split_extraction,
     )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        build_linking_tables,
-    )
+    from named_entity_algorithm_project_spark.operators import linking
 
     for n_convs, seed in ((60, 17), (150, 42)):
         rows = generate_rows(n_convs=n_convs, seed=seed)
@@ -263,12 +261,15 @@ def test_local_path_parity(spark):
         extracted = extract_combined(df).localCheckpoint(eager=True)
         mentions, abbrevs = split_extraction(extracted)
 
-        dist = build_linking_tables(
-            mentions, abbrevs, extracted=extracted, local_max_vocab=0
-        )
-        loc = build_linking_tables(
+        with monkeypatch.context() as m:
+            m.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
+            dist = linking.build_linking_tables(
+                mentions, abbrevs, extracted=extracted
+            )
+        loc = linking.build_linking_tables(
             mentions, abbrevs, extracted=extracted
         )
+        assert loc.norms.isLocal() and not dist.norms.isLocal()
         assert loc.candidate_max_df is None and dist.candidate_max_df is None
         assert loc.base_threshold == dist.base_threshold
         assert loc.n_norms == dist.n_norms
@@ -409,11 +410,9 @@ def test_prefix_filter_scores_match_naive(spark):
     * UNCAPPED: every naive pair at/above the gate floor survives with the
       identical score (the filter only prunes pairs that cannot reach the
       floor);
-    * capped, cap_scope="all" (parity mode): identical to the naive capped
-      join's lower-bound scores;
-    * capped, cap_scope="candidates" (default): every emitted score is the
-      EXACT cosine (equals the uncapped naive score), and every naive
-      CAPPED pair at/above the floor is a superset member."""
+    * capped: every emitted score is the EXACT cosine (equals the uncapped
+      naive score), and every naive CAPPED pair at/above the floor is a
+      superset member."""
     from named_entity_algorithm_project_spark.functions.textnorm import (
         adaptive_threshold_floor,
     )
@@ -451,19 +450,8 @@ def test_prefix_filter_scores_match_naive(spark):
         assert s == pytest.approx(naive_exact[k], abs=1e-9), k
     assert all(s >= floor - 1e-6 for s in pref.values())
 
-    # --- capped parity mode: naive capped scores term-for-term --------------
-    parity = collect(
-        similarity_pairs_prefix(
-            weights, gate_floor=floor, salt_partitions=4,
-            candidate_max_df=cap, df_counts=df_counts, cap_scope="all",
-        )
-    )
+    # --- capped: exact scores, superset of naive capped ---------------------
     capped_above = {k for k, s in naive_capped.items() if s >= floor}
-    assert capped_above <= set(parity)
-    for k, s in parity.items():
-        assert s == pytest.approx(naive_capped[k], abs=1e-9), k
-
-    # --- capped default: exact scores, superset of naive capped -------------
     exact_capped = collect(
         similarity_pairs_prefix(
             weights, gate_floor=floor, salt_partitions=4,
@@ -471,7 +459,7 @@ def test_prefix_filter_scores_match_naive(spark):
         )
     )
     assert capped_above <= set(exact_capped), (
-        "cap_scope=candidates lost a naive-capped above-floor pair"
+        "the capped prefix join lost a naive-capped above-floor pair"
     )
     for k, s in exact_capped.items():
         # every emitted score is the TRUE cosine, not the capped lower bound
@@ -479,36 +467,61 @@ def test_prefix_filter_scores_match_naive(spark):
 
 
 def test_prefix_filter_gated_edges_identical(spark):
-    """End-to-end edge-set contracts across candidate strategies:
-    uncapped, prefix == naive exactly; capped, the parity mode == naive
-    exactly while the default exact-scoring mode is a superset."""
-    from named_entity_algorithm_project_spark.datagen import (
-        TRANSCRIPTS_SCHEMA,
-        generate_rows,
-    )
-    from named_entity_algorithm_project_spark.operators.extract import (
-        extract_mentions,
+    """Gated edge-set contracts of the prefix join against the naive join,
+    through the shared gate cascade: uncapped, the prefix join's gated
+    edges equal the naive join's exactly; capped, they are a superset of
+    the naive capped join's (the prefix join scores exactly)."""
+    from named_entity_algorithm_project_spark.functions.textnorm import (
+        adaptive_threshold_floor,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
-        build_linking_tables,
+        gate_scored_pairs,
+        similarity_pairs_prefix,
     )
 
-    rows = generate_rows(n_convs=60, seed=17)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    mentions, abbrevs = extract_mentions(df)
+    norms = _random_vocab(seed=9)
+    n = len(norms)
+    base = 0.80
+    # family types: near-duplicates share a prefix family; every fifth
+    # norm is UNKNOWN, so the type gate blocks some high-scoring pairs
+    profiles = spark.createDataFrame(
+        [
+            (x, 1, ["UNKNOWN"] if i % 5 == 0 else [x[:3].upper()])
+            for i, x in enumerate(norms)
+        ],
+        "norm string, freq bigint, types array<string>",
+    )
+    weights = tfidf_weights(profiles.select("norm"), n).localCheckpoint(
+        eager=True
+    )
+    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
+    cap = max(int(0.05 * n), 1)
+    floor = adaptive_threshold_floor(base)
 
-    def edges(**kw):
+    def gated(scored):
         return {
             (r["src"], r["dst"])
-            for r in build_linking_tables(mentions, abbrevs, **kw).edges.collect()
+            for r in gate_scored_pairs(scored, profiles, [], base).collect()
         }
 
-    assert edges(tfidf_candidates="prefix") == edges(tfidf_candidates="all")
-    naive_capped = edges(tfidf_candidates="all", candidate_max_df=3)
-    assert edges(
-        tfidf_candidates="prefix_parity", candidate_max_df=3
-    ) == naive_capped
-    assert edges(tfidf_candidates="prefix", candidate_max_df=3) >= naive_capped
+    naive = gated(similarity_pairs(weights, salt_partitions=4))
+    assert len(naive) >= 20, "fixture produced too few gated edges"
+    assert gated(
+        similarity_pairs_prefix(weights, gate_floor=floor, salt_partitions=4)
+    ) == naive
+    naive_capped = gated(
+        similarity_pairs(
+            weights, salt_partitions=4, candidate_max_df=cap,
+            df_counts=df_counts,
+        )
+    )
+    assert naive_capped
+    assert gated(
+        similarity_pairs_prefix(
+            weights, gate_floor=floor, salt_partitions=4,
+            candidate_max_df=cap, df_counts=df_counts,
+        )
+    ) >= naive_capped
 
 
 def test_planted_pair_recall_under_cap(spark):

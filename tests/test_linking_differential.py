@@ -1,0 +1,166 @@
+"""Differential test of the three linking executors on adversarial input.
+
+The pandas oracle (``oracle_vocabulary`` + ``link_vocabulary``), the
+driver-local linker and the distributed Column cascade must produce the
+same (norm, freq, effective types) rows, the same gated edge set and the
+same extra nodes. The generator datagen never produces the inputs that
+separate them, so the vocabularies here are built directly, seeded, with:
+whitespace variants (edge and inner tabs/newlines, NBSP), empty,
+lower-case, padded and ``UNKNOWN`` types, protected pairs, abbreviation
+cycles, self-pairs and abbreviation-only endpoints, domain-alias needles,
+and 1-2 character norms.
+"""
+
+import random
+from concurrent.futures import ThreadPoolExecutor
+
+import pandas as pd
+
+from named_entity_algorithm_project_spark.dictionaries import (
+    DOMAIN_ALIAS_SUBSTRINGS,
+    ENTITY_TYPES,
+)
+from named_entity_algorithm_project_spark.functions.textnorm import (
+    compute_base_threshold,
+)
+from named_entity_algorithm_project_spark.operators import linking
+from named_entity_algorithm_project_spark.oracle import (
+    link_vocabulary,
+    oracle_vocabulary,
+)
+
+N_VOCABULARIES = 24
+
+STEMS = [
+    "polymer blend", "polymer blends", "Polymer Blend", "polymer  blend",
+    "P3HT", "p3ht", "organic solar cell", "organic solar cells", "PCE",
+    "pce", "perovskite", "Perovskite", "bandgap", "band gap", "ab", "AB",
+    "ac", "abc", "a", "x", "ab c", "ab\tc d", "ab c d", "polythiophene",
+    "thiophene", "thio", "poly thiophene film", "opv", "ofet", "bhj",
+    "pksc", "mobility", "mobilities", "hole mobility", "PEDOT:PSS",
+    "pedot pss", "P3HT:PCBM", "p3ht pcbm",
+]
+EDGE_WS = [" ", "\t", "\n", "\r", "\x0b", "\x0c", "\xa0", "  \t"]
+INNER_WS = ["\t", "\n", "  ", "\xa0"]
+TYPES = list(ENTITY_TYPES) + [
+    "", "UNKNOWN", "unknown", " polymer ", "\tORGANIC", " PROP_VALUE",
+    "material_amount", "organic\n",
+]
+ABBR_ONLY = ["XYZ", "qq", "thio", " pce ", "Q"]
+PROTECTED = ["opv", "ofet", "bhj", "pksc", "perovskite"]
+#: alias needles whose aliases are not protected (every shipped alias is),
+#: so the domain-alias edge path actually fires
+EXTRA_ALIASES = {"thiophene": "thio", "ovsk": "ovs", "blend": "bl"}
+
+
+def _variant(rng, stem):
+    out = stem
+    if " " in out and rng.random() < 0.25:
+        out = out.replace(" ", rng.choice(INNER_WS), 1)
+    if rng.random() < 0.35:
+        out = rng.choice(EDGE_WS) + out
+    if rng.random() < 0.35:
+        out = out + rng.choice(EDGE_WS)
+    return out
+
+
+def _vocabulary(seed):
+    """(mention rows, abbreviation rows) for one adversarial vocabulary."""
+    rng = random.Random(seed)
+    stems = rng.sample(STEMS, rng.randint(5, 16))
+    mentions = [
+        (_variant(rng, stem), rng.choice(TYPES))
+        for stem in stems
+        for _ in range(rng.randint(1, 3))
+    ]
+    # whitespace-only entity: an empty norm, or the NBSP norm
+    mentions.append((rng.choice(EDGE_WS), rng.choice(TYPES)))
+    pool = stems + ABBR_ONLY
+    abbrevs = [
+        (_variant(rng, rng.choice(pool)), _variant(rng, rng.choice(pool)))
+        for _ in range(rng.randint(0, 6))
+    ]
+    if rng.random() < 0.5:  # a cycle
+        a, b, c = rng.sample(pool, 3)
+        abbrevs += [(a, b), (b, c), (c, a)]
+    if rng.random() < 0.5:  # a self-pair
+        x = rng.choice(pool)
+        abbrevs.append((x, _variant(rng, x)))
+    if rng.random() < 0.5:  # both endpoints protected
+        abbrevs.append(tuple(rng.sample(PROTECTED, 2)))
+    if rng.random() < 0.3:  # empty after trim
+        abbrevs.append((rng.choice(EDGE_WS), rng.choice(pool)))
+    return mentions, abbrevs
+
+
+def _oracle_tables(mentions, abbrevs):
+    freq, types, abbr_pairs = oracle_vocabulary(
+        pd.DataFrame(mentions, columns=["entity", "entity_type"]),
+        pd.DataFrame(abbrevs, columns=["abbr", "expansion"]),
+    )
+    base = compute_base_threshold(sum(freq.values()))
+    eff_types, edges, extra = link_vocabulary(freq, types, abbr_pairs, base)
+    norms = {(n, freq[n], tuple(eff_types[n])) for n in freq}
+    return norms, edges, extra
+
+
+def _spark_tables(frames):
+    """Linking tables from the (mentions, abbrevs, extracted) frames, as
+    (norms, edges, extra nodes) sets, plus the base threshold and whether
+    the driver-local path ran."""
+    mentions, abbrevs, extracted = frames
+    lt = linking.build_linking_tables(mentions, abbrevs, extracted=extracted)
+    norms = {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()}
+    edges = {(r["src"], r["dst"]) for r in lt.edges.collect()}
+    extra = {r["norm"] for r in lt.extra_nodes.collect()}
+    return (norms, edges, extra), lt.base_threshold, lt.norms.isLocal()
+
+
+def _frames(spark, mentions, abbrevs, fused):
+    """The split (mentions, abbrevs) frames, plus the combined extraction
+    frame when ``fused`` so the one-scan vocabulary pass runs too."""
+    m = spark.createDataFrame(mentions, "entity string, entity_type string")
+    a = spark.createDataFrame(abbrevs, "abbr string, expansion string")
+    if not fused:
+        return m, a, None
+    half = len(mentions) // 2
+    extracted = spark.createDataFrame(
+        [
+            ((mentions[:half], abbrevs),),
+            ((mentions[half:], []),),
+        ],
+        "ex struct<mentions: array<struct<entity: string, entity_type: string>>,"
+        " abbreviations: array<struct<abbr: string, expansion: string>>>",
+    )
+    return m, a, extracted
+
+
+def test_oracle_local_distributed_agree(spark, monkeypatch):
+    for needle, alias in EXTRA_ALIASES.items():
+        monkeypatch.setitem(DOMAIN_ALIAS_SUBSTRINGS, needle, alias)
+    vocabularies = [_vocabulary(seed) for seed in range(N_VOCABULARIES)]
+    inputs = [
+        _frames(spark, mentions, abbrevs, fused=seed % 2 == 0)
+        for seed, (mentions, abbrevs) in enumerate(vocabularies)
+    ]
+    # a small linking run is mostly Spark job latency: building several
+    # vocabularies at once overlaps it. Each map is drained before the
+    # local-path gate is switched, so no build sees the other setting.
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        local = list(pool.map(_spark_tables, inputs, timeout=600))
+        monkeypatch.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
+        dist = list(pool.map(_spark_tables, inputs, timeout=600))
+    n_edges = 0
+    for seed, (mentions, abbrevs) in enumerate(vocabularies):
+        expected = _oracle_tables(mentions, abbrevs)
+        got_local, base_local, ran_local = local[seed]
+        got_dist, base_dist, ran_dist = dist[seed]
+        assert ran_local and not ran_dist, seed
+        for name, want, table_local, table_dist in zip(
+            ("norms", "edges", "extra nodes"), expected, got_local, got_dist
+        ):
+            assert table_local == want, (seed, name, table_local ^ want)
+            assert table_dist == want, (seed, name, table_dist ^ want)
+        assert base_local == base_dist, seed
+        n_edges += len(expected[1])
+    assert n_edges > 0
