@@ -110,11 +110,6 @@ def main() -> None:
                 "triples_per_sec": round(n_triples / kg_sec, 1),
                 "turns_per_sec": round(n_turns / kg_sec, 1),
                 "cpus": cpus,
-                # this box's JVM saturates at ~8 threads (BENCH.md): peak
-                # measured pipeline throughput is at local[8], 140.1k
-                # triples/s on 3.36M turns; local[32] numbers here include
-                # the documented memory-bandwidth anti-scaling
-                "peak_triples_per_sec_local8": 140071.6,
             }
         )
     )

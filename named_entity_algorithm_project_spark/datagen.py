@@ -91,7 +91,7 @@ _POOL_CACHE: dict = {}
 #: ``hub_rate > 0`` this ONE norm lands in ~hub_rate of all non-empty
 #: turns, concentrating a constant fraction of every mention-keyed
 #: aggregation on a single key — the end-to-end skew stressor for the
-#: salted pair-agg / components paths. An existing gazetteer material so
+#: linking pair-sum and components aggregations. An existing gazetteer material so
 #: the detector extracts it with no special-casing.
 HUB_NORM = "P3HT"
 

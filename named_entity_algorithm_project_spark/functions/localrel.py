@@ -14,6 +14,11 @@ conversion path instead (``spark.sql.execution.arrow.pyspark.enabled``,
 on in session.py): the rows are converted driver-side into a pure-JVM
 local relation — identical rows and schema, no Python workers at task
 time. The same tiny write drops to ~0.2s.
+
+Zero rows are the exception: the Arrow path ships no batch, and the JVM
+side then builds an RDD-backed plan (``isLocal()`` is False), so an empty
+edge or alias table would fork Python workers when consumed. Empty row
+lists therefore build an empty ``LocalRelation`` directly in the JVM.
 """
 
 from __future__ import annotations
@@ -39,9 +44,14 @@ def local_df(
     """
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    pdf = pd.DataFrame(
-        list(rows), columns=[f.name for f in schema.fields], dtype=object
-    )
+    rows = list(rows)
+    if not rows:
+        jspark = spark._jsparkSession
+        jdf = jspark.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json())
+        )
+        return DataFrame(jdf, spark)
+    pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields], dtype=object)
     # object-dtype columns: the Arrow converter casts per the target schema
     # field (ints stay exact, None maps to null, tz-aware datetimes convert
     # under the session timezone) — no pandas numeric inference in between

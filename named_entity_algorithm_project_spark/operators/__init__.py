@@ -1,6 +1,6 @@
 """Spark operators: the pipeline stages expressed as DataFrame transforms."""
 
-from .extract import extract_combined, extract_mentions, mentions_schema, split_extraction  # noqa: F401
+from .extract import extract_combined, extract_mentions, split_extraction  # noqa: F401
 from .triples import build_triples, nearest_property_join  # noqa: F401
 from .linking import build_linking_tables  # noqa: F401
 from .components import connected_components  # noqa: F401

@@ -20,9 +20,10 @@ Scale notes:
   Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
   behind the same nodes+edges -> labels contract.
 * each round is a shuffle on node id; hub nodes (e.g. "polymer") are heavy
-  keys — the min() aggregation does map-side partial aggregation (Spark
-  hash-aggregate), which is exactly the salting this agg needs, and AQE
-  skew handling covers the join side.
+  keys, but the neighbour min() is one aggregation whose map-side partial
+  aggregation (Spark hash-aggregate) collapses a hub's rows to one partial
+  min per map task before the exchange; AQE skew handling covers the join
+  side.
 * localCheckpoint() every round truncates the lineage so the plan doesn't
   grow exponentially across iterations.
 """
@@ -41,7 +42,6 @@ def connected_components(
     max_iterations: int = 25,
     local_threshold: int = 200_000,
     local_edge_threshold: int = 2_000_000,
-    salt_partitions: int = 8,
     algorithm: str = "auto",
     hash_to_min_budget: int = 8,
 ) -> DataFrame:
@@ -120,10 +120,6 @@ def connected_components(
         else max_iterations
     )
     for _ in range(budget):
-        # two-stage salted min: hub nodes ("polymer"-style entities with
-        # thousands of similarity neighbors) spread their partial mins over
-        # salt_partitions reducers before the final per-node min (on top of
-        # Spark's map-side partial aggregation)
         neighbor_min = (
             sym.join(
                 labels.select(
@@ -132,13 +128,8 @@ def connected_components(
                 ),
                 "dst",
             )
-            .groupBy(
-                F.col("src").alias("norm"),
-                F.pmod(F.xxhash64("dst"), F.lit(salt_partitions)).alias("_salt"),
-            )
-            .agg(F.min("n_component").alias("part_min"))
-            .groupBy("norm")
-            .agg(F.min("part_min").alias("neighbor_component"))
+            .groupBy(F.col("src").alias("norm"))
+            .agg(F.min("n_component").alias("neighbor_component"))
         )
         updated = (
             labels.join(neighbor_min, "norm", "left")

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import band_join, band_rows
+
 
 def _tokens(text_col: str) -> "F.Column":
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
@@ -137,7 +139,7 @@ def minhash_signatures(
 def lsh_candidate_pairs(
     signatures: DataFrame, band_size: int = 4
 ) -> DataFrame:
-    """Band the signature, group by (band, band_key), emit candidate pairs.
+    """Band the signature, join on (band, key), emit candidate pairs.
     Bucket sizes are data-dependent — the per-bucket pair expansion is the
     skew point, so buckets above ``spark.sql.adaptive`` skew limits split
     automatically; tune band_size before salting."""
@@ -150,14 +152,11 @@ def lsh_candidate_pairs(
                 lambda s: s.mh,
             ),
             "|",
-        ).alias("band_key")
+        ).alias("key")
     )
-    left = sig.select("band", "band_key", F.col("doc").alias("doc_a"))
-    right = sig.select("band", "band_key", F.col("doc").alias("doc_b"))
     return (
-        left.join(right, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        band_join(sig, "doc")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
     )
 
@@ -222,35 +221,17 @@ def simhash_near_pairs(
     16-bit bands; any pair within ``max_hamming < n_bands`` must agree on at
     least one full band — join per band, verify exact hamming on candidates.
     """
-    bands = []
-    width = 64 // n_bands
-    for i in range(n_bands):
-        bands.append(
-            fingerprints.select(
-                F.col("doc"),
-                F.col("simhash"),
-                F.lit(i).alias("band"),
-                F.shiftright(F.col("simhash"), i * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("band_key"),
-            )
+    banded = band_rows(
+        fingerprints.select("doc", "simhash"), "simhash", n_bands, 64 // n_bands
+    )
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return (
+        band_join(banded, "doc", "simhash")
+        .select(
+            F.col("a").alias("doc_a"),
+            F.col("b").alias("doc_b"),
+            hamming.alias("hamming"),
         )
-    banded = bands[0]
-    for frame in bands[1:]:
-        banded = banded.unionByName(frame)
-    left = banded.select(
-        "band", "band_key", F.col("doc").alias("doc_a"), F.col("simhash").alias("sh_a")
-    )
-    right = banded.select(
-        "band", "band_key", F.col("doc").alias("doc_b"), F.col("simhash").alias("sh_b")
-    )
-    cands = (
-        left.join(right, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
         .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cands.filter(hamming <= max_hamming).select(
-        "doc_a", "doc_b", hamming.alias("hamming")
+        .filter(F.col("hamming") <= max_hamming)
     )

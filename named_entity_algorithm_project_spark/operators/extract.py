@@ -23,7 +23,7 @@ line-by-line mapping).
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -60,40 +60,25 @@ EXTRACTION_STRUCT = T.StructType(
 )
 
 
-def mentions_schema(key_fields: Iterable[T.StructField]) -> T.StructType:
-    return T.StructType(list(key_fields) + list(MENTION_STRUCT.fields))
-
-
 TRANSCRIPT_KEY_FIELDS = (
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("turn_idx", T.IntegerType(), False),
 )
 
-# Concrete storage schemas for the Stage-A checkpoint tables (explicit on
+# Concrete storage schema of the Stage-A checkpoint table (explicit on
 # read so empty buckets — zero part files — stay readable).
 EXTRACTION_TABLE_SCHEMA = T.StructType(
     list(TRANSCRIPT_KEY_FIELDS) + [T.StructField("ex", EXTRACTION_STRUCT, True)]
-)
-MENTIONS_TABLE_SCHEMA = mentions_schema(TRANSCRIPT_KEY_FIELDS)
-ABBREVS_TABLE_SCHEMA = T.StructType(
-    list(TRANSCRIPT_KEY_FIELDS)
-    + list(ABBREV_STRUCT.fields)
-    + [
-        T.StructField("abbr_norm", T.StringType(), True),
-        T.StructField("expansion_norm", T.StringType(), True),
-    ]
 )
 
 
 def extraction_udf(
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     user_entities: Optional[List[Tuple[str, str]]] = None,
-    reference_strict: bool = False,
 ):
     """Build the Arrow-batched extraction UDF. ``user_entities`` is the
     small (term, type) user-gazetteer dimension, captured in the closure
-    (implicit broadcast, app.py:1974-2094). ``reference_strict`` toggles
-    the reference's observed lonely-unit semantics (detector._postfilter)."""
+    (implicit broadcast, app.py:1974-2094)."""
     user_entities = list(user_entities or [])
 
     @F.pandas_udf(EXTRACTION_STRUCT)
@@ -108,7 +93,6 @@ def extraction_udf(
                 text,
                 confidence_threshold=confidence_threshold,
                 user_patterns=patterns,
-                reference_strict=reference_strict,
             )
             mentions_out.append(
                 [
@@ -139,7 +123,6 @@ def extract_combined(
     key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     user_entities: Optional[List[Tuple[str, str]]] = None,
-    reference_strict: bool = False,
     detector: str = "deterministic",
     added_tokens: Optional[List[str]] = None,
 ) -> DataFrame:
@@ -162,11 +145,10 @@ def extract_combined(
             model_name,
             confidence_threshold,
             user_entities,
-            reference_strict,
             added_tokens,
         )
     else:
-        udf = extraction_udf(confidence_threshold, user_entities, reference_strict)
+        udf = extraction_udf(confidence_threshold, user_entities)
     return transcripts.select(
         *keys,
         udf(F.col(text_col)).alias("ex"),
@@ -188,8 +170,6 @@ def split_extraction(
             F.explode(F.col("ex.abbreviations")).alias("a"),
         )
         .select(*key_cols, "a.*")
-        .withColumn("abbr_norm", F.trim(F.col("abbr")))
-        .withColumn("expansion_norm", F.trim(F.col("expansion")))
     )
     return mentions, abbrevs
 
@@ -200,7 +180,6 @@ def extract_mentions(
     key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     user_entities: Optional[List[Tuple[str, str]]] = None,
-    reference_strict: bool = False,
     detector: str = "deterministic",
 ) -> Tuple[DataFrame, DataFrame]:
     """Run extraction; returns (mentions, abbreviation_pairs).
@@ -219,7 +198,6 @@ def extract_mentions(
         key_cols,
         confidence_threshold,
         user_entities,
-        reference_strict,
         detector,
     ).localCheckpoint(eager=True)
     return split_extraction(extracted, key_cols)

@@ -8,7 +8,7 @@ Here the same *scores* come from a distributed inverted-index self-join:
 
     norms --(ngrams UDF)--> explode --> tf --> idf (smooth) --> L2 weights
     weights ⋈ weights ON ngram  (a.norm < b.norm)
-      --> SALTED partial-sum --> cosine per pair --> gate --> edges
+      --> pair-sum --> cosine per pair --> gate --> edges
 
 This is exact (same formula as sklearn TfidfVectorizer char_wb 3-5 +
 cosine_similarity) but never materializes N² — only pairs that share at
@@ -22,19 +22,19 @@ over the low-weight suffixes), so the join volume falls from Σ_g df_g² to
 identical gated edge set (scripts/prefix_bench.py). The naive
 :func:`similarity_pairs` stays as the tests' reference for it.
 
-Skew: ubiquitous n-grams (" po", "ly") make some (a, b) partial products
-land on few reducers; the pair-sum aggregation is explicitly salted
-(two-stage: (pair, salt) partial sums → pair total), on top of AQE skew-join
-splitting. But salting only fixes the REDUCE side — the join *output* is
-quadratic in per-n-gram document frequency: an n-gram present in 10⁶ norms
-emits ~10¹² candidate rows before any aggregation. ``candidate_max_df``
-drops such n-grams from the join entirely (the classic prefix-filtered
-similarity join). It is AUTO-ENABLED above ``AUTO_BLOCK_MIN_VOCAB`` unique
-norms (50k) at ``min(5% of the vocabulary, AUTO_BLOCK_DF_ABS)`` —
-the absolute bound matters because the join output is Σ_g df_g², quadratic
-in per-gram df whatever the fraction: below the threshold the
-small-corpus reference parity is exact; above
-it the cap is what makes the join feasible at all. Dropping a df>5%·N
+Skew: the pair-sum is one groupBy(a, b). A pair has at most as many
+partial products as shared n-grams, and Spark's partial aggregation
+combines them map-side, so a hub pair reaches its reducer as a handful of
+partial sums; AQE splits skewed join partitions. The real hazard is the
+join *output*, quadratic in per-n-gram document frequency: an n-gram
+present in 10⁶ norms emits ~10¹² candidate rows before any aggregation.
+``candidate_max_df`` drops such n-grams from the join entirely (the
+classic prefix-filtered similarity join). It is AUTO-ENABLED above
+``AUTO_BLOCK_MIN_VOCAB`` unique norms (50k) at ``min(5% of the vocabulary,
+AUTO_BLOCK_DF_ABS)`` — the absolute bound matters because the join output
+is Σ_g df_g², quadratic in per-gram df whatever the fraction: below the
+threshold the small-corpus reference parity is exact; above it the cap is
+what makes the join feasible at all. Dropping a df>5%·N
 n-gram loses little signal (its smooth idf is near the 1.0 floor, so it
 contributes the least cosine mass): the capped score is a LOWER BOUND on
 the exact cosine, measured short by <=0.06 with >=0.99 retention of pairs
@@ -79,6 +79,7 @@ from ..functions.textnorm import (
     normalize_entity_col,
     types_compatible_col,
 )
+from .similarity import _signature_udf, band_join, band_rows, dot
 
 SKIP_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
 
@@ -219,55 +220,57 @@ def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
     )
 
 
+def _drop_capped_grams(
+    weights: DataFrame,
+    candidate_max_df: Optional[int],
+    df_counts: Optional[DataFrame],
+    large_vocab: bool,
+) -> DataFrame:
+    """``weights`` without the n-grams whose df exceeds the cap (unchanged
+    when uncapped) — the df-cap keep-list of both similarity joins."""
+    if candidate_max_df is None or df_counts is None:
+        return weights
+    # merge-join hint (large vocab only): `keep` is GRAM-vocabulary-sized
+    # (~10-15x the norm count). An explicit broadcast OOM'd the 640k-norm
+    # tier, and even AQE's own estimate-driven broadcast choice did
+    # (string-heavy gram tables inflate 5-10x their estimated size as hash
+    # relations) — BENCH.md round-5 curve. The join key is ngram, which the
+    # postings join shuffles on anyway.
+    keep = _dim_hint(
+        df_counts.filter(F.col("df") <= candidate_max_df).select("ngram"),
+        large_vocab,
+    )
+    return weights.join(keep, "ngram")
+
+
+def _pair_sum(joined: DataFrame) -> DataFrame:
+    """(a, b, score): the sum of wa*wb over each pair's shared n-grams, in
+    one aggregation (see the module docstring on skew)."""
+    return joined.groupBy("a", "b").agg(
+        F.sum(F.col("wa") * F.col("wb")).alias("score")
+    )
+
+
 def similarity_pairs(
     weights: DataFrame,
-    salt_partitions: int = 16,
     candidate_max_df: Optional[int] = None,
     df_counts: Optional[DataFrame] = None,
     large_vocab: bool = True,
 ) -> DataFrame:
-    """Exact cosine for every norm pair sharing an n-gram: (a, b, score).
-
-    Two-stage salted aggregation: the inner groupBy includes a hash-salt so
-    partial products of hub pairs spread across ``salt_partitions`` reducers
-    before the final pair-sum.
-    """
+    """Exact cosine for every norm pair sharing an n-gram: (a, b, score)."""
+    weights = _drop_capped_grams(weights, candidate_max_df, df_counts, large_vocab)
     left = weights.select(
         F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
     )
     right = weights.select(
         F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
     )
-    if candidate_max_df is not None and df_counts is not None:
-        # merge-join hint (large vocab only): `keep` is
-        # GRAM-vocabulary-sized (~10-15x the norm count). An explicit
-        # broadcast OOM'd the 640k-norm tier, and even AQE's own
-        # estimate-driven broadcast choice did (string-heavy gram tables
-        # inflate 5-10x their estimated size as hash relations) —
-        # BENCH.md round-5 curve. The join key is ngram, which the
-        # postings join shuffles on anyway.
-        keep = _dim_hint(
-            df_counts.filter(F.col("df") <= candidate_max_df).select("ngram"),
-            large_vocab,
-        )
-        left = left.join(keep, "ngram")
-        right = right.join(keep, "ngram")
-
-    joined = left.join(right, "ngram").filter(F.col("a") < F.col("b"))
-    partial = (
-        joined.withColumn(
-            "salt", F.pmod(F.xxhash64("ngram"), F.lit(salt_partitions))
-        )
-        .groupBy("a", "b", "salt")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("part"))
-    )
-    return partial.groupBy("a", "b").agg(F.sum("part").alias("score"))
+    return _pair_sum(left.join(right, "ngram").filter(F.col("a") < F.col("b")))
 
 
 def similarity_pairs_prefix(
     weights: DataFrame,
     gate_floor: float,
-    salt_partitions: int = 16,
     candidate_max_df: Optional[int] = None,
     df_counts: Optional[DataFrame] = None,
     large_vocab: bool = True,
@@ -290,7 +293,7 @@ def similarity_pairs_prefix(
     naive Σ_g df_g² — the high-df grams that dominate the quadratic term
     carry the least idf weight, so they land in suffixes and their df²
     blowup disappears), then the cosine is recomputed per candidate with
-    the same salted two-stage aggregation as the naive join. UNCAPPED,
+    the same pair-sum as the naive join. UNCAPPED,
     the gated edge set is IDENTICAL to the naive join's (pinned in
     tests/test_linking.py).
 
@@ -311,15 +314,9 @@ def similarity_pairs_prefix(
     join, the score sides): pass it materialized (``localCheckpoint``) so
     the TF-IDF explode/agg DAG runs once.
     """
-    cand_weights = weights
-    if candidate_max_df is not None and df_counts is not None:
-        # merge-join hint (large vocab only) — gram-vocabulary-sized; see
-        # similarity_pairs
-        keep = _dim_hint(
-            df_counts.filter(F.col("df") <= candidate_max_df).select("ngram"),
-            large_vocab,
-        )
-        cand_weights = weights.join(keep, "ngram")
+    cand_weights = _drop_capped_grams(
+        weights, candidate_max_df, df_counts, large_vocab
+    )
     # float-safety margin widens prefixes slightly (never prunes a pair the
     # exact arithmetic could pass)
     t_eff = max(gate_floor - 1e-9, 0.0)
@@ -447,18 +444,14 @@ def similarity_pairs_prefix(
     joined = (
         _dim_hint(cand, large_vocab).join(left, "a").join(right, ["b", "ngram"])
     )
-    partial = (
-        joined.withColumn(
-            "salt", F.pmod(F.xxhash64("ngram"), F.lit(salt_partitions))
-        )
-        .groupBy("a", "b", "salt")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("part"))
-    )
-    return (
-        partial.groupBy("a", "b")
-        .agg(F.sum("part").alias("score"))
-        .filter(F.col("score") >= F.lit(t_eff))
-    )
+    return _pair_sum(joined).filter(F.col("score") >= F.lit(t_eff))
+
+
+def _embeddings(norms: DataFrame, dim: int) -> DataFrame:
+    """(norm, v): the L2-normalized char-n-gram embedding of each norm."""
+    from ..functions.embed import embedding_udf
+
+    return norms.select("norm", embedding_udf(dim)(F.col("norm")).alias("v"))
 
 
 def semantic_pairs_exact(
@@ -469,24 +462,13 @@ def semantic_pairs_exact(
     parity baseline for small vocabularies; the scale path is
     :func:`semantic_pairs_lsh`. Embeddings are L2-normalized, so the dot
     product IS the cosine."""
-    from ..functions.embed import embedding_udf
-
-    emb = norms.select(
-        "norm", embedding_udf(dim)(F.col("norm")).alias("v")
-    )
-    left = emb.select(F.col("norm").alias("a"), F.col("v").alias("va"))
-    right = emb.select(F.col("norm").alias("b"), F.col("v").alias("vb"))
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("va"), F.col("vb"), lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    emb = _embeddings(norms, dim)
+    left = emb.select(F.col("norm").alias("a"), F.col("v").alias("v_a"))
+    right = emb.select(F.col("norm").alias("b"), F.col("v").alias("v_b"))
     return (
         left.crossJoin(right)
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b", dot.alias("score"))
+        .select("a", "b", dot(F.col("v_a"), F.col("v_b")).alias("score"))
     )
 
 
@@ -498,8 +480,8 @@ def semantic_pairs_lsh(
 ) -> DataFrame:
     """L4 scoring, scale form: banded random-hyperplane LSH blocks the
     candidate space (a pair is a candidate when ANY band of sign-projection
-    bits matches exactly — the same banding scheme the MinHash dedup uses),
-    then exact cosine re-ranks inside the blocks.
+    bits matches exactly — the band join the simhash dedup uses), then
+    exact cosine re-ranks inside the blocks.
 
     Recall for a pair with cosine c: per-plane agreement p = 1 - acos(c)/π,
     candidate prob = 1 - (1 - p^band_bits)^bands — ~1.0 at c=0.95 and
@@ -508,9 +490,6 @@ def semantic_pairs_lsh(
     ``bands`` for more recall, ``band_bits`` for tighter blocks. Every
     emitted score is exact, so this is a strict subset of
     :func:`semantic_pairs_exact` (tested)."""
-    from ..functions.embed import embedding_udf
-    from .similarity import _signature_udf
-
     n_planes = bands * band_bits
     if n_planes > 63:
         # the signature packs one bit per plane into a single signed long
@@ -518,41 +497,12 @@ def semantic_pairs_lsh(
             f"bands*band_bits={n_planes} exceeds the 63-bit signature; "
             "raise band_bits (tighter blocks) instead of bands past this"
         )
-    mask = (1 << band_bits) - 1
-    emb = norms.select(
-        "norm", embedding_udf(dim)(F.col("norm")).alias("v")
-    ).withColumn("sig", _signature_udf(dim, n_planes)(F.col("v")))
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright(F.col("sig"), k * band_bits)
-                .bitwiseAND(F.lit(mask))
-                .alias("key"),
-            )
-            for k in range(bands)
-        ]
-    )
-    exploded = emb.select(
-        "norm", "v", F.explode(band_keys).alias("bk")
-    ).select("norm", "v", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    left = exploded.select(
-        F.col("norm").alias("a"), F.col("v").alias("va"), "band", "key"
-    )
-    right = exploded.select(
-        F.col("norm").alias("b"), F.col("v").alias("vb"), "band", "key"
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("va"), F.col("vb"), lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    emb = _embeddings(norms, dim).withColumn(
+        "sig", _signature_udf(dim, n_planes)(F.col("v"))
     )
     return (
-        left.join(right, ["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", dot.alias("score"))
+        band_join(band_rows(emb, "sig", bands, band_bits), "norm", "v")
+        .select("a", "b", dot(F.col("v_a"), F.col("v_b")).alias("score"))
         # a pair can collide in several bands; scores are identical
         .groupBy("a", "b")
         .agg(F.max("score").alias("score"))
@@ -571,7 +521,7 @@ def semantic_lsh_tier(n_norms: int) -> Tuple[int, int]:
     """(bands, band_bits) for a vocabulary size — the measured tiers from
     scripts/semantic_bench.py (BENCH.md): 8x4 holds ~0.985 recall at the
     0.80 gate below ~40k norms; 10x6 keeps candidate volume bounded above
-    it at ~0.97 recall. Explicit user dials always win over this AUTO."""
+    it at ~0.97 recall."""
     if n_norms <= SEMANTIC_AUTO_TIER_VOCAB:
         return (8, 4)
     return (10, 6)
@@ -757,11 +707,8 @@ def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
 def build_linking_tables(
     mentions: DataFrame,
     abbrevs: DataFrame,
-    salt_partitions: int = 16,
     candidate_max_df: Optional[int] = None,
     score_source: str = "tfidf",
-    embed_bands: Optional[int] = None,
-    embed_band_bits: Optional[int] = None,
     extracted: Optional[DataFrame] = None,
 ) -> LinkingTables:
     """Assemble the full gated edge list for connected components.
@@ -770,12 +717,11 @@ def build_linking_tables(
     cascade: "tfidf" (default — the reference's primary path),
     "semantic_exact" (L4, embedding cosine over every pair — the reference's
     use_semantic path, app.py:3084-3110; O(N²), small vocabularies), or
-    "semantic_lsh" (L4 at scale: LSH-blocked candidates, exact re-rank;
-    ``embed_bands``/``embed_band_bits`` dial candidate recall — see
-    :func:`semantic_pairs_lsh`). ``embed_bands=None``/``embed_band_bits=None``
-    means AUTO: the bands×bits tier keys off the measured vocabulary size
-    (:func:`semantic_lsh_tier` — 8x4 below ~40k norms, 10x6 above), exactly
-    as the TF-IDF df-cap AUTO keys off ``n_norms``; an explicit int wins.
+    "semantic_lsh" (L4 at scale: LSH-blocked candidates, exact re-rank —
+    see :func:`semantic_pairs_lsh`). The bands×bits tier keys off the
+    measured vocabulary size (:func:`semantic_lsh_tier` — 8x4 below ~40k
+    norms, 10x6 above), exactly as the TF-IDF df-cap AUTO keys off
+    ``n_norms``.
 
     ``candidate_max_df=None`` means AUTO: exact (no n-gram dropped) while the
     vocabulary is under ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else capped at
@@ -943,13 +889,9 @@ def build_linking_tables(
     if score_source == "semantic_exact":
         scored = semantic_pairs_exact(profiles.select("norm"))
     elif score_source == "semantic_lsh":
-        tier_bands, tier_bits = semantic_lsh_tier(n_norms)
+        bands, band_bits = semantic_lsh_tier(n_norms)
         scored = semantic_pairs_lsh(
-            profiles.select("norm"),
-            bands=embed_bands if embed_bands is not None else tier_bands,
-            band_bits=(
-                embed_band_bits if embed_band_bits is not None else tier_bits
-            ),
+            profiles.select("norm"), bands=bands, band_bits=band_bits
         )
     else:
         # the df-cap keep-list and the prefix join both consume the weights
@@ -965,7 +907,6 @@ def build_linking_tables(
         scored = similarity_pairs_prefix(
             weights,
             gate_floor=adaptive_threshold_floor(base),
-            salt_partitions=salt_partitions,
             candidate_max_df=candidate_max_df,
             df_counts=tf_df_counts,
             large_vocab=large_vocab,

@@ -592,7 +592,6 @@ def neural_extraction_udf(
     model_name: str = "stub",
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     user_entities: Optional[List[Tuple[str, str]]] = None,
-    reference_strict: bool = False,
     added_tokens: Optional[List[str]] = None,
 ):
     """Arrow-batched extraction UDF with the neural span source. Ships only
@@ -639,7 +638,6 @@ def neural_extraction_udf(
                 text,
                 confidence_threshold=confidence_threshold,
                 user_patterns=patterns,
-                reference_strict=reference_strict,
                 span_fn=lambda _wt, _spans=spans: _spans,
             )
             mentions_out.append(

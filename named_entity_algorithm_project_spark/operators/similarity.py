@@ -1,5 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
+  dot / cosine        the dense dot product and cosine Column expressions
+                      (zip_with + aggregate, double accumulation) — every
+                      embedding scorer in the package builds on these two
   cosine_topk         brute-force exact top-k (the baseline; one pass, JVM
                       higher-order functions, broadcast query vector)
   rp_lsh_buckets      random-hyperplane LSH signatures (deterministic,
@@ -7,6 +10,10 @@
                       matmul, not dim x n_planes expression nodes)
   lsh_topk            bucketed ANN: probe matching buckets only, exact
                       re-rank inside — the scale path
+  band_rows/band_join banded-signature candidate pairs: a pair is a
+                      candidate when its signatures agree on any band
+                      (simhash near-dups, semantic-LSH linking,
+                      minhash bands)
 
 At 100 TB the brute-force scan is one full pass (fine for one-off queries,
 wrong for query streams); rp_lsh assigns each vector to a signature bucket
@@ -29,17 +36,23 @@ from typing import List, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _dot(a, b) -> "F.Column":
+def dot(a: Column, b: Column) -> Column:
+    """Dense dot product of two array columns, accumulated in double."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity of two array columns."""
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def cosine_scores(
@@ -55,9 +68,7 @@ def cosine_scores(
     gate) need ties decided on the rounded value, not last-ulp float
     noise."""
     qv = F.array(*[F.lit(float(x)) for x in query])
-    score = _dot(F.col(vec_col), qv) / (
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))) * F.sqrt(_dot(qv, qv))
-    )
+    score = cosine(F.col(vec_col), qv)
     if round_digits is not None:
         score = F.round(score, round_digits)
     return vectors.select(F.col(id_col), score.alias("cos_sim"))
@@ -164,4 +175,41 @@ def lsh_topk(
         cosine_scores(candidates, query, id_col, vec_col, round_digits)
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
+    )
+
+
+def band_rows(frame: DataFrame, sig_col: str, bands: int, bits: int) -> DataFrame:
+    """``frame`` with one row per signature band, plus (band, key): band k
+    of the integer signature is ``(sig >> k*bits) & (2^bits - 1)``."""
+    mask = F.lit((1 << bits) - 1)
+    keys = F.array(
+        *[
+            F.struct(
+                F.lit(k).alias("band"),
+                F.shiftright(F.col(sig_col), k * bits).bitwiseAND(mask).alias("key"),
+            )
+            for k in range(bands)
+        ]
+    )
+    return frame.withColumn("_bk", F.explode(keys)).select(
+        *frame.columns, "_bk.band", "_bk.key"
+    )
+
+
+def band_join(
+    banded: DataFrame, id_col: str, payload: str | None = None
+) -> DataFrame:
+    """Candidate pairs from banded rows (``id_col``, band, key[, payload]):
+    every id pair agreeing on at least one band's key, as (a, b) with
+    a < b, plus ``payload_a``/``payload_b`` when a payload column is
+    named. A pair appears once per agreeing band; callers dedup."""
+
+    def side(name: str) -> DataFrame:
+        cols = [F.col(id_col).alias(name), "band", "key"]
+        if payload is not None:
+            cols.append(F.col(payload).alias(f"{payload}_{name}"))
+        return banded.select(*cols)
+
+    return side("a").join(side("b"), ["band", "key"]).filter(
+        F.col("a") < F.col("b")
     )

@@ -41,7 +41,6 @@ def oracle_mentions(
     transcripts: pd.DataFrame,
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     user_entities: Optional[List[Tuple[str, str]]] = None,
-    reference_strict: bool = False,
     span_fn=None,
 ) -> Tuple[pd.DataFrame, pd.DataFrame]:
     """Stage A: mentions + abbreviation pairs. ``span_fn`` mirrors
@@ -54,7 +53,6 @@ def oracle_mentions(
             rec.text,
             confidence_threshold=confidence_threshold,
             user_patterns=patterns,
-            reference_strict=reference_strict,
             span_fn=span_fn,
         )
         for m in result.mentions:

@@ -5,7 +5,7 @@
                             conv_id hash-bucket with lineage rows (resume
                             skips committed buckets)
       Stage B  link       — TF-IDF inverted-index similarity + abbrev/alias
-                            edges (salted aggregation)
+                            edges
       Stage C  canonical  — iterative-join connected components + pick
       Stage D  triples    — nearest-property join -> (subj, pred, obj)
       Stage E  materialize— entities, triples, alias_groups, canonical_map,
@@ -58,9 +58,6 @@ class PipelineConfig:
     user_entities: List[Tuple[str, str]] = field(default_factory=list)
     user_canonical: Optional[Mapping[str, List[str]]] = None
     merge_map: Optional[Mapping[str, str]] = None
-    # replicate the reference's OBSERVED lonely-unit pass (a no-op) instead
-    # of the pinned self-excluded semantics — detector._postfilter docstring
-    reference_strict: bool = False
     # span detector: "deterministic" (reference DummyPipeline path) or
     # "neural[:<hf-model>]" (X2/X3: chunking + per-worker model singleton +
     # batched inference; ":stub" in model-less environments)
@@ -71,16 +68,10 @@ class PipelineConfig:
     extend_vocab: bool = False
     # linking candidate scorer: "tfidf" (reference primary path),
     # "semantic_exact" (L4 embedding cosine, O(N²) — small vocab), or
-    # "semantic_lsh" (L4 banded-LSH blocked — the scale path)
+    # "semantic_lsh" (L4 banded-LSH blocked — the scale path; its
+    # bands x bits tier keys off the vocabulary size,
+    # linking.semantic_lsh_tier)
     score_source: str = "tfidf"
-    # semantic_lsh recall dials (candidate prob at cosine c is
-    # 1-(1-p^band_bits)^bands with p = 1-acos(c)/pi): more bands = more
-    # recall & more candidates; more band_bits = tighter blocks. None =
-    # AUTO tier keyed off the measured vocabulary size (8x4 below ~40k
-    # norms at ~0.985 recall @0.80, 10x6 above — linking.semantic_lsh_tier);
-    # an explicit int always wins.
-    embed_bands: Optional[int] = None
-    embed_band_bits: Optional[int] = None
 
 
 @dataclass
@@ -165,7 +156,6 @@ def run_pipeline(
             key_cols=("conv_id", "turn_idx", "bucket"),
             confidence_threshold=config.confidence_threshold,
             user_entities=config.user_entities,
-            reference_strict=config.reference_strict,
             detector=config.detector,
             added_tokens=added_tokens,
         )
@@ -190,8 +180,6 @@ def run_pipeline(
         mentions_raw,
         abbrevs,
         score_source=config.score_source,
-        embed_bands=config.embed_bands,
-        embed_band_bits=config.embed_band_bits,
         extracted=extracted_committed,
     )
 

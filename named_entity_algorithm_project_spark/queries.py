@@ -396,7 +396,7 @@ def q11_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q12_ngram_jaccard_pairs",
     """
     WITH toks AS (
-      SELECT doc_id, unnest(list_distinct(string_split_regex(lower(text), '\\s+'))) AS tok
+      SELECT doc_id, unnest(list_distinct(string_split_regex(lower(trim(text)), '\\s+'))) AS tok
       FROM documents WHERE doc_id < 120
     ), sizes AS (
       SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id
@@ -416,33 +416,13 @@ def q11_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-set Jaccard near-dup join via inverted index (explode tokens,
     self-join on token, count intersections) — the scalable shape; never
-    materializes the full pair matrix."""
+    materializes the full pair matrix. Runs the dedup operator
+    (operators/dedup.py token_jaccard_pairs)."""
+    from .operators.dedup import token_jaccard_pairs
+
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.col("text")), r"\s+"))
-        ).alias("tok"),
-    )
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = toks.select(F.col("doc_id").alias("doc_a"), "tok")
-    b = toks.select(F.col("doc_id").alias("doc_b"), "tok")
-    inter = (
-        a.join(b, "tok")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("both"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"))
-    jac = F.col("both").cast("double") / (
-        F.col("sza") + F.col("szb") - F.col("both")
-    )
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= 0.8)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    return token_jaccard_pairs(docs, threshold=0.8).select(
+        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -538,6 +518,26 @@ def q13_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search over embeddings
 # --------------------------------------------------------------------------
 
+def _topk_to_vec0(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The ``k`` embeddings (vec_id 0 excluded) nearest vec_id 0's, with
+    ``cos_sim`` = cosine rounded to 6 digits: ties are decided on the
+    rounded value, as the DuckDB oracles do. The query row rides a
+    broadcast cross join."""
+    from .operators.similarity import cosine
+
+    emb = _t(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    return (
+        emb.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .withColumn(
+            "cos_sim", F.round(cosine(F.col("embedding"), F.col("qv")), 6)
+        )
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(k)
+    )
+
+
 @_register(
     "q14_cosine_topk",
     """
@@ -552,38 +552,7 @@ def q13_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (the ANN baseline): JVM-side higher-order
     functions (zip_with + aggregate) — no Python in the loop."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("embedding"), F.col("qv"))
-                / (
-                    F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                    * F.sqrt(dot(F.col("qv"), F.col("qv")))
-                ),
-                6,
-            ),
-        )
-    )
-    return (
-        scored.orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .select("vec_id", "cos_sim")
-        .limit(10)
-    )
+    return _topk_to_vec0(spark, sf_dir, 10).select("vec_id", "cos_sim")
 
 
 @_register(
@@ -602,32 +571,7 @@ def q14_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q15_knn_label_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN classification shape: label histogram of the query's top-50."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("embedding"), F.col("qv"))
-                / (
-                    F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                    * F.sqrt(dot(F.col("qv"), F.col("qv")))
-                ),
-                6,
-            ),
-        )
-    )
-    topk = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(50)
+    topk = _topk_to_vec0(spark, sf_dir, 50)
     return topk.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
 
 

@@ -32,8 +32,8 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         # AQE: runtime coalescing of small shuffle partitions + automatic
-        # skew-join splitting; the baseline skew mitigation (salting is
-        # layered on top for the hub-entity cases AQE cannot see).
+        # skew-join splitting; the skew mitigation for joins (hub-keyed
+        # aggregations rely on map-side partial aggregation).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -126,9 +126,9 @@ def main() -> None:
     mentions, abbrevs = extract_mentions(t)
     profiles = norm_profiles(linkable_mentions(mentions))
     weights = tfidf_weights(profiles.select("norm"), 1000)
-    scored = similarity_pairs(weights, salt_partitions=16)
+    scored = similarity_pairs(weights)
     out.append(
-        "\n## kg: tfidf similarity scoring (inverted-index join + salted agg)\n```"
+        "\n## kg: tfidf similarity scoring (inverted-index join + pair-sum)\n```"
     )
     out.extend(key_lines(formatted(scored.filter(F.col("score") >= 0.8))))
     out.append("```")
@@ -137,14 +137,14 @@ def main() -> None:
     # pass for its several consumers) — audit the same shape
     weights_ckpt = weights.localCheckpoint(eager=True)
     scored_prefix = similarity_pairs_prefix(
-        weights_ckpt, gate_floor=0.82, salt_partitions=16, large_vocab=False
+        weights_ckpt, gate_floor=0.82, large_vocab=False
     )
     out.append(
         "\n## kg: tfidf similarity scoring, DEFAULT prefix-filtered path\n"
         "\n(ppjoin candidate generation: window marks each norm's"
         "\nhigh-weight prefix, postings join only against prefixes, then"
         "\nexact rescoring over candidates — note the candidate join keys"
-        "\nand the same salted final aggregation; 15x the naive join at"
+        "\nand the same final pair-sum; 15x the naive join at"
         "\n60k norms, BENCH.md. Below MERGE_HINT_MIN_VOCAB the"
         "\nvocabulary-sized inputs may broadcast — AQE decides from runtime"
         "\nsizes.)\n```"
@@ -162,7 +162,7 @@ def main() -> None:
     # checkpoint (accurate statistics), so AQE's runtime-size broadcast of
     # them is allowed — pinning them measured 2.2x slower at the 62k tier.
     scored_prefix_large = similarity_pairs_prefix(
-        weights_ckpt, gate_floor=0.82, salt_partitions=16, large_vocab=True
+        weights_ckpt, gate_floor=0.82, large_vocab=True
     )
     plan_large = formatted(scored_prefix_large)
     n_smj = plan_large.count(") SortMergeJoin")

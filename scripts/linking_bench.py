@@ -69,9 +69,7 @@ def bench_one(spark, n: int, capped: bool) -> dict:
         else None
     )
     t0 = time.time()
-    pairs = similarity_pairs(
-        weights, salt_partitions=16, candidate_max_df=cap, df_counts=df_counts
-    )
+    pairs = similarity_pairs(weights, candidate_max_df=cap, df_counts=df_counts)
     n_pairs = pairs.filter(F.col("score") >= 0.8).count()
     t_join = time.time() - t0
     return {

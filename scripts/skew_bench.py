@@ -1,6 +1,6 @@
 """Hub-skew end-to-end evidence (VERDICT r4 item 7): plant a power-law hub
 entity (datagen.HUB_NORM in ~hub_rate of all turns), run the FULL pipeline
-at bench scale, and show the salted aggregation/components paths keep the
+at bench scale, and show the pair-sum/components aggregations keep the
 task-time distribution bounded — the straggler a naive hash partitioning
 would produce shows up as a stage whose p99 task runtime is a large
 multiple of its median.

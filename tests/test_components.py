@@ -135,8 +135,8 @@ def test_singletons_preserved(spark):
 
 
 def test_hub_star_graph_distributed(spark):
-    # skew shape: one hub connected to 2000 spokes; distributed path with
-    # salted aggregation must converge to the hub-component minimum
+    # skew shape: one hub connected to 2000 spokes; the distributed path
+    # must converge to the hub-component minimum
     hub = "hub"
     spokes = [f"spoke{i:05d}" for i in range(2000)]
     nodes_df = spark.createDataFrame(
@@ -145,9 +145,7 @@ def test_hub_star_graph_distributed(spark):
     edges_df = spark.createDataFrame(
         [(hub, s) for s in spokes], "src string, dst string"
     )
-    got = connected_components(
-        nodes_df, edges_df, local_threshold=0, salt_partitions=4
-    ).collect()
+    got = connected_components(nodes_df, edges_df, local_threshold=0).collect()
     assert {r["component"] for r in got} == {"hub"}
     assert len(got) == 2001
 

@@ -49,9 +49,8 @@ def test_turn_indices_dense_in_generator(spark):
 
 def test_hub_skew_corpus_end_to_end(spark, tmp_path):
     """The hub-skew tier (datagen.hub_rate): ONE norm planted into ~half of
-    all turns must flow through the full pipeline — the salted aggregation
-    paths make a power-law key a throughput question, not a correctness
-    one. Asserts the planting actually skews (hub dominates the mention
+    all turns must flow through the full pipeline — a power-law key is a
+    throughput question for the aggregations, not a correctness one. Asserts the planting actually skews (hub dominates the mention
     frequency table) and the hub norm still resolves to one canonical.
     hub_rate=0 stays bit-identical to the original generator (zero extra
     rng draws), so every pinned fixture is untouched — checked here

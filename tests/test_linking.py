@@ -104,7 +104,7 @@ def test_spark_tfidf_matches_oracle(spark):
     weights = tfidf_weights(df, len(norms))
     pairs = {
         (r["a"], r["b"]): r["score"]
-        for r in similarity_pairs(weights, salt_partitions=4).collect()
+        for r in similarity_pairs(weights).collect()
     }
     assert set(pairs) == set(oracle)
     for k, v in oracle.items():
@@ -347,7 +347,6 @@ def test_auto_blocking_recall(spark):
     def scores(capped):
         pairs = similarity_pairs(
             weights,
-            salt_partitions=4,
             candidate_max_df=cap if capped else None,
             df_counts=df_counts if capped else None,
         )
@@ -431,17 +430,16 @@ def test_prefix_filter_scores_match_naive(spark):
     def collect(frame):
         return {(r["a"], r["b"]): r["score"] for r in frame.collect()}
 
-    naive_exact = collect(similarity_pairs(weights, salt_partitions=4))
+    naive_exact = collect(similarity_pairs(weights))
     naive_capped = collect(
         similarity_pairs(
-            weights, salt_partitions=4, candidate_max_df=cap,
-            df_counts=df_counts,
+            weights, candidate_max_df=cap, df_counts=df_counts,
         )
     )
 
     # --- uncapped: identical above the floor --------------------------------
     pref = collect(
-        similarity_pairs_prefix(weights, gate_floor=floor, salt_partitions=4)
+        similarity_pairs_prefix(weights, gate_floor=floor)
     )
     above = {k for k, s in naive_exact.items() if s >= floor}
     assert len(above) >= 50, "fixture produced too few above-floor pairs"
@@ -454,8 +452,8 @@ def test_prefix_filter_scores_match_naive(spark):
     capped_above = {k for k, s in naive_capped.items() if s >= floor}
     exact_capped = collect(
         similarity_pairs_prefix(
-            weights, gate_floor=floor, salt_partitions=4,
-            candidate_max_df=cap, df_counts=df_counts,
+            weights, gate_floor=floor, candidate_max_df=cap,
+            df_counts=df_counts,
         )
     )
     assert capped_above <= set(exact_capped), (
@@ -504,22 +502,21 @@ def test_prefix_filter_gated_edges_identical(spark):
             for r in gate_scored_pairs(scored, profiles, [], base).collect()
         }
 
-    naive = gated(similarity_pairs(weights, salt_partitions=4))
+    naive = gated(similarity_pairs(weights))
     assert len(naive) >= 20, "fixture produced too few gated edges"
     assert gated(
-        similarity_pairs_prefix(weights, gate_floor=floor, salt_partitions=4)
+        similarity_pairs_prefix(weights, gate_floor=floor)
     ) == naive
     naive_capped = gated(
         similarity_pairs(
-            weights, salt_partitions=4, candidate_max_df=cap,
-            df_counts=df_counts,
+            weights, candidate_max_df=cap, df_counts=df_counts,
         )
     )
     assert naive_capped
     assert gated(
         similarity_pairs_prefix(
-            weights, gate_floor=floor, salt_partitions=4,
-            candidate_max_df=cap, df_counts=df_counts,
+            weights, gate_floor=floor, candidate_max_df=cap,
+            df_counts=df_counts,
         )
     ) >= naive_capped
 

@@ -20,6 +20,7 @@ from named_entity_algorithm_project_spark.dictionaries import (
     DOMAIN_ALIAS_SUBSTRINGS,
     ENTITY_TYPES,
 )
+from named_entity_algorithm_project_spark.functions.localrel import local_df
 from named_entity_algorithm_project_spark.functions.textnorm import (
     compute_base_threshold,
 )
@@ -106,14 +107,16 @@ def _oracle_tables(mentions, abbrevs):
 
 def _spark_tables(frames):
     """Linking tables from the (mentions, abbrevs, extracted) frames, as
-    (norms, edges, extra nodes) sets, plus the base threshold and whether
-    the driver-local path ran."""
+    (norms, edges, extra nodes) sets, plus the base threshold and which of
+    the three tables are JVM-local relations (all of them when the
+    driver-local path ran, empty tables included)."""
     mentions, abbrevs, extracted = frames
     lt = linking.build_linking_tables(mentions, abbrevs, extracted=extracted)
     norms = {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()}
     edges = {(r["src"], r["dst"]) for r in lt.edges.collect()}
     extra = {r["norm"] for r in lt.extra_nodes.collect()}
-    return (norms, edges, extra), lt.base_threshold, lt.norms.isLocal()
+    tables = (lt.norms, lt.edges, lt.extra_nodes)
+    return (norms, edges, extra), lt.base_threshold, [t.isLocal() for t in tables]
 
 
 def _frames(spark, mentions, abbrevs, fused):
@@ -155,7 +158,7 @@ def test_oracle_local_distributed_agree(spark, monkeypatch):
         expected = _oracle_tables(mentions, abbrevs)
         got_local, base_local, ran_local = local[seed]
         got_dist, base_dist, ran_dist = dist[seed]
-        assert ran_local and not ran_dist, seed
+        assert all(ran_local) and not ran_dist[0], seed
         for name, want, table_local, table_dist in zip(
             ("norms", "edges", "extra nodes"), expected, got_local, got_dist
         ):
@@ -164,3 +167,6 @@ def test_oracle_local_distributed_agree(spark, monkeypatch):
         assert base_local == base_dist, seed
         n_edges += len(expected[1])
     assert n_edges > 0
+    # a zero-row table is a JVM-local relation too, not an RDD-backed one
+    # that would fork Python workers when consumed
+    assert local_df(spark, [], "src string, dst string").isLocal()

@@ -177,10 +177,10 @@ def test_pipeline_accepts_semantic_score_source(spark, tmp_path):
     assert res.triples.count() > 0
 
 
-def test_band_knobs_thread_through_and_cap_enforced(spark, tmp_path):
-    """PipelineConfig.embed_bands/embed_band_bits reach semantic_pairs_lsh
-    (more bands -> candidate superset at identical exact scores), and the
-    63-plane signature cap raises a clear error."""
+def test_band_knobs_thread_through_and_cap_enforced(spark):
+    """semantic_pairs_lsh's bands/band_bits dials: more bands -> more
+    candidates at identical exact scores, and the 63-plane signature cap
+    raises a clear error."""
     from named_entity_algorithm_project_spark.operators.linking import (
         semantic_pairs_lsh,
     )
@@ -206,43 +206,10 @@ def test_band_knobs_thread_through_and_cap_enforced(spark, tmp_path):
     with pytest.raises(ValueError, match="63"):
         semantic_pairs_lsh(df, bands=16, band_bits=4)  # 64 planes
 
-    # the pipeline threads the knobs: an over-cap config fails fast
-    from named_entity_algorithm_project_spark.datagen import (
-        TRANSCRIPTS_SCHEMA,
-        generate_rows,
-    )
-    from named_entity_algorithm_project_spark.pipeline import (
-        PipelineConfig,
-        run_pipeline,
-    )
-
-    rows = generate_rows(n_convs=6, seed=23)
-    tdf = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    with pytest.raises(ValueError, match="63"):
-        run_pipeline(
-            spark, tdf, str(tmp_path / "overcap"),
-            config=PipelineConfig(
-                n_buckets=2, score_source="semantic_lsh",
-                embed_bands=32, embed_band_bits=4,
-            ),
-            resume=False,
-        )
-    # and a legal non-default combo runs end-to-end
-    res = run_pipeline(
-        spark, tdf, str(tmp_path / "legal"),
-        config=PipelineConfig(
-            n_buckets=2, score_source="semantic_lsh",
-            embed_bands=12, embed_band_bits=5,
-        ),
-        resume=False,
-    )
-    assert res.triples.count() > 0
-
 
 def test_semantic_lsh_auto_tier_selection(spark, monkeypatch):
     """Bands×bits AUTO keys off the vocabulary size exactly like the
-    TF-IDF df-cap AUTO: 8x4 at/below the boundary, 10x6 above; an explicit
-    dial always wins over the tier."""
+    TF-IDF df-cap AUTO: 8x4 at/below the boundary, 10x6 above."""
     from named_entity_algorithm_project_spark.operators import linking
 
     # the tier function flips exactly at the boundary
@@ -281,9 +248,3 @@ def test_semantic_lsh_auto_tier_selection(spark, monkeypatch):
     monkeypatch.setattr(linking, "SEMANTIC_AUTO_TIER_VOCAB", 1)
     linking.build_linking_tables(mentions, abbrevs, score_source="semantic_lsh")
     assert calls[-1] == (10, 6)  # past the boundary -> scale tier
-
-    linking.build_linking_tables(
-        mentions, abbrevs, score_source="semantic_lsh",
-        embed_bands=6, embed_band_bits=5,
-    )
-    assert calls[-1] == (6, 5)  # explicit dials beat the AUTO tier
