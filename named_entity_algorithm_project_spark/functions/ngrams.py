@@ -14,6 +14,7 @@ reference's TfidfVectorizer makes them.
 
 from __future__ import annotations
 
+import math
 import re
 from typing import Dict, List
 
@@ -90,3 +91,23 @@ def tf_counts(text: str, min_n: int = MIN_N, max_n: int = MAX_N) -> Dict[str, in
     for gram in char_wb_ngrams(text, min_n, max_n):
         counts[gram] = counts.get(gram, 0) + 1
     return counts
+
+
+def tfidf_vectors(texts: List[str]) -> List[Dict[str, float]]:
+    """The Python form of ``linking.tfidf_weights``: one L2-normalized
+    smooth TF-IDF vector (raw tf, idf = ln((1+N)/(1+df)) + 1) per text,
+    keyed by n-gram in first-occurrence order; ``{}`` when a text has no
+    n-grams. Both Python similarity scorers build their vectors here."""
+    n = len(texts)
+    counts = [tf_counts(t) for t in texts]
+    df: Dict[str, int] = {}
+    for c in counts:
+        for g in c:
+            df[g] = df.get(g, 0) + 1
+    idf = {g: math.log((1.0 + n) / (1.0 + d)) + 1.0 for g, d in df.items()}
+    vecs: List[Dict[str, float]] = []
+    for c in counts:
+        w = {g: tf * idf[g] for g, tf in c.items()}
+        l2 = math.sqrt(sum(v * v for v in w.values()))
+        vecs.append({g: v / l2 for g, v in w.items()} if l2 > 0 else {})
+    return vecs

@@ -53,16 +53,25 @@ Python and one Column definition in functions/textnorm.py):
     reference mutates type sets sequentially per link — we pin the
     order-free one-round union, gated on the original sets)
 
-Small uncapped vocabularies skip Spark and run the same cascade in Python
-(:func:`oracle.link_vocabulary`, shared with the pandas oracle).
+Every uncapped tfidf vocabulary (up to ``AUTO_BLOCK_MIN_VOCAB`` norms)
+skips Spark: the driver collects the fused vocabulary table and runs the
+same cascade in Python (:func:`oracle.link_vocabulary`, shared with the
+pandas oracle), scored by :func:`tfidf_prefix_pairs`, the Python form of
+the prefix join. At that size the distributed cascade is ~40 Spark jobs
+whose cost is scheduling, not data: the Python scorer takes about half a
+second on 8k datagen norms, and a whole local linking run on 50k Zipf
+norms 18 s against the cascade's 39 s (BENCH.md). The distributed path
+runs for capped vocabularies and the semantic scorers.
 """
 
 from __future__ import annotations
 
 import os
+from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Optional, Tuple
+from functools import partial
+from typing import Dict, List, Optional, Tuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
@@ -70,7 +79,7 @@ from pyspark.sql import functions as F
 
 from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
 from ..functions.localrel import local_df
-from ..functions.ngrams import char_wb_ngrams_col
+from ..functions.ngrams import char_wb_ngrams_col, tfidf_vectors
 from ..functions.textnorm import (
     adaptive_threshold_col,
     adaptive_threshold_floor,
@@ -447,6 +456,60 @@ def similarity_pairs_prefix(
     return _pair_sum(joined).filter(F.col("score") >= F.lit(t_eff))
 
 
+def tfidf_prefix_pairs(
+    norms: List[str], gate_floor: float
+) -> Dict[Tuple[str, str], float]:
+    """The Python form of the uncapped :func:`similarity_pairs_prefix`, the
+    driver-local linker's scorer: the same suffix-mass prefix rule, the
+    same maxweight/length filter and margins, then the exact cosine of each
+    surviving candidate. Returns ``{(a, b): score}`` (a < b) for the pairs
+    scoring >= ``gate_floor - 1e-9``: exactly the naive scorer's
+    (``oracle._tfidf_cosine_pairs``) pairs in that range, with bit-equal
+    scores, because the shared n-grams are summed in the naive scorer's
+    order (first occurrence over the vocabulary)."""
+    vecs = tfidf_vectors(norms)
+    t_eff = max(gate_floor - 1e-9, 0.0)
+    gram_id: Dict[str, int] = {}
+    postings: Dict[str, List[int]] = defaultdict(list)
+    for i, v in enumerate(vecs):
+        for g in v:
+            gram_id.setdefault(g, len(gram_id))
+            postings[g].append(i)
+
+    cand = set()
+    for y, v in enumerate(vecs):
+        total = sum(w * w for w in v.values())
+        cum = 0.0
+        for g, w in sorted(v.items(), key=lambda gw: (-gw[1], gw[0])):
+            cum += w * w
+            # the Column form's _suffix_before >= t_eff, row by row
+            if total - cum + w * w >= t_eff:
+                cand.update(
+                    (x, y) if x < y else (y, x) for x in postings[g] if x != y
+                )
+    stats = [
+        (max(v.values(), default=0.0), sum(v.values()), len(v)) for v in vecs
+    ]
+
+    out: Dict[Tuple[str, str], float] = {}
+    for a, b in cand:
+        maxw_a, l1_a, n_a = stats[a]
+        maxw_b, l1_b, n_b = stats[b]
+        # the Column form's maxweight/length filter, same 1e-9 margin
+        if min(
+            maxw_b * l1_a, maxw_a * l1_b, maxw_a * maxw_b * min(n_a, n_b)
+        ) < t_eff - 1e-9:
+            continue
+        va, vb = vecs[a], vecs[b]
+        score = 0.0
+        for g in sorted(va.keys() & vb.keys(), key=gram_id.__getitem__):
+            score += va[g] * vb[g]
+        if score >= t_eff:
+            x, y = norms[a], norms[b]
+            out[(x, y) if x < y else (y, x)] = score
+    return out
+
+
 def _embeddings(norms: DataFrame, dim: int) -> DataFrame:
     """(norm, v): the L2-normalized char-n-gram embedding of each norm."""
     from ..functions.embed import embedding_udf
@@ -644,21 +707,21 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
     )
 
 
-#: Vocabulary size up to which the UNCAPPED tfidf linking cascade runs
-#: driver-side from the collected fused table (the same judgement call as
-#: connected_components' driver path: a few-thousand-norm vocabulary from
-#: any corpus size is a broadcast-scale dimension, and the ~30-job Spark
-#: cascade on it is pure scheduling overhead — measured ~5-7s at a
-#: 26-norm bench vocabulary for edge sets a python loop builds in
-#: milliseconds). Above it — or under an explicit/AUTO df-cap or a
-#: non-tfidf scorer — the distributed path runs. Read at call time, so
-#: tests force the distributed path by setting it to 0.
-TFIDF_LOCAL_MAX_VOCAB = 5_000
-#: bounded-collect guard for the fused table (norm-type rows + abbrev
-#: pairs); at TFIDF_LOCAL_MAX_VOCAB norms the fused table is a few times
-#: the norm count, so this cap bounds driver memory even when the gate
-#: says "too big" and the distributed path takes over
-LOCAL_FUSED_ROW_CAP = 60_000
+#: Vocabulary size up to which the tfidf linking cascade runs driver-side
+#: from the collected fused table: exactly the vocabularies the join runs
+#: UNCAPPED (see :func:`auto_df_cap`). There the Python prefix scorer
+#: (:func:`tfidf_prefix_pairs`) beats the ~40-job Spark cascade, whose
+#: cost is job scheduling at this size (BENCH.md, driver-local crossover).
+#: Above it, or under an explicit df-cap or a non-tfidf scorer, the
+#: distributed path runs. Read at call time, so tests force the
+#: distributed path by setting it to 0.
+TFIDF_LOCAL_MAX_VOCAB = AUTO_BLOCK_MIN_VOCAB
+#: bounded-collect guard for the fused table: one row per (norm, type) and
+#: per abbreviation pair, 1.1-1.25 rows per norm on datagen vocabularies,
+#: so 4 rows per local-tier norm. It bounds what the collect holds on the
+#: driver when the vocabulary is too big for the local path: 200k rows,
+#: about 100 MB of Python Row objects (~500 bytes a row).
+LOCAL_FUSED_ROW_CAP = 4 * TFIDF_LOCAL_MAX_VOCAB
 
 
 def auto_df_cap(n_norms: int) -> Optional[int]:
@@ -671,12 +734,11 @@ def auto_df_cap(n_norms: int) -> Optional[int]:
 def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
     """Driver-side LinkingTables from the COLLECTED fused (kind, k1, k2,
     cnt) table: the oracle's cascade (:func:`oracle.link_vocabulary`) over
-    the collected vocabulary, returned as local relations. Engages only
-    uncapped with the tfidf scorer; parity with the distributed path is
+    the collected vocabulary, scored by :func:`tfidf_prefix_pairs`,
+    returned as local relations. Engages only uncapped with the tfidf
+    scorer; parity with the distributed path is
     pinned by tests/test_linking.py::test_local_path_parity and the
     adversarial differential test."""
-    from collections import defaultdict
-
     from ..oracle import link_vocabulary
 
     freq: dict = defaultdict(int)
@@ -689,7 +751,13 @@ def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
         else:
             abbr_pairs.add((r["k1"], r["k2"]))
     base = compute_base_threshold(sum(freq.values()))
-    eff_types, edges, extra = link_vocabulary(freq, types, abbr_pairs, base)
+    eff_types, edges, extra = link_vocabulary(
+        freq,
+        types,
+        abbr_pairs,
+        base,
+        partial(tfidf_prefix_pairs, gate_floor=adaptive_threshold_floor(base)),
+    )
     return LinkingTables(
         norms=local_df(
             spark,
@@ -764,7 +832,7 @@ def build_linking_tables(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    # --- driver-local path for small UNCAPPED tfidf vocabularies -----------
+    # --- driver-local path for UNCAPPED tfidf vocabularies -----------------
     # (see TFIDF_LOCAL_MAX_VOCAB). One bounded collect of the fused table
     # doubles as the size gate and the data.
     if (
@@ -775,7 +843,7 @@ def build_linking_tables(
         sample = fused.limit(LOCAL_FUSED_ROW_CAP + 1).collect()
         if len(sample) <= LOCAL_FUSED_ROW_CAP:
             n_local = len({r["k1"] for r in sample if r["kind"] == "M"})
-            if n_local <= TFIDF_LOCAL_MAX_VOCAB and auto_df_cap(n_local) is None:
+            if n_local <= TFIDF_LOCAL_MAX_VOCAB:
                 return _build_linking_tables_local(spark, sample)
     # identical to norm_profiles(linkable): freq = mention count per norm,
     # types = sorted set of upper(normalize_entity(entity_type))

@@ -25,7 +25,7 @@ import pandas as pd
 
 from .detector import DEFAULT_CONFIDENCE_THRESHOLD, compile_user_patterns, extract_turn
 from .dictionaries import ACRONYM_SET, DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
-from .functions.ngrams import tf_counts
+from .functions.ngrams import tfidf_vectors
 from .functions.textnorm import (
     adaptive_threshold,
     can_merge_terms,
@@ -95,19 +95,7 @@ def oracle_mentions(
 def _tfidf_cosine_pairs(norms: List[str]) -> Dict[Tuple[str, str], float]:
     """Exact sklearn-equivalent TF-IDF (char_wb 3-5, smooth idf, L2) cosine
     for all pairs sharing an n-gram. N² in the worst case — oracle only."""
-    n = len(norms)
-    if n == 0:
-        return {}
-    counts = [tf_counts(t) for t in norms]
-    df: Counter = Counter()
-    for c in counts:
-        df.update(c.keys())
-    idf = {g: math.log((1.0 + n) / (1.0 + d)) + 1.0 for g, d in df.items()}
-    vecs: List[Dict[str, float]] = []
-    for c in counts:
-        w = {g: tf * idf[g] for g, tf in c.items()}
-        l2 = math.sqrt(sum(v * v for v in w.values()))
-        vecs.append({g: v / l2 for g, v in w.items()} if l2 > 0 else {})
+    vecs = tfidf_vectors(norms)
     # inverted index to avoid true N² on sparse overlap
     postings: Dict[str, List[int]] = defaultdict(list)
     for i, v in enumerate(vecs):

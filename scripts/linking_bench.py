@@ -1,20 +1,34 @@
-"""Linking-stage scale bench: exact vs df-capped similarity join.
+"""Linking-stage scale bench.
 
-Measures the TF-IDF inverted-index similarity join (tfidf_weights +
-similarity_pairs) over synthetic Zipf-ish vocabularies at growing sizes,
-with and without the candidate_max_df prefix filter (the knob
-build_linking_tables auto-enables above 50k norms at 5% of the vocabulary).
+Default mode: exact vs df-capped similarity join. Measures the TF-IDF
+inverted-index similarity join (tfidf_weights + similarity_pairs) over
+synthetic Zipf-ish vocabularies at growing sizes, with and without the
+candidate_max_df prefix filter (the knob build_linking_tables auto-enables
+above 50k norms at 5% of the vocabulary). The join OUTPUT is quadratic in
+per-n-gram df, so the exact path's cost grows superlinearly with vocabulary
+while the capped path stays near-linear.
 
-The join OUTPUT is quadratic in per-n-gram df, so the exact path's cost
-grows superlinearly with vocabulary while the capped path stays near-linear
-— this script produces the BENCH.md evidence for that. Run serially (no
-concurrent Spark jobs — BENCH.md JVM-bandwidth note).
+``crossover`` mode: the driver-local linker (the Python prefix scorer)
+beside the distributed prefix-join cascade on the same vocabulary, the
+evidence for where TFIDF_LOCAL_MAX_VOCAB sits. Each vocabulary is linked
+twice by build_linking_tables, once by default (local below the tier) and
+once with the local path switched off, and reports each leg's wall time,
+the peak RSS of the Python driver and of the JVM during the leg, and
+whether both legs gave the same edges. Vocabularies: datagen corpora at
+vocab_scale=20000 (``--convs``) and this script's Zipf vocabulary
+(``--zipf``, one MATERIAL mention per norm, no abbreviations).
 
-Usage: python scripts/linking_bench.py
+Run serially (no concurrent Spark jobs — BENCH.md JVM-bandwidth note).
+
+Usage:
+  python scripts/linking_bench.py
+  python scripts/linking_bench.py crossover [--convs 1000,3500,7000]
+      [--zipf 5000,20000,50000]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import random
@@ -26,6 +40,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from named_entity_algorithm_project_spark.datagen import generate_transcripts
+from named_entity_algorithm_project_spark.operators import linking
+from named_entity_algorithm_project_spark.operators.extract import (
+    extract_combined,
+    split_extraction,
+)
 from named_entity_algorithm_project_spark.operators.linking import (
     similarity_pairs,
     tfidf_weights,
@@ -82,7 +102,92 @@ def bench_one(spark, n: int, capped: bool) -> dict:
     }
 
 
+def _peak_rss_reset(pid) -> None:
+    """Restart the kernel's peak-RSS counter (VmHWM) of a process."""
+    with open(f"/proc/{pid}/clear_refs", "w") as f:
+        f.write("5")
+
+
+def _peak_rss_mb(pid) -> float:
+    with open(f"/proc/{pid}/status") as f:
+        line = next(line for line in f if line.startswith("VmHWM:"))
+    return round(int(line.split()[1]) / 1024, 1)
+
+
+def crossover_leg(spark, mentions, abbrevs, extracted, local: bool) -> dict:
+    """One build_linking_tables run, timed until its tables exist (both
+    paths return materialized tables), with the driver's peak RSS."""
+    pids = {"py": os.getpid(), "jvm": spark.sparkContext._gateway.proc.pid}
+    saved = linking.TFIDF_LOCAL_MAX_VOCAB
+    linking.TFIDF_LOCAL_MAX_VOCAB = saved if local else 0
+    try:
+        for pid in pids.values():
+            _peak_rss_reset(pid)
+        t0 = time.time()
+        tables = linking.build_linking_tables(
+            mentions, abbrevs, extracted=extracted
+        )
+        wall = time.time() - t0
+    finally:
+        linking.TFIDF_LOCAL_MAX_VOCAB = saved
+    edges = {(r["src"], r["dst"]) for r in tables.edges.collect()}
+    return {
+        "leg": "local" if local else "distributed",
+        "ran_local": tables.edges.isLocal(),
+        "n_norms": tables.n_norms,
+        "wall_s": round(wall, 2),
+        **{f"{k}_peak_rss_mb": _peak_rss_mb(pid) for k, pid in pids.items()},
+        "n_edges": len(edges),
+        "_edges": edges,
+    }
+
+
+def crossover(spark, convs: list, zipf: list) -> None:
+    inputs = []
+    for n in convs:
+        transcripts = generate_transcripts(
+            spark, n_convs=n, seed=42, vocab_scale=20000
+        )
+        extracted = extract_combined(transcripts).localCheckpoint(eager=True)
+        mentions, abbrevs = split_extraction(extracted)
+        inputs.append((f"datagen n_convs={n}", mentions, abbrevs, extracted))
+    for n in zipf:
+        mentions = spark.createDataFrame(
+            [(x, "MATERIAL") for x in build_vocab(n)],
+            "entity string, entity_type string",
+        )
+        abbrevs = spark.createDataFrame([], "abbr string, expansion string")
+        inputs.append((f"zipf n={n}", mentions, abbrevs, None))
+    for name, mentions, abbrevs, extracted in inputs:
+        legs = [
+            crossover_leg(spark, mentions, abbrevs, extracted, local)
+            for local in (True, False)
+        ]
+        same = legs[0].pop("_edges") == legs[1].pop("_edges")
+        for leg in legs:
+            print(
+                json.dumps({"vocab": name, **leg, "same_edges": same}), flush=True
+            )
+
+
 def main():
+    parser = argparse.ArgumentParser()
+    parser.add_argument("mode", nargs="?", choices=("crossover",))
+    parser.add_argument("--convs", default="1000,3500,7000")
+    parser.add_argument("--zipf", default="5000,20000,50000")
+    args = parser.parse_args()
+    if args.mode == "crossover":
+        spark = get_spark(
+            app_name="linking-crossover", master="local[4]", shuffle_partitions=8
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        crossover(
+            spark,
+            [int(n) for n in args.convs.split(",") if n],
+            [int(n) for n in args.zipf.split(",") if n],
+        )
+        spark.stop()
+        return
     spark = get_spark(
         app_name="linking-bench", master="local[8]", shuffle_partitions=16
     )

@@ -6,7 +6,8 @@ extraction -> build_linking_tables, and reports unique linkable norms, the
 AUTO df-cap the similarity join engaged, edge counts, and stage walls —
 the evidence that the linking path handles a corpus whose vocabulary looks
 like real transcripts (tens of thousands of distinct entities) rather than
-a recycled toy pool.
+a recycled toy pool. ``linking_local`` says which path ran: driver-local
+or distributed.
 
 Run serially (no concurrent Spark jobs). Usage:
   PYTHONPATH=/root/repo python scripts/linking_scale_run.py [n_convs] [vocab_scale]
@@ -76,6 +77,9 @@ def main():
                     "n_convs": n_convs,
                     "vocab_scale": scale,
                     "n_norms": linking.n_norms,
+                    # which path ran: driver-local (uncapped tfidf up to
+                    # TFIDF_LOCAL_MAX_VOCAB norms) or distributed
+                    "linking_local": linking.edges.isLocal(),
                     "auto_df_cap": linking.candidate_max_df,
                     "n_edges": n_edges,
                     "base_threshold": linking.base_threshold,

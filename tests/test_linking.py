@@ -255,8 +255,12 @@ def test_local_path_parity(spark, monkeypatch):
     )
     from named_entity_algorithm_project_spark.operators import linking
 
-    for n_convs, seed in ((60, 17), (150, 42)):
-        rows = generate_rows(n_convs=n_convs, seed=seed)
+    # the last input (~8k norms) lies above the former 5k-norm local bound
+    inputs = ((60, 17, 1), (150, 42, 1), (1000, 42, 20000))
+    for n_convs, seed, vocab_scale in inputs:
+        rows = generate_rows(
+            n_convs=n_convs, seed=seed, vocab_scale=vocab_scale
+        )
         df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
         extracted = extract_combined(df).localCheckpoint(eager=True)
         mentions, abbrevs = split_extraction(extracted)
@@ -270,6 +274,8 @@ def test_local_path_parity(spark, monkeypatch):
             mentions, abbrevs, extracted=extracted
         )
         assert loc.norms.isLocal() and not dist.norms.isLocal()
+        if vocab_scale > 1:
+            assert loc.n_norms > 5_000, loc.n_norms
         assert loc.candidate_max_df is None and dist.candidate_max_df is None
         assert loc.base_threshold == dist.base_threshold
         assert loc.n_norms == dist.n_norms
@@ -411,12 +417,15 @@ def test_prefix_filter_scores_match_naive(spark):
       floor);
     * capped: every emitted score is the EXACT cosine (equals the uncapped
       naive score), and every naive CAPPED pair at/above the floor is a
-      superset member."""
+      superset member;
+    * the Python form (tfidf_prefix_pairs, the driver-local scorer) returns
+      exactly the naive pairs at/above the floor, with the same scores."""
     from named_entity_algorithm_project_spark.functions.textnorm import (
         adaptive_threshold_floor,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
         similarity_pairs_prefix,
+        tfidf_prefix_pairs,
     )
 
     norms = _random_vocab(seed=9)
@@ -462,6 +471,14 @@ def test_prefix_filter_scores_match_naive(spark):
     for k, s in exact_capped.items():
         # every emitted score is the TRUE cosine, not the capped lower bound
         assert s == pytest.approx(naive_exact[k], abs=1e-9), k
+
+    # --- Python form: the naive pairs above the floor, same scores ----------
+    py_pref = tfidf_prefix_pairs(norms, floor)
+    assert set(py_pref) == above
+    for k, s in py_pref.items():
+        assert s == pytest.approx(naive_exact[k], abs=1e-9), k
+    oracle_naive = _tfidf_cosine_pairs(norms)
+    assert py_pref == {k: s for k, s in oracle_naive.items() if s >= floor}
 
 
 def test_prefix_filter_gated_edges_identical(spark):
