@@ -5,7 +5,6 @@ from .typing_rules import domain_category_for, map_entity_type  # noqa: F401
 from .textnorm import (  # noqa: F401
     adaptive_threshold,
     can_merge_terms,
-    format_canonical,
     normalize_entity,
     normalize_phrase,
     normalize_text,

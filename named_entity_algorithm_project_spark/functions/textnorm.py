@@ -35,10 +35,6 @@ def normalize_text(value: object) -> str:
     return _WS_RE.sub(" ", s).strip()
 
 
-def normalize_text_col(col: Column) -> Column:
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
 #: Whitespace a linking norm or entity type is trimmed of: ASCII
 #: whitespace, the set normalize_text collapses inside detector entities.
 NORM_WS = " \t\n\r\x0b\x0c"
@@ -64,27 +60,6 @@ def normalize_phrase(text: object) -> str:
     cleaned = str(text).lower()
     cleaned = _NON_ALNUM_RE.sub(" ", cleaned)
     return _WS_RE.sub(" ", cleaned).strip()
-
-
-def normalize_phrase_col(col: Column) -> Column:
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", " "), r"\s+", " "
-        )
-    )
-
-
-def format_canonical(value: str) -> str:
-    """<=4 chars -> upper else Title (app.py:2985-2990)."""
-    if not value:
-        return "unknown"
-    if len(value) <= 4:
-        return value.upper()
-    return value.title()
-
-
-def format_canonical_col(col: Column) -> Column:
-    return F.when(F.length(col) <= 4, F.upper(col)).otherwise(F.initcap(col))
 
 
 def can_merge_terms(a: str, b: str) -> bool:

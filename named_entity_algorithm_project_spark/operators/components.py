@@ -14,11 +14,10 @@ Scale notes:
 * iterations = O(component diameter); linking components are alias
   groups/similarity cliques with tiny diameters (≤ ~6), so the loop
   terminates in a handful of rounds even at 10^12-turn vocabularies.
-  When a pathological graph (long chains) blows past the iteration budget,
-  ``algorithm="auto"`` (default) falls back to the O(log n)-round
-  large-star/small-star variant (:func:`connected_components_star`,
+  When a pathological graph (long chains) blows past HASH_TO_MIN_ROUNDS,
+  the O(log n)-round large-star/small-star variant (:func:`_star_labels`,
   Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
-  behind the same nodes+edges -> labels contract.
+  takes over behind the same nodes+edges -> labels contract.
 * each round is a shuffle on node id; hub nodes (e.g. "polymer") are heavy
   keys, but the neighbour min() is one aggregation whose map-side partial
   aggregation (Spark hash-aggregate) collapses a hub's rows to one partial
@@ -36,52 +35,49 @@ from pyspark.sql import functions as F
 from ..functions.localrel import local_df
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iterations: int = 25,
-    local_threshold: int = 200_000,
-    local_edge_threshold: int = 2_000_000,
-    algorithm: str = "auto",
-    hash_to_min_budget: int = 8,
-) -> DataFrame:
+#: Driver-path bounds: a graph with at most LOCAL_MAX_NODES nodes AND at
+#: most LOCAL_MAX_EDGES edges is collected and solved by union-find on the
+#: driver. A vocabulary graph far smaller than the corpus is a
+#: broadcast-scale dimension, so collecting it is the same judgement call
+#: as broadcasting the canonical map; the edge bound catches a small node
+#: set with a dense gated similarity edge set (hub vocabulary, low
+#: thresholds), which could still collect tens of millions of rows.
+#: Beyond either bound the distributed rounds run. Every constant here is
+#: read at call time; tests force the distributed path with
+#: LOCAL_MAX_NODES = 0.
+LOCAL_MAX_NODES = 200_000
+LOCAL_MAX_EDGES = 2_000_000
+#: Hash-to-min rounds before the switch to large/small-star: O(diameter)
+#: is cheapest for the common tiny-diameter alias graphs, O(log n) star
+#: rounds bound the long-chain worst case.
+HASH_TO_MIN_ROUNDS = 8
+#: Large/small-star round cap; a graph still changing after it raises
+#: rather than return partial labels.
+STAR_MAX_ROUNDS = 25
+
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Compute components.
 
     Args:
         nodes: one ``norm`` column — the node universe (singletons included).
         edges: ``src``/``dst`` string columns, undirected, deduped.
-        local_threshold: node-count cutoff below which the graph is collected
-            and solved driver-side (a vocabulary graph far smaller than the
-            corpus is a broadcast-scale dimension — collecting it is the same
-            judgement call as broadcasting the canonical map; the iterative
-            path takes over beyond the cutoff and is what the 10^12-turn case
-            runs). Pass 0 to force the distributed path (tests do).
-        local_edge_threshold: edge-count cutoff guarding the same driver
-            path — a ≤200k-node graph with a dense gated similarity edge
-            set (hub vocabulary, low thresholds) could still collect tens
-            of millions of edge rows; when EITHER bound trips, the
-            distributed path runs.
-        algorithm: "auto" (hash-to-min, falling back to large/small-star
-            after ``hash_to_min_budget`` non-converged rounds — O(diameter)
-            for the common tiny-diameter alias graphs, O(log n) worst case),
-            "hash_to_min" (no fallback; raises past max_iterations), or
-            "star" (large/small-star from the start).
 
     Returns:
         DataFrame (norm, component) where component = lexicographic min of
         the node's component.
     """
     spark = nodes.sparkSession
-    if local_threshold > 0:
+    if LOCAL_MAX_NODES > 0:
         # ONE bounded limit-collect per input doubles as the size gate AND
         # the driver-path data (was: checkpoint + limit-count + full
         # collect per input — four extra jobs). The collects are bounded
         # by the thresholds (+1 row), so driver memory stays capped even
         # when the gate says "too big" and the distributed path runs.
-        node_rows = nodes.limit(local_threshold + 1).collect()
-        if len(node_rows) <= local_threshold:
-            edge_rows = edges.limit(local_edge_threshold + 1).collect()
-            if len(edge_rows) <= local_edge_threshold:
+        node_rows = nodes.limit(LOCAL_MAX_NODES + 1).collect()
+        if len(node_rows) <= LOCAL_MAX_NODES:
+            edge_rows = edges.limit(LOCAL_MAX_EDGES + 1).collect()
+            if len(edge_rows) <= LOCAL_MAX_EDGES:
                 mapping = _local_components(
                     [r[0] for r in node_rows],
                     [(r[0], r[1]) for r in edge_rows],
@@ -91,15 +87,13 @@ def connected_components(
                     sorted(mapping.items()),
                     "norm string, component string",
                 )
-    # Distributed paths: materialize inputs once — the iterative rounds
+    # Distributed path: materialize inputs once — the iterative rounds
     # otherwise re-execute the full upstream DAG (TF-IDF similarity join
     # included) per consumption. (The driver path above deliberately skips
     # this: its single collect per input is the only consumption, and the
     # pipeline already hands it checkpointed linking tables.)
     nodes = nodes.localCheckpoint(eager=True)
     edges = edges.localCheckpoint(eager=True)
-    if algorithm == "star":
-        return _star_labels(nodes, edges, max_rounds=max_iterations)
     # Materialize the edge list once: without this every iteration would
     # re-execute the full upstream DAG (TF-IDF similarity join included).
     sym = (
@@ -114,12 +108,7 @@ def connected_components(
         F.col("norm"), F.col("norm").alias("component")
     ).localCheckpoint(eager=True)
 
-    budget = (
-        min(hash_to_min_budget, max_iterations)
-        if algorithm == "auto"
-        else max_iterations
-    )
-    for _ in range(budget):
+    for _ in range(HASH_TO_MIN_ROUNDS):
         neighbor_min = (
             sym.join(
                 labels.select(
@@ -150,14 +139,10 @@ def connected_components(
         if changed == 0:
             return labels
 
-    if algorithm == "auto":
-        # diameter exceeded the hash-to-min budget (long-chain graph) —
-        # switch to the O(log n)-round star algorithm from scratch (the
-        # budget rounds are sunk cost; correctness is unaffected)
-        return _star_labels(nodes, edges, max_rounds=max_iterations)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} iterations"
-    )
+    # diameter exceeded the hash-to-min rounds (long-chain graph) — switch
+    # to the O(log n)-round star algorithm from scratch (the hash-to-min
+    # rounds are sunk cost; correctness is unaffected)
+    return _star_labels(nodes, edges)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -215,9 +200,7 @@ def _edges_differ(new: DataFrame, old: DataFrame) -> bool:
     )
 
 
-def _star_labels(
-    nodes: DataFrame, edges: DataFrame, max_rounds: int = 25
-) -> DataFrame:
+def _star_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Alternating large-star/small-star to convergence: O(log n) rounds on
     any graph shape (the long-chain worst case hash-to-min handles poorly).
     At the fixed point every edge is (member -> component minimum)."""
@@ -227,14 +210,14 @@ def _star_labels(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    for _ in range(STAR_MAX_ROUNDS):
         prev = e
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         if not _edges_differ(e, prev):
             break
     else:
         raise RuntimeError(
-            f"star components did not converge in {max_rounds} rounds"
+            f"star components did not converge in {STAR_MAX_ROUNDS} rounds"
         )
     # fixed point: e is exactly {(member, min)}; singletons label themselves
     labels = e.select(F.col("src").alias("norm"), F.col("dst").alias("component"))

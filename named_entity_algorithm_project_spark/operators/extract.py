@@ -26,7 +26,7 @@ from __future__ import annotations
 from typing import List, Optional, Tuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -201,9 +201,3 @@ def extract_mentions(
         detector,
     ).localCheckpoint(eager=True)
     return split_extraction(extracted, key_cols)
-
-
-def single_char_filter(entity: Column, is_user: Column) -> Column:
-    """app.py:3901-3903 as a Column predicate (used by relational re-checks;
-    the detector already applies it in-UDF)."""
-    return is_user | ~entity.rlike(r"^\s*[A-Za-z0-9]\s*$")

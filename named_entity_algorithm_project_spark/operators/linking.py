@@ -28,13 +28,16 @@ combines them map-side, so a hub pair reaches its reducer as a handful of
 partial sums; AQE splits skewed join partitions. The real hazard is the
 join *output*, quadratic in per-n-gram document frequency: an n-gram
 present in 10⁶ norms emits ~10¹² candidate rows before any aggregation.
-``candidate_max_df`` drops such n-grams from the join entirely (the
-classic prefix-filtered similarity join). It is AUTO-ENABLED above
-``AUTO_BLOCK_MIN_VOCAB`` unique norms (50k) at ``min(5% of the vocabulary,
-AUTO_BLOCK_DF_ABS)`` — the absolute bound matters because the join output
-is Σ_g df_g², quadratic in per-gram df whatever the fraction: below the
-threshold the small-corpus reference parity is exact; above it the cap is
-what makes the join feasible at all. Dropping a df>5%·N
+The df-cap drops such n-grams from candidate generation entirely (the
+classic prefix-filtered similarity join). The linker sets it from the
+measured vocabulary alone (:func:`auto_df_cap`): above
+``AUTO_BLOCK_MIN_VOCAB`` unique norms (50k) it is ``min(5% of the
+vocabulary, AUTO_BLOCK_DF_ABS)`` — the absolute bound matters because the
+join output is Σ_g df_g², quadratic in per-gram df whatever the fraction;
+at or below the tier the small-corpus reference parity is exact; above
+it the cap is what makes the join feasible at all. The operator-level
+joins (:func:`similarity_pairs`, :func:`similarity_pairs_prefix`) take
+the cap as ``candidate_max_df``. Dropping a df>5%·N
 n-gram loses little signal (its smooth idf is near the 1.0 floor, so it
 contributes the least cosine mass): the capped score is a LOWER BOUND on
 the exact cosine, measured short by <=0.06 with >=0.99 retention of pairs
@@ -100,23 +103,22 @@ SKIP_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
 #: test, which imports this name.
 MIN_PREFIX_RANK = 4
 
-#: Vocabulary size above which the linking joins pin vocabulary-sized
-#: dimensions (gram keep-lists, weights, per-norm stats, candidate pairs,
-#: effective-type profiles) to sort-merge via .hint("merge"). The hints
+#: The one vocabulary tier. Above AUTO_BLOCK_MIN_VOCAB unique norms the
+#: linker (1) caps candidate generation: the similarity join drops n-grams
+#: with df > min(max(AUTO_BLOCK_DF_FRAC·N, 100), AUTO_BLOCK_DF_ABS) (see the
+#: module docstring and :func:`auto_df_cap`); (2) pins the
+#: vocabulary-sized join inputs (gram keep-lists, weights, per-norm stats,
+#: candidate pairs, effective-type profiles) to sort-merge with
+#: .hint("merge"); and (3), through TFIDF_LOCAL_MAX_VOCAB (a separate
+#: name only as the tests' seam), runs the distributed cascade instead of
+#: the driver-local one. The merge hints
 #: exist because at the 640k-norm tier the estimate-driven broadcast of
 #: these string-heavy tables OOM'd (hash relations inflate 5-10x their
-#: shuffle size — BENCH.md round-5 curve). BELOW this bound the same hint
-#: is pure overhead: a 26-norm bench vocabulary was paying a full
-#: exchange+sort per join where AQE's runtime-size broadcast decision is
-#: both safe (actual sizes, not estimates, and well under the 64 MiB
-#: session threshold) and shuffle-free. 50k norms ≈ 650k grams ≈ ~20 MB
-#: exchange-side — inside the broadcast envelope with the measured 5-10x
-#: inflation on an 8g driver; the cap aligns with AUTO_BLOCK_MIN_VOCAB.
-MERGE_HINT_MIN_VOCAB = 50_000
-
-#: AUTO df-cap: above AUTO_BLOCK_MIN_VOCAB unique norms the similarity join
-#: drops n-grams with df > min(max(AUTO_BLOCK_DF_FRAC·N, 100),
-#: AUTO_BLOCK_DF_ABS) from candidate generation (see the module docstring)
+#: shuffle size — BENCH.md round-5 curve). At or below the tier the same
+#: hint is pure overhead: AQE's runtime-size broadcast decision is both
+#: safe (actual sizes, well under the 64 MiB session threshold) and
+#: shuffle-free. 50k norms ≈ 650k grams ≈ ~20 MB exchange-side — inside
+#: the broadcast envelope with the measured 5-10x inflation on an 8g driver.
 AUTO_BLOCK_MIN_VOCAB = 50_000
 AUTO_BLOCK_DF_FRAC = 0.05
 AUTO_BLOCK_DF_ABS = 4_000
@@ -169,26 +171,6 @@ class LinkingTables:
 # stage measurably executed once per DAG branch, 4x).
 
 
-def linkable_mentions(mentions: DataFrame) -> DataFrame:
-    """Non-value mentions with the linking norm (case-sensitive strip of the
-    display entity — app.py:3256, normalize_entity app.py:2946-2961)."""
-    return (
-        mentions.filter(~F.upper(F.col("entity_type")).isin(*SKIP_TYPES))
-        .withColumn("norm", normalize_entity_col(F.col("entity")))
-        .filter(F.col("norm") != "")
-    )
-
-
-def norm_profiles(linkable: DataFrame) -> DataFrame:
-    """freq + type set per unique norm (app.py:3256-3263)."""
-    return linkable.groupBy("norm").agg(
-        F.count(F.lit(1)).alias("freq"),
-        F.array_sort(
-            F.collect_set(F.upper(normalize_entity_col(F.col("entity_type"))))
-        ).alias("types"),
-    )
-
-
 def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
     """L2-normalized smooth TF-IDF weights: (norm, ngram, w).
 
@@ -204,8 +186,8 @@ def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_counts = tf.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-    large_vocab = n_norms > MERGE_HINT_MIN_VOCAB
-    # merge-join hints (large vocab only — see MERGE_HINT_MIN_VOCAB) on
+    large_vocab = n_norms > AUTO_BLOCK_MIN_VOCAB
+    # merge-join hints (large vocab only — see AUTO_BLOCK_MIN_VOCAB) on
     # BOTH weight-assembly joins: df_counts is gram-vocabulary-sized and
     # norms_sq is norm-vocabulary-sized — at the 640k-norm tier an
     # estimate-driven broadcast of either OOMs the driver building the
@@ -666,15 +648,13 @@ def gate_scored_pairs(
 
 def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
     """(kind, k1, k2) rows for the fused vocabulary aggregate from the
-    COMBINED extraction frame in ONE scan + ONE generate.
-
-    Semantically identical to the two-branch union over
-    ``linkable_mentions``/abbrevs (same multiset of rows — pinned in
-    tests/test_linking.py::test_fused_one_scan_parity), but the mention and
-    abbreviation arrays are transformed/filtered per row and concatenated
-    BEFORE the explode, so the corpus is read once instead of twice — at
-    10^12 turns the Stage-B corpus pass is the dominant I/O (the round-4
-    profile/abbrev fusion halved it; this halves the remainder)."""
+    Stage-A extraction frame in ONE scan + ONE generate: "M" rows are
+    (norm, type) per linkable mention (non-value types, non-empty norm —
+    app.py:3256, normalize_entity app.py:2946-2961), "A" rows are
+    (abbr, expansion) per abbreviation pair. The mention and abbreviation
+    arrays are transformed/filtered per row and concatenated BEFORE the
+    explode, so the corpus is read once — at 10^12 turns the Stage-B
+    corpus pass is the dominant I/O."""
     m_structs = F.filter(
         F.transform(
             F.coalesce(F.col("ex.mentions"), F.array()),
@@ -685,8 +665,8 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
                 F.upper(m["entity_type"]).alias("_raw"),
             ),
         ),
-        # linkable_mentions parity: skip-type filter on the UNTRIMMED
-        # upper(entity_type); non-empty trimmed norm
+        # skip-type filter on the UNTRIMMED upper(entity_type); non-empty
+        # trimmed norm
         lambda s: ~s["_raw"].isin(*SKIP_TYPES) & (s["k1"] != ""),
     )
     a_structs = F.filter(
@@ -712,9 +692,8 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
 #: UNCAPPED (see :func:`auto_df_cap`). There the Python prefix scorer
 #: (:func:`tfidf_prefix_pairs`) beats the ~40-job Spark cascade, whose
 #: cost is job scheduling at this size (BENCH.md, driver-local crossover).
-#: Above it, or under an explicit df-cap or a non-tfidf scorer, the
-#: distributed path runs. Read at call time, so tests force the
-#: distributed path by setting it to 0.
+#: Above it, or with a non-tfidf scorer, the distributed path runs. Read at
+#: call time, so tests force the distributed path by setting it to 0.
 TFIDF_LOCAL_MAX_VOCAB = AUTO_BLOCK_MIN_VOCAB
 #: bounded-collect guard for the fused table: one row per (norm, type) and
 #: per abbreviation pair, 1.1-1.25 rows per norm on datagen vocabularies,
@@ -773,13 +752,11 @@ def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
 
 
 def build_linking_tables(
-    mentions: DataFrame,
-    abbrevs: DataFrame,
-    candidate_max_df: Optional[int] = None,
-    score_source: str = "tfidf",
-    extracted: Optional[DataFrame] = None,
+    extracted: DataFrame, score_source: str = "tfidf"
 ) -> LinkingTables:
-    """Assemble the full gated edge list for connected components.
+    """Assemble the full gated edge list for connected components from the
+    Stage-A extraction frame (one row per turn with an ``ex``
+    struct<mentions, abbreviations> column, :func:`extract.extract_combined`).
 
     ``score_source`` selects the candidate scorer feeding the (shared) gate
     cascade: "tfidf" (default — the reference's primary path),
@@ -788,65 +765,40 @@ def build_linking_tables(
     "semantic_lsh" (L4 at scale: LSH-blocked candidates, exact re-rank —
     see :func:`semantic_pairs_lsh`). The bands×bits tier keys off the
     measured vocabulary size (:func:`semantic_lsh_tier` — 8x4 below ~40k
-    norms, 10x6 above), exactly as the TF-IDF df-cap AUTO keys off
-    ``n_norms``.
+    norms, 10x6 above), exactly as the TF-IDF df-cap keys off ``n_norms``.
 
-    ``candidate_max_df=None`` means AUTO: exact (no n-gram dropped) while the
-    vocabulary is under ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else capped at
-    ``min(AUTO_BLOCK_DF_FRAC * n_norms, AUTO_BLOCK_DF_ABS)``. The join's
-    output is Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic in N
-    (5% of 10⁶ is a 50k-df gram emitting 2.5G candidate rows), so the
+    The df-cap is :func:`auto_df_cap` of the measured vocabulary: exact (no
+    n-gram dropped) up to ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else
+    capped at ``min(AUTO_BLOCK_DF_FRAC * n_norms, AUTO_BLOCK_DF_ABS)``. The
+    join's output is Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic
+    in N (5% of 10⁶ is a 50k-df gram emitting 2.5G candidate rows), so the
     absolute bound is what actually caps per-gram fanout at web scale;
-    scripts/linking_bench.py records the measured curves. Pass an explicit
-    int to force a cap.
+    scripts/linking_bench.py records the measured curves.
     """
-    spark = mentions.sparkSession
-    # ONE corpus pass total for BOTH corpus-scale inputs: the norm profiles
-    # (from the mentions side) and the distinct abbreviation pairs (from
-    # the abbrevs side) ride a single fused groupBy — previously the
-    # profiles agg and the abbreviation distinct each re-scanned the full
-    # extraction bytes (two passes; at 10^12 turns each pass is the
-    # dominant I/O). The fused aggregate is vocabulary-scale, so every
-    # downstream derivation (profiles, abbr edges, scalar stats) works on
-    # the checkpointed small table. When the caller hands the COMBINED
-    # extraction frame (``extracted``), the mention/abbrev branches fuse
-    # into ONE scan + generate (:func:`_fused_rows_from_extracted`);
-    # otherwise the two split views union (two scans of the same bytes).
-    if extracted is not None:
-        fused_rows = _fused_rows_from_extracted(extracted)
-    else:
-        linkable = linkable_mentions(mentions)
-        m_rows = linkable.select(
-            F.lit("M").alias("kind"),
-            F.col("norm").alias("k1"),
-            F.upper(normalize_entity_col(F.col("entity_type"))).alias("k2"),
-        )
-        a_rows = abbrevs.select(
-            F.lit("A").alias("kind"),
-            normalize_entity_col(F.col("abbr")).alias("k1"),
-            normalize_entity_col(F.col("expansion")).alias("k2"),
-        ).filter((F.col("k1") != "") & (F.col("k2") != ""))
-        fused_rows = m_rows.unionByName(a_rows)
+    spark = extracted.sparkSession
+    # ONE corpus pass for BOTH corpus-scale inputs: the norm profiles and
+    # the distinct abbreviation pairs ride a single fused groupBy over one
+    # scan + generate (:func:`_fused_rows_from_extracted`). The fused
+    # aggregate is vocabulary-scale, so every downstream derivation
+    # (profiles, abbr edges, scalar stats) works on the checkpointed small
+    # table.
     fused = (
-        fused_rows.groupBy("kind", "k1", "k2")
+        _fused_rows_from_extracted(extracted)
+        .groupBy("kind", "k1", "k2")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=True)
     )
     # --- driver-local path for UNCAPPED tfidf vocabularies -----------------
     # (see TFIDF_LOCAL_MAX_VOCAB). One bounded collect of the fused table
     # doubles as the size gate and the data.
-    if (
-        score_source == "tfidf"
-        and candidate_max_df is None
-        and TFIDF_LOCAL_MAX_VOCAB > 0
-    ):
+    if score_source == "tfidf" and TFIDF_LOCAL_MAX_VOCAB > 0:
         sample = fused.limit(LOCAL_FUSED_ROW_CAP + 1).collect()
         if len(sample) <= LOCAL_FUSED_ROW_CAP:
             n_local = len({r["k1"] for r in sample if r["kind"] == "M"})
             if n_local <= TFIDF_LOCAL_MAX_VOCAB:
                 return _build_linking_tables_local(spark, sample)
-    # identical to norm_profiles(linkable): freq = mention count per norm,
-    # types = sorted set of upper(normalize_entity(entity_type))
+    # freq = mention count per norm, types = sorted set of
+    # upper(normalize_entity(entity_type)) (app.py:3256-3263)
     profiles = (
         fused.filter(F.col("kind") == "M")
         .groupBy(F.col("k1").alias("norm"))
@@ -861,13 +813,12 @@ def build_linking_tables(
     ).collect()[0]
     n_rows, n_norms = int(stats["n_rows"]), int(stats["n_norms"])
     base = compute_base_threshold(n_rows)
-    if candidate_max_df is None:
-        candidate_max_df = auto_df_cap(n_norms)
+    candidate_max_df = auto_df_cap(n_norms)
 
     protected = sorted(PROTECTED_TERMS)
     # all vocabulary-sized dim hints key off the MEASURED vocabulary — the
-    # same n_norms the df-cap AUTO uses (see MERGE_HINT_MIN_VOCAB)
-    large_vocab = n_norms > MERGE_HINT_MIN_VOCAB
+    # same tier the df-cap uses (see AUTO_BLOCK_MIN_VOCAB)
+    large_vocab = n_norms > AUTO_BLOCK_MIN_VOCAB
 
     # --- abbreviation edges, gated on ORIGINAL type sets -------------------
     # distinct (src=abbr_norm, dst=expansion_norm) pairs from the per-turn

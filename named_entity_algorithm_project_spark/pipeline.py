@@ -171,16 +171,13 @@ def run_pipeline(
     _mark("stage_a")
     _phase("stage_b_linking")
     extracted_committed = read_stage_a_extracted(spark, paths)
-    mentions_raw, abbrevs = split_extraction(extracted_committed)
+    mentions_raw, _ = split_extraction(extracted_committed)
 
     # ---------------- Stage B: linking ------------------------------------
-    # passing the combined frame fuses the mention/abbrev vocabulary pass
-    # into ONE corpus scan (see linking._fused_rows_from_extracted)
+    # the linker reads the combined Stage-A frame in ONE corpus scan (see
+    # linking._fused_rows_from_extracted)
     linking = build_linking_tables(
-        mentions_raw,
-        abbrevs,
-        score_source=config.score_source,
-        extracted=extracted_committed,
+        extracted_committed, score_source=config.score_source
     )
 
     _mark("stage_b_linking")

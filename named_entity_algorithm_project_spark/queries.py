@@ -728,31 +728,24 @@ def q20_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "q21_kg_linking",
-    f"""
-    SELECT CAST(group_size AS BIGINT) AS group_size,
-           CAST(n_groups AS BIGINT) AS n_groups
-    FROM read_parquet('{_KG_EXPECTED["q21_kg_linking"]}')
-    """,
-)
-def q21_kg_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity linking + connected components over the synthetic transcripts
-    generator (documents lack alias variety): alias-group size histogram.
-    Oracle: pandas reference (oracle_linking: TF-IDF N² cosine + DFS) via
-    materialized expectation."""
+def _kg_linking_group_sizes(
+    spark: SparkSession, score_source: str
+) -> DataFrame:
+    """Stage B+C over the seeded linking corpus with one scorer: the
+    alias-group size histogram (group_size, n_groups) q21/q31 report."""
     from .datagen import generate_transcripts
     from .operators.canonical import pick_canonicals
     from .operators.components import connected_components
-    from .operators.extract import extract_mentions
+    from .operators.extract import extract_combined
     from .operators.linking import build_linking_tables
     from .oracle_expected import KG_LINKING_N_CONVS, KG_LINKING_SEED
 
     transcripts = generate_transcripts(
         spark, n_convs=KG_LINKING_N_CONVS, seed=KG_LINKING_SEED
     )
-    mentions, abbrevs = extract_mentions(transcripts)
-    linking = build_linking_tables(mentions, abbrevs)
+    linking = build_linking_tables(
+        extract_combined(transcripts), score_source=score_source
+    )
     nodes = (
         linking.norms.select("norm")
         .unionByName(linking.extra_nodes.select("norm"))
@@ -766,6 +759,22 @@ def q21_kg_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return group_sizes.groupBy("group_size").agg(
         F.count(F.lit(1)).alias("n_groups")
     )
+
+
+@_register(
+    "q21_kg_linking",
+    f"""
+    SELECT CAST(group_size AS BIGINT) AS group_size,
+           CAST(n_groups AS BIGINT) AS n_groups
+    FROM read_parquet('{_KG_EXPECTED["q21_kg_linking"]}')
+    """,
+)
+def q21_kg_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Entity linking + connected components over the synthetic transcripts
+    generator (documents lack alias variety): alias-group size histogram.
+    Oracle: pandas reference (oracle_linking: TF-IDF N² cosine + DFS) via
+    materialized expectation."""
+    return _kg_linking_group_sizes(spark, "tfidf")
 
 
 @_register(
@@ -781,33 +790,7 @@ def q31_kg_semantic_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, app.py:3084-3110): stub-embedder cosine through the shared gate
     cascade, components, canonical pick — alias-group size histogram.
     Oracle: pandas reference with the numpy N² cosine matrix."""
-    from .operators.canonical import pick_canonicals
-    from .operators.components import connected_components
-    from .operators.extract import extract_mentions
-    from .operators.linking import build_linking_tables
-    from .datagen import generate_transcripts
-    from .oracle_expected import KG_LINKING_N_CONVS, KG_LINKING_SEED
-
-    transcripts = generate_transcripts(
-        spark, n_convs=KG_LINKING_N_CONVS, seed=KG_LINKING_SEED
-    )
-    mentions, abbrevs = extract_mentions(transcripts)
-    linking = build_linking_tables(
-        mentions, abbrevs, score_source="semantic_exact"
-    )
-    nodes = (
-        linking.norms.select("norm")
-        .unionByName(linking.extra_nodes.select("norm"))
-        .distinct()
-    )
-    comps = connected_components(nodes, linking.edges)
-    cmap = pick_canonicals(comps, linking.norms)
-    group_sizes = cmap.groupBy("canonical").agg(
-        F.count(F.lit(1)).alias("group_size")
-    )
-    return group_sizes.groupBy("group_size").agg(
-        F.count(F.lit(1)).alias("n_groups")
-    )
+    return _kg_linking_group_sizes(spark, "semantic_exact")
 
 
 @_register(

@@ -19,10 +19,10 @@ from named_entity_algorithm_project_spark.operators.canonical import (
     apply_canonical_map,
     pick_canonicals,
 )
+from named_entity_algorithm_project_spark.operators import components, linking
 from named_entity_algorithm_project_spark.operators.components import (
     connected_components,
 )
-from named_entity_algorithm_project_spark.operators.extract import extract_mentions
 from named_entity_algorithm_project_spark.operators.linking import build_linking_tables
 from named_entity_algorithm_project_spark.operators.triples import build_triples
 from named_entity_algorithm_project_spark.queries import QUERIES
@@ -91,10 +91,9 @@ def main() -> None:
         out.extend(key_lines(formatted(QUERIES[name](spark, sf))))
         out.append("```")
 
-    # KG pipeline stage frames. extract_mentions/build_linking_tables now
-    # localCheckpoint their outputs (cache-hygiene), which truncates the
-    # lineage .explain would show — so audit the PRE-checkpoint plans the
-    # pipeline actually executes.
+    # KG pipeline stage frames. build_linking_tables localCheckpoints its
+    # outputs (cache-hygiene), which truncates the lineage .explain would
+    # show — so audit the operator-level plans the linker executes.
     from pyspark.sql import functions as F
 
     from named_entity_algorithm_project_spark.operators.extract import (
@@ -102,8 +101,6 @@ def main() -> None:
         split_extraction,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
-        linkable_mentions,
-        norm_profiles,
         similarity_pairs,
         similarity_pairs_prefix,
         tfidf_weights,
@@ -123,9 +120,13 @@ def main() -> None:
     out.extend(key_lines(formatted(combined)))
     out.append("```")
 
-    mentions, abbrevs = extract_mentions(t)
-    profiles = norm_profiles(linkable_mentions(mentions))
-    weights = tfidf_weights(profiles.select("norm"), 1000)
+    extracted = combined.localCheckpoint(eager=True)
+    mentions, _ = split_extraction(extracted)
+    # the distributed path, as at vocabulary scale: checkpointed tables,
+    # not driver-local relations
+    linking.TFIDF_LOCAL_MAX_VOCAB = 0
+    tables = build_linking_tables(extracted)
+    weights = tfidf_weights(tables.norms.select("norm"), 1000)
     scored = similarity_pairs(weights)
     out.append(
         "\n## kg: tfidf similarity scoring (inverted-index join + pair-sum)\n```"
@@ -145,7 +146,7 @@ def main() -> None:
         "\nhigh-weight prefix, postings join only against prefixes, then"
         "\nexact rescoring over candidates — note the candidate join keys"
         "\nand the same final pair-sum; 15x the naive join at"
-        "\n60k norms, BENCH.md. Below MERGE_HINT_MIN_VOCAB the"
+        "\n60k norms, BENCH.md. Below AUTO_BLOCK_MIN_VOCAB the"
         "\nvocabulary-sized inputs may broadcast — AQE decides from runtime"
         "\nsizes.)\n```"
     )
@@ -153,7 +154,7 @@ def main() -> None:
     out.append("```")
 
     # LARGE-VOCAB hint contract (VERDICT r5 item 3): with the measured
-    # vocabulary above MERGE_HINT_MIN_VOCAB the prefix path must pin the
+    # vocabulary above AUTO_BLOCK_MIN_VOCAB the prefix path must pin the
     # estimate-unreliable vocabulary-sized inputs (prefix postings, the
     # per-norm stats pair, candidate pairs; plus the keep-list under a
     # df-cap) to sort-merge — the estimate-driven broadcast of these OOM'd
@@ -176,7 +177,7 @@ def main() -> None:
     out.append(
         "\n## kg: prefix path, large-vocab hint contract (asserted)\n"
         "\nSame DAG with large_vocab=True (the shape the AUTO tier runs"
-        "\nabove MERGE_HINT_MIN_VOCAB norms): the prefix-postings join, both"
+        "\nabove AUTO_BLOCK_MIN_VOCAB norms): the prefix-postings join, both"
         "\nper-norm-stats joins and the candidate-pair score join are"
         "\nsort-merge-pinned (>=4 SortMergeJoin asserted — these are the"
         "\nr5-measured broadcast-OOM sites), and the maxweight-filter join"
@@ -186,15 +187,14 @@ def main() -> None:
     out.extend(key_lines(plan_large))
     out.append("```")
 
-    linking = build_linking_tables(mentions, abbrevs)
-
     nodes = (
-        linking.norms.select("norm")
-        .unionByName(linking.extra_nodes.select("norm"))
+        tables.norms.select("norm")
+        .unionByName(tables.extra_nodes.select("norm"))
         .distinct()
     )
-    comps = connected_components(nodes, linking.edges, local_threshold=0)
-    cmap = pick_canonicals(comps, linking.norms)
+    components.LOCAL_MAX_NODES = 0  # the distributed rounds
+    comps = connected_components(nodes, tables.edges)
+    cmap = pick_canonicals(comps, tables.norms)
     mc = apply_canonical_map(mentions, cmap)
     # the pipeline derives every triple branch from ONE narrow
     # hash-repartitioned checkpoint keyed by the document key (r6); the

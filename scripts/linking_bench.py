@@ -3,7 +3,7 @@
 Default mode: exact vs df-capped similarity join. Measures the TF-IDF
 inverted-index similarity join (tfidf_weights + similarity_pairs) over
 synthetic Zipf-ish vocabularies at growing sizes, with and without the
-candidate_max_df prefix filter (the knob build_linking_tables auto-enables
+candidate_max_df prefix filter (the df-cap build_linking_tables sets
 above 50k norms at 5% of the vocabulary). The join OUTPUT is quadratic in
 per-n-gram df, so the exact path's cost grows superlinearly with vocabulary
 while the capped path stays near-linear.
@@ -44,7 +44,6 @@ from named_entity_algorithm_project_spark.datagen import generate_transcripts
 from named_entity_algorithm_project_spark.operators import linking
 from named_entity_algorithm_project_spark.operators.extract import (
     extract_combined,
-    split_extraction,
 )
 from named_entity_algorithm_project_spark.operators.linking import (
     similarity_pairs,
@@ -114,7 +113,7 @@ def _peak_rss_mb(pid) -> float:
     return round(int(line.split()[1]) / 1024, 1)
 
 
-def crossover_leg(spark, mentions, abbrevs, extracted, local: bool) -> dict:
+def crossover_leg(spark, extracted, local: bool) -> dict:
     """One build_linking_tables run, timed until its tables exist (both
     paths return materialized tables), with the driver's peak RSS."""
     pids = {"py": os.getpid(), "jvm": spark.sparkContext._gateway.proc.pid}
@@ -124,9 +123,7 @@ def crossover_leg(spark, mentions, abbrevs, extracted, local: bool) -> dict:
         for pid in pids.values():
             _peak_rss_reset(pid)
         t0 = time.time()
-        tables = linking.build_linking_tables(
-            mentions, abbrevs, extracted=extracted
-        )
+        tables = linking.build_linking_tables(extracted)
         wall = time.time() - t0
     finally:
         linking.TFIDF_LOCAL_MAX_VOCAB = saved
@@ -149,19 +146,19 @@ def crossover(spark, convs: list, zipf: list) -> None:
             spark, n_convs=n, seed=42, vocab_scale=20000
         )
         extracted = extract_combined(transcripts).localCheckpoint(eager=True)
-        mentions, abbrevs = split_extraction(extracted)
-        inputs.append((f"datagen n_convs={n}", mentions, abbrevs, extracted))
+        inputs.append((f"datagen n_convs={n}", extracted))
     for n in zipf:
-        mentions = spark.createDataFrame(
-            [(x, "MATERIAL") for x in build_vocab(n)],
-            "entity string, entity_type string",
+        # one Stage-A turn per norm
+        extracted = spark.createDataFrame(
+            [(([(x, "MATERIAL")], []),) for x in build_vocab(n)],
+            "ex struct<mentions: array<struct<entity: string,"
+            " entity_type: string>>,"
+            " abbreviations: array<struct<abbr: string, expansion: string>>>",
         )
-        abbrevs = spark.createDataFrame([], "abbr string, expansion string")
-        inputs.append((f"zipf n={n}", mentions, abbrevs, None))
-    for name, mentions, abbrevs, extracted in inputs:
+        inputs.append((f"zipf n={n}", extracted))
+    for name, extracted in inputs:
         legs = [
-            crossover_leg(spark, mentions, abbrevs, extracted, local)
-            for local in (True, False)
+            crossover_leg(spark, extracted, local) for local in (True, False)
         ]
         same = legs[0].pop("_edges") == legs[1].pop("_edges")
         for leg in legs:

@@ -32,7 +32,6 @@ from named_entity_algorithm_project_spark.datagen import (
 )
 from named_entity_algorithm_project_spark.operators.extract import (
     extract_combined,
-    split_extraction,
 )
 from named_entity_algorithm_project_spark.operators.linking import (
     build_linking_tables,
@@ -55,9 +54,8 @@ def main():
         t0 = time.time()
         extracted = extract_combined(transcripts).localCheckpoint(eager=True)
         t_extract = time.time() - t0
-        mentions, abbrevs = split_extraction(extracted)
         t0 = time.time()
-        linking = build_linking_tables(mentions, abbrevs)
+        linking = build_linking_tables(extracted)
         n_edges = linking.edges.count()
         t_link = time.time() - t0
 

@@ -3,9 +3,10 @@ operator level (VERDICT r3 items 1+2 — cut the vocab-scale linking wall,
 measure linking QUALITY under the engaged cap, not just cost).
 
 Same corpus, same TF-IDF weights (materialized once), same df-cap and the
-same gate cascade (``gate_scored_pairs`` over the corpus norm profiles —
-without the abbreviation type propagation the full linker adds, identical
-for both legs):
+same gate cascade (``gate_scored_pairs`` over the linker's norm table,
+effective types included — identical for both legs). The norm table comes
+from one untimed ``build_linking_tables`` run on the distributed path, so
+the script links the corpus once before the legs:
 
   naive   ``similarity_pairs``: the Σ df² inverted-index join; under a cap
           its scores are lower bounds (dropped grams score nothing)
@@ -47,17 +48,15 @@ from named_entity_algorithm_project_spark.datagen import (
 from named_entity_algorithm_project_spark.dictionaries import PROTECTED_TERMS
 from named_entity_algorithm_project_spark.functions.textnorm import (
     adaptive_threshold_floor,
-    compute_base_threshold,
 )
+from named_entity_algorithm_project_spark.operators import linking
 from named_entity_algorithm_project_spark.operators.extract import (
-    extract_mentions,
+    extract_combined,
 )
 from named_entity_algorithm_project_spark.operators.linking import (
-    MERGE_HINT_MIN_VOCAB,
+    AUTO_BLOCK_MIN_VOCAB,
     auto_df_cap,
     gate_scored_pairs,
-    linkable_mentions,
-    norm_profiles,
     similarity_pairs,
     similarity_pairs_prefix,
     tfidf_weights,
@@ -87,17 +86,14 @@ def main():
     transcripts = generate_transcripts(
         spark, n_convs=n_convs, seed=42, vocab_scale=vocab_scale
     )
-    mentions, _ = extract_mentions(transcripts)
-    profiles = norm_profiles(linkable_mentions(mentions)).localCheckpoint(
-        eager=True
-    )
-    stats = profiles.agg(
-        F.coalesce(F.sum("freq"), F.lit(0)).alias("n_rows"),
-        F.count(F.lit(1)).alias("n_norms"),
-    ).collect()[0]
-    n_norms = int(stats["n_norms"])
-    base = compute_base_threshold(int(stats["n_rows"]))
-    large_vocab = n_norms > MERGE_HINT_MIN_VOCAB
+    extracted = extract_combined(transcripts).localCheckpoint(eager=True)
+    # the distributed path: the norm table the Spark cascade gates on
+    linking.TFIDF_LOCAL_MAX_VOCAB = 0
+    tables = linking.build_linking_tables(extracted)
+    profiles = tables.norms
+    n_norms = tables.n_norms
+    base = tables.base_threshold
+    large_vocab = n_norms > AUTO_BLOCK_MIN_VOCAB
     if cap_arg == "auto":
         cap = auto_df_cap(n_norms)
     elif cap_arg == "none":

@@ -5,6 +5,7 @@ import random
 
 import pytest
 
+from named_entity_algorithm_project_spark.operators import components
 from named_entity_algorithm_project_spark.operators.components import (
     connected_components,
 )
@@ -34,7 +35,7 @@ def _dfs_components(nodes, edges):
 
 
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [(1, 30, 20), (2, 60, 80), (3, 100, 40)])
-def test_random_graphs_match_dfs(spark, seed, n_nodes, n_edges):
+def test_random_graphs_match_dfs(spark, monkeypatch, seed, n_nodes, n_edges):
     rng = random.Random(seed)
     nodes = [f"n{i:03d}" for i in range(n_nodes)]
     edges = set()
@@ -45,12 +46,14 @@ def test_random_graphs_match_dfs(spark, seed, n_nodes, n_edges):
 
     nodes_df = spark.createDataFrame([(n,) for n in nodes], "norm string")
     edges_df = spark.createDataFrame(sorted(edges), "src string, dst string")
-    # distributed iterative-join path (local_threshold=0 disables the
+    # distributed iterative-join path (LOCAL_MAX_NODES=0 disables the
     # driver-side small-graph shortcut)
-    got = {
-        r["norm"]: r["component"]
-        for r in connected_components(nodes_df, edges_df, local_threshold=0).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(components, "LOCAL_MAX_NODES", 0)
+        got = {
+            r["norm"]: r["component"]
+            for r in connected_components(nodes_df, edges_df).collect()
+        }
     assert got == expected
     # driver-side union-find path must agree exactly
     got_local = {
@@ -60,21 +63,20 @@ def test_random_graphs_match_dfs(spark, seed, n_nodes, n_edges):
     assert got_local == expected
 
 
-def test_chain_graph_converges(spark):
+def test_chain_graph_converges(spark, monkeypatch):
     # a long path graph stresses iteration count (diameter = n-1)
     n = 40
     nodes = [f"c{i:03d}" for i in range(n)]
     edges = [(nodes[i], nodes[i + 1]) for i in range(n - 1)]
     nodes_df = spark.createDataFrame([(x,) for x in nodes], "norm string")
     edges_df = spark.createDataFrame(edges, "src string, dst string")
-    got = connected_components(
-        nodes_df, edges_df, max_iterations=60, local_threshold=0
-    ).collect()
+    monkeypatch.setattr(components, "LOCAL_MAX_NODES", 0)
+    got = connected_components(nodes_df, edges_df).collect()
     assert {r["component"] for r in got} == {nodes[0]}
 
 
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [(4, 50, 35), (5, 80, 100)])
-def test_star_algorithm_matches_dfs(spark, seed, n_nodes, n_edges):
+def test_star_algorithm_matches_dfs(spark, monkeypatch, seed, n_nodes, n_edges):
     rng = random.Random(seed)
     nodes = [f"s{i:03d}" for i in range(n_nodes)]
     edges = set()
@@ -84,18 +86,19 @@ def test_star_algorithm_matches_dfs(spark, seed, n_nodes, n_edges):
     expected = _dfs_components(nodes, edges)
     nodes_df = spark.createDataFrame([(n,) for n in nodes], "norm string")
     edges_df = spark.createDataFrame(sorted(edges), "src string, dst string")
+    # no hash-to-min rounds: large/small-star from the start
+    monkeypatch.setattr(components, "LOCAL_MAX_NODES", 0)
+    monkeypatch.setattr(components, "HASH_TO_MIN_ROUNDS", 0)
     got = {
         r["norm"]: r["component"]
-        for r in connected_components(
-            nodes_df, edges_df, local_threshold=0, algorithm="star"
-        ).collect()
+        for r in connected_components(nodes_df, edges_df).collect()
     }
     assert got == expected
 
 
-def test_adversarial_long_chain_auto_fallback(spark):
-    """Diameter-120 path: hash-to-min is O(diameter) and blows its budget;
-    auto mode must switch to large/small-star (O(log n) rounds) and still
+def test_adversarial_long_chain_auto_fallback(spark, monkeypatch):
+    """Diameter-120 path: hash-to-min is O(diameter) and blows its rounds;
+    components must switch to large/small-star (O(log n) rounds) and still
     produce the exact DFS labels."""
     n = 120
     nodes = [f"x{i:03d}" for i in range(n)]
@@ -103,28 +106,20 @@ def test_adversarial_long_chain_auto_fallback(spark):
     expected = _dfs_components(nodes, set(edges))
     nodes_df = spark.createDataFrame([(x,) for x in nodes], "norm string")
     edges_df = spark.createDataFrame(edges, "src string, dst string")
+    monkeypatch.setattr(components, "LOCAL_MAX_NODES", 0)
+    monkeypatch.setattr(components, "HASH_TO_MIN_ROUNDS", 5)
     got = {
         r["norm"]: r["component"]
-        for r in connected_components(
-            nodes_df,
-            edges_df,
-            max_iterations=25,
-            local_threshold=0,
-            hash_to_min_budget=5,
-        ).collect()
+        for r in connected_components(nodes_df, edges_df).collect()
     }
     assert got == expected
 
-    # explicit hash_to_min with an insufficient budget must raise, not
-    # silently return partial labels
+    # a star phase with too few rounds must raise, not silently return
+    # partial labels
+    monkeypatch.setattr(components, "HASH_TO_MIN_ROUNDS", 1)
+    monkeypatch.setattr(components, "STAR_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            nodes_df,
-            edges_df,
-            max_iterations=5,
-            local_threshold=0,
-            algorithm="hash_to_min",
-        )
+        connected_components(nodes_df, edges_df)
 
 
 def test_singletons_preserved(spark):
@@ -134,7 +129,7 @@ def test_singletons_preserved(spark):
     assert got == {"a": "a", "b": "b", "c": "c"}
 
 
-def test_hub_star_graph_distributed(spark):
+def test_hub_star_graph_distributed(spark, monkeypatch):
     # skew shape: one hub connected to 2000 spokes; the distributed path
     # must converge to the hub-component minimum
     hub = "hub"
@@ -145,12 +140,13 @@ def test_hub_star_graph_distributed(spark):
     edges_df = spark.createDataFrame(
         [(hub, s) for s in spokes], "src string, dst string"
     )
-    got = connected_components(nodes_df, edges_df, local_threshold=0).collect()
+    monkeypatch.setattr(components, "LOCAL_MAX_NODES", 0)
+    got = connected_components(nodes_df, edges_df).collect()
     assert {r["component"] for r in got} == {"hub"}
     assert len(got) == 2001
 
 
-def test_edge_volume_guard_forces_distributed(spark):
+def test_edge_volume_guard_forces_distributed(spark, monkeypatch):
     """Few nodes, dense edges: the driver-local path gates on BOTH node
     count and edge count — a dense gated similarity graph under the node
     cutoff must still run distributed (and produce the DFS answer)."""
@@ -160,15 +156,12 @@ def test_edge_volume_guard_forces_distributed(spark):
     edges = list(itertools.combinations(nodes, 2))  # 435 edges, one clique
     nodes_df = spark.createDataFrame([(n,) for n in nodes], "norm string")
     edges_df = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r["norm"]: r["component"]
-        for r in connected_components(
-            nodes_df,
-            edges_df,
-            local_threshold=1000,  # node gate would take the driver path...
-            local_edge_threshold=100,  # ...but the edge gate trips
-        ).collect()
-    }
+    # the node gate would take the driver path, but the edge gate trips
+    monkeypatch.setattr(components, "LOCAL_MAX_NODES", 1000)
+    monkeypatch.setattr(components, "LOCAL_MAX_EDGES", 100)
+    result = connected_components(nodes_df, edges_df)
+    assert not result.isLocal()  # the driver path returns a local relation
+    got = {r["norm"]: r["component"] for r in result.collect()}
     expected = _dfs_components(nodes, edges)
     assert got == expected
     assert set(got.values()) == {"n0"}

@@ -49,14 +49,14 @@ from named_entity_algorithm_project_spark.operators.linking import (
 
 
 def _canonical_map(spark, mention_rows, abbrev_rows=()):
-    """Full Stage B+C on hand-written (entity, entity_type) rows."""
-    mentions = spark.createDataFrame(
-        list(mention_rows), "entity string, entity_type string"
+    """Full Stage B+C on hand-written (entity, entity_type) mention and
+    (abbr, expansion) rows, held as one Stage-A turn."""
+    extracted = spark.createDataFrame(
+        [((list(mention_rows), list(abbrev_rows)),)],
+        "ex struct<mentions: array<struct<entity: string, entity_type: string>>,"
+        " abbreviations: array<struct<abbr: string, expansion: string>>>",
     )
-    abbrevs = spark.createDataFrame(
-        list(abbrev_rows), "abbr string, expansion string"
-    )
-    lt = build_linking_tables(mentions, abbrevs)
+    lt = build_linking_tables(extracted)
     nodes = (
         lt.norms.select("norm")
         .unionByName(lt.extra_nodes.select("norm"))

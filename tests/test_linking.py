@@ -167,7 +167,16 @@ def test_canonical_pick_ordering(spark):
     assert got["alpha"] == "beta"
 
 
-def test_candidate_max_df_blocking_is_subset(spark):
+def _force_df_cap(monkeypatch, cap):
+    """Make the linker run distributed with ``cap`` as its df-cap at a
+    test-sized vocabulary (both seams are read at call time)."""
+    from named_entity_algorithm_project_spark.operators import linking
+
+    monkeypatch.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
+    monkeypatch.setattr(linking, "auto_df_cap", lambda n_norms: cap)
+
+
+def test_candidate_max_df_blocking_is_subset(spark, monkeypatch):
     """The scale knob (drop ubiquitous n-grams from the similarity join)
     must only ever remove edges, never invent them."""
     from named_entity_algorithm_project_spark.datagen import (
@@ -175,40 +184,7 @@ def test_candidate_max_df_blocking_is_subset(spark):
         generate_rows,
     )
     from named_entity_algorithm_project_spark.operators.extract import (
-        extract_mentions,
-    )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        build_linking_tables,
-    )
-
-    rows = generate_rows(n_convs=60, seed=17)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    mentions, abbrevs = extract_mentions(df)
-    exact = {
-        (r["src"], r["dst"])
-        for r in build_linking_tables(mentions, abbrevs).edges.collect()
-    }
-    blocked = {
-        (r["src"], r["dst"])
-        for r in build_linking_tables(
-            mentions, abbrevs, candidate_max_df=3
-        ).edges.collect()
-    }
-    assert blocked <= exact
-
-
-def test_fused_one_scan_parity(spark):
-    """The one-scan fused vocabulary pass (transform/filter/concat/explode
-    over the combined extraction frame) must produce the identical
-    LinkingTables as the two-branch union over the split views — same
-    norms/profile rows, same gated edges, same extra nodes."""
-    from named_entity_algorithm_project_spark.datagen import (
-        TRANSCRIPTS_SCHEMA,
-        generate_rows,
-    )
-    from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
-        split_extraction,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
         build_linking_tables,
@@ -217,27 +193,15 @@ def test_fused_one_scan_parity(spark):
     rows = generate_rows(n_convs=60, seed=17)
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
     extracted = extract_combined(df).localCheckpoint(eager=True)
-    mentions, abbrevs = split_extraction(extracted)
-
-    split_lt = build_linking_tables(mentions, abbrevs)
-    fused_lt = build_linking_tables(mentions, abbrevs, extracted=extracted)
-
-    def norms_set(lt):
-        return {
-            (r["norm"], r["freq"], tuple(r["types"]))
-            for r in lt.norms.collect()
-        }
-
-    def pair_set(df_):
-        return {(r[0], r[1]) for r in df_.collect()}
-
-    assert norms_set(fused_lt) == norms_set(split_lt)
-    assert pair_set(fused_lt.edges) == pair_set(split_lt.edges)
-    assert {r[0] for r in fused_lt.extra_nodes.collect()} == {
-        r[0] for r in split_lt.extra_nodes.collect()
+    exact = {
+        (r["src"], r["dst"])
+        for r in build_linking_tables(extracted).edges.collect()
     }
-    assert fused_lt.base_threshold == split_lt.base_threshold
-    assert fused_lt.n_norms == split_lt.n_norms
+    _force_df_cap(monkeypatch, 3)
+    lt = build_linking_tables(extracted)
+    assert lt.candidate_max_df == 3
+    blocked = {(r["src"], r["dst"]) for r in lt.edges.collect()}
+    assert blocked <= exact
 
 
 def test_local_path_parity(spark, monkeypatch):
@@ -251,7 +215,6 @@ def test_local_path_parity(spark, monkeypatch):
     )
     from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
-        split_extraction,
     )
     from named_entity_algorithm_project_spark.operators import linking
 
@@ -263,16 +226,11 @@ def test_local_path_parity(spark, monkeypatch):
         )
         df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
         extracted = extract_combined(df).localCheckpoint(eager=True)
-        mentions, abbrevs = split_extraction(extracted)
 
         with monkeypatch.context() as m:
             m.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
-            dist = linking.build_linking_tables(
-                mentions, abbrevs, extracted=extracted
-            )
-        loc = linking.build_linking_tables(
-            mentions, abbrevs, extracted=extracted
-        )
+            dist = linking.build_linking_tables(extracted)
+        loc = linking.build_linking_tables(extracted)
         assert loc.norms.isLocal() and not dist.norms.isLocal()
         if vocab_scale > 1:
             assert loc.n_norms > 5_000, loc.n_norms
@@ -538,7 +496,7 @@ def test_prefix_filter_gated_edges_identical(spark):
     ) >= naive_capped
 
 
-def test_planted_pair_recall_under_cap(spark):
+def test_planted_pair_recall_under_cap(spark, monkeypatch):
     """Linking QUALITY under the df-cap, measured on ground truth the
     generator itself plants (datagen.planted_alias_pairs: dash/fused
     spellings of the same synthetic material). Of the planted pairs whose
@@ -552,7 +510,7 @@ def test_planted_pair_recall_under_cap(spark):
         planted_pair_edge_stats,
     )
     from named_entity_algorithm_project_spark.operators.extract import (
-        extract_mentions,
+        extract_combined,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
         MIN_PREFIX_RANK,
@@ -570,21 +528,21 @@ def test_planted_pair_recall_under_cap(spark):
     transcripts = generate_transcripts(
         spark, n_convs=800, seed=42, vocab_scale=vocab_scale
     )
-    mentions, abbrevs = extract_mentions(transcripts)
-    mentions = mentions.localCheckpoint(eager=True)
+    extracted = extract_combined(transcripts).localCheckpoint(eager=True)
     planted = planted_alias_pairs(vocab_scale)
 
-    def edge_hits(**kw):
-        lt = build_linking_tables(mentions, abbrevs, **kw)
-        return planted_pair_edge_stats(spark, lt.norms, lt.edges, planted)
+    def edge_hits():
+        lt = build_linking_tables(extracted)
+        stats = planted_pair_edge_stats(spark, lt.norms, lt.edges, planted)
+        return lt.n_norms, stats
 
-    n_present, exact_hits = edge_hits()
+    n_norms, (n_present, exact_hits) = edge_hits()
     assert n_present >= 50, f"only {n_present} planted pairs present"
     assert exact_hits > 0, "exact join never linked a planted pair"
     # force the AUTO-style cap at this (sub-50k) vocabulary size
-    lt_probe = build_linking_tables(mentions, abbrevs)
-    cap = max(int(0.05 * lt_probe.n_norms), 100)
-    n_present2, capped_hits = edge_hits(candidate_max_df=cap)
+    cap = max(int(0.05 * n_norms), 100)
+    _force_df_cap(monkeypatch, cap)
+    _, (n_present2, capped_hits) = edge_hits()
     assert n_present2 == n_present
     recall_vs_exact = capped_hits / exact_hits
     assert recall_vs_exact >= 0.95, (

@@ -8,7 +8,8 @@ separate them, so the vocabularies here are built directly, seeded, with:
 whitespace variants (edge and inner tabs/newlines, NBSP), empty,
 lower-case, padded and ``UNKNOWN`` types, protected pairs, abbreviation
 cycles, self-pairs and abbreviation-only endpoints, domain-alias needles,
-and 1-2 character norms.
+and 1-2 character norms. Each vocabulary reaches the Spark linker as a
+two-turn Stage-A frame.
 """
 
 import random
@@ -105,13 +106,12 @@ def _oracle_tables(mentions, abbrevs):
     return norms, edges, extra
 
 
-def _spark_tables(frames):
-    """Linking tables from the (mentions, abbrevs, extracted) frames, as
-    (norms, edges, extra nodes) sets, plus the base threshold and which of
-    the three tables are JVM-local relations (all of them when the
-    driver-local path ran, empty tables included)."""
-    mentions, abbrevs, extracted = frames
-    lt = linking.build_linking_tables(mentions, abbrevs, extracted=extracted)
+def _spark_tables(extracted):
+    """Linking tables from a Stage-A frame, as (norms, edges, extra nodes)
+    sets, plus the base threshold and which of the three tables are
+    JVM-local relations (all of them when the driver-local path ran, empty
+    tables included)."""
+    lt = linking.build_linking_tables(extracted)
     norms = {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()}
     edges = {(r["src"], r["dst"]) for r in lt.edges.collect()}
     extra = {r["norm"] for r in lt.extra_nodes.collect()}
@@ -119,15 +119,11 @@ def _spark_tables(frames):
     return (norms, edges, extra), lt.base_threshold, [t.isLocal() for t in tables]
 
 
-def _frames(spark, mentions, abbrevs, fused):
-    """The split (mentions, abbrevs) frames, plus the combined extraction
-    frame when ``fused`` so the one-scan vocabulary pass runs too."""
-    m = spark.createDataFrame(mentions, "entity string, entity_type string")
-    a = spark.createDataFrame(abbrevs, "abbr string, expansion string")
-    if not fused:
-        return m, a, None
+def _frame(spark, mentions, abbrevs):
+    """The Stage-A extraction frame holding one vocabulary: two turns, the
+    abbreviations and half the mentions in the first."""
     half = len(mentions) // 2
-    extracted = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             ((mentions[:half], abbrevs),),
             ((mentions[half:], []),),
@@ -135,7 +131,6 @@ def _frames(spark, mentions, abbrevs, fused):
         "ex struct<mentions: array<struct<entity: string, entity_type: string>>,"
         " abbreviations: array<struct<abbr: string, expansion: string>>>",
     )
-    return m, a, extracted
 
 
 def test_oracle_local_distributed_agree(spark, monkeypatch):
@@ -143,8 +138,7 @@ def test_oracle_local_distributed_agree(spark, monkeypatch):
         monkeypatch.setitem(DOMAIN_ALIAS_SUBSTRINGS, needle, alias)
     vocabularies = [_vocabulary(seed) for seed in range(N_VOCABULARIES)]
     inputs = [
-        _frames(spark, mentions, abbrevs, fused=seed % 2 == 0)
-        for seed, (mentions, abbrevs) in enumerate(vocabularies)
+        _frame(spark, mentions, abbrevs) for mentions, abbrevs in vocabularies
     ]
     # a small linking run is mostly Spark job latency: building several
     # vocabularies at once overlaps it. Each map is drained before the

@@ -115,7 +115,7 @@ def test_semantic_end_to_end_canonical_parity(spark):
         connected_components,
     )
     from named_entity_algorithm_project_spark.operators.extract import (
-        extract_mentions,
+        extract_combined,
     )
     from named_entity_algorithm_project_spark.operators.linking import (
         build_linking_tables,
@@ -131,9 +131,8 @@ def test_semantic_end_to_end_canonical_parity(spark):
     )
 
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    mentions, abbrevs = extract_mentions(df)
     linking = build_linking_tables(
-        mentions, abbrevs, score_source="semantic_exact"
+        extract_combined(df), score_source="semantic_exact"
     )
     nodes = (
         linking.norms.select("norm")
@@ -226,12 +225,12 @@ def test_semantic_lsh_auto_tier_selection(spark, monkeypatch):
         generate_rows,
     )
     from named_entity_algorithm_project_spark.operators.extract import (
-        extract_mentions,
+        extract_combined,
     )
 
     rows = generate_rows(n_convs=10, seed=5)
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    mentions, abbrevs = extract_mentions(df)
+    extracted = extract_combined(df).localCheckpoint(eager=True)
 
     calls = []
     real = linking.semantic_pairs_lsh
@@ -242,9 +241,9 @@ def test_semantic_lsh_auto_tier_selection(spark, monkeypatch):
 
     monkeypatch.setattr(linking, "semantic_pairs_lsh", spy)
 
-    linking.build_linking_tables(mentions, abbrevs, score_source="semantic_lsh")
+    linking.build_linking_tables(extracted, score_source="semantic_lsh")
     assert calls[-1] == (8, 4)  # small vocab -> base tier
 
     monkeypatch.setattr(linking, "SEMANTIC_AUTO_TIER_VOCAB", 1)
-    linking.build_linking_tables(mentions, abbrevs, score_source="semantic_lsh")
+    linking.build_linking_tables(extracted, score_source="semantic_lsh")
     assert calls[-1] == (10, 6)  # past the boundary -> scale tier
