@@ -1,16 +1,13 @@
 """Entity typing rule cascade (reference: app.py:3410-3489).
 
 `map_entity_type` is a deterministic pure function applied inside the
-Arrow-batched extraction UDF; `map_entity_type_col` is the Column-expression
-equivalent for relational re-typing stages (stays in whole-stage codegen).
+Arrow-batched extraction UDF (through the detector, which the pandas oracle
+shares); it is the cascade's one definition.
 """
 
 from __future__ import annotations
 
 from typing import Optional
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from ..dictionaries import (
     DOMAIN_TERM_CATEGORIES,
@@ -100,61 +97,3 @@ def _map_entity_type_cached(entity_group: str, text: str) -> str:
         return "ORGANIC"
 
     return "UNKNOWN"
-
-
-def _contains_any(lower: Column, words) -> Column:
-    cond = F.lit(False)
-    for word in sorted(words):
-        cond = cond | lower.contains(F.lit(word))
-    return cond
-
-
-def map_entity_type_col(text: Column) -> Column:
-    """Column-expression form of the cascade (no model-label input: callers
-    re-typing relational rows have no entity_group). Mirrors
-    :func:`map_entity_type` with ``entity_group=''``."""
-    normalized = F.trim(text)
-    lower = F.lower(normalized)
-
-    domain_map = F.create_map(
-        *[
-            item
-            for k, v in sorted(DOMAIN_TERM_CATEGORIES.items())
-            for item in (F.lit(k), F.lit(v))
-        ]
-    )
-    domain_hit = F.coalesce(
-        domain_map.getItem(lower),
-        domain_map.getItem(F.regexp_replace(lower, "-", " ")),
-    )
-
-    def rx(pattern) -> Column:
-        import re as _re
-
-        java_pattern = pattern.pattern
-        if pattern.flags & _re.IGNORECASE:
-            java_pattern = "(?i)" + java_pattern
-        return normalized.rlike(java_pattern)
-
-    return (
-        F.when(normalized == "", F.lit("UNKNOWN"))
-        .when(domain_hit.isNotNull(), domain_hit)
-        .when(
-            rx(SIMPLE_VALUE_PATTERN) | rx(VALUE_WITH_UNIT_PATTERN) | rx(VALUE_PATTERN),
-            F.lit("PROP_VALUE"),
-        )
-        .when(
-            rx(UNIT_ONLY_PATTERN) | F.upper(normalized).isin(*sorted(UNIT_TERMS)),
-            F.lit("PROP_VALUE"),
-        )
-        .when(lower.contains("family"), F.lit("POLYMER_FAMILY"))
-        .when(lower.contains("monomer"), F.lit("MONOMER"))
-        .when(_contains_any(lower, PROPERTY_KEYWORDS), F.lit("PROP_NAME"))
-        .when(_contains_any(lower, MATERIAL_KEYWORDS), F.lit("POLYMER"))
-        .when(
-            rx(MATERIAL_PATTERN) & _contains_any(lower, INORGANIC_CLUES),
-            F.lit("INORGANIC"),
-        )
-        .when(rx(MATERIAL_PATTERN), F.lit("ORGANIC"))
-        .otherwise(F.lit("UNKNOWN"))
-    )

@@ -1,53 +1,27 @@
 """Deduplication operators for training-data pipelines.
 
 All operators are pure DataFrame transforms (JVM-side expressions, no Python
-UDFs) and follow the inverted-index / LSH-banding shapes that survive 100 TB:
-nothing here ever materializes an all-pairs matrix.
+UDFs) and follow the inverted-index shape that survives 100 TB: nothing
+here ever materializes an all-pairs matrix.
 
-  exact_duplicates       hash-groupBy on content hash (1 shuffle)
-  fingerprint            normalized-text content hash (projection only)
-  token_jaccard_pairs    token inverted index self-join -> exact Jaccard
-  minhash_signatures     md5-family minhash over word shingles
-  lsh_candidate_pairs    banded signature grouping -> candidate pairs
-  simhash                64-bit simhash from token hashes (bit ops, xxhash64)
-  simhash_near_pairs     hamming-distance pairs via band-rotation blocking
+  fingerprint            normalized-text content hash (projection only; q11)
+  token_jaccard_pairs    token inverted index self-join -> exact Jaccard (q12)
+  simhash                64-bit simhash from token hashes (bit ops; q33)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import band_join, band_rows
 
-
-def _tokens(text_col: str) -> "F.Column":
+def _tokens(text_col: str) -> Column:
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
-def exact_duplicates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Groups of byte-identical documents: (content_hash, n, doc_ids).
-    Single shuffle on the hash; the canonical survivor is min(id) —
-    deterministic, no first()-without-order."""
-    return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(id_col).alias("keep_id"),
-            F.array_sort(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .filter(F.col("n") > 1)
-    )
-
-
-def fingerprint(docs: DataFrame, text_col: str = "text") -> "F.Column":
+def fingerprint(text: Column) -> Column:
     """Whitespace-normalized lowercase content hash (cheap dedup pass)."""
-    return F.md5(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    )
+    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
 
 
 def token_jaccard_pairs(
@@ -92,72 +66,6 @@ def token_jaccard_pairs(
         .join(sb, "doc_b")
         .filter(jac >= threshold)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
-    )
-
-
-def _shingles(text_col: str, k: int = 3) -> "F.Column":
-    # tokenize once inside the lambda scope via a single-element transform —
-    # naming split() inline in the per-i lambda would re-split per element
-    joins = ", ' ', ".join(f"element_at(toks, i + {j})" for j in range(k))
-    return F.expr(
-        f"flatten(transform(array(split(lower(trim({text_col})), '\\\\s+')), "
-        f"toks -> CASE WHEN size(toks) >= {k} THEN array_distinct("
-        f"transform(sequence(1, size(toks) - {k - 1}), "
-        f"i -> concat({joins}))) ELSE array() END))"
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    n_hashes: int = 16,
-    shingle_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc, seed, minhash) — md5(seed || shingle) as the hash family; hex
-    strings compare portably across engines and languages."""
-    sh = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(_shingles(text_col, shingle_k)).alias("sh"),
-    )
-    # all hash slots as parallel aggregates in ONE pass — a seed crossJoin
-    # would amplify the shuffle n_hashes-fold for identical output
-    wide = sh.groupBy("doc").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{seed}#"), F.col("sh")))).alias(
-                f"mh{seed}"
-            )
-            for seed in range(n_hashes)
-        ]
-    )
-    stack_expr = ", ".join(f"{s}, mh{s}" for s in range(n_hashes))
-    return wide.selectExpr(
-        "doc", f"stack({n_hashes}, {stack_expr}) as (seed, mh)"
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, band_size: int = 4
-) -> DataFrame:
-    """Band the signature, join on (band, key), emit candidate pairs.
-    Bucket sizes are data-dependent — the per-bucket pair expansion is the
-    skew point, so buckets above ``spark.sql.adaptive`` skew limits split
-    automatically; tune band_size before salting."""
-    sig = signatures.groupBy(
-        "doc", (F.col("seed") / band_size).cast("int").alias("band")
-    ).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seed", "mh"))),
-                lambda s: s.mh,
-            ),
-            "|",
-        ).alias("key")
-    )
-    return (
-        band_join(sig, "doc")
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-        .distinct()
     )
 
 
@@ -210,28 +118,3 @@ def simhash(
             fingerprint_expr.bitwiseOR(term)
         )
     return sums.select("doc", fingerprint_expr.alias("simhash"))
-
-
-def simhash_near_pairs(
-    fingerprints: DataFrame, max_hamming: int = 3, n_bands: int = 4
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming.
-
-    Pigeonhole blocking: split the 64-bit fingerprint into ``n_bands``
-    16-bit bands; any pair within ``max_hamming < n_bands`` must agree on at
-    least one full band — join per band, verify exact hamming on candidates.
-    """
-    banded = band_rows(
-        fingerprints.select("doc", "simhash"), "simhash", n_bands, 64 // n_bands
-    )
-    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
-    return (
-        band_join(banded, "doc", "simhash")
-        .select(
-            F.col("a").alias("doc_a"),
-            F.col("b").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )

@@ -2,9 +2,9 @@
 
 Training-data pipelines carry images/audio/video as ``binary`` columns with
 a metadata struct; the engine's job is the Spark-side plumbing — schema,
-partitioning, Arrow batch shape, UDF signatures — while the actual codec
-calls are pluggable. The heavy media libraries (PIL/torchaudio/ffmpeg) are
-not in this container, so the plug point ships stdlib-only REAL codecs for
+Arrow batch shape, UDF signatures — while the actual codec calls are
+pluggable. The heavy media libraries (PIL/torchaudio/ffmpeg) are not
+package dependencies, so the plug point ships stdlib-only REAL codecs for
 one common format per kind plus two stub modes:
 
 * ``decode_stub="deterministic"`` — a seeded fake decoder (payload bytes →
@@ -34,10 +34,9 @@ means garbage data or means "plug in PIL/ffmpeg", and the status says
 which without re-decoding anything.
 
 Everything around the stub is real: ``mapInPandas`` with Arrow-batched
-binary columns, fixed output schemas, per-batch (not per-row) iteration,
-and partition sizing guidance (binary payloads blow past
-``spark.sql.files.maxPartitionBytes`` assumptions — repartition by byte
-budget, not row count).
+binary columns, fixed output schemas and per-batch (not per-row)
+iteration. ``extract_media_features`` is the module's one Spark operator
+(q35 runs it).
 """
 
 from __future__ import annotations
@@ -49,7 +48,6 @@ from typing import Iterator, Literal
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -459,21 +457,6 @@ def _decode_wav_safe(payload: bytes) -> tuple[list[float] | None, str]:
         return None, "malformed"
 
 
-def probe_wav_meta(payload: bytes) -> tuple[int, int, int]:
-    """(sample_rate, n_channels, duration_ms) from a WAV header —
-    metadata backfill for the ``meta`` struct."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload or b""), "rb") as w:
-        rate = w.getframerate()
-        return (
-            rate,
-            w.getnchannels(),
-            int(w.getnframes() * 1000 / rate) if rate else 0,
-        )
-
-
 def extract_media_features(
     media: DataFrame,
     decode_stub: Literal[
@@ -532,38 +515,3 @@ def extract_media_features(
     return media.select("media_id", "kind", "payload").mapInPandas(
         _featurize, FEATURES_SCHEMA
     )
-
-
-def repartition_by_bytes(
-    media: DataFrame, target_partition_bytes: int = 64 * 1024 * 1024
-) -> DataFrame:
-    """Partition media so each partition carries ~target bytes of payload —
-    row-count partitioning is wrong for fat binary columns."""
-    sized = media.withColumn(
-        "_bytes", F.coalesce(F.length("payload"), F.lit(0)).cast("long")
-    )
-    total = sized.agg(F.sum("_bytes")).collect()[0][0] or 0
-    n_parts = max(1, int(total / target_partition_bytes) + 1)
-    return sized.repartitionByRange(n_parts, F.col("media_id")).drop("_bytes")
-
-
-def frame_sample_stub(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled timestamp
-    (posexplode over a sequence sized from duration metadata); the frame
-    grab itself is the stubbed codec call."""
-    frames = media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(
-                    F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1,
-                    F.lit(0),
-                ),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-    )
-    return frames

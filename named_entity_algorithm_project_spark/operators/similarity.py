@@ -3,8 +3,9 @@
   dot / cosine        the dense dot product and cosine Column expressions
                       (zip_with + aggregate, double accumulation) — every
                       embedding scorer in the package builds on these two
-  cosine_topk         brute-force exact top-k (the baseline; one pass, JVM
-                      higher-order functions, broadcast query vector)
+  cosine_scores       (id, cos_sim) against a literal query vector; the
+                      exact re-rank inside lsh_topk (q14/q15's brute-force
+                      top-k is queries._topk_to_vec0 over ``cosine``)
   rp_lsh_buckets      random-hyperplane LSH signatures (deterministic,
                       PCG64-seeded plane matrix; ONE Arrow-batched numpy
                       matmul, not dim x n_planes expression nodes)
@@ -12,8 +13,7 @@
                       re-rank inside — the scale path
   band_rows/band_join banded-signature candidate pairs: a pair is a
                       candidate when its signatures agree on any band
-                      (simhash near-dups, semantic-LSH linking,
-                      minhash bands)
+                      (semantic-LSH linking)
 
 At 100 TB the brute-force scan is one full pass (fine for one-off queries,
 wrong for query streams); rp_lsh assigns each vector to a signature bucket
@@ -32,7 +32,7 @@ platforms/versions by spec), so there is still zero shipped state.
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import List, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -72,22 +72,6 @@ def cosine_scores(
     if round_digits is not None:
         score = F.round(score, round_digits)
     return vectors.select(F.col(id_col), score.alias("cos_sim"))
-
-
-def cosine_topk(
-    vectors: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k: Spark's TakeOrderedAndProject keeps only k rows per
-    partition then merges — no global sort materializes."""
-    return (
-        cosine_scores(vectors, query, id_col, vec_col)
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 PLANE_SEED = 0x5E11A

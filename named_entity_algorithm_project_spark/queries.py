@@ -383,11 +383,13 @@ def q10_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: md5 of the whitespace-normalized lowercase
-    text (the cheap first pass of any dedup cascade)."""
+    text (the cheap first pass of any dedup cascade). Runs the dedup
+    operator (operators/dedup.py fingerprint)."""
+    from .operators.dedup import fingerprint
+
     docs = _t(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     return docs.groupBy("source").agg(
-        F.countDistinct(fp).alias("n_fingerprints"),
+        F.countDistinct(fingerprint(F.col("text"))).alias("n_fingerprints"),
         F.count(F.lit(1)).alias("n_docs"),
     )
 

@@ -1,14 +1,11 @@
-"""Dedup operators: exact, Jaccard, MinHash/LSH, SimHash (training-data ops)."""
+"""Dedup operators: fingerprint, Jaccard, SimHash (training-data ops)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from named_entity_algorithm_project_spark.operators.dedup import (
-    exact_duplicates,
-    lsh_candidate_pairs,
-    minhash_signatures,
+    fingerprint,
     simhash,
-    simhash_near_pairs,
     token_jaccard_pairs,
 )
 
@@ -26,15 +23,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_duplicates(docs):
-    groups = exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    g = groups[0]
-    assert g["n"] == 3
-    assert g["keep_id"] == 0
-    assert g["doc_ids"] == [0, 1, 5]
-
-
 def test_token_jaccard_pairs(docs):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
@@ -47,18 +35,6 @@ def test_token_jaccard_pairs(docs):
     assert (0, 3) not in pairs
 
 
-def test_minhash_lsh_candidates(docs):
-    sigs = minhash_signatures(docs, n_hashes=8, shingle_k=3)
-    # identical docs -> identical signatures -> candidates in every band
-    cands = {
-        (r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(sigs, band_size=4).collect()
-    }
-    assert (0, 1) in cands
-    assert (0, 5) in cands
-    assert (1, 5) in cands
-    assert (0, 3) not in cands
-
-
 def test_simhash_properties(docs):
     fps = {r["doc"]: r["simhash"] for r in simhash(docs).collect()}
     assert fps[0] == fps[1] == fps[5]  # identical text, identical fingerprint
@@ -69,15 +45,8 @@ def test_simhash_properties(docs):
     assert ham_02 < ham_03
 
 
-def test_simhash_near_pairs(spark, docs):
-    fps = simhash(docs)
-    near = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_near_pairs(fps, max_hamming=16, n_bands=4).collect()
-    }
-    assert near[(0, 1)] == 0
-    assert (3, 4) in near
-    # hamming(0,2) must match the exact XOR popcount
-    exact = {r["doc"]: r["simhash"] for r in fps.collect()}
-    if (0, 2) in near:
-        assert near[(0, 2)] == bin(exact[0] ^ exact[2]).count("1")
+def test_fingerprint_normalization(spark):
+    rows = [(0, "Hello   World"), (1, "hello world"), (2, "HELLO\n\nWORLD")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    fps = [r["fp"] for r in df.select(fingerprint(F.col("text")).alias("fp")).collect()]
+    assert fps[0] == fps[1] == fps[2]

@@ -1,16 +1,13 @@
-"""Multimodal plumbing: schema, Arrow batch shape, byte-budget partitioning.
+"""Multimodal plumbing: schema, Arrow batch shape, real stdlib codecs.
 The decode is a deterministic stub (container has no codec libs); the Spark
 side is real."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from named_entity_algorithm_project_spark.operators.multimodal import (
     FEATURE_DIM,
     MEDIA_SCHEMA,
     extract_media_features,
-    frame_sample_stub,
-    repartition_by_bytes,
 )
 
 
@@ -47,20 +44,6 @@ def test_raise_stub_marks_codec_boundary(media):
         extract_media_features(media, decode_stub="raise").collect()
 
 
-def test_repartition_by_bytes(media):
-    out = repartition_by_bytes(media, target_partition_bytes=16)
-    assert out.count() == 5
-    assert "_bytes" not in out.columns
-    assert out.rdd.getNumPartitions() >= 2  # ~60 payload bytes / 16
-
-
-def test_frame_sampling(media):
-    frames = frame_sample_stub(media, every_ms=1000).collect()
-    # only the video row, duration 3500ms -> ts 0,1000,2000,3000
-    assert {r["media_id"] for r in frames} == {3}
-    assert sorted(r["frame_ts_ms"] for r in frames) == [0, 1000, 2000, 3000]
-
-
 def _make_wav(freq_hz=440.0, rate=8000, ms=250, amplitude=0.5, width=2):
     """Synthesize a PCM WAV in memory with the stdlib wave module."""
     import io
@@ -92,7 +75,6 @@ def test_wav_codec_end_to_end(spark):
 
     from named_entity_algorithm_project_spark.operators.multimodal import (
         decode_wav_features,
-        probe_wav_meta,
     )
 
     loud = _make_wav(amplitude=0.5)
@@ -107,7 +89,6 @@ def test_wav_codec_end_to_end(spark):
     for f in feats:
         assert abs(f - expect_rms) < 0.02
     assert all(f == 0.0 for f in decode_wav_features(silent))
-    assert probe_wav_meta(loud) == (8000, 1, 250)
 
     media = spark.createDataFrame(
         [

@@ -4,9 +4,10 @@ import math
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from named_entity_algorithm_project_spark.operators.similarity import (
-    cosine_topk,
+    cosine_scores,
     lsh_topk,
     rp_lsh_buckets,
 )
@@ -36,6 +37,16 @@ def _cos(a, b):
     return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
 
 
+def _exact_topk(vec_df, query, k):
+    """Brute-force top-k: the score-then-order shape ``lsh_topk`` re-ranks
+    its probed buckets with."""
+    return (
+        cosine_scores(vec_df, query)
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(k)
+    )
+
+
 def test_brute_force_matches_python(vec_df, vectors):
     query = vectors[0][1]
     # float32 storage: compare against the float32-rounded python oracle
@@ -46,7 +57,7 @@ def test_brute_force_matches_python(vec_df, vectors):
         ((i, _cos(as_f32[i], [np.float32(x) for x in query])) for i in as_f32),
         key=lambda t: (-t[1], t[0]),
     )[:10]
-    got = cosine_topk(vec_df, [float(np.float32(x)) for x in query], k=10).collect()
+    got = _exact_topk(vec_df, [float(np.float32(x)) for x in query], 10).collect()
     assert [r["vec_id"] for r in got] == [i for i, _ in expected]
     for r, (_, score) in zip(got, expected):
         assert r["cos_sim"] == pytest.approx(score, abs=1e-5)
@@ -54,7 +65,7 @@ def test_brute_force_matches_python(vec_df, vectors):
 
 def test_lsh_topk_recall(vec_df, vectors):
     query = vectors[0][1]
-    exact = {r["vec_id"] for r in cosine_topk(vec_df, query, k=10).collect()}
+    exact = {r["vec_id"] for r in _exact_topk(vec_df, query, 10).collect()}
     indexed = rp_lsh_buckets(vec_df, dim=DIM, n_planes=8)
     approx = {
         r["vec_id"]

@@ -1,17 +1,6 @@
 """Triple-stage units: nearest-property tie-breaking (J1), value-unit
-interval join (J2 / Measurement semantics), wide pivot + export sinks."""
+interval join (J2 / Measurement semantics)."""
 
-import json
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from named_entity_algorithm_project_spark.io_exports import (
-    export_csv,
-    export_json,
-    wide_entities,
-)
 from named_entity_algorithm_project_spark.operators.triples import (
     build_triples,
     link_value_units,
@@ -75,40 +64,3 @@ def test_value_unit_gap_cutoff(spark):
     df = spark.createDataFrame(rows, MENTION_COLS)
     assert link_value_units(df).count() == 0
     assert link_value_units(df, max_distance=60).count() == 1
-
-
-def test_wide_entities_pivot(spark):
-    rows = [
-        _mention("c1", "P3HT", "ORGANIC", 0),
-        _mention("c1", "mobility", "PROP_NAME", 10),
-        _mention("c1", "bandgap", "PROP_NAME", 30),
-        _mention("c2", "15 %", "PROP_VALUE", 0),
-    ]
-    df = spark.createDataFrame(rows, MENTION_COLS)
-    wide = {r["conv_id"]: r for r in wide_entities(df).collect()}
-    assert wide["c1"]["PROP_NAME"] == ["bandgap", "mobility"]  # sorted
-    assert wide["c1"]["ORGANIC"] == ["P3HT"]
-    assert wide["c1"]["all_entities"] == ["P3HT", "bandgap", "mobility"]
-    assert wide["c1"]["entity_map"]["PROP_NAME"] == ["bandgap", "mobility"]
-    assert "PROP_VALUE" not in wide["c1"]["entity_map"]  # empty types dropped
-    assert wide["c2"]["PROP_VALUE"] == ["15 %"]
-    assert wide["c2"]["ORGANIC"] == []
-
-
-def test_export_sinks(spark, tmp_path):
-    rows = [
-        _mention("c1", "P3HT", "ORGANIC", 0),
-        _mention("c1", "mobility", "PROP_NAME", 10),
-    ]
-    df = spark.createDataFrame(rows, MENTION_COLS)
-    wide = wide_entities(df)
-
-    csv_path = str(tmp_path / "csv")
-    export_csv(wide, csv_path)
-    back = spark.read.option("header", "true").csv(csv_path).collect()[0]
-    assert back["all_entities"] == "P3HT, mobility"  # flattened string
-    assert json.loads(back["entity_map"])["ORGANIC"] == ["P3HT"]
-
-    json_path = str(tmp_path / "json")
-    export_json(df, json_path)
-    assert spark.read.json(json_path).count() == 2
