@@ -10,6 +10,9 @@ that plays the role of Iceberg's commit log:
     <root>/lineage/bucket=K/            (single-row commit marker,
                                          written LAST = the commit point)
 
+:func:`commit_buckets_batch` is the one writer of this layout: the batch
+pipeline's conv_id hash buckets and the streaming front-end's micro-batches
+(bucket = batch_id, streaming/incremental.py) both commit through it.
 Resume = read the lineage table, skip committed buckets, reprocess the rest.
 A bucket whose data write succeeded but whose lineage write didn't is
 rewritten from scratch (overwrite mode), so partial data is never read —
@@ -40,13 +43,6 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("committed_at", T.TimestampType(), True),
         T.StructField("run_id", T.StringType(), False),
     ]
-)
-
-# On disk the bucket lives ONLY in the directory name (bucket=K) — one
-# marker directory per bucket, and read_lineage recovers the column via
-# partition discovery.
-LINEAGE_FILE_SCHEMA = T.StructType(
-    [f for f in LINEAGE_SCHEMA.fields if f.name != "bucket"]
 )
 
 # Pending-bucket count up to which per-bucket lineage stats ride the batch
@@ -82,8 +78,7 @@ def list_child_names(spark: SparkSession, path_str: str) -> List[str]:
 
 def dir_has_parquet(spark: SparkSession, path_str: str) -> bool:
     """True when the directory exists and holds at least one parquet file
-    — the marker-commit predicate shared by batch resume and streaming
-    replay."""
+    — the marker-commit predicate."""
     return any(
         n.endswith(".parquet") for n in list_child_names(spark, path_str)
     )
@@ -163,25 +158,22 @@ def commit_buckets_batch(
     buckets: List[int],
     extracted_with_bucket: DataFrame,
     run_id: str,
-    fail_after_buckets: Optional[int] = None,
 ) -> List[dict]:
-    """Write ALL pending buckets' extraction output as ONE Spark job
-    (partitionBy(bucket) + dynamic partition overwrite — committed buckets'
-    directories are untouched), then derive per-bucket lineage stats from a
-    single column-pruned agg over the just-written files, and finally write
-    the per-bucket lineage markers (each marker write stays the commit point
-    for its bucket, so the read side's contract is unchanged).
+    """The one Stage-A commit: write ALL pending buckets' extraction output
+    as ONE Spark job (partitionBy(bucket) + dynamic partition overwrite —
+    committed buckets' directories are untouched), with per-bucket lineage
+    stats observed on that job (or re-read from the written files past
+    ``OBSERVE_STATS_MAX_BUCKETS``), then ONE partitioned lineage-marker
+    write — each bucket's marker is its commit point. The batch pipeline
+    commits its hash buckets here; a streaming micro-batch commits as the
+    single bucket ``batch_id``.
 
-    Rationale: a per-bucket loop would run n_buckets sequential Spark jobs
-    — at 1000 buckets the per-job fixed cost dominates the stage. This
-    path amortizes it: 1 extraction+write job + 1 stats job + n tiny 1-row
-    marker writes. A crash before any marker leaves the bucket
+    A crash before the marker write leaves every pending bucket
     uncommitted (data present but invisible to readers) and resume rewrites
     it in place via the same dynamic overwrite.
 
-    ``fail_after_buckets`` injects a crash after k marker commits (resume
-    tests); ``wall_ms`` in each row is the elapsed stage wall at that
-    bucket's commit (monotone across buckets — the write job is shared).
+    ``wall_ms`` in each row is the elapsed stage wall at the commit (the
+    write job is shared, so every bucket of one commit reports the same).
     """
     from pyspark.sql import Observation
 
@@ -280,61 +272,35 @@ def commit_buckets_batch(
                 "wall_ms": wall_ms,
             }
         )
-    if fail_after_buckets is None:
-        # ONE partitioned marker write for every pending bucket (bucket=K
-        # directories — identical layout and read contract as the
-        # sequential markers). At 1000 buckets the alternative — 1000
-        # one-row Spark jobs — dominates the stage wall (measured 4.6x at
-        # n_buckets=64, BENCH.md). Atomicity note: the committer renames
-        # per-partition task output at job commit, so a crash mid-commit
-        # leaves each bucket=K dir either complete or absent — exactly the
-        # per-bucket granularity committed_buckets() already checks.
-        rows = [
-            (
-                r["bucket"],
-                r["n_turns"],
-                r["n_mentions"],
-                r["n_abbrevs"],
-                r["wall_ms"],
-                None,
-                run_id,
-            )
-            for r in out
-        ]
-        lineage = local_df(spark, rows, LINEAGE_SCHEMA).withColumn(
-            "committed_at", F.current_timestamp()
-        )
+    # ONE partitioned marker write for every pending bucket (bucket=K
+    # directories). At 1000 buckets the alternative — 1000 one-row Spark
+    # jobs — dominates the stage wall (measured 4.6x at n_buckets=64,
+    # BENCH.md). Atomicity note: the committer renames per-partition task
+    # output at job commit, so a crash mid-commit leaves each bucket=K dir
+    # either complete or absent — exactly the per-bucket granularity
+    # committed_buckets() checks.
+    rows = [
         (
-            lineage.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(paths.lineage)
+            r["bucket"],
+            r["n_turns"],
+            r["n_mentions"],
+            r["n_abbrevs"],
+            r["wall_ms"],
+            None,
+            run_id,
         )
-        return out
-    # failure-injection path (resume tests): sequential per-bucket markers
-    # so the crash lands between commits
-    for i, r in enumerate(out):
-        if i >= fail_after_buckets:
-            raise RuntimeError(
-                f"injected failure after {fail_after_buckets} buckets"
-            )
-        row = [
-            (
-                r["n_turns"],
-                r["n_mentions"],
-                r["n_abbrevs"],
-                r["wall_ms"],
-                None,
-                run_id,
-            )
-        ]
-        lineage = local_df(spark, row, LINEAGE_FILE_SCHEMA).withColumn(
-            "committed_at", F.current_timestamp()
-        )
-        lineage.coalesce(1).write.mode("overwrite").parquet(
-            paths.lineage_bucket(r["bucket"])
-        )
+        for r in out
+    ]
+    lineage = local_df(spark, rows, LINEAGE_SCHEMA).withColumn(
+        "committed_at", F.current_timestamp()
+    )
+    (
+        lineage.coalesce(1)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(paths.lineage)
+    )
     return out
 
 

@@ -156,7 +156,7 @@ def _dim_hint(df: DataFrame, large_vocab: bool) -> DataFrame:
 class LinkingTables:
     norms: DataFrame  # norm, freq, types:array<string>
     edges: DataFrame  # src, dst (deduped, src < dst)
-    extra_nodes: DataFrame  # norm-only nodes added by abbrev/alias edges
+    nodes: DataFrame  # norm: component universe (norms + abbrev/alias endpoints)
     base_threshold: float
     # observability: unique linkable norms and the EFFECTIVE df cap the
     # similarity join ran with (None = exact / non-tfidf scorer)
@@ -212,15 +212,14 @@ def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
 
 
 def _drop_capped_grams(
-    weights: DataFrame,
-    candidate_max_df: Optional[int],
-    df_counts: Optional[DataFrame],
-    large_vocab: bool,
+    weights: DataFrame, candidate_max_df: Optional[int], large_vocab: bool
 ) -> DataFrame:
-    """``weights`` without the n-grams whose df exceeds the cap (unchanged
-    when uncapped) — the df-cap keep-list of both similarity joins."""
-    if candidate_max_df is None or df_counts is None:
+    """``weights`` without the n-grams whose df (number of norms carrying
+    the gram) exceeds the cap (unchanged when uncapped) — the df-cap
+    keep-list of both similarity joins."""
+    if candidate_max_df is None:
         return weights
+    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
     # merge-join hint (large vocab only): `keep` is GRAM-vocabulary-sized
     # (~10-15x the norm count). An explicit broadcast OOM'd the 640k-norm
     # tier, and even AQE's own estimate-driven broadcast choice did
@@ -245,11 +244,10 @@ def _pair_sum(joined: DataFrame) -> DataFrame:
 def similarity_pairs(
     weights: DataFrame,
     candidate_max_df: Optional[int] = None,
-    df_counts: Optional[DataFrame] = None,
     large_vocab: bool = True,
 ) -> DataFrame:
     """Exact cosine for every norm pair sharing an n-gram: (a, b, score)."""
-    weights = _drop_capped_grams(weights, candidate_max_df, df_counts, large_vocab)
+    weights = _drop_capped_grams(weights, candidate_max_df, large_vocab)
     left = weights.select(
         F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
     )
@@ -263,7 +261,6 @@ def similarity_pairs_prefix(
     weights: DataFrame,
     gate_floor: float,
     candidate_max_df: Optional[int] = None,
-    df_counts: Optional[DataFrame] = None,
     large_vocab: bool = True,
     score_pin: bool = False,
 ) -> DataFrame:
@@ -305,9 +302,7 @@ def similarity_pairs_prefix(
     join, the score sides): pass it materialized (``localCheckpoint``) so
     the TF-IDF explode/agg DAG runs once.
     """
-    cand_weights = _drop_capped_grams(
-        weights, candidate_max_df, df_counts, large_vocab
-    )
+    cand_weights = _drop_capped_grams(weights, candidate_max_df, large_vocab)
     # float-safety margin widens prefixes slightly (never prunes a pair the
     # exact arithmetic could pass)
     t_eff = max(gate_floor - 1e-9, 0.0)
@@ -730,7 +725,7 @@ def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
         else:
             abbr_pairs.add((r["k1"], r["k2"]))
     base = compute_base_threshold(sum(freq.values()))
-    eff_types, edges, extra = link_vocabulary(
+    eff_types, edges, nodes = link_vocabulary(
         freq,
         types,
         abbr_pairs,
@@ -744,7 +739,7 @@ def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
             "norm string, freq bigint, types array<string>",
         ),
         edges=local_df(spark, sorted(edges), "src string, dst string"),
-        extra_nodes=local_df(spark, [(n,) for n in sorted(extra)], "norm string"),
+        nodes=local_df(spark, [(n,) for n in sorted(nodes)], "norm string"),
         base_threshold=base,
         n_norms=len(freq),
         candidate_max_df=None,
@@ -918,16 +913,10 @@ def build_linking_tables(
         weights = tfidf_weights(profiles.select("norm"), n_norms).localCheckpoint(
             eager=True
         )
-        tf_df_counts = (
-            weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-            if candidate_max_df is not None
-            else None
-        )
         scored = similarity_pairs_prefix(
             weights,
             gate_floor=adaptive_threshold_floor(base),
             candidate_max_df=candidate_max_df,
-            df_counts=tf_df_counts,
             large_vocab=large_vocab,
             score_pin=n_norms > SCORE_PIN_MIN_VOCAB,
         )
@@ -947,10 +936,6 @@ def build_linking_tables(
         .distinct()
     )
 
-    # LeftAnti also builds right — hint the vocabulary-sized name list too
-    extra_nodes = all_nodes_full.join(
-        _dim_hint(profiles.select("norm"), large_vocab), "norm", "left_anti"
-    )
     # Materialize the three output tables eagerly (they are vocabulary-sized,
     # tiny next to the corpus), then release the cached intermediates so
     # repeated invocations in one session don't accumulate cache blocks.
@@ -963,14 +948,14 @@ def build_linking_tables(
         return frame.localCheckpoint(eager=True)
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_norms, f_edges, f_extra = (
+        f_norms, f_edges, f_nodes = (
             pool.submit(inheritable_thread_target(spark)(checkpoint), frame)
-            for frame in (profiles_eff, edges, extra_nodes)
+            for frame in (profiles_eff, edges, all_nodes_full)
         )
         out = LinkingTables(
             norms=f_norms.result(),
             edges=f_edges.result(),
-            extra_nodes=f_extra.result(),
+            nodes=f_nodes.result(),
             base_threshold=base,
             n_norms=int(n_norms),
             candidate_max_df=(

@@ -147,8 +147,8 @@ def link_vocabulary(
     upper-cased type sets, ``abbr_pairs`` the trimmed non-empty
     (abbr, expansion) pairs. Returns the effective types per norm (sorted,
     ``["UNKNOWN"]`` when empty), the edges as ``(min, max)`` pairs without
-    self-loops, and the extra nodes: abbreviation or alias endpoints that
-    are not norms.
+    self-loops, and the component nodes: the norms plus every abbreviation
+    or alias endpoint.
     """
     norms = sorted(freq)
     # abbreviation links, gated on the original type sets
@@ -194,8 +194,7 @@ def link_vocabulary(
         for s, t in gated_abbr | alias_edges | sim_edges
         if s != t
     }
-    extra = nodes.union(alias for _, alias in alias_edges) - set(norms)
-    return eff_types, edges, extra
+    return eff_types, edges, nodes.union(alias for _, alias in alias_edges)
 
 
 def oracle_vocabulary(
@@ -235,14 +234,13 @@ def oracle_linking(
     scorer = (
         _semantic_cosine_pairs if score_source == "semantic" else _tfidf_cosine_pairs
     )
-    _, edges, extra = link_vocabulary(
+    _, edges, all_terms = link_vocabulary(
         freq_map,
         type_lookup,
         abbr_pairs,
         compute_base_threshold(sum(freq_map.values())),
         scorer,
     )
-    all_terms = set(freq_map) | extra
 
     adjacency: Dict[str, Set[str]] = defaultdict(set)
     for term in all_terms:

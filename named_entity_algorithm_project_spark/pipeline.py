@@ -76,13 +76,11 @@ class PipelineConfig:
 
 @dataclass
 class PipelineResult:
-    mentions: DataFrame
     canonical_map: DataFrame
     entities: DataFrame
     triples: DataFrame
     lineage: List[dict]
-    output_dir: str = ""
-    metrics: Optional[DataFrame] = None
+    metrics: DataFrame
 
 
 def ordered_transcripts(transcripts: DataFrame, n_partitions: Optional[int] = None) -> DataFrame:
@@ -101,13 +99,8 @@ def run_pipeline(
     output_dir: str,
     config: Optional[PipelineConfig] = None,
     resume: bool = True,
-    fail_after_buckets: Optional[int] = None,
 ) -> PipelineResult:
-    """Run (or resume) the full pipeline, materializing under output_dir.
-
-    ``fail_after_buckets`` injects a crash after k Stage-A bucket commits —
-    used by the resume tests only.
-    """
+    """Run (or resume) the full pipeline, materializing under output_dir."""
     config = config or PipelineConfig()
     paths = StageAPaths(output_dir)
     run_id = uuid.uuid4().hex[:12]
@@ -160,12 +153,7 @@ def run_pipeline(
             added_tokens=added_tokens,
         )
         lineage_rows = commit_buckets_batch(
-            spark,
-            paths,
-            pending,
-            extracted,
-            run_id,
-            fail_after_buckets=fail_after_buckets,
+            spark, paths, pending, extracted, run_id
         )
 
     _mark("stage_a")
@@ -184,12 +172,7 @@ def run_pipeline(
     _phase("stage_c_components")
 
     # ---------------- Stage C: components + canonical pick ----------------
-    node_universe = (
-        linking.norms.select("norm")
-        .unionByName(linking.extra_nodes.select("norm"))
-        .distinct()
-    )
-    components = connected_components(node_universe, linking.edges)
+    components = connected_components(linking.nodes, linking.edges)
     canonical_map = pick_canonicals(components, linking.norms).persist()
 
     mentions = apply_canonical_map(mentions_raw, canonical_map)
@@ -389,14 +372,12 @@ def run_pipeline(
     )
     canonical_map.unpersist()
     return PipelineResult(
-        mentions=entities_rb,
         canonical_map=spark.read.schema(canonical_map.schema).parquet(
             os.path.join(output_dir, "canonical_map")
         ),
         entities=entities_rb,
         triples=triples_rb,
         lineage=lineage_rows,
-        output_dir=output_dir,
         metrics=spark.read.schema(metrics.schema).parquet(
             os.path.join(output_dir, "metrics")
         ),

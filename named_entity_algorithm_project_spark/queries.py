@@ -748,12 +748,7 @@ def _kg_linking_group_sizes(
     linking = build_linking_tables(
         extract_combined(transcripts), score_source=score_source
     )
-    nodes = (
-        linking.norms.select("norm")
-        .unionByName(linking.extra_nodes.select("norm"))
-        .distinct()
-    )
-    comps = connected_components(nodes, linking.edges)
+    comps = connected_components(linking.nodes, linking.edges)
     cmap = pick_canonicals(comps, linking.norms)
     group_sizes = cmap.groupBy("canonical").agg(
         F.count(F.lit(1)).alias("group_size")
@@ -1271,13 +1266,14 @@ def q36_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q37_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming ingestion under the driver gate: the pinned
     transcripts corpus split into TWO parquet batch files, drained through
-    ``incremental_extract`` (foreachBatch, dynamic-partition-overwrite data
-    write, lineage marker as the commit point), then the WHOLE stream
-    REPLAYED from a fresh checkpoint — every batch's marker already exists,
-    so the replay is skipped batch-for-batch and the final mention counts
-    are identical to the batch pipeline's. Oracle: the same pandas-reference
-    expectation as q19 — streaming == batch == reference, and the replay is
-    invisible (idempotence). The tiny per-type result is localCheckpoint'd
+    ``incremental_extract`` (foreachBatch; each micro-batch commits as one
+    Stage-A bucket through ``io_tables.commit_buckets_batch``), then the
+    WHOLE stream REPLAYED from a fresh checkpoint — every batch's marker
+    already exists, so the replay is skipped batch-for-batch. The stream is
+    read back through the lineage-gated Stage-A reader, and the final
+    mention counts are identical to the batch pipeline's. Oracle: the same
+    pandas-reference expectation as q19 — streaming == batch == reference,
+    and the replay is invisible (idempotence). The tiny per-type result is localCheckpoint'd
     so the temp stream directory can be removed before the driver collects."""
     import shutil
     import tempfile
@@ -1285,8 +1281,8 @@ def q37_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .oracle_expected import KG_N_CONVS, KG_SEED
     from .datagen import generate_rows
     from .datagen import TRANSCRIPTS_SCHEMA
-    from .operators.extract import split_extraction
-    from .streaming.incremental import incremental_extract
+    from .io_tables import read_stage_a
+    from .streaming.incremental import incremental_extract, stream_paths
 
     work = tempfile.mkdtemp(prefix="q37_stream_")
     input_dir = os.path.join(work, "in")
@@ -1314,10 +1310,7 @@ def q37_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         q2 = incremental_extract(spark, input_dir, out_dir)
         q2.awaitTermination(300)
 
-        streamed = spark.read.parquet(
-            os.path.join(out_dir, "stage_a", "extraction_stream")
-        )
-        mentions, _ = split_extraction(streamed)
+        mentions, _ = read_stage_a(spark, stream_paths(out_dir))
         result = (
             mentions.groupBy("entity_type")
             .agg(

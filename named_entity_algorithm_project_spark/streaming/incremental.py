@@ -3,94 +3,63 @@
 The reference is batch-only (SURVEY §2.9); its "cached re-entry" (EP2) is
 incremental view maintenance over immutable base results. The streaming
 analog: an append-only transcripts directory consumed with a file source,
-each micro-batch running the SAME Stage-A extraction transform and appending
-to the extraction table. Spark's checkpoint directory tracks consumed files
+each micro-batch running the SAME Stage-A extraction transform and
+committing it through the SAME protocol as the batch pipeline —
+:func:`io_tables.commit_buckets_batch`, with the micro-batch as one bucket
+(bucket = batch_id). Spark's checkpoint directory tracks consumed files
 (at-least-once batch delivery); end-to-end effectively-exactly-once comes
-from making each batch write IDEMPOTENT: extraction rows land in a
-``batch_id=K`` partition via dynamic partition overwrite (a retried batch
-replaces, never duplicates, its own partition) and the per-batch lineage
-marker — written LAST, exactly like the Stage-A lineage markers of
-io_tables.commit_buckets_batch — gates replay:
-a batch whose marker already exists is skipped entirely.
-Downstream stages (linking, components, triples)
-are corpus-global — they rerun over the accumulated extraction table per
-the batch pipeline, exactly like the reference reapplies downstream passes
-over cached extraction results.
+from the commit protocol: the data write is a dynamic partition overwrite
+of ``bucket=K`` (a retried batch replaces, never duplicates, its own
+partition), and a batch whose lineage marker already exists is skipped.
 
-``foreachBatch`` is used (not a plain writeStream sink) so each batch write
-also appends a lineage/metrics row — the streaming twin of
-io_tables.commit_buckets_batch.
+The streamed table therefore has the Stage-A layout under
+``<output_dir>/stream``: :func:`io_tables.read_stage_a_extracted` reads it
+lineage-gated, and the corpus-global downstream stages (linking,
+components, triples) rerun over it exactly as they do over batch Stage A —
+the way the reference reapplies downstream passes over cached extraction
+results.
 """
 
 from __future__ import annotations
 
 import os
-import time
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import TRANSCRIPTS_SCHEMA
-from ..functions.localrel import local_df
+from ..detector import DEFAULT_CONFIDENCE_THRESHOLD
+from ..io_tables import StageAPaths, commit_buckets_batch, dir_has_parquet
 from ..operators.extract import extract_combined
+
+
+def stream_paths(output_dir: str) -> StageAPaths:
+    """The Stage-A paths of a stream rooted at ``output_dir`` — a
+    subdirectory, so micro-batch buckets never collide with a batch run's
+    hash buckets under the same output directory."""
+    return StageAPaths(os.path.join(output_dir, "stream"))
 
 
 def process_batch(
     spark: SparkSession,
     batch_df: DataFrame,
     batch_id: int,
-    extraction_path: str,
-    lineage_path: str,
-    confidence_threshold: float = 0.5,
+    paths: StageAPaths,
+    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
 ) -> bool:
     """Idempotent per-batch commit (the foreachBatch body; exposed for
     direct replay testing). Returns False when the batch was already
     committed and skipped."""
-    from ..io_tables import dir_has_parquet
-
-    t0 = time.time()
-    marker_dir = os.path.join(lineage_path, f"batch_id={int(batch_id)}")
-    if dir_has_parquet(spark, marker_dir):
-        # replayed batch that already committed — idempotent skip
-        # (Hadoop FS check, so the protocol holds on HDFS/S3 paths too)
+    batch_id = int(batch_id)
+    if dir_has_parquet(spark, paths.lineage_bucket(batch_id)):
         return False
-    from pyspark.sql import Observation
-
-    obs = Observation(f"stream_batch_{batch_id}_{int(t0 * 1000)}")
-    extracted = (
-        extract_combined(batch_df, confidence_threshold=confidence_threshold)
-        .withColumn("batch_id", F.lit(int(batch_id)))
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n_turns"),
-            F.coalesce(F.sum(F.size("ex.mentions")), F.lit(0)).alias(
-                "n_mentions"
-            ),
-        )
-    )
-    # dynamic partition overwrite: a retried batch replaces ONLY its own
-    # batch_id partition — no duplicate rows on replay
-    (
-        extracted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(extraction_path)
-    )
-    stats = obs.get
-    lineage = local_df(
-        spark,
-        [
-            (
-                int(stats["n_turns"] or 0),
-                int(stats["n_mentions"] or 0),
-                int((time.time() - t0) * 1000),
-            )
-        ],
-        "n_turns long, n_mentions long, wall_ms long",
-    )
-    # marker write is the commit point (idempotent: overwrite)
-    lineage.coalesce(1).write.mode("overwrite").parquet(marker_dir)
+    extracted = extract_combined(
+        batch_df, confidence_threshold=confidence_threshold
+    ).withColumn("bucket", F.lit(batch_id))
+    run_id = uuid.uuid4().hex[:12]
+    commit_buckets_batch(spark, paths, [batch_id], extracted, run_id)
     return True
 
 
@@ -98,11 +67,12 @@ def incremental_extract(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    confidence_threshold: float = 0.5,
+    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     trigger_available_now: bool = True,
     max_files_per_trigger: Optional[int] = None,
 ):
-    """Stream new transcript parquet files through Stage-A extraction.
+    """Stream new transcript parquet files through Stage-A extraction into
+    :func:`stream_paths` of ``output_dir``.
 
     Returns the StreamingQuery. With ``trigger_available_now`` the query
     drains everything currently present and stops — the incremental-batch
@@ -112,20 +82,11 @@ def incremental_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-
-    extraction_path = os.path.join(output_dir, "stage_a", "extraction_stream")
-    lineage_path = os.path.join(output_dir, "lineage_stream")
+    paths = stream_paths(output_dir)
     checkpoint = os.path.join(output_dir, "_stream_checkpoint")
 
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(
-            spark,
-            batch_df,
-            batch_id,
-            extraction_path,
-            lineage_path,
-            confidence_threshold,
-        )
+        process_batch(spark, batch_df, batch_id, paths, confidence_threshold)
 
     writer = (
         stream.writeStream.foreachBatch(_process_batch)

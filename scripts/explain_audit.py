@@ -187,13 +187,8 @@ def main() -> None:
     out.extend(key_lines(plan_large))
     out.append("```")
 
-    nodes = (
-        tables.norms.select("norm")
-        .unionByName(tables.extra_nodes.select("norm"))
-        .distinct()
-    )
     components.LOCAL_MAX_NODES = 0  # the distributed rounds
-    comps = connected_components(nodes, tables.edges)
+    comps = connected_components(tables.nodes, tables.edges)
     cmap = pick_canonicals(comps, tables.norms)
     mc = apply_canonical_map(mentions, cmap)
     # the pipeline derives every triple branch from ONE narrow

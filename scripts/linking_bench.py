@@ -82,13 +82,8 @@ def bench_one(spark, n: int, capped: bool) -> dict:
     weights = tfidf_weights(df, len(norms)).localCheckpoint(eager=True)
     t_weights = time.time() - t0
     cap = max(int(0.05 * len(norms)), 100) if capped else None
-    df_counts = (
-        weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-        if capped
-        else None
-    )
     t0 = time.time()
-    pairs = similarity_pairs(weights, candidate_max_df=cap, df_counts=df_counts)
+    pairs = similarity_pairs(weights, candidate_max_df=cap)
     n_pairs = pairs.filter(F.col("score") >= 0.8).count()
     t_join = time.time() - t0
     return {

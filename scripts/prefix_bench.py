@@ -37,8 +37,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 from named_entity_algorithm_project_spark.datagen import (
     generate_transcripts,
     planted_alias_pairs,
@@ -103,23 +101,16 @@ def main():
     weights = tfidf_weights(profiles.select("norm"), n_norms).localCheckpoint(
         eager=True
     )
-    df_counts = (
-        weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-        if cap is not None
-        else None
-    )
 
     def scored(leg):
         if leg == "naive":
             return similarity_pairs(
-                weights, candidate_max_df=cap, df_counts=df_counts,
-                large_vocab=large_vocab,
+                weights, candidate_max_df=cap, large_vocab=large_vocab
             )
         return similarity_pairs_prefix(
             weights,
             gate_floor=adaptive_threshold_floor(base),
             candidate_max_df=cap,
-            df_counts=df_counts,
             large_vocab=large_vocab,
         )
 

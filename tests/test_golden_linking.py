@@ -57,12 +57,7 @@ def _canonical_map(spark, mention_rows, abbrev_rows=()):
         " abbreviations: array<struct<abbr: string, expansion: string>>>",
     )
     lt = build_linking_tables(extracted)
-    nodes = (
-        lt.norms.select("norm")
-        .unionByName(lt.extra_nodes.select("norm"))
-        .distinct()
-    )
-    comps = connected_components(nodes, lt.edges)
+    comps = connected_components(lt.nodes, lt.edges)
     return {
         r["norm"]: r["canonical"]
         for r in pick_canonicals(comps, lt.norms).collect()

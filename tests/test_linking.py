@@ -114,6 +114,26 @@ def test_spark_tfidf_matches_oracle(spark):
     assert pairs[("PCE", "pce")] == pytest.approx(1.0, abs=1e-9)
 
 
+def test_df_cap_alone_drops_pairs(spark):
+    """A df-cap is honored on its own: both similarity joins derive the
+    gram document frequencies from the weights. At cap 1 no shared gram
+    survives, so no pair can be scored."""
+    from named_entity_algorithm_project_spark.operators.linking import (
+        similarity_pairs_prefix,
+    )
+
+    norms = ["polymer blend", "polymer blends", "band gap", "bandgap", "PCE", "pce"]
+    df = spark.createDataFrame([(n,) for n in norms], "norm string")
+    weights = tfidf_weights(df, len(norms)).localCheckpoint(eager=True)
+    assert similarity_pairs(weights).count() > 0
+    assert similarity_pairs(weights, candidate_max_df=1).count() == 0
+    assert similarity_pairs_prefix(weights, gate_floor=0.5).count() > 0
+    assert (
+        similarity_pairs_prefix(weights, gate_floor=0.5, candidate_max_df=1).count()
+        == 0
+    )
+
+
 def test_base_threshold_formula():
     # app.py:3275-3280
     assert compute_base_threshold(0) == 0.80
@@ -208,7 +228,7 @@ def test_local_path_parity(spark, monkeypatch):
     """The driver-local small-vocab linking path (collected fused table +
     python gate cascade) must produce the identical LinkingTables as the
     distributed cascade: same (norm, freq, effective-types) rows, same
-    gated edge set, same extra nodes, same base threshold."""
+    gated edge set, same node universe, same base threshold."""
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
         generate_rows,
@@ -248,8 +268,8 @@ def test_local_path_parity(spark, monkeypatch):
         assert {(r[0], r[1]) for r in loc.edges.collect()} == {
             (r[0], r[1]) for r in dist.edges.collect()
         }, (n_convs, seed)
-        assert {r[0] for r in loc.extra_nodes.collect()} == {
-            r[0] for r in dist.extra_nodes.collect()
+        assert {r[0] for r in loc.nodes.collect()} == {
+            r[0] for r in dist.nodes.collect()
         }, (n_convs, seed)
 
 
@@ -306,14 +326,9 @@ def test_auto_blocking_recall(spark):
 
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
     weights = tfidf_weights(df, n).localCheckpoint(eager=True)
-    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
 
     def scores(capped):
-        pairs = similarity_pairs(
-            weights,
-            candidate_max_df=cap if capped else None,
-            df_counts=df_counts if capped else None,
-        )
+        pairs = similarity_pairs(weights, candidate_max_df=cap if capped else None)
         return {
             (r["a"], r["b"]): r["score"]
             for r in pairs.filter(F.col("score") >= 0.5).collect()
@@ -391,18 +406,13 @@ def test_prefix_filter_scores_match_naive(spark):
     floor = adaptive_threshold_floor(0.80)
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
     weights = tfidf_weights(df, n).localCheckpoint(eager=True)
-    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
     cap = max(int(0.05 * n), 1)
 
     def collect(frame):
         return {(r["a"], r["b"]): r["score"] for r in frame.collect()}
 
     naive_exact = collect(similarity_pairs(weights))
-    naive_capped = collect(
-        similarity_pairs(
-            weights, candidate_max_df=cap, df_counts=df_counts,
-        )
-    )
+    naive_capped = collect(similarity_pairs(weights, candidate_max_df=cap))
 
     # --- uncapped: identical above the floor --------------------------------
     pref = collect(
@@ -418,10 +428,7 @@ def test_prefix_filter_scores_match_naive(spark):
     # --- capped: exact scores, superset of naive capped ---------------------
     capped_above = {k for k, s in naive_capped.items() if s >= floor}
     exact_capped = collect(
-        similarity_pairs_prefix(
-            weights, gate_floor=floor, candidate_max_df=cap,
-            df_counts=df_counts,
-        )
+        similarity_pairs_prefix(weights, gate_floor=floor, candidate_max_df=cap)
     )
     assert capped_above <= set(exact_capped), (
         "the capped prefix join lost a naive-capped above-floor pair"
@@ -467,7 +474,6 @@ def test_prefix_filter_gated_edges_identical(spark):
     weights = tfidf_weights(profiles.select("norm"), n).localCheckpoint(
         eager=True
     )
-    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
     cap = max(int(0.05 * n), 1)
     floor = adaptive_threshold_floor(base)
 
@@ -482,17 +488,10 @@ def test_prefix_filter_gated_edges_identical(spark):
     assert gated(
         similarity_pairs_prefix(weights, gate_floor=floor)
     ) == naive
-    naive_capped = gated(
-        similarity_pairs(
-            weights, candidate_max_df=cap, df_counts=df_counts,
-        )
-    )
+    naive_capped = gated(similarity_pairs(weights, candidate_max_df=cap))
     assert naive_capped
     assert gated(
-        similarity_pairs_prefix(
-            weights, gate_floor=floor, candidate_max_df=cap,
-            df_counts=df_counts,
-        )
+        similarity_pairs_prefix(weights, gate_floor=floor, candidate_max_df=cap)
     ) >= naive_capped
 
 

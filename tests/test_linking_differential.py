@@ -3,7 +3,7 @@
 The pandas oracle (``oracle_vocabulary`` + ``link_vocabulary``), the
 driver-local linker and the distributed Column cascade must produce the
 same (norm, freq, effective types) rows, the same gated edge set and the
-same extra nodes. The generator datagen never produces the inputs that
+same component node set. The generator datagen never produces the inputs that
 separate them, so the vocabularies here are built directly, seeded, with:
 whitespace variants (edge and inner tabs/newlines, NBSP), empty,
 lower-case, padded and ``UNKNOWN`` types, protected pairs, abbreviation
@@ -101,22 +101,22 @@ def _oracle_tables(mentions, abbrevs):
         pd.DataFrame(abbrevs, columns=["abbr", "expansion"]),
     )
     base = compute_base_threshold(sum(freq.values()))
-    eff_types, edges, extra = link_vocabulary(freq, types, abbr_pairs, base)
+    eff_types, edges, nodes = link_vocabulary(freq, types, abbr_pairs, base)
     norms = {(n, freq[n], tuple(eff_types[n])) for n in freq}
-    return norms, edges, extra
+    return norms, edges, nodes
 
 
 def _spark_tables(extracted):
-    """Linking tables from a Stage-A frame, as (norms, edges, extra nodes)
+    """Linking tables from a Stage-A frame, as (norms, edges, nodes)
     sets, plus the base threshold and which of the three tables are
     JVM-local relations (all of them when the driver-local path ran, empty
     tables included)."""
     lt = linking.build_linking_tables(extracted)
     norms = {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()}
     edges = {(r["src"], r["dst"]) for r in lt.edges.collect()}
-    extra = {r["norm"] for r in lt.extra_nodes.collect()}
-    tables = (lt.norms, lt.edges, lt.extra_nodes)
-    return (norms, edges, extra), lt.base_threshold, [t.isLocal() for t in tables]
+    nodes = {r["norm"] for r in lt.nodes.collect()}
+    tables = (lt.norms, lt.edges, lt.nodes)
+    return (norms, edges, nodes), lt.base_threshold, [t.isLocal() for t in tables]
 
 
 def _frame(spark, mentions, abbrevs):
@@ -154,7 +154,7 @@ def test_oracle_local_distributed_agree(spark, monkeypatch):
         got_dist, base_dist, ran_dist = dist[seed]
         assert all(ran_local) and not ran_dist[0], seed
         for name, want, table_local, table_dist in zip(
-            ("norms", "edges", "extra nodes"), expected, got_local, got_dist
+            ("norms", "edges", "nodes"), expected, got_local, got_dist
         ):
             assert table_local == want, (seed, name, table_local ^ want)
             assert table_dist == want, (seed, name, table_dist ^ want)

@@ -23,7 +23,6 @@ ALLOWED = {
     "datagen.planted_alias_pairs": "the scripts' one recall definition",
     "datagen.planted_hard_pairs": "the scripts' one recall definition",
     "datagen.planted_pair_edge_stats": "the scripts' one recall definition",
-    "io_tables.read_stage_a": "perfbench/checks.py reads Stage A through it",
     "io_tables.read_lineage": "test_resume reads the lineage table through it",
     "oracle.run_oracle": "the reference test_parity compares against",
     "oracle.oracle_apply_canonical": "the reference test_parity compares against",

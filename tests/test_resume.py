@@ -1,8 +1,10 @@
-"""Checkpoint/resume (BASELINE.md resumability gate): kill after k committed
+"""Checkpoint/resume (BASELINE.md resumability gate): crash after k committed
 Stage-A buckets, restart, assert identical final tables and no duplicate
 lineage rows."""
 
-import pytest
+import glob
+import os
+import shutil
 
 from named_entity_algorithm_project_spark.datagen import (
     TRANSCRIPTS_SCHEMA,
@@ -29,11 +31,18 @@ def test_crash_then_resume_identical(spark, tmp_path):
     clean_triples = _triple_set(clean)
     assert clean_triples
 
+    # The state a crash during Stage A leaves: the one partitioned marker
+    # write commits each lineage/bucket=K directory whole or not at all, so
+    # buckets 2-4 have data but no marker — and bucket 2's data is torn.
     crash_dir = str(tmp_path / "crash")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, df, crash_dir, config=cfg, fail_after_buckets=2)
-
+    run_pipeline(spark, df, crash_dir, config=cfg, resume=False)
     paths = StageAPaths(crash_dir)
+    for bucket in (2, 3, 4):
+        shutil.rmtree(paths.lineage_bucket(bucket))
+    part = sorted(glob.glob(os.path.join(paths.extraction_bucket(2), "*.parquet")))[0]
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+
     partial = read_lineage(spark, paths)
     assert partial.count() == 2  # exactly the committed buckets
 

@@ -134,12 +134,7 @@ def test_semantic_end_to_end_canonical_parity(spark):
     linking = build_linking_tables(
         extract_combined(df), score_source="semantic_exact"
     )
-    nodes = (
-        linking.norms.select("norm")
-        .unionByName(linking.extra_nodes.select("norm"))
-        .distinct()
-    )
-    comps = connected_components(nodes, linking.edges)
+    comps = connected_components(linking.nodes, linking.edges)
     cmap = {
         r["norm"]: r["canonical"]
         for r in pick_canonicals(comps, linking.norms).collect()
