@@ -29,26 +29,12 @@ def token_jaccard_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_token_df: int | None = None,
 ) -> DataFrame:
-    """Exact token-set Jaccard >= threshold via inverted-index self-join.
-
-    ``max_token_df`` drops tokens present in more than that many docs from
-    the index (stopword-style hubs dominate the join at scale; dropping them
-    only loses pairs whose entire overlap is ubiquitous tokens — below any
-    useful threshold anyway)."""
+    """Exact token-set Jaccard >= threshold via inverted-index self-join."""
     toks = docs.select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(_tokens(text_col))).alias("tok"),
     )
-    if max_token_df is not None:
-        keep = (
-            toks.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_token_df)
-            .select("tok")
-        )
-        toks = toks.join(F.broadcast(keep), "tok")
     sizes = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     a = toks.select(F.col("doc").alias("doc_a"), "tok")
     b = toks.select(F.col("doc").alias("doc_b"), "tok")

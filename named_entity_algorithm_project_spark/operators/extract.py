@@ -135,9 +135,10 @@ def extract_combined(
     output schema: "deterministic" (the reference's DummyPipeline path) or
     "neural[:<model>]" (X2/X3 — 512-token chunking, per-worker model
     singleton, batched inference; ":stub" or no suffix uses the
-    deterministic fake in model-less environments — operators/neural.py)."""
+    deterministic fake in model-less environments — operators/neural.py).
+    Any other value raises ``ValueError``."""
     keys = [F.col(c) for c in key_cols]
-    if detector.startswith("neural"):
+    if detector == "neural" or detector.startswith("neural:"):
         from .neural import neural_extraction_udf
 
         model_name = detector.split(":", 1)[1] if ":" in detector else "stub"
@@ -147,8 +148,10 @@ def extract_combined(
             user_entities,
             added_tokens,
         )
-    else:
+    elif detector == "deterministic":
         udf = extraction_udf(confidence_threshold, user_entities)
+    else:
+        raise ValueError(f"unknown detector {detector!r}")
     return transcripts.select(
         *keys,
         udf(F.col(text_col)).alias("ex"),

@@ -56,15 +56,17 @@ Python and one Column definition in functions/textnorm.py):
     reference mutates type sets sequentially per link — we pin the
     order-free one-round union, gated on the original sets)
 
-Every uncapped tfidf vocabulary (up to ``AUTO_BLOCK_MIN_VOCAB`` norms)
-skips Spark: the driver collects the fused vocabulary table and runs the
-same cascade in Python (:func:`oracle.link_vocabulary`, shared with the
-pandas oracle), scored by :func:`tfidf_prefix_pairs`, the Python form of
-the prefix join. At that size the distributed cascade is ~40 Spark jobs
-whose cost is scheduling, not data: the Python scorer takes about half a
+Every vocabulary up to ``AUTO_BLOCK_MIN_VOCAB`` norms skips Spark,
+whichever scorer is selected: the driver collects the fused vocabulary
+table and runs the same cascade in Python (:func:`oracle.link_vocabulary`,
+shared with the pandas oracle), scored by :func:`tfidf_prefix_pairs` (the
+Python form of the prefix join) or :func:`embedding_pairs` (the dense
+embedding cosine). At that size the distributed cascade is ~40 Spark jobs
+whose cost is scheduling, not data: the TF-IDF scorer takes about half a
 second on 8k datagen norms, and a whole local linking run on 50k Zipf
-norms 18 s against the cascade's 39 s (BENCH.md). The distributed path
-runs for capped vocabularies and the semantic scorers.
+norms 18 s against the cascade's 39 s (BENCH.md). Above the tier the
+distributed path runs: the df-capped prefix join for TF-IDF, the 10x6
+banded LSH (:func:`semantic_pairs_lsh`) for the semantic scorer.
 """
 
 from __future__ import annotations
@@ -76,11 +78,13 @@ from dataclasses import dataclass
 from functools import partial
 from typing import Dict, List, Optional, Tuple
 
+import numpy as np
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
+from ..functions.embed import DEFAULT_EMBED_DIM, embed_batch, embedding_udf
 from ..functions.localrel import local_df
 from ..functions.ngrams import char_wb_ngrams_col, tfidf_vectors
 from ..functions.textnorm import (
@@ -109,9 +113,9 @@ MIN_PREFIX_RANK = 4
 #: module docstring and :func:`auto_df_cap`); (2) pins the
 #: vocabulary-sized join inputs (gram keep-lists, weights, per-norm stats,
 #: candidate pairs, effective-type profiles) to sort-merge with
-#: .hint("merge"); and (3), through TFIDF_LOCAL_MAX_VOCAB (a separate
-#: name only as the tests' seam), runs the distributed cascade instead of
-#: the driver-local one. The merge hints
+#: .hint("merge"); and (3), through LOCAL_MAX_VOCAB (a separate name only
+#: as the tests' seam), runs the distributed cascade instead of the
+#: driver-local one, for either scorer. The merge hints
 #: exist because at the 640k-norm tier the estimate-driven broadcast of
 #: these string-heavy tables OOM'd (hash relations inflate 5-10x their
 #: shuffle size — BENCH.md round-5 curve). At or below the tier the same
@@ -159,7 +163,7 @@ class LinkingTables:
     nodes: DataFrame  # norm: component universe (norms + abbrev/alias endpoints)
     base_threshold: float
     # observability: unique linkable norms and the EFFECTIVE df cap the
-    # similarity join ran with (None = exact / non-tfidf scorer)
+    # similarity join ran with (None = uncapped / semantic scorer)
     n_norms: int = 0
     candidate_max_df: Optional[int] = None
 
@@ -487,49 +491,54 @@ def tfidf_prefix_pairs(
     return out
 
 
-def _embeddings(norms: DataFrame, dim: int) -> DataFrame:
-    """(norm, v): the L2-normalized char-n-gram embedding of each norm."""
-    from ..functions.embed import embedding_udf
+def embedding_pairs(
+    norms: List[str], gate_floor: float
+) -> Dict[Tuple[str, str], float]:
+    """The driver-local linker's semantic scorer: the reference's dense
+    embedding cosine (app.py:3084-3110) over :func:`embed.embed_batch`,
+    returning ``{(a, b): score}`` (a < b) for the pairs scoring
+    >= ``gate_floor - 1e-9``, the contract of :func:`tfidf_prefix_pairs`.
 
-    return norms.select("norm", embedding_udf(dim)(F.col("norm")).alias("v"))
-
-
-def semantic_pairs_exact(
-    norms: DataFrame, dim: int = 64
-) -> DataFrame:
-    """L4 scoring, exact form: (a, b, score) = embedding cosine for EVERY
-    norm pair (the reference's dense matrix, app.py:3084-3110). O(N²) — the
-    parity baseline for small vocabularies; the scale path is
-    :func:`semantic_pairs_lsh`. Embeddings are L2-normalized, so the dot
-    product IS the cosine."""
-    emb = _embeddings(norms, dim)
-    left = emb.select(F.col("norm").alias("a"), F.col("v").alias("v_a"))
-    right = emb.select(F.col("norm").alias("b"), F.col("v").alias("v_b"))
-    return (
-        left.crossJoin(right)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", dot(F.col("v_a"), F.col("v_b")).alias("score"))
-    )
+    A row-blocked matmul over the upper triangle prefilters the pairs (one
+    more 1e-9 of margin, so BLAS rounding never drops one); each survivor's
+    score is then recomputed as a sequential float64 sum over the
+    dimensions, the summation order of :func:`similarity.dot`, so a pair
+    :func:`semantic_pairs_lsh` also emits carries the same bits."""
+    if not norms:
+        return {}
+    mat = embed_batch(norms)
+    n = len(norms)
+    t_eff = max(gate_floor - 1e-9, 0.0)
+    # ~8M similarities (64 MB) per block, whatever the vocabulary size
+    block = max(1, (1 << 23) // n)
+    out: Dict[Tuple[str, str], float] = {}
+    for i0 in range(0, n, block):
+        sims = mat[i0 : i0 + block] @ mat[i0:].T
+        ii, jj = np.nonzero(sims >= t_eff - 1e-9)
+        upper = jj > ii
+        i, j = ii[upper] + i0, jj[upper] + i0
+        scores = np.cumsum(mat[i] * mat[j], axis=1)[:, -1]
+        for a, b, score in zip(i.tolist(), j.tolist(), scores.tolist()):
+            if score >= t_eff:
+                x, y = norms[a], norms[b]
+                out[(x, y) if x < y else (y, x)] = score
+    return out
 
 
 def semantic_pairs_lsh(
-    norms: DataFrame,
-    dim: int = 64,
-    bands: int = 8,
-    band_bits: int = 4,
+    norms: DataFrame, bands: int = 10, band_bits: int = 6
 ) -> DataFrame:
-    """L4 scoring, scale form: banded random-hyperplane LSH blocks the
-    candidate space (a pair is a candidate when ANY band of sign-projection
-    bits matches exactly — the band join the simhash dedup uses), then
-    exact cosine re-ranks inside the blocks.
+    """The distributed semantic scorer: banded random-hyperplane LSH blocks
+    the candidate space (a pair is a candidate when ANY band of
+    sign-projection bits matches exactly), then exact cosine re-ranks
+    inside the blocks.
 
     Recall for a pair with cosine c: per-plane agreement p = 1 - acos(c)/π,
-    candidate prob = 1 - (1 - p^band_bits)^bands — ~1.0 at c=0.95 and
-    ~0.98 at c=0.80 with the 8x4 default (4x4 held only ~0.87 at the 0.80
-    gate threshold — borderline true merges silently dropped); raise
-    ``bands`` for more recall, ``band_bits`` for tighter blocks. Every
-    emitted score is exact, so this is a strict subset of
-    :func:`semantic_pairs_exact` (tested)."""
+    candidate prob = 1 - (1 - p^band_bits)^bands. The 10x6 default keeps
+    candidate volume bounded above the local tier and measured 0.96 recall
+    at the 0.80 gate at 40k and 100k norms (BENCH.md); raise ``bands`` for
+    more recall, ``band_bits`` for tighter blocks. Every emitted score is
+    exact, so the pairs are a subset of the dense cosine's (tested)."""
     n_planes = bands * band_bits
     if n_planes > 63:
         # the signature packs one bit per plane into a single signed long
@@ -537,8 +546,8 @@ def semantic_pairs_lsh(
             f"bands*band_bits={n_planes} exceeds the 63-bit signature; "
             "raise band_bits (tighter blocks) instead of bands past this"
         )
-    emb = _embeddings(norms, dim).withColumn(
-        "sig", _signature_udf(dim, n_planes)(F.col("v"))
+    emb = norms.select("norm", embedding_udf()(F.col("norm")).alias("v")).withColumn(
+        "sig", _signature_udf(DEFAULT_EMBED_DIM, n_planes)(F.col("v"))
     )
     return (
         band_join(band_rows(emb, "sig", bands, band_bits), "norm", "v")
@@ -547,24 +556,6 @@ def semantic_pairs_lsh(
         .groupBy("a", "b")
         .agg(F.max("score").alias("score"))
     )
-
-
-#: semantic_lsh AUTO tier boundary: below this vocabulary size the 8x4
-#: default blocks well (measured 0.985 candidate recall at the 0.80 gate,
-#: BENCH.md L4 table); past it the 4-bit bands block too weakly (candidate
-#: volume grows ~N²/2^bits) and the measured 10x6 tier takes over — the
-#: same n_norms-keyed AUTO the TF-IDF df-cap uses.
-SEMANTIC_AUTO_TIER_VOCAB = 40_000
-
-
-def semantic_lsh_tier(n_norms: int) -> Tuple[int, int]:
-    """(bands, band_bits) for a vocabulary size — the measured tiers from
-    scripts/semantic_bench.py (BENCH.md): 8x4 holds ~0.985 recall at the
-    0.80 gate below ~40k norms; 10x6 keeps candidate volume bounded above
-    it at ~0.97 recall."""
-    if n_norms <= SEMANTIC_AUTO_TIER_VOCAB:
-        return (8, 4)
-    return (10, 6)
 
 
 def domain_alias_edges(all_nodes: DataFrame) -> DataFrame:
@@ -682,20 +673,21 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
     )
 
 
-#: Vocabulary size up to which the tfidf linking cascade runs driver-side
-#: from the collected fused table: exactly the vocabularies the join runs
-#: UNCAPPED (see :func:`auto_df_cap`). There the Python prefix scorer
-#: (:func:`tfidf_prefix_pairs`) beats the ~40-job Spark cascade, whose
-#: cost is job scheduling at this size (BENCH.md, driver-local crossover).
-#: Above it, or with a non-tfidf scorer, the distributed path runs. Read at
-#: call time, so tests force the distributed path by setting it to 0.
-TFIDF_LOCAL_MAX_VOCAB = AUTO_BLOCK_MIN_VOCAB
+#: Vocabulary size up to which the linking cascade runs driver-side from
+#: the collected fused table, for both scorers: exactly the vocabularies
+#: the TF-IDF join runs UNCAPPED (see :func:`auto_df_cap`). There the
+#: Python scorers (:func:`tfidf_prefix_pairs`, :func:`embedding_pairs`)
+#: beat the ~40-job Spark cascade, whose cost is job scheduling at this
+#: size (BENCH.md, driver-local crossover). Above it the distributed path
+#: runs. Read at call time, so tests force the distributed path by setting
+#: it to 0.
+LOCAL_MAX_VOCAB = AUTO_BLOCK_MIN_VOCAB
 #: bounded-collect guard for the fused table: one row per (norm, type) and
 #: per abbreviation pair, 1.1-1.25 rows per norm on datagen vocabularies,
 #: so 4 rows per local-tier norm. It bounds what the collect holds on the
 #: driver when the vocabulary is too big for the local path: 200k rows,
 #: about 100 MB of Python Row objects (~500 bytes a row).
-LOCAL_FUSED_ROW_CAP = 4 * TFIDF_LOCAL_MAX_VOCAB
+LOCAL_FUSED_ROW_CAP = 4 * LOCAL_MAX_VOCAB
 
 
 def auto_df_cap(n_norms: int) -> Optional[int]:
@@ -705,14 +697,16 @@ def auto_df_cap(n_norms: int) -> Optional[int]:
     return min(max(int(AUTO_BLOCK_DF_FRAC * n_norms), 100), AUTO_BLOCK_DF_ABS)
 
 
-def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
+def _build_linking_tables_local(
+    spark, fused_rows, score_source: str
+) -> LinkingTables:
     """Driver-side LinkingTables from the COLLECTED fused (kind, k1, k2,
     cnt) table: the oracle's cascade (:func:`oracle.link_vocabulary`) over
-    the collected vocabulary, scored by :func:`tfidf_prefix_pairs`,
-    returned as local relations. Engages only uncapped with the tfidf
-    scorer; parity with the distributed path is
-    pinned by tests/test_linking.py::test_local_path_parity and the
-    adversarial differential test."""
+    the collected vocabulary, scored by :func:`tfidf_prefix_pairs` or
+    :func:`embedding_pairs`, returned as local relations. Parity with the
+    oracle and the distributed path is pinned by
+    tests/test_linking.py::test_local_path_parity and the adversarial
+    differential test."""
     from ..oracle import link_vocabulary
 
     freq: dict = defaultdict(int)
@@ -725,12 +719,13 @@ def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
         else:
             abbr_pairs.add((r["k1"], r["k2"]))
     base = compute_base_threshold(sum(freq.values()))
+    scorer = embedding_pairs if score_source == "semantic" else tfidf_prefix_pairs
     eff_types, edges, nodes = link_vocabulary(
         freq,
         types,
         abbr_pairs,
         base,
-        partial(tfidf_prefix_pairs, gate_floor=adaptive_threshold_floor(base)),
+        partial(scorer, gate_floor=adaptive_threshold_floor(base)),
     )
     return LinkingTables(
         norms=local_df(
@@ -742,7 +737,6 @@ def _build_linking_tables_local(spark, fused_rows) -> LinkingTables:
         nodes=local_df(spark, [(n,) for n in sorted(nodes)], "norm string"),
         base_threshold=base,
         n_norms=len(freq),
-        candidate_max_df=None,
     )
 
 
@@ -754,13 +748,11 @@ def build_linking_tables(
     struct<mentions, abbreviations> column, :func:`extract.extract_combined`).
 
     ``score_source`` selects the candidate scorer feeding the (shared) gate
-    cascade: "tfidf" (default — the reference's primary path),
-    "semantic_exact" (L4, embedding cosine over every pair — the reference's
-    use_semantic path, app.py:3084-3110; O(N²), small vocabularies), or
-    "semantic_lsh" (L4 at scale: LSH-blocked candidates, exact re-rank —
-    see :func:`semantic_pairs_lsh`). The bands×bits tier keys off the
-    measured vocabulary size (:func:`semantic_lsh_tier` — 8x4 below ~40k
-    norms, 10x6 above), exactly as the TF-IDF df-cap keys off ``n_norms``.
+    cascade: "tfidf" (default — the reference's primary path) or
+    "semantic" (L4, the embedding cosine — the reference's use_semantic
+    path, app.py:3084-3110); anything else raises ``ValueError``. Up to
+    ``LOCAL_MAX_VOCAB`` norms either scorer links exactly on the driver;
+    above it "semantic" runs the banded LSH of :func:`semantic_pairs_lsh`.
 
     The df-cap is :func:`auto_df_cap` of the measured vocabulary: exact (no
     n-gram dropped) up to ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else
@@ -770,6 +762,8 @@ def build_linking_tables(
     absolute bound is what actually caps per-gram fanout at web scale;
     scripts/linking_bench.py records the measured curves.
     """
+    if score_source not in ("tfidf", "semantic"):
+        raise ValueError(f"unknown score_source {score_source!r}")
     spark = extracted.sparkSession
     # ONE corpus pass for BOTH corpus-scale inputs: the norm profiles and
     # the distinct abbreviation pairs ride a single fused groupBy over one
@@ -783,15 +777,15 @@ def build_linking_tables(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    # --- driver-local path for UNCAPPED tfidf vocabularies -----------------
-    # (see TFIDF_LOCAL_MAX_VOCAB). One bounded collect of the fused table
-    # doubles as the size gate and the data.
-    if score_source == "tfidf" and TFIDF_LOCAL_MAX_VOCAB > 0:
+    # --- driver-local path up to the tier (see LOCAL_MAX_VOCAB) -----------
+    # One bounded collect of the fused table doubles as the size gate and
+    # the data.
+    if LOCAL_MAX_VOCAB > 0:
         sample = fused.limit(LOCAL_FUSED_ROW_CAP + 1).collect()
         if len(sample) <= LOCAL_FUSED_ROW_CAP:
             n_local = len({r["k1"] for r in sample if r["kind"] == "M"})
-            if n_local <= TFIDF_LOCAL_MAX_VOCAB:
-                return _build_linking_tables_local(spark, sample)
+            if n_local <= LOCAL_MAX_VOCAB:
+                return _build_linking_tables_local(spark, sample, score_source)
     # freq = mention count per norm, types = sorted set of
     # upper(normalize_entity(entity_type)) (app.py:3256-3263)
     profiles = (
@@ -900,13 +894,8 @@ def build_linking_tables(
     all_nodes_full = all_nodes.unionByName(alias_nodes).distinct()
 
     # --- similarity edges -----------------------------------------------------
-    if score_source == "semantic_exact":
-        scored = semantic_pairs_exact(profiles.select("norm"))
-    elif score_source == "semantic_lsh":
-        bands, band_bits = semantic_lsh_tier(n_norms)
-        scored = semantic_pairs_lsh(
-            profiles.select("norm"), bands=bands, band_bits=band_bits
-        )
+    if score_source == "semantic":
+        scored = semantic_pairs_lsh(profiles.select("norm"))
     else:
         # the df-cap keep-list and the prefix join both consume the weights
         # — materialize them once

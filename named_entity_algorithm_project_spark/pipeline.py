@@ -66,11 +66,9 @@ class PipelineConfig:
     # the neural tokenizer vocab before inference (app.py:3676-3686);
     # no-op for the deterministic detector
     extend_vocab: bool = False
-    # linking candidate scorer: "tfidf" (reference primary path),
-    # "semantic_exact" (L4 embedding cosine, O(N²) — small vocab), or
-    # "semantic_lsh" (L4 banded-LSH blocked — the scale path; its
-    # bands x bits tier keys off the vocabulary size,
-    # linking.semantic_lsh_tier)
+    # linking candidate scorer: "tfidf" (reference primary path) or
+    # "semantic" (L4 embedding cosine: exact on the driver up to
+    # linking.LOCAL_MAX_VOCAB norms, banded LSH above it)
     score_source: str = "tfidf"
 
 

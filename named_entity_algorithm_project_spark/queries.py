@@ -785,9 +785,11 @@ def q21_kg_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q31_kg_semantic_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4 semantic-embedding linking end-to-end (reference use_semantic
     path, app.py:3084-3110): stub-embedder cosine through the shared gate
-    cascade, components, canonical pick — alias-group size histogram.
+    cascade, components, canonical pick — alias-group size histogram. The
+    corpus is below the local tier, so the linker scores it exactly on the
+    driver (linking.embedding_pairs).
     Oracle: pandas reference with the numpy N² cosine matrix."""
-    return _kg_linking_group_sizes(spark, "semantic_exact")
+    return _kg_linking_group_sizes(spark, "semantic")
 
 
 @_register(

@@ -124,7 +124,7 @@ def main() -> None:
     mentions, _ = split_extraction(extracted)
     # the distributed path, as at vocabulary scale: checkpointed tables,
     # not driver-local relations
-    linking.TFIDF_LOCAL_MAX_VOCAB = 0
+    linking.LOCAL_MAX_VOCAB = 0
     tables = build_linking_tables(extracted)
     weights = tfidf_weights(tables.norms.select("norm"), 1000)
     scored = similarity_pairs(weights)

@@ -10,7 +10,7 @@ while the capped path stays near-linear.
 
 ``crossover`` mode: the driver-local linker (the Python prefix scorer)
 beside the distributed prefix-join cascade on the same vocabulary, the
-evidence for where TFIDF_LOCAL_MAX_VOCAB sits. Each vocabulary is linked
+evidence for where LOCAL_MAX_VOCAB sits. Each vocabulary is linked
 twice by build_linking_tables, once by default (local below the tier) and
 once with the local path switched off, and reports each leg's wall time,
 the peak RSS of the Python driver and of the JVM during the leg, and
@@ -112,8 +112,8 @@ def crossover_leg(spark, extracted, local: bool) -> dict:
     """One build_linking_tables run, timed until its tables exist (both
     paths return materialized tables), with the driver's peak RSS."""
     pids = {"py": os.getpid(), "jvm": spark.sparkContext._gateway.proc.pid}
-    saved = linking.TFIDF_LOCAL_MAX_VOCAB
-    linking.TFIDF_LOCAL_MAX_VOCAB = saved if local else 0
+    saved = linking.LOCAL_MAX_VOCAB
+    linking.LOCAL_MAX_VOCAB = saved if local else 0
     try:
         for pid in pids.values():
             _peak_rss_reset(pid)
@@ -121,7 +121,7 @@ def crossover_leg(spark, extracted, local: bool) -> dict:
         tables = linking.build_linking_tables(extracted)
         wall = time.time() - t0
     finally:
-        linking.TFIDF_LOCAL_MAX_VOCAB = saved
+        linking.LOCAL_MAX_VOCAB = saved
     edges = {(r["src"], r["dst"]) for r in tables.edges.collect()}
     return {
         "leg": "local" if local else "distributed",

@@ -76,7 +76,7 @@ def main():
                     "vocab_scale": scale,
                     "n_norms": linking.n_norms,
                     # which path ran: driver-local (uncapped tfidf up to
-                    # TFIDF_LOCAL_MAX_VOCAB norms) or distributed
+                    # LOCAL_MAX_VOCAB norms) or distributed
                     "linking_local": linking.edges.isLocal(),
                     "auto_df_cap": linking.candidate_max_df,
                     "n_edges": n_edges,

@@ -86,7 +86,7 @@ def main():
     )
     extracted = extract_combined(transcripts).localCheckpoint(eager=True)
     # the distributed path: the norm table the Spark cascade gates on
-    linking.TFIDF_LOCAL_MAX_VOCAB = 0
+    linking.LOCAL_MAX_VOCAB = 0
     tables = linking.build_linking_tables(extracted)
     profiles = tables.norms
     n_norms = tables.n_norms

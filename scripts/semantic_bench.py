@@ -2,12 +2,13 @@
 
 Two arms (mirrors scripts/linking_bench.py for the TF-IDF path):
 
-* RECALL — at vocab sizes where the numpy N² ground truth is cheap,
-  compare `semantic_pairs_lsh` (whose emitted scores are exact, so its
-  pair set is a subset of exact) against the blocked-matmul exact pair
-  set at the gate thresholds, for the old 4x4 and new 8x4 band defaults.
-* SCALE — LSH-only wall time at 40k/100k norms (the regime the exact
-  O(N²) path cannot touch), default bands.
+* RECALL — at vocab sizes where the N² ground truth is cheap, compare
+  `semantic_pairs_lsh` (whose emitted scores are exact, so its pair set is
+  a subset of exact) against the exact pair set of
+  `linking.embedding_pairs` (the driver-local semantic scorer) at the gate
+  thresholds, for the 4x4, 8x4 and 10x6 band dials.
+* SCALE — LSH-only wall time at 40k/100k norms, above the local tier,
+  at the default 10x6 dials.
 
 Run serially (no concurrent Spark jobs — BENCH.md JVM-bandwidth note).
 Usage: PYTHONPATH=/root/repo python scripts/semantic_bench.py
@@ -22,38 +23,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np
 from pyspark.sql import functions as F
 
-from named_entity_algorithm_project_spark.functions.embed import embed_batch
 from named_entity_algorithm_project_spark.operators.linking import (
+    embedding_pairs,
     semantic_pairs_lsh,
 )
 from named_entity_algorithm_project_spark.session import get_spark
 from scripts.linking_bench import build_vocab
 
-DIM = 64
-#: a score within EPS of a threshold counts as reaching it: the numpy
-#: matmul and Spark's per-pair dot sum in different orders
-EPS = 1e-12
-
-
-def exact_pairs(norms: list, threshold: float) -> dict:
-    """Blocked numpy matmul ground truth: {(a, b): cosine} for a<b with
-    cosine >= t - EPS."""
-    mat = embed_batch(norms, DIM)
-    n = len(norms)
-    out = {}
-    block = 4096
-    for i0 in range(0, n, block):
-        sims = mat[i0 : i0 + block] @ mat.T
-        ii, jj = np.nonzero(sims >= threshold - EPS)
-        for di, j in zip(ii, jj):
-            i = i0 + int(di)
-            j = int(j)
-            if i < j:
-                out[(norms[i], norms[j])] = float(sims[di, j])
-    return out
+#: a score within EPS of a threshold counts as reaching it: the package
+#: scorers' margin. Both scorers sum each pair in the same order, so a
+#: pair they share carries the same bits.
+EPS = 1e-9
 
 
 def at_least(scores: dict, t: float) -> set:
@@ -62,14 +44,14 @@ def at_least(scores: dict, t: float) -> set:
 
 def recall_arm(spark, n: int, thresholds=(0.80, 0.90)) -> list:
     norms = build_vocab(n, seed=5)
-    exact = exact_pairs(norms, min(thresholds))
+    exact = embedding_pairs(norms, min(thresholds))
     truth = {t: at_least(exact, t) for t in thresholds}
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
     rows = []
-    for bands, band_bits in ((4, 4), (8, 4)):
+    for bands, band_bits in ((4, 4), (8, 4), (10, 6)):
         t0 = time.time()
         got = (
-            semantic_pairs_lsh(df, dim=DIM, bands=bands, band_bits=band_bits)
+            semantic_pairs_lsh(df, bands=bands, band_bits=band_bits)
             .filter(F.col("score") >= min(thresholds) - EPS)
             .collect()
         )
@@ -95,21 +77,21 @@ def recall_arm(spark, n: int, thresholds=(0.80, 0.90)) -> list:
 
 
 def scale_arm(spark, n: int, bands: int = 10, band_bits: int = 6) -> dict:
-    """Above ~40k norms the 4-bit bands block too weakly (candidate volume
+    """At scale the 4-bit bands block too weakly (candidate volume
     ~N²·bands/2^band_bits·1/2); the scale tier must raise band_bits and
     compensate with bands. 10x6 = 60 planes (under the 63-bit signature
     cap) holds ~0.95 predicted candidate recall at cosine 0.80 at ~1/13th
     the 8x4 candidate volume.
 
     KG_SEMANTIC_SCALE_RECALL=1 additionally measures recall against the
-    blocked-numpy exact truth at the gate thresholds — ~130 GFLOP of BLAS
-    and a ~3 GiB block at 100k norms, so it is opt-in (the r6 run
-    validating the 10x6 tier at its design scale)."""
+    exact truth of `embedding_pairs` at the gate thresholds — ~130 GFLOP
+    of BLAS at 100k norms, so it is opt-in (the r6 run validating the 10x6
+    tier at its design scale)."""
     norms = build_vocab(n, seed=5)
     df = spark.createDataFrame([(x,) for x in norms], "norm string")
     t0 = time.time()
     got = (
-        semantic_pairs_lsh(df, dim=DIM, bands=bands, band_bits=band_bits)
+        semantic_pairs_lsh(df, bands=bands, band_bits=band_bits)
         .filter(F.col("score") >= 0.8 - EPS)
         .collect()
     )
@@ -122,7 +104,7 @@ def scale_arm(spark, n: int, bands: int = 10, band_bits: int = 6) -> dict:
         "pairs_ge_0.8": len(got),
     }
     if os.environ.get("KG_SEMANTIC_SCALE_RECALL"):
-        exact = exact_pairs(norms, 0.80)
+        exact = embedding_pairs(norms, 0.80)
         scores = {(r["a"], r["b"]): r["score"] for r in got}
         for t in (0.80, 0.90):
             truth = at_least(exact, t)

@@ -192,7 +192,7 @@ def _force_df_cap(monkeypatch, cap):
     test-sized vocabulary (both seams are read at call time)."""
     from named_entity_algorithm_project_spark.operators import linking
 
-    monkeypatch.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
+    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
     monkeypatch.setattr(linking, "auto_df_cap", lambda n_norms: cap)
 
 
@@ -248,7 +248,7 @@ def test_local_path_parity(spark, monkeypatch):
         extracted = extract_combined(df).localCheckpoint(eager=True)
 
         with monkeypatch.context() as m:
-            m.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
+            m.setattr(linking, "LOCAL_MAX_VOCAB", 0)
             dist = linking.build_linking_tables(extracted)
         loc = linking.build_linking_tables(extracted)
         assert loc.norms.isLocal() and not dist.norms.isLocal()

@@ -1,9 +1,13 @@
-"""Differential test of the three linking executors on adversarial input.
+"""Differential test of the three linking executors on adversarial input,
+for both scorers.
 
 The pandas oracle (``oracle_vocabulary`` + ``link_vocabulary``), the
 driver-local linker and the distributed Column cascade must produce the
 same (norm, freq, effective types) rows, the same gated edge set and the
-same component node set. The generator datagen never produces the inputs that
+same component node set. With the semantic scorer the distributed linker
+blocks candidates by LSH, so its edges are a subset of the oracle's dense
+cosine edges; norms and nodes still agree exactly. The generator datagen
+never produces the inputs that
 separate them, so the vocabularies here are built directly, seeded, with:
 whitespace variants (edge and inner tabs/newlines, NBSP), empty,
 lower-case, padded and ``UNKNOWN`` types, protected pairs, abbreviation
@@ -14,6 +18,7 @@ two-turn Stage-A frame.
 
 import random
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pandas as pd
 
@@ -27,9 +32,17 @@ from named_entity_algorithm_project_spark.functions.textnorm import (
 )
 from named_entity_algorithm_project_spark.operators import linking
 from named_entity_algorithm_project_spark.oracle import (
+    _semantic_cosine_pairs,
+    _tfidf_cosine_pairs,
     link_vocabulary,
     oracle_vocabulary,
 )
+
+#: the oracle's scorer for each ``score_source``
+ORACLE_SCORERS = {
+    "tfidf": _tfidf_cosine_pairs,
+    "semantic": _semantic_cosine_pairs,
+}
 
 N_VOCABULARIES = 24
 
@@ -95,23 +108,25 @@ def _vocabulary(seed):
     return mentions, abbrevs
 
 
-def _oracle_tables(mentions, abbrevs):
+def _oracle_tables(mentions, abbrevs, score_source):
     freq, types, abbr_pairs = oracle_vocabulary(
         pd.DataFrame(mentions, columns=["entity", "entity_type"]),
         pd.DataFrame(abbrevs, columns=["abbr", "expansion"]),
     )
     base = compute_base_threshold(sum(freq.values()))
-    eff_types, edges, nodes = link_vocabulary(freq, types, abbr_pairs, base)
+    eff_types, edges, nodes = link_vocabulary(
+        freq, types, abbr_pairs, base, ORACLE_SCORERS[score_source]
+    )
     norms = {(n, freq[n], tuple(eff_types[n])) for n in freq}
     return norms, edges, nodes
 
 
-def _spark_tables(extracted):
+def _spark_tables(extracted, score_source):
     """Linking tables from a Stage-A frame, as (norms, edges, nodes)
     sets, plus the base threshold and which of the three tables are
     JVM-local relations (all of them when the driver-local path ran, empty
     tables included)."""
-    lt = linking.build_linking_tables(extracted)
+    lt = linking.build_linking_tables(extracted, score_source)
     norms = {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()}
     edges = {(r["src"], r["dst"]) for r in lt.edges.collect()}
     nodes = {r["norm"] for r in lt.nodes.collect()}
@@ -133,23 +148,30 @@ def _frame(spark, mentions, abbrevs):
     )
 
 
-def test_oracle_local_distributed_agree(spark, monkeypatch):
+def _build_both_paths(spark, monkeypatch, score_source):
+    """(vocabularies, local builds, distributed builds) for one scorer."""
     for needle, alias in EXTRA_ALIASES.items():
         monkeypatch.setitem(DOMAIN_ALIAS_SUBSTRINGS, needle, alias)
     vocabularies = [_vocabulary(seed) for seed in range(N_VOCABULARIES)]
     inputs = [
         _frame(spark, mentions, abbrevs) for mentions, abbrevs in vocabularies
     ]
+    build = partial(_spark_tables, score_source=score_source)
     # a small linking run is mostly Spark job latency: building several
     # vocabularies at once overlaps it. Each map is drained before the
     # local-path gate is switched, so no build sees the other setting.
     with ThreadPoolExecutor(max_workers=4) as pool:
-        local = list(pool.map(_spark_tables, inputs, timeout=600))
-        monkeypatch.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
-        dist = list(pool.map(_spark_tables, inputs, timeout=600))
+        local = list(pool.map(build, inputs, timeout=600))
+        monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
+        dist = list(pool.map(build, inputs, timeout=600))
+    return vocabularies, local, dist
+
+
+def test_oracle_local_distributed_agree(spark, monkeypatch):
+    vocabularies, local, dist = _build_both_paths(spark, monkeypatch, "tfidf")
     n_edges = 0
     for seed, (mentions, abbrevs) in enumerate(vocabularies):
-        expected = _oracle_tables(mentions, abbrevs)
+        expected = _oracle_tables(mentions, abbrevs, "tfidf")
         got_local, base_local, ran_local = local[seed]
         got_dist, base_dist, ran_dist = dist[seed]
         assert all(ran_local) and not ran_dist[0], seed
@@ -164,3 +186,28 @@ def test_oracle_local_distributed_agree(spark, monkeypatch):
     # a zero-row table is a JVM-local relation too, not an RDD-backed one
     # that would fork Python workers when consumed
     assert local_df(spark, [], "src string, dst string").isLocal()
+
+
+def test_semantic_oracle_equals_local_and_bounds_distributed(spark, monkeypatch):
+    vocabularies, local, dist = _build_both_paths(spark, monkeypatch, "semantic")
+    n_scorer_diffs = 0
+    for seed, (mentions, abbrevs) in enumerate(vocabularies):
+        expected = _oracle_tables(mentions, abbrevs, "semantic")
+        want_norms, want_edges, want_nodes = expected
+        got_local, base_local, ran_local = local[seed]
+        (dist_norms, dist_edges, dist_nodes), base_dist, ran_dist = dist[seed]
+        assert all(ran_local) and not ran_dist[0], seed
+        for name, want, table_local in zip(
+            ("norms", "edges", "nodes"), expected, got_local
+        ):
+            assert table_local == want, (seed, name, table_local ^ want)
+        assert dist_norms == want_norms, (seed, dist_norms ^ want_norms)
+        assert dist_nodes == want_nodes, (seed, dist_nodes ^ want_nodes)
+        assert dist_edges <= want_edges, (seed, dist_edges - want_edges)
+        assert base_local == base_dist, seed
+        n_scorer_diffs += len(
+            want_edges ^ _oracle_tables(mentions, abbrevs, "tfidf")[1]
+        )
+    # the two scorers gate differently on these vocabularies, so this test
+    # checks something the TF-IDF one does not
+    assert n_scorer_diffs > 0

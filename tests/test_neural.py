@@ -713,3 +713,16 @@ def test_chunk_text_strips_leaked_special_token_offsets():
     assert leaky == clean
     for start, chunk in leaky:
         assert text[start:start + len(chunk)] == chunk
+
+
+@pytest.mark.parametrize("detector", ["spacy", "neuralstub", "Deterministic"])
+def test_unknown_detector_raises(spark, detector):
+    from named_entity_algorithm_project_spark.operators.extract import (
+        extract_combined,
+    )
+
+    df = spark.createDataFrame(
+        [("c0", 0, "PCE of P3HT")], "conv_id string, turn_idx int, text string"
+    )
+    with pytest.raises(ValueError, match="detector"):
+        extract_combined(df, detector=detector)

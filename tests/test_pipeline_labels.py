@@ -37,7 +37,7 @@ def test_pool_thread_jobs_carry_phase_label(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(type(df), "localCheckpoint", checkpoint)
     monkeypatch.setattr(pipeline, "write_table", write_table)
     # the distributed linker is the one that checkpoints from a pool
-    monkeypatch.setattr(linking, "TFIDF_LOCAL_MAX_VOCAB", 0)
+    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
     pipeline.run_pipeline(
         spark,
         df,

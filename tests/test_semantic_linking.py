@@ -1,6 +1,9 @@
-"""L4 semantic-embedding linking: stub embedder, exact/LSH scoring parity
-vs the numpy N² oracle, and end-to-end canonical-map parity through the
-shared gate cascade (reference use_semantic path, app.py:3084-3110)."""
+"""L4 semantic-embedding linking: stub embedder, driver-local and LSH
+scoring parity vs the numpy N² oracle, and end-to-end canonical-map parity
+through the shared gate cascade (reference use_semantic path,
+app.py:3084-3110)."""
+
+import inspect
 
 import numpy as np
 import pandas as pd
@@ -12,7 +15,7 @@ from named_entity_algorithm_project_spark.functions.embed import (
     embed_text,
 )
 from named_entity_algorithm_project_spark.operators.linking import (
-    semantic_pairs_exact,
+    embedding_pairs,
     semantic_pairs_lsh,
 )
 
@@ -61,37 +64,44 @@ def test_gram_memo_identical_to_direct_hashing():
     assert np.array_equal(E.embed_text("ZnO", dim=32), direct("ZnO", dim=32))
 
 
-def test_semantic_exact_matches_numpy_oracle(spark):
+def _dense_cosines():
+    """{(a, b): cosine} for every pair of NORMS, from the oracle's matrix."""
     mat = cosine_matrix(NORMS)
-    expected = {
+    return {
         tuple(sorted((NORMS[i], NORMS[j]))): mat[i, j]
         for i in range(len(NORMS))
         for j in range(i + 1, len(NORMS))
     }
-    df = spark.createDataFrame([(x,) for x in NORMS], "norm string")
-    got = {
-        (r["a"], r["b"]): r["score"]
-        for r in semantic_pairs_exact(df).collect()
-    }
-    assert set(got) == set(expected)
-    for k, v in expected.items():
-        assert got[k] == pytest.approx(v, abs=1e-12), k
+
+
+def test_semantic_exact_matches_numpy_oracle():
+    expected = _dense_cosines()
+    for floor in (0.5, 0.82):
+        got = embedding_pairs(NORMS, gate_floor=floor)
+        assert set(got) == {k for k, v in expected.items() if v >= floor - 1e-9}
+        for k, v in got.items():
+            assert v == pytest.approx(expected[k], abs=1e-12), k
+    assert embedding_pairs(NORMS, gate_floor=0.82)  # the fixture has hot pairs
+    assert embedding_pairs([], gate_floor=0.82) == {}
 
 
 def test_semantic_lsh_subset_with_exact_scores_and_recall(spark):
     df = spark.createDataFrame([(x,) for x in NORMS], "norm string")
-    exact = {
-        (r["a"], r["b"]): r["score"]
-        for r in semantic_pairs_exact(df).collect()
-    }
+    exact = _dense_cosines()
     lsh = {
         (r["a"], r["b"]): r["score"]
-        for r in semantic_pairs_lsh(df).collect()
+        for r in semantic_pairs_lsh(df, bands=8, band_bits=4).collect()
     }
     # candidates are a subset; every emitted score is the exact cosine
     assert set(lsh) <= set(exact)
     for k, v in lsh.items():
         assert v == pytest.approx(exact[k], abs=1e-12)
+    # the driver-local scorer sums in the same order as the Spark dot, so a
+    # pair both emit carries the same bits
+    local = embedding_pairs(NORMS, gate_floor=0.5)
+    shared = set(lsh) & set(local)
+    assert shared
+    assert all(lsh[k] == local[k] for k in shared)
     # banded-LSH recall on high-cosine pairs (deterministic planes: this is
     # a fixed fact of the seeded fixture, not a flaky sample)
     hot = {k for k, v in exact.items() if v >= 0.9}
@@ -100,9 +110,11 @@ def test_semantic_lsh_subset_with_exact_scores_and_recall(spark):
     assert recall >= 0.8, f"banded-LSH recall {recall:.2f} on cosine>=0.9"
 
 
-def test_semantic_end_to_end_canonical_parity(spark):
-    """Full Stage B+C with score_source=semantic_exact vs the pandas oracle
-    running the SAME gates over the numpy N² cosine matrix."""
+def test_semantic_end_to_end_canonical_parity(spark, monkeypatch):
+    """Full Stage B+C with score_source=semantic vs the pandas oracle
+    running the SAME gates over the numpy N² cosine matrix. The vocabulary
+    is below the local tier, so the driver-local linker runs; the forced
+    distributed (LSH) linker finds a subset of its edges."""
     from named_entity_algorithm_project_spark import oracle as okg
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
@@ -117,9 +129,7 @@ def test_semantic_end_to_end_canonical_parity(spark):
     from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
     )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        build_linking_tables,
-    )
+    from named_entity_algorithm_project_spark.operators import linking
 
     rows = generate_rows(n_convs=80, seed=31)
     pdf = pd.DataFrame(
@@ -131,13 +141,13 @@ def test_semantic_end_to_end_canonical_parity(spark):
     )
 
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    linking = build_linking_tables(
-        extract_combined(df), score_source="semantic_exact"
-    )
-    comps = connected_components(linking.nodes, linking.edges)
+    extracted = extract_combined(df).localCheckpoint(eager=True)
+    tables = linking.build_linking_tables(extracted, score_source="semantic")
+    assert all(t.isLocal() for t in (tables.norms, tables.edges, tables.nodes))
+    comps = connected_components(tables.nodes, tables.edges)
     cmap = {
         r["norm"]: r["canonical"]
-        for r in pick_canonicals(comps, linking.norms).collect()
+        for r in pick_canonicals(comps, tables.norms).collect()
     }
     diffs = {
         k: (cmap.get(k), oracle_map.get(k))
@@ -147,6 +157,13 @@ def test_semantic_end_to_end_canonical_parity(spark):
     assert not diffs, f"semantic canonical-map mismatches: {diffs}"
     # the semantic path must actually merge something on this corpus
     assert any(k != v for k, v in cmap.items())
+
+    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
+    dist = linking.build_linking_tables(extracted, score_source="semantic")
+    assert not dist.edges.isLocal()
+    edges = {(r["src"], r["dst"]) for r in tables.edges.collect()}
+    dist_edges = {(r["src"], r["dst"]) for r in dist.edges.collect()}
+    assert dist_edges <= edges, dist_edges - edges
 
 
 def test_pipeline_accepts_semantic_score_source(spark, tmp_path):
@@ -165,7 +182,7 @@ def test_pipeline_accepts_semantic_score_source(spark, tmp_path):
         spark,
         df,
         str(tmp_path / "sem"),
-        config=PipelineConfig(n_buckets=2, score_source="semantic_lsh"),
+        config=PipelineConfig(n_buckets=2, score_source="semantic"),
         resume=False,
     )
     assert res.triples.count() > 0
@@ -201,24 +218,14 @@ def test_band_knobs_thread_through_and_cap_enforced(spark):
         semantic_pairs_lsh(df, bands=16, band_bits=4)  # 64 planes
 
 
-def test_semantic_lsh_auto_tier_selection(spark, monkeypatch):
-    """Bands×bits AUTO keys off the vocabulary size exactly like the
-    TF-IDF df-cap AUTO: 8x4 at/below the boundary, 10x6 above."""
-    from named_entity_algorithm_project_spark.operators import linking
-
-    # the tier function flips exactly at the boundary
-    assert linking.semantic_lsh_tier(linking.SEMANTIC_AUTO_TIER_VOCAB) == (8, 4)
-    assert linking.semantic_lsh_tier(linking.SEMANTIC_AUTO_TIER_VOCAB + 1) == (
-        10,
-        6,
-    )
-
-    # build_linking_tables resolves None dials through the tier (spied via
-    # a recording wrapper; boundary shrunk so a test-sized corpus crosses it)
+def test_distributed_semantic_build_runs_lsh_at_10x6(spark, monkeypatch):
+    """Above the local tier the semantic scorer is the banded LSH at the
+    measured 10x6 scale tier, taken from the function's defaults."""
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
         generate_rows,
     )
+    from named_entity_algorithm_project_spark.operators import linking
     from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
     )
@@ -230,15 +237,34 @@ def test_semantic_lsh_auto_tier_selection(spark, monkeypatch):
     calls = []
     real = linking.semantic_pairs_lsh
 
-    def spy(norms, dim=64, bands=8, band_bits=4):
-        calls.append((bands, band_bits))
-        return real(norms, dim=dim, bands=bands, band_bits=band_bits)
+    def spy(*args, **kwargs):
+        bound = inspect.signature(real).bind(*args, **kwargs)
+        bound.apply_defaults()
+        calls.append((bound.arguments["bands"], bound.arguments["band_bits"]))
+        return real(*args, **kwargs)
 
     monkeypatch.setattr(linking, "semantic_pairs_lsh", spy)
+    local = linking.build_linking_tables(extracted, score_source="semantic")
+    assert calls == [] and local.edges.isLocal()
 
-    linking.build_linking_tables(extracted, score_source="semantic_lsh")
-    assert calls[-1] == (8, 4)  # small vocab -> base tier
+    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
+    linking.build_linking_tables(extracted, score_source="semantic")
+    assert calls == [(10, 6)]
 
-    monkeypatch.setattr(linking, "SEMANTIC_AUTO_TIER_VOCAB", 1)
-    linking.build_linking_tables(extracted, score_source="semantic_lsh")
-    assert calls[-1] == (10, 6)  # past the boundary -> scale tier
+
+@pytest.mark.parametrize(
+    "score_source", ["semantic_exact", "semantic_lsh", "bm25"]
+)
+def test_unknown_score_source_raises(spark, score_source):
+    from named_entity_algorithm_project_spark.operators.linking import (
+        build_linking_tables,
+    )
+
+    # a valid (empty) Stage-A frame, so only the mode can make it raise
+    df = spark.createDataFrame(
+        [],
+        "ex struct<mentions: array<struct<entity: string, entity_type: string>>,"
+        " abbreviations: array<struct<abbr: string, expansion: string>>>",
+    )
+    with pytest.raises(ValueError, match="score_source"):
+        build_linking_tables(df, score_source=score_source)
