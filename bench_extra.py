@@ -1,8 +1,10 @@
 """Round-6 optimization profiling harness (guide §1.4): NOT the driver bench.
 
 Modes (first CLI arg):
-    kg        run ONLY the KG pipeline with SPARK_GRAFT_STAGE_TIMING stage
-              breakdown (same params as bench.py)
+    kg        run ONLY the KG pipeline (same params as bench.py); per-phase
+              time comes from `kgjobs` or `perfbench/run.py --trace 1`
+    kgjobs    the KG pipeline with the UI on: every Spark job's wall time and
+              `kg:<phase>` description, plus the gaps between jobs
     queries   time each headline query with the noop sink, N repeats
     explain   dump .explain("formatted") for the headline queries to
               plans/r06/<query>_<tag>.txt  (second arg = tag, default "before")
@@ -53,7 +55,6 @@ def _spark():
 
 
 def run_kg() -> None:
-    os.environ["SPARK_GRAFT_STAGE_TIMING"] = "1"
     from named_entity_algorithm_project_spark.datagen import generate_transcripts
     from named_entity_algorithm_project_spark.pipeline import (
         PipelineConfig,

@@ -48,9 +48,10 @@ _GRAM_CACHE: dict = {}
 _GRAM_CACHE_MAX = 1 << 20
 
 
-def embed_text(text: str, dim: int = DEFAULT_EMBED_DIM) -> np.ndarray:
+def embed_text(text: str) -> np.ndarray:
     """L2-normalized hashed n-gram vector for one string (zero vector for
-    empty/gram-less input)."""
+    empty/gram-less input). ``DEFAULT_EMBED_DIM`` is read at call time."""
+    dim = DEFAULT_EMBED_DIM
     cache = _GRAM_CACHE.get(dim)
     if cache is None:
         cache = _GRAM_CACHE.setdefault(dim, {})
@@ -67,14 +68,12 @@ def embed_text(text: str, dim: int = DEFAULT_EMBED_DIM) -> np.ndarray:
     return v / norm if norm > 0 else v
 
 
-def embed_batch(
-    texts: Sequence[str], dim: int = DEFAULT_EMBED_DIM
-) -> np.ndarray:
+def embed_batch(texts: Sequence[str]) -> np.ndarray:
     """(n, dim) matrix of embeddings — the model-swap point."""
-    return np.stack([embed_text(t, dim) for t in texts])
+    return np.stack([embed_text(t) for t in texts])
 
 
-def embedding_udf(dim: int = DEFAULT_EMBED_DIM):
+def embedding_udf():
     """Arrow-batched pandas UDF: string column -> array<double> embedding."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -86,14 +85,14 @@ def embedding_udf(dim: int = DEFAULT_EMBED_DIM):
     def _embed(texts: pd.Series) -> pd.Series:
         if len(texts) == 0:
             return pd.Series([], dtype="object")
-        mat = embed_batch([t or "" for t in texts], dim)
+        mat = embed_batch([t or "" for t in texts])
         return pd.Series(list(mat))
 
     return _embed
 
 
-def cosine_matrix(texts: List[str], dim: int = DEFAULT_EMBED_DIM) -> np.ndarray:
+def cosine_matrix(texts: List[str]) -> np.ndarray:
     """N² numpy cosine over stub embeddings — the parity oracle's path
     (mirrors the reference's dense pytorch_cos_sim matrix, app.py:3098)."""
-    mat = embed_batch(texts, dim)
+    mat = embed_batch(texts)
     return mat @ mat.T

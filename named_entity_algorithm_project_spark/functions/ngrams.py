@@ -24,10 +24,10 @@ MIN_N = 3
 MAX_N = 5
 
 
-def char_wb_ngrams(text: str, min_n: int = MIN_N, max_n: int = MAX_N) -> List[str]:
+def char_wb_ngrams(text: str) -> List[str]:
     """sklearn ``_char_wb_ngrams``: pad each whitespace-token with one space
     per side, emit all char n-grams inside the padded token; a token shorter
-    than ``min_n`` (padded) is emitted once, truncated."""
+    than ``MIN_N`` (padded) is emitted once, truncated."""
     if not text:
         return []
     text = _WS.sub(" ", text.lower())
@@ -35,7 +35,7 @@ def char_wb_ngrams(text: str, min_n: int = MIN_N, max_n: int = MAX_N) -> List[st
     for w in text.split():
         w = " " + w + " "
         w_len = len(w)
-        for n in range(min_n, max_n + 1):
+        for n in range(MIN_N, MAX_N + 1):
             offset = 0
             ngrams.append(w[offset : offset + n])
             while offset + n < w_len:
@@ -46,7 +46,7 @@ def char_wb_ngrams(text: str, min_n: int = MIN_N, max_n: int = MAX_N) -> List[st
     return ngrams
 
 
-def char_wb_ngrams_col(col, min_n: int = MIN_N, max_n: int = MAX_N):
+def char_wb_ngrams_col(col):
     """Column form of :func:`char_wb_ngrams` — pure JVM higher-order
     functions, no Python boundary (guide §4.1: the pandas-UDF version made
     every consuming task block on a Python worker round-trip, and the
@@ -58,9 +58,9 @@ def char_wb_ngrams_col(col, min_n: int = MIN_N, max_n: int = MAX_N):
       \\s match the same Unicode whitespace Python's str-regex \\s does);
     * whitespace-split, dropping empties (== str.split());
     * per padded token " w " of length L: emit all n-grams for each
-      n in [min_n, max_n] with n <= L — for n == L that is the single
+      n in [MIN_N, MAX_N] with n <= L — for n == L that is the single
       truncated emission, and sklearn's break-on-short-token rule is
-      exactly the n <= L filter (every n' > L >= min_n is skipped).
+      exactly the n <= L filter (every n' > L >= MIN_N is skipped).
     NULL input yields NULL (explode drops it, same as the UDF's [])."""
     import pyspark.sql.functions as F
 
@@ -73,7 +73,7 @@ def char_wb_ngrams_col(col, min_n: int = MIN_N, max_n: int = MAX_N):
         return F.flatten(
             F.transform(
                 F.filter(
-                    F.array(*[F.lit(n) for n in range(min_n, max_n + 1)]),
+                    F.array(*[F.lit(n) for n in range(MIN_N, MAX_N + 1)]),
                     lambda n: n <= length,
                 ),
                 lambda n: F.transform(
@@ -86,9 +86,9 @@ def char_wb_ngrams_col(col, min_n: int = MIN_N, max_n: int = MAX_N):
     return F.flatten(F.transform(words, word_grams))
 
 
-def tf_counts(text: str, min_n: int = MIN_N, max_n: int = MAX_N) -> Dict[str, int]:
+def tf_counts(text: str) -> Dict[str, int]:
     counts: Dict[str, int] = {}
-    for gram in char_wb_ngrams(text, min_n, max_n):
+    for gram in char_wb_ngrams(text):
         counts[gram] = counts.get(gram, 0) + 1
     return counts
 

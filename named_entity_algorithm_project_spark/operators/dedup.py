@@ -15,8 +15,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _tokens(text_col: str) -> Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc, tok): each document's distinct lowercase whitespace tokens."""
+    return docs.select(
+        F.col("doc_id").alias("doc"),
+        F.explode(
+            F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+        ).alias("tok"),
+    )
 
 
 def fingerprint(text: Column) -> Column:
@@ -24,17 +30,10 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
 
 
-def token_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact token-set Jaccard >= threshold via inverted-index self-join."""
-    toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(_tokens(text_col))).alias("tok"),
-    )
+def token_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Exact token-set Jaccard >= threshold via inverted-index self-join
+    over ``docs(doc_id, text)``."""
+    toks = _doc_tokens(docs)
     sizes = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     a = toks.select(F.col("doc").alias("doc_a"), "tok")
     b = toks.select(F.col("doc").alias("doc_b"), "tok")
@@ -55,35 +54,21 @@ def token_jaccard_pairs(
     )
 
 
-def simhash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """SimHash: per-token hash, sum signed bit contributions, sign ->
-    fingerprint bit. Entirely JVM-side (explode + bit ops + groupBy).
+def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
+    """SimHash over ``docs(doc_id, text)``: per-token hash, sum signed bit
+    contributions, sign -> fingerprint bit. Entirely JVM-side (explode +
+    bit ops + groupBy).
 
-    ``hash_family="xxhash64"`` (default) is the fast single-function path.
-    ``hash_family="md5"`` derives bit 4j+k from hex digit j of md5(token)
-    — like the minhash family, md5 hex is portable across engines, so a
-    DuckDB oracle can replicate the fingerprint digit-for-digit (bits<=64;
-    16 md5 hex digits cover it)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(_tokens(text_col))).alias("tok"),
-    )
-    if hash_family == "md5":
-        hx = F.md5("tok")
-        digits = [
-            F.conv(F.substring(hx, j + 1, 1), 16, 10).cast("int")
-            for j in range((bits + 3) // 4)
-        ]
-        bit = lambda i: F.shiftright(digits[i // 4], i % 4).bitwiseAND(F.lit(1))  # noqa: E731
-    else:
-        h = F.xxhash64("tok")
-        bit = lambda i: F.shiftright(h, i).bitwiseAND(F.lit(1))  # noqa: E731
+    Bit 4j+k comes from hex digit j of md5(token): md5 hex is portable
+    across engines, so a DuckDB oracle can replicate the fingerprint
+    digit-for-digit (bits<=64; 16 md5 hex digits cover it)."""
+    toks = _doc_tokens(docs)
+    hx = F.md5("tok")
+    digits = [
+        F.conv(F.substring(hx, j + 1, 1), 16, 10).cast("int")
+        for j in range((bits + 3) // 4)
+    ]
+    bit = lambda i: F.shiftright(digits[i // 4], i % 4).bitwiseAND(F.lit(1))  # noqa: E731
     per_bit = toks.select(
         "doc",
         *[

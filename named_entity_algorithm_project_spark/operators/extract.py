@@ -60,6 +60,9 @@ EXTRACTION_STRUCT = T.StructType(
 )
 
 
+#: the per-turn key of every Stage-A frame
+KEY_COLS = ("conv_id", "turn_idx")
+
 TRANSCRIPT_KEY_FIELDS = (
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("turn_idx", T.IntegerType(), False),
@@ -70,6 +73,32 @@ TRANSCRIPT_KEY_FIELDS = (
 EXTRACTION_TABLE_SCHEMA = T.StructType(
     list(TRANSCRIPT_KEY_FIELDS) + [T.StructField("ex", EXTRACTION_STRUCT, True)]
 )
+
+
+def pack_results(results) -> pd.DataFrame:
+    """ExtractionResults -> the ``EXTRACTION_STRUCT`` frame both Stage-A
+    UDFs return: one mention tuple per mention (field order and types of
+    ``MENTION_STRUCT``) and the abbreviation pairs, per turn."""
+    mentions_out = []
+    abbrevs_out = []
+    for result in results:
+        mentions_out.append(
+            [
+                (
+                    m.entity,
+                    m.entity_norm,
+                    m.entity_type,
+                    float(m.confidence),
+                    m.start,
+                    m.end,
+                    m.canonical_acr,
+                    bool(m.is_user_entity),
+                )
+                for m in result.mentions
+            ]
+        )
+        abbrevs_out.append(list(result.abbreviations))
+    return pd.DataFrame({"mentions": mentions_out, "abbreviations": abbrevs_out})
 
 
 def extraction_udf(
@@ -86,32 +115,13 @@ def extraction_udf(
         # compiled once per Arrow batch; cheap relative to batch size, and
         # safe (no cross-batch state)
         patterns = compile_user_patterns(user_entities) if user_entities else None
-        mentions_out = []
-        abbrevs_out = []
-        for text in texts:
-            result = extract_turn(
+        return pack_results(
+            extract_turn(
                 text,
                 confidence_threshold=confidence_threshold,
                 user_patterns=patterns,
             )
-            mentions_out.append(
-                [
-                    (
-                        m.entity,
-                        m.entity_norm,
-                        m.entity_type,
-                        float(m.confidence),
-                        m.start,
-                        m.end,
-                        m.canonical_acr,
-                        bool(m.is_user_entity),
-                    )
-                    for m in result.mentions
-                ]
-            )
-            abbrevs_out.append(list(result.abbreviations))
-        return pd.DataFrame(
-            {"mentions": mentions_out, "abbreviations": abbrevs_out}
+            for text in texts
         )
 
     return _extract
@@ -119,14 +129,14 @@ def extraction_udf(
 
 def extract_combined(
     transcripts: DataFrame,
-    text_col: str = "text",
-    key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
+    key_cols: Tuple[str, ...] = KEY_COLS,
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
     user_entities: Optional[List[Tuple[str, str]]] = None,
     detector: str = "deterministic",
     added_tokens: Optional[List[str]] = None,
 ) -> DataFrame:
-    """One row per turn: key_cols + ``ex`` struct<mentions, abbreviations>.
+    """One row per turn: key_cols + ``ex`` struct<mentions, abbreviations>
+    extracted from the ``text`` column.
     This is the Stage-A checkpoint payload — writing it verbatim means the
     detector UDF runs exactly once per turn, ever; mentions/abbrevs explode
     lazily from the stored arrays on read.
@@ -154,36 +164,30 @@ def extract_combined(
         raise ValueError(f"unknown detector {detector!r}")
     return transcripts.select(
         *keys,
-        udf(F.col(text_col)).alias("ex"),
+        udf(F.col("text")).alias("ex"),
     )
 
 
-def split_extraction(
-    extracted: DataFrame, key_cols: Tuple[str, ...] = ("conv_id", "turn_idx")
-) -> Tuple[DataFrame, DataFrame]:
-    """(mentions, abbreviation_pairs) views over a combined extraction frame."""
+def split_extraction(extracted: DataFrame) -> Tuple[DataFrame, DataFrame]:
+    """(mentions, abbreviation_pairs) views over a combined extraction
+    frame, keyed by ``KEY_COLS``."""
     mentions = extracted.select(
-        *[F.col(c) for c in key_cols],
+        *[F.col(c) for c in KEY_COLS],
         F.explode(F.col("ex.mentions")).alias("m"),
-    ).select(*key_cols, "m.*")
+    ).select(*KEY_COLS, "m.*")
 
     abbrevs = (
         extracted.select(
-            *[F.col(c) for c in key_cols],
+            *[F.col(c) for c in KEY_COLS],
             F.explode(F.col("ex.abbreviations")).alias("a"),
         )
-        .select(*key_cols, "a.*")
+        .select(*KEY_COLS, "a.*")
     )
     return mentions, abbrevs
 
 
 def extract_mentions(
-    transcripts: DataFrame,
-    text_col: str = "text",
-    key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
-    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
-    user_entities: Optional[List[Tuple[str, str]]] = None,
-    detector: str = "deterministic",
+    transcripts: DataFrame, detector: str = "deterministic"
 ) -> Tuple[DataFrame, DataFrame]:
     """Run extraction; returns (mentions, abbreviation_pairs).
 
@@ -195,12 +199,7 @@ def extract_mentions(
     pipeline uses :func:`extract_combined` + a checkpoint write instead;
     this convenience form serves ad-hoc queries and tests.
     """
-    extracted = extract_combined(
-        transcripts,
-        text_col,
-        key_cols,
-        confidence_threshold,
-        user_entities,
-        detector,
-    ).localCheckpoint(eager=True)
-    return split_extraction(extracted, key_cols)
+    extracted = extract_combined(transcripts, detector=detector).localCheckpoint(
+        eager=True
+    )
+    return split_extraction(extracted)

@@ -43,10 +43,14 @@ from ..detector import (
     compile_user_patterns,
     extract_turn,
 )
-from .extract import EXTRACTION_STRUCT
+from .extract import EXTRACTION_STRUCT, pack_results
 
+# chunk_text's window and overlap, read at call time
 MAX_TOKENS = 512
 OVERLAP = 50
+
+#: cap on the corpus-global abbreviation harvest (read at call time)
+HARVEST_MAX_TOKENS = 100_000
 
 # per-worker singletons: {model_name: callable chunks -> [[span dict]]}
 _MODEL_CACHE: Dict[str, object] = {}
@@ -55,26 +59,21 @@ _MODEL_CACHE: Dict[str, object] = {}
 _WORD_RE = re.compile(r"\S+")
 
 
-def chunk_text(
-    text: str,
-    max_tokens: int = MAX_TOKENS,
-    overlap: int = OVERLAP,
-    tokenizer=None,
-) -> List[Tuple[int, str]]:
+def chunk_text(text: str, tokenizer=None) -> List[Tuple[int, str]]:
     """[(start_char, chunk_text)] — the reference's chunk_text
     (app.py:2854-2943), both branches:
 
     * tokenizer branch (app.py:2896-2943) when a tokenizer is supplied and
-      tokenizes the text: chunk by TOKEN budget (inner_max = max_tokens-2
-      tokens) with `overlap` tokens of overlap, char offsets from the
+      tokenizes the text: chunk by TOKEN budget (inner_max = MAX_TOKENS-2
+      tokens) with OVERLAP tokens of overlap, char offsets from the
       tokenizer's offset mapping, and the reference's re-encode length
       check (shrink the chunk until
       ``len(tokenizer(chunk, add_special_tokens=True).input_ids) <=
-      max_tokens``). This is the branch that keeps real-model chunks
+      MAX_TOKENS``). This is the branch that keeps real-model chunks
       within the 512-token window — the word branch over-fills it because
       a word averages >1 subword token.
     * word fallback (app.py:2867-2894) otherwise: inner_max words per
-      chunk, `overlap` words of overlap.
+      chunk, OVERLAP words of overlap.
 
     Deviation from the reference, both branches: every chunk is an EXACT
     SLICE of the original text (word boundaries via regex; token
@@ -88,7 +87,8 @@ def chunk_text(
     construction for any whitespace."""
     if not text:
         return [(0, "")]
-    overlap = max(0, min(overlap, max_tokens // 4))
+    max_tokens = MAX_TOKENS
+    overlap = max(0, min(OVERLAP, max_tokens // 4))
     inner_max = max_tokens - 2  # reserve for CLS/SEP
 
     if tokenizer is not None:
@@ -440,9 +440,7 @@ def ensure_vocab_extension(model, tokens) -> int:
     return num_added
 
 
-def harvest_abbreviation_tokens(
-    transcripts, text_col: str = "text", max_tokens: int = 100_000
-) -> List[str]:
+def harvest_abbreviation_tokens(transcripts) -> List[str]:
     """Corpus-global abbreviation harvest feeding X8 (the reference
     pre-scans prepared_records for abbreviation_tokens, app.py:3676-3681).
 
@@ -451,7 +449,8 @@ def harvest_abbreviation_tokens(
     into the scan), ONE Arrow-batched UDF running the shared
     preprocess_text, explode + distinct. The result is a vocabulary-scale
     dimension (like the canonical map), so collecting it is a broadcast-
-    scale judgement call, returned as a sorted list for determinism."""
+    scale judgement call, returned as a sorted list for determinism and
+    capped at ``HARVEST_MAX_TOKENS``."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -463,9 +462,10 @@ def harvest_abbreviation_tokens(
             lambda t: sorted(preprocess_text(str(t))[1].keys()) if t else []
         )
 
+    max_tokens = HARVEST_MAX_TOKENS
     rows = (
-        transcripts.filter(F.col(text_col).contains("("))
-        .select(F.explode(_abbrs(F.col(text_col))).alias("tok"))
+        transcripts.filter(F.col("text").contains("("))
+        .select(F.explode(_abbrs(F.col("text"))).alias("tok"))
         .distinct()
         .sort("tok")  # TakeOrdered with the limit: deterministic prefix
         .limit(max_tokens + 1)
@@ -479,7 +479,7 @@ def harvest_abbreviation_tokens(
         import warnings
 
         warnings.warn(
-            f"abbreviation harvest exceeded max_tokens={max_tokens}; "
+            f"abbreviation harvest exceeded HARVEST_MAX_TOKENS={max_tokens}; "
             "truncating to the lexicographic prefix",
             RuntimeWarning,
             stacklevel=2,
@@ -631,33 +631,14 @@ def neural_extraction_udf(
             )
             for w, chunks in zip(work_texts, all_chunks)
         ]
-        mentions_out = []
-        abbrevs_out = []
-        for text, spans in zip(texts, spans_per_text):
-            result = extract_turn(
+        return pack_results(
+            extract_turn(
                 text,
                 confidence_threshold=confidence_threshold,
                 user_patterns=patterns,
                 span_fn=lambda _wt, _spans=spans: _spans,
             )
-            mentions_out.append(
-                [
-                    (
-                        m.entity,
-                        m.entity_norm,
-                        m.entity_type,
-                        float(m.confidence),
-                        m.start,
-                        m.end,
-                        m.canonical_acr,
-                        bool(m.is_user_entity),
-                    )
-                    for m in result.mentions
-                ]
-            )
-            abbrevs_out.append(list(result.abbreviations))
-        return pd.DataFrame(
-            {"mentions": mentions_out, "abbreviations": abbrevs_out}
+            for text, spans in zip(texts, spans_per_text)
         )
 
     return _extract

@@ -56,32 +56,29 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def cosine_scores(
-    vectors: DataFrame,
-    query: Sequence[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = None,
+    vectors: DataFrame, query: Sequence[float], round_digits: int | None = None
 ) -> DataFrame:
-    """(id, cos_sim) against a literal query vector (ships in the plan —
-    an implicit broadcast). ``round_digits`` rounds the score BEFORE any
-    downstream ordering — cross-engine comparisons (the DuckDB driver
-    gate) need ties decided on the rounded value, not last-ulp float
-    noise."""
+    """(vec_id, cos_sim) of ``vectors(vec_id, embedding)`` against a
+    literal query vector (ships in the plan — an implicit broadcast).
+    ``round_digits`` rounds the score BEFORE any downstream ordering —
+    cross-engine comparisons (the DuckDB oracle gate) need ties decided on
+    the rounded value, not last-ulp float noise."""
     qv = F.array(*[F.lit(float(x)) for x in query])
-    score = cosine(F.col(vec_col), qv)
+    score = cosine(F.col("embedding"), qv)
     if round_digits is not None:
         score = F.round(score, round_digits)
-    return vectors.select(F.col(id_col), score.alias("cos_sim"))
+    return vectors.select(F.col("vec_id"), score.alias("cos_sim"))
 
 
 PLANE_SEED = 0x5E11A
 
 
 @lru_cache(maxsize=8)
-def _plane_matrix(dim: int, n_planes: int, seed: int = PLANE_SEED) -> np.ndarray:
-    """(dim, n_planes) gaussian hyperplane matrix from a fixed PCG64 seed —
-    identical on every executor, no broadcast needed (a few KB anyway)."""
-    rng = np.random.Generator(np.random.PCG64(seed))
+def _plane_matrix(dim: int, n_planes: int) -> np.ndarray:
+    """(dim, n_planes) gaussian hyperplane matrix from the fixed PCG64
+    ``PLANE_SEED`` — identical on every executor, no broadcast needed (a
+    few KB anyway)."""
+    rng = np.random.Generator(np.random.PCG64(PLANE_SEED))
     return rng.standard_normal((dim, n_planes))
 
 
@@ -106,20 +103,14 @@ def _signature_udf(dim: int, n_planes: int):
     return _sig
 
 
-def rp_lsh_buckets(
-    vectors: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, embedding, bucket) — write-once index table, partitioned by
+def rp_lsh_buckets(vectors: DataFrame, dim: int, n_planes: int = 16) -> DataFrame:
+    """(vec_id, embedding, bucket) — write-once index table, partitioned by
     bucket so a probe prunes partitions. One Arrow-batched matmul per
     partition; the plan carries a single projection node at any dim."""
     return vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _signature_udf(dim, n_planes)(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        _signature_udf(dim, n_planes)(F.col("embedding")).alias("bucket"),
     )
 
 
@@ -129,8 +120,6 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 16,
     probe_hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_digits: int | None = None,
 ) -> DataFrame:
     """ANN: restrict to buckets within ``probe_hamming`` bits of the query's
@@ -156,8 +145,8 @@ def lsh_topk(
             probes.append(flipped)
     candidates = indexed.filter(F.col("bucket").isin(probes))
     return (
-        cosine_scores(candidates, query, id_col, vec_col, round_digits)
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        cosine_scores(candidates, query, round_digits)
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 

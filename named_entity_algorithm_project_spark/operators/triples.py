@@ -24,20 +24,22 @@ from typing import Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .extract import KEY_COLS
+
 VALUE_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
 
+#: link_value_units' gap cutoff in characters (read at call time)
+VALUE_UNIT_MAX_DISTANCE = 30
 
-def nearest_property_join(
-    mentions: DataFrame,
-    key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
+
+def nearest_property_join(mentions: DataFrame) -> DataFrame:
     """Per-document nearest PROP_NAME for each value mention.
 
-    Returns one row per value mention: key_cols + value columns + the matched
-    property (nullable). Unmatched-property fallback rows are added by
-    :func:`build_triples`.
+    Returns one row per value mention: KEY_COLS + value columns + the
+    matched property (nullable). Unmatched-property fallback rows are added
+    by :func:`build_triples`.
     """
-    keys = list(key_cols)
+    keys = list(KEY_COLS)
 
     values = mentions.filter(F.col("entity_type").isin(*VALUE_TYPES)).select(
         *keys,
@@ -99,19 +101,16 @@ def nearest_property_join(
     return nearest
 
 
-def build_triples(
-    mentions: DataFrame,
-    key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
+def build_triples(mentions: DataFrame) -> DataFrame:
     """Emit the ``has_value`` triple table.
 
-    Schema: subj, pred, obj, key_cols..., confidence. ``subj`` is the
+    Schema: subj, pred, obj, KEY_COLS..., confidence. ``subj`` is the
     canonical property (trimmed), NULL when a value had no property in its
     document; properties in documents with no values become (subj, pred,
     NULL) rows (app.py:2394-2403).
     """
-    keys = list(key_cols)
-    nearest = nearest_property_join(mentions, key_cols)
+    keys = list(KEY_COLS)
+    nearest = nearest_property_join(mentions)
 
     value_triples = nearest.select(
         F.trim(F.col("property_text")).alias("subj"),
@@ -141,10 +140,7 @@ def build_triples(
     return value_triples.unionByName(prop_only)
 
 
-def mention_triples(
-    mentions: DataFrame,
-    key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
+def mention_triples(mentions: DataFrame) -> DataFrame:
     """(doc, 'mentions', canonical) per distinct mention (SURVEY §7.1).
 
     Dedup is an explicit max-confidence aggregation, not dropDuplicates:
@@ -152,7 +148,7 @@ def mention_triples(
     order dependent — a determinism hole), and aggregating on the narrow
     (keys, obj) projection shuffles 4 small columns instead of the full
     row."""
-    keys = list(key_cols)
+    keys = list(KEY_COLS)
     deduped = (
         mentions.select(
             *keys,
@@ -172,11 +168,7 @@ def mention_triples(
 
 
 def link_value_units(
-    mentions: DataFrame,
-    max_distance: int = 30,
-    key_cols: Tuple[str, ...] = ("conv_id", "turn_idx"),
-    value_type: str = "PROP_VALUE",
-    unit_type: str = "PROP_VALUE",
+    mentions: DataFrame, key_cols: Tuple[str, ...] = KEY_COLS
 ) -> DataFrame:
     """Value↔unit interval join — the reference's "Measurement" semantics
     (app.py:1052-1246, dead code there but the definitive spec):
@@ -186,8 +178,9 @@ def link_value_units(
       gap        char distance between the non-overlapping edges (0 overlap)
       proximity  |mid(unit) - mid(value)|
       tie        |unit.start - value.end|
-    gap > max_distance disqualifies. Unit validity: <=20 chars and
-    unit-shaped (UNIT_ONLY_PATTERN / UNIT_TERMS / the legacy charset).
+    gap > VALUE_UNIT_MAX_DISTANCE disqualifies. Values and units are both
+    PROP_VALUE mentions. Unit validity: <=20 chars and unit-shaped
+    (UNIT_ONLY_PATTERN / UNIT_TERMS / the legacy charset).
 
     Returns one row per linked value: key_cols, value_text, value_start,
     linked_unit, measurement. Same co-partitioned self-join + window-rank
@@ -206,7 +199,7 @@ def link_value_units(
         )
     )
     values = mentions.filter(
-        (F.upper(F.col("entity_type")) == value_type)
+        (F.upper(F.col("entity_type")) == "PROP_VALUE")
         & F.col("start").isNotNull()
         & F.col("end").isNotNull()
         & ~F.trim(F.col("entity")).rlike(r"^[A-Za-z·°Ωµµ/\\-]{1,10}$")
@@ -217,7 +210,7 @@ def link_value_units(
         F.col("end").alias("v_end"),
     )
     units = mentions.filter(
-        (F.upper(F.col("entity_type")) == unit_type)
+        (F.upper(F.col("entity_type")) == "PROP_VALUE")
         & F.col("start").isNotNull()
         & F.col("end").isNotNull()
         & unit_shaped
@@ -246,7 +239,7 @@ def link_value_units(
     ranked = (
         joined.withColumn("direction", direction)
         .withColumn("gap", gap)
-        .filter(F.col("gap") <= max_distance)
+        .filter(F.col("gap") <= VALUE_UNIT_MAX_DISTANCE)
         .withColumn("proximity", proximity)
         .withColumn("tie", tie)
     )

@@ -18,12 +18,12 @@ from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
-from typing import Callable, Dict, Iterable, List, Mapping, Optional, Set, Tuple
+from typing import Callable, Dict, Iterable, List, Mapping, Set, Tuple
 
 import numpy as np
 import pandas as pd
 
-from .detector import DEFAULT_CONFIDENCE_THRESHOLD, compile_user_patterns, extract_turn
+from .detector import extract_turn
 from .dictionaries import ACRONYM_SET, DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
 from .functions.ngrams import tfidf_vectors
 from .functions.textnorm import (
@@ -38,23 +38,15 @@ SKIP_TYPES = {"PROP_VALUE", "MATERIAL_AMOUNT"}
 
 
 def oracle_mentions(
-    transcripts: pd.DataFrame,
-    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
-    user_entities: Optional[List[Tuple[str, str]]] = None,
-    span_fn=None,
+    transcripts: pd.DataFrame, span_fn=None
 ) -> Tuple[pd.DataFrame, pd.DataFrame]:
-    """Stage A: mentions + abbreviation pairs. ``span_fn`` mirrors
-    extract_turn's pluggable span source (neural-path oracle)."""
-    patterns = compile_user_patterns(user_entities) if user_entities else None
+    """Stage A at the default confidence threshold with no user gazetteer:
+    mentions + abbreviation pairs. ``span_fn`` mirrors extract_turn's
+    pluggable span source (neural-path oracle)."""
     mention_rows = []
     abbrev_rows = []
     for rec in transcripts.itertuples(index=False):
-        result = extract_turn(
-            rec.text,
-            confidence_threshold=confidence_threshold,
-            user_patterns=patterns,
-            span_fn=span_fn,
-        )
+        result = extract_turn(rec.text, span_fn=span_fn)
         for m in result.mentions:
             mention_rows.append(
                 {
@@ -353,14 +345,8 @@ def oracle_triples(mentions_canonical: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def run_oracle(
-    transcripts: pd.DataFrame,
-    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
-    user_entities: Optional[List[Tuple[str, str]]] = None,
-) -> dict:
-    mentions, abbrevs = oracle_mentions(
-        transcripts, confidence_threshold, user_entities
-    )
+def run_oracle(transcripts: pd.DataFrame) -> dict:
+    mentions, abbrevs = oracle_mentions(transcripts)
     canonical_map, groups = oracle_linking(mentions, abbrevs)
     mentions_c = oracle_apply_canonical(mentions, canonical_map)
     triples = oracle_triples(mentions_c)

@@ -165,16 +165,12 @@ _BUILDERS = {
 _GENERATED = False
 
 
-def ensure_expected(force: bool = False) -> Dict[str, str]:
+def ensure_expected() -> Dict[str, str]:
     """Write the expected parquet files (idempotent per process). Called by
     ``__spark_entry__.oracle_sql()`` so the files exist — freshly regenerated
     from the current oracle code — before the driver runs the DuckDB side."""
     global _GENERATED
-    if (
-        _GENERATED
-        and not force
-        and all(os.path.exists(p) for p in EXPECTED_PATHS.values())
-    ):
+    if _GENERATED and all(os.path.exists(p) for p in EXPECTED_PATHS.values()):
         return dict(EXPECTED_PATHS)
     os.makedirs(EXPECTED_DIR, exist_ok=True)
     for name, build in _BUILDERS.items():

@@ -81,11 +81,10 @@ class PipelineResult:
     metrics: DataFrame
 
 
-def ordered_transcripts(transcripts: DataFrame, n_partitions: Optional[int] = None) -> DataFrame:
-    """Stable (conv_id, turn_idx) layout (north-rule invariant)."""
-    parts = n_partitions or transcripts.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
+def ordered_transcripts(transcripts: DataFrame) -> DataFrame:
+    """Stable (conv_id, turn_idx) layout (north-rule invariant), over
+    ``spark.sql.shuffle.partitions`` partitions."""
+    parts = transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions")
     return transcripts.repartition(int(parts), "conv_id").sortWithinPartitions(
         "conv_id", "turn_idx"
     )
@@ -102,17 +101,6 @@ def run_pipeline(
     config = config or PipelineConfig()
     paths = StageAPaths(output_dir)
     run_id = uuid.uuid4().hex[:12]
-
-    import time as _time
-
-    _timing = bool(os.environ.get("SPARK_GRAFT_STAGE_TIMING"))
-    _t0 = _time.time()
-
-    def _mark(name: str) -> None:
-        nonlocal _t0
-        if _timing:
-            print(f"STAGE-TIMING {name} {_time.time() - _t0:.1f}s", flush=True)
-        _t0 = _time.time()
 
     def _phase(name: str) -> None:
         # label every job this phase launches in the Spark UI / REST API —
@@ -154,7 +142,6 @@ def run_pipeline(
             spark, paths, pending, extracted, run_id
         )
 
-    _mark("stage_a")
     _phase("stage_b_linking")
     extracted_committed = read_stage_a_extracted(spark, paths)
     mentions_raw, _ = split_extraction(extracted_committed)
@@ -166,7 +153,6 @@ def run_pipeline(
         extracted_committed, score_source=config.score_source
     )
 
-    _mark("stage_b_linking")
     _phase("stage_c_components")
 
     # ---------------- Stage C: components + canonical pick ----------------
@@ -180,7 +166,6 @@ def run_pipeline(
         merge_map=config.merge_map,
     )
 
-    _mark("stage_c_components")
     _phase("stage_e_entities_plan")
 
     # ---------------- Stage E(i): entities write --------------------------
@@ -209,7 +194,6 @@ def run_pipeline(
         "canonical",
         "canonical_display",
     )
-    _mark("stage_e_entities_plan")
     _phase("stage_e_entities_write")
     # No repartition: the frame is narrow over the Stage-A scan (canonical
     # joins are broadcast) and 32 MiB scan splits (session.py) already give
@@ -220,7 +204,6 @@ def run_pipeline(
     entities_rb = spark.read.schema(entities.schema).parquet(
         os.path.join(output_dir, "entities_canonical")
     )
-    _mark("stage_e_entities_write")
     _phase("stage_e_triples_write")
 
     # ---------------- Stage D: triples (over the written entities) --------
@@ -296,7 +279,6 @@ def run_pipeline(
         os.path.join(output_dir, "triples"),
         partition_by=["pred"],
     )
-    _mark("stage_e_triples_write")
     _phase("stage_e_metrics_small_tables")
     try:
         pred_counts = obs.get
@@ -355,7 +337,6 @@ def run_pipeline(
         for f in futs:
             f.result()
 
-    _mark("stage_e_metrics_small_tables")
     # stop labeling the CALLER's jobs: without this reset every job run
     # after run_pipeline returns (e.g. a bench's result counts) would be
     # attributed to the last phase in the UI/REST API (ADVICE r5)

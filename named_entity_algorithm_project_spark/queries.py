@@ -1079,7 +1079,7 @@ def q33_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash
 
     docs = _t(spark, sf_dir, "documents")
-    return simhash(docs, bits=_SIMHASH_BITS, hash_family="md5").select(
+    return simhash(docs, bits=_SIMHASH_BITS).select(
         "doc", F.col("simhash").cast("long").alias("simhash")
     )
 
@@ -1195,9 +1195,8 @@ def q35_media_plumbing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``extract_media_features`` mapInPandas operator (Arrow binary batches,
     per-batch iteration, md5 content hashing) — DuckDB replicates n_bytes
     and content_hash exactly because md5(VARCHAR) hashes the same UTF-8
-    bytes Spark's encode() produces. Features stay deterministic-stub in
-    this query (DuckDB cannot md5 raw digest bytes); the real codecs are
-    gated by tests/test_multimodal's analytic WAV/PNG/AVI expectations."""
+    bytes Spark's encode() produces. Features are the deterministic stub
+    and are not compared (DuckDB cannot md5 raw digest bytes)."""
     from .operators.multimodal import extract_media_features
 
     docs = _t(spark, sf_dir, "documents")

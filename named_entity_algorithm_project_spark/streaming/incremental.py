@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import TRANSCRIPTS_SCHEMA
-from ..detector import DEFAULT_CONFIDENCE_THRESHOLD
 from ..io_tables import StageAPaths, commit_buckets_batch, dir_has_parquet
 from ..operators.extract import extract_combined
 
@@ -43,11 +42,7 @@ def stream_paths(output_dir: str) -> StageAPaths:
 
 
 def process_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    batch_id: int,
-    paths: StageAPaths,
-    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
+    spark: SparkSession, batch_df: DataFrame, batch_id: int, paths: StageAPaths
 ) -> bool:
     """Idempotent per-batch commit (the foreachBatch body; exposed for
     direct replay testing). Returns False when the batch was already
@@ -55,9 +50,7 @@ def process_batch(
     batch_id = int(batch_id)
     if dir_has_parquet(spark, paths.lineage_bucket(batch_id)):
         return False
-    extracted = extract_combined(
-        batch_df, confidence_threshold=confidence_threshold
-    ).withColumn("bucket", F.lit(batch_id))
+    extracted = extract_combined(batch_df).withColumn("bucket", F.lit(batch_id))
     run_id = uuid.uuid4().hex[:12]
     commit_buckets_batch(spark, paths, [batch_id], extracted, run_id)
     return True
@@ -67,16 +60,14 @@ def incremental_extract(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
-    trigger_available_now: bool = True,
     max_files_per_trigger: Optional[int] = None,
 ):
     """Stream new transcript parquet files through Stage-A extraction into
     :func:`stream_paths` of ``output_dir``.
 
-    Returns the StreamingQuery. With ``trigger_available_now`` the query
-    drains everything currently present and stops — the incremental-batch
-    mode a scheduled ingestion job uses; otherwise it runs continuously.
+    Returns the StreamingQuery. The query drains everything currently
+    present and stops (availableNow) — the incremental-batch mode a
+    scheduled ingestion job uses.
     """
     reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
     if max_files_per_trigger:
@@ -86,13 +77,12 @@ def incremental_extract(
     checkpoint = os.path.join(output_dir, "_stream_checkpoint")
 
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(spark, batch_df, batch_id, paths, confidence_threshold)
+        process_batch(spark, batch_df, batch_id, paths)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_process_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -64,13 +64,7 @@ def run_level(cpus: int, n_convs: int) -> dict:
             [sys.executable, path, str(cpus), str(n_convs)],
             capture_output=True, text=True, timeout=3600, check=True,
         )
-        lines = out.stdout.strip().splitlines()
-        # surface per-stage timing (SPARK_GRAFT_STAGE_TIMING=1 in the env
-        # passes through to the runner) so anomalous legs are diagnosable
-        for ln in lines[:-1]:
-            if ln.startswith("STAGE-TIMING"):
-                print(f"[local[{cpus}]] {ln}", file=sys.stderr, flush=True)
-        return json.loads(lines[-1])
+        return json.loads(out.stdout.strip().splitlines()[-1])
     finally:
         os.unlink(path)
 

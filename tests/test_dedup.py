@@ -39,9 +39,11 @@ def test_simhash_properties(docs):
     fps = {r["doc"]: r["simhash"] for r in simhash(docs).collect()}
     assert fps[0] == fps[1] == fps[5]  # identical text, identical fingerprint
     assert fps[3] == fps[4]  # simhash is token-set based here (distinct tokens)
-    # near-dup pair differs in few bits
-    ham_02 = bin(fps[0] ^ fps[2]).count("1")
-    ham_03 = bin(fps[0] ^ fps[3]).count("1")
+    # near-dup pair differs in few bits; fingerprints are signed 64-bit
+    # longs, so mask each XOR to 64 bits before counting
+    mask = (1 << 64) - 1
+    ham_02 = bin((fps[0] ^ fps[2]) & mask).count("1")
+    ham_03 = bin((fps[0] ^ fps[3]) & mask).count("1")
     assert ham_02 < ham_03
 
 

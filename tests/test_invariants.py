@@ -14,7 +14,7 @@ from named_entity_algorithm_project_spark.pipeline import ordered_transcripts
 def test_per_turn_text_equality_after_repartition(spark):
     rows = generate_rows(n_convs=50, seed=9)
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    ordered = ordered_transcripts(df, n_partitions=7)
+    ordered = ordered_transcripts(df)  # the session's 8 shuffle partitions
 
     # 1. no row lost/duplicated, text identical per (conv_id, turn_idx)
     original = {(r[0], r[1]): r[3] for r in rows}

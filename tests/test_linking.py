@@ -273,6 +273,41 @@ def test_local_path_parity(spark, monkeypatch):
         }, (n_convs, seed)
 
 
+def test_fused_row_overflow_links_distributed(spark, monkeypatch):
+    """A fused table over LOCAL_FUSED_ROW_CAP rows leaves the driver-local
+    path even when its vocabulary is under LOCAL_MAX_VOCAB: the build is
+    distributed and its tables equal the default local build's."""
+    from named_entity_algorithm_project_spark.datagen import (
+        TRANSCRIPTS_SCHEMA,
+        generate_rows,
+    )
+    from named_entity_algorithm_project_spark.operators.extract import (
+        extract_combined,
+    )
+    from named_entity_algorithm_project_spark.operators import linking
+
+    rows = generate_rows(n_convs=60, seed=17)
+    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
+    extracted = extract_combined(df).localCheckpoint(eager=True)
+
+    def tables(lt):
+        return (
+            {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()},
+            {(r["src"], r["dst"]) for r in lt.edges.collect()},
+            {r["norm"] for r in lt.nodes.collect()},
+        )
+
+    loc = linking.build_linking_tables(extracted)
+    monkeypatch.setattr(linking, "LOCAL_FUSED_ROW_CAP", 10)
+    over = linking.build_linking_tables(extracted)
+    assert loc.edges.isLocal() and not over.edges.isLocal()
+    assert 10 < loc.n_norms <= linking.LOCAL_MAX_VOCAB
+    want = tables(loc)
+    assert want[1], "the corpus must link some pair"
+    assert tables(over) == want
+    assert over.base_threshold == loc.base_threshold
+
+
 def test_auto_blocking_recall(spark):
     """The auto df-cap (5% of the vocabulary — the default above 50k unique
     norms) is a prefix-filter with BOUNDED loss: the capped score is a lower

@@ -1,6 +1,6 @@
-"""Multimodal plumbing: schema, Arrow batch shape, real stdlib codecs.
-The decode is a deterministic stub (container has no codec libs); the Spark
-side is real."""
+"""Multimodal plumbing: schema, Arrow batch shape, deterministic features.
+The decode is a deterministic stub (no codec libraries are dependencies);
+the Spark side is real."""
 
 import pytest
 
@@ -37,514 +37,3 @@ def test_feature_extraction_schema_and_determinism(media):
         assert by_id[k]["content_hash"] == again[k]["content_hash"]
     # different payloads -> different features
     assert by_id[0]["features"] != by_id[1]["features"]
-
-
-def test_raise_stub_marks_codec_boundary(media):
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        extract_media_features(media, decode_stub="raise").collect()
-
-
-def _make_wav(freq_hz=440.0, rate=8000, ms=250, amplitude=0.5, width=2):
-    """Synthesize a PCM WAV in memory with the stdlib wave module."""
-    import io
-    import math
-    import wave
-
-    n = int(rate * ms / 1000)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(width)
-        w.setframerate(rate)
-        frames = bytearray()
-        for i in range(n):
-            x = amplitude * math.sin(2 * math.pi * freq_hz * i / rate)
-            if width == 2:
-                frames += int(x * 32767).to_bytes(2, "little", signed=True)
-            else:
-                frames += bytes([int(x * 127) + 128])
-        w.writeframes(bytes(frames))
-    return buf.getvalue()
-
-
-def test_wav_codec_end_to_end(spark):
-    """One media kind runs UN-stubbed: real RIFF/WAVE parse + PCM RMS
-    features through the same mapInPandas plumbing. A constant-amplitude
-    sine has window RMS ~= amplitude/sqrt(2); silence is exactly 0."""
-    import math
-
-    from named_entity_algorithm_project_spark.operators.multimodal import (
-        decode_wav_features,
-    )
-
-    loud = _make_wav(amplitude=0.5)
-    quiet = _make_wav(amplitude=0.05)
-    silent = _make_wav(amplitude=0.0)
-    eight_bit = _make_wav(amplitude=0.5, width=1)
-
-    # driver-side decode sanity vs analytic RMS
-    feats = decode_wav_features(loud)
-    assert len(feats) == FEATURE_DIM
-    expect_rms = 0.5 / math.sqrt(2)
-    for f in feats:
-        assert abs(f - expect_rms) < 0.02
-    assert all(f == 0.0 for f in decode_wav_features(silent))
-
-    media = spark.createDataFrame(
-        [
-            (0, "audio", bytearray(loud), None),
-            (1, "audio", bytearray(quiet), None),
-            (2, "audio", bytearray(silent), None),
-            (3, "audio", bytearray(eight_bit), None),
-            (4, "image", bytearray(b"notawav"), None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_id"]: r
-        for r in extract_media_features(media, decode_stub="wav").collect()
-    }
-    assert all(abs(f - expect_rms) < 0.02 for f in rows[0]["features"])
-    assert all(abs(f - 0.05 / math.sqrt(2)) < 0.005 for f in rows[1]["features"])
-    assert all(f == 0.0 for f in rows[2]["features"])
-    # 8-bit path decodes to roughly the same RMS as the 16-bit one
-    assert all(abs(f - expect_rms) < 0.03 for f in rows[3]["features"])
-    # non-audio kinds keep the deterministic fake under decode_stub="wav"
-    assert rows[4]["features"] == [
-        pytest.approx(x) for x in __import__(
-            "named_entity_algorithm_project_spark.operators.multimodal",
-            fromlist=["_fake_decode"],
-        )._fake_decode(b"notawav")
-    ]
-
-
-def _encode_png(pixels, color_type, filters):
-    """Minimal PNG encoder written against RFC 2083 (NOT the decoder under
-    test): pixels is an H×W×C uint8 nested list; `filters[y]` picks the
-    scanline filter type, applying the spec's forward transform so the
-    decoder must exercise every unfilter branch."""
-    import struct
-    import zlib
-
-    h = len(pixels)
-    w = len(pixels[0])
-    c = len(pixels[0][0])
-    stride = w * c
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    flat = [
-        [pixels[y][x][k] for x in range(w) for k in range(c)] for y in range(h)
-    ]
-    raw = bytearray()
-    for y in range(h):
-        f = filters[y]
-        raw.append(f)
-        for i in range(stride):
-            x = flat[y][i]
-            a = flat[y][i - c] if i >= c else 0
-            b = flat[y - 1][i] if y else 0
-            cc = flat[y - 1][i - c] if (y and i >= c) else 0
-            if f == 0:
-                v = x
-            elif f == 1:
-                v = x - a
-            elif f == 2:
-                v = x - b
-            elif f == 3:
-                v = x - (a + b) // 2
-            else:  # Paeth
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                v = x - pred
-            raw.append(v & 0xFF)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_png_codec_all_filters_analytic(spark):
-    """Real stdlib PNG decode through every scanline filter type: a seeded
-    8×8 image encoded with filters cycling 0..4 must featurize to the
-    per-tile luminance means computed directly from the pixel array."""
-    import random
-
-    from named_entity_algorithm_project_spark.operators.multimodal import (
-        decode_png_features,
-    )
-
-    rng = random.Random(7)
-    h = w = 8
-    # RGB image, filters cycle through all five types across rows
-    px = [
-        [[rng.randrange(256) for _ in range(3)] for _ in range(w)]
-        for _ in range(h)
-    ]
-    payload = _encode_png(px, color_type=2, filters=[y % 5 for y in range(h)])
-    feats = decode_png_features(payload)
-    assert len(feats) == FEATURE_DIM
-    # analytic expectation: 4x4 grid of 2x2-tile luminance means / 255
-    lum = [
-        [0.299 * p[0] + 0.587 * p[1] + 0.114 * p[2] for p in row] for row in px
-    ]
-    for ty in range(4):
-        for tx in range(4):
-            vals = [
-                lum[y][x]
-                for y in range(ty * 2, ty * 2 + 2)
-                for x in range(tx * 2, tx * 2 + 2)
-            ]
-            expect = sum(vals) / len(vals) / 255.0
-            assert abs(feats[ty * 4 + tx] - expect) < 1e-9
-
-    # grayscale: constant image -> every tile mean == value/255
-    gray = [[[200] for _ in range(w)] for _ in range(h)]
-    gfeats = decode_png_features(
-        _encode_png(gray, color_type=0, filters=[1] * h)
-    )
-    assert all(abs(f - 200 / 255.0) < 1e-9 for f in gfeats)
-
-    # RGBA: alpha ignored by luminance
-    rgba = [[[10, 20, 30, 255] for _ in range(w)] for _ in range(h)]
-    afeats = decode_png_features(
-        _encode_png(rgba, color_type=6, filters=[4] * h)
-    )
-    expect = (0.299 * 10 + 0.587 * 20 + 0.114 * 30) / 255.0
-    assert all(abs(f - expect) < 1e-9 for f in afeats)
-
-
-def test_png_codec_end_to_end_and_containment(spark):
-    """kind=image decodes for real under decode_stub="png"/"codecs";
-    malformed image payloads yield features=NULL; audio still decodes
-    under "codecs"."""
-    import math
-
-    gray = [[[128] for _ in range(8)] for _ in range(8)]
-    good_png = _encode_png(gray, color_type=0, filters=[0] * 8)
-    good_wav = _make_wav(amplitude=0.5)
-    media = spark.createDataFrame(
-        [
-            (0, "image", bytearray(good_png), None),
-            (1, "image", bytearray(b"\x89PNG\r\n\x1a\ngarbage"), None),
-            (2, "audio", bytearray(good_wav), None),
-            (3, "video", bytearray(b"not video"), None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_id"]: r
-        for r in extract_media_features(media, decode_stub="codecs").collect()
-    }
-    assert all(abs(f - 128 / 255.0) < 1e-6 for f in rows[0]["features"])
-    assert rows[1]["features"] is None  # contained, job survived
-    assert all(
-        abs(f - 0.5 / math.sqrt(2)) < 0.02 for f in rows[2]["features"]
-    )
-    # video is ALSO real under "codecs": non-AVI bytes are contained
-    assert rows[3]["features"] is None
-
-    # "png" mode: image real, audio falls back to the fake
-    rows_png = {
-        r["media_id"]: r
-        for r in extract_media_features(media, decode_stub="png").collect()
-    }
-    assert all(abs(f - 128 / 255.0) < 1e-6 for f in rows_png[0]["features"])
-
-
-def _encode_avi(frames_rgb, width, height, audio_stream_first=False):
-    """Minimal uncompressed-AVI encoder written against the RIFF/AVI spec
-    (NOT the decoder under test): 24bpp BI_RGB `00db` frames, BGR
-    bottom-up rows padded to 4 bytes. ``audio_stream_first`` prepends an
-    `auds` strl (WAVEFORMATEX strf) before the video strl — legal stream
-    ordering a correct parser must not misread as the video format."""
-    import struct
-
-    def chunk(fourcc, body):
-        pad = b"\x00" if len(body) % 2 else b""
-        return fourcc + struct.pack("<I", len(body)) + body + pad
-
-    def lst(ltype, body):
-        return chunk(b"LIST", ltype + body)
-
-    row_stride = (width * 3 + 3) & ~3
-    frame_chunks = b""
-    for frame in frames_rgb:  # frame: rows of [r,g,b] top-down
-        body = bytearray()
-        for row in reversed(frame):  # DIB stores rows bottom-up
-            for r, g, b in row:
-                body += bytes((b, g, r))
-            body += b"\x00" * (row_stride - width * 3)
-        frame_chunks += chunk(b"00db", bytes(body))
-
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        33333, 0, 0, 0, len(frames_rgb), 0, 1, 0, width, height, 0, 0, 0, 0
-    )
-    strh = struct.pack("<4s4sIHHIIIIIIIIhhhh", b"vids", b"DIB ", 0, 0, 0, 0,
-                       1, 30, 0, len(frames_rgb), 0, 0, 0, 0, 0, width, height)
-    strf = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
-                       row_stride * height, 0, 0, 0, 0)
-    strls = b""
-    if audio_stream_first:
-        a_strh = struct.pack(
-            "<4s4sIHHIIIIIIIIhhhh", b"auds", b"\x01\x00\x00\x00", 0, 0, 0,
-            0, 1, 8000, 0, 8000, 0, 0, 0, 1, 0, 0, 0
-        )
-        # WAVEFORMATEX: PCM, 1ch, 8kHz, 16-bit — bytes at offsets 14-20
-        # deliberately differ from any valid BITMAPINFOHEADER
-        a_strf = struct.pack("<HHIIHHH", 1, 1, 8000, 16000, 2, 16, 0)
-        strls += lst(b"strl", chunk(b"strh", a_strh) + chunk(b"strf", a_strf))
-    strls += lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + strls)
-    movi = lst(b"movi", frame_chunks)
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_avi_codec_analytic(spark):
-    """Real stdlib AVI decode: solid-color frames featurize to their exact
-    luminance means; compressed/malformed payloads are contained."""
-    from named_entity_algorithm_project_spark.operators.multimodal import (
-        decode_avi_features,
-    )
-
-    w, h = 6, 4  # row stride 20 -> exercises the 4-byte row padding
-    solid = lambda rgb: [[list(rgb)] * w for _ in range(h)]
-    frames = [solid((255, 0, 0)), solid((0, 255, 0)), solid((0, 0, 255)),
-              solid((10, 20, 30))]
-    payload = _encode_avi(frames, w, h)
-    feats = decode_avi_features(payload)
-    assert len(feats) == FEATURE_DIM
-    expect = [0.299 * 255, 0.587 * 255, 0.114 * 255,
-              0.299 * 10 + 0.587 * 20 + 0.114 * 30]
-    for i, e in enumerate(expect):
-        assert abs(feats[i] - e / 255.0) < 1e-9
-    assert all(f == 0.0 for f in feats[4:])  # zero-padded past frame count
-
-    # legal stream ordering: an audio strl BEFORE the video strl must not
-    # have its WAVEFORMATEX misread as the video BITMAPINFOHEADER
-    feats_af = decode_avi_features(
-        _encode_avi(frames, w, h, audio_stream_first=True)
-    )
-    assert feats_af == feats
-
-    # end-to-end through mapInPandas, all three real codecs in one mode
-    gray_png = _encode_png([[[128]] * 8 for _ in range(8)], 0, [0] * 8)
-    media = spark.createDataFrame(
-        [
-            (0, "video", bytearray(payload), None),
-            (1, "video", bytearray(b"RIFF\x04\x00\x00\x00AVI "), None),
-            (2, "video", bytearray(b"not a riff"), None),
-            (3, "image", bytearray(gray_png), None),
-            (4, "audio", bytearray(_make_wav(amplitude=0.0)), None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_id"]: r
-        for r in extract_media_features(media, decode_stub="codecs").collect()
-    }
-    assert abs(rows[0]["features"][0] - 0.299) < 1e-6
-    assert rows[1]["features"] is None  # headerless AVI contained
-    assert rows[2]["features"] is None  # garbage contained
-    assert abs(rows[3]["features"][0] - 128 / 255.0) < 1e-6
-    assert all(f == 0.0 for f in rows[4]["features"])
-
-
-def test_decode_pixel_budget_and_bomb_containment():
-    """Hostile headers (dimensions up to 2^32) and decompression-bomb
-    IDATs must fail/bound BEFORE allocating width*height buffers — an
-    executor OOM is the one failure per-row exception containment cannot
-    catch."""
-    import struct
-    import zlib
-
-    import pytest as _pytest
-
-    from named_entity_algorithm_project_spark.operators.multimodal import (
-        _decode_avi_safe,
-        _decode_png_safe,
-        decode_png_features,
-    )
-
-    def png_with_dims(w, h):
-        def chunk(ctype, data):
-            return (
-                struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-            )
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(b"\x00" * 16))
-            + chunk(b"IEND", b"")
-        )
-
-    # 4-gigapixel claim: rejected by the budget, contained to NULL with an
-    # "unsupported" status (the payload may be a legitimate huge image —
-    # the budget is a property of the stdlib decoder, not the bytes)
-    with _pytest.raises(ValueError, match="out of budget"):
-        decode_png_features(png_with_dims(65536, 65536))
-    assert _decode_png_safe(png_with_dims(65536, 65536)) == (None, "unsupported")
-
-    # decompression bomb: 8x8 dims but an IDAT inflating to ~10 MB — the
-    # bounded inflate reads only the declared dims' worth and succeeds
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-    ihdr = struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 0)
-    bomb = (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(b"\x00" * (10 * 1024 * 1024)))
-        + chunk(b"IEND", b"")
-    )
-    feats = decode_png_features(bomb)
-    assert feats == [0.0] * FEATURE_DIM  # zero pixels, decoded cheaply
-
-    # AVI with a patched 65536x65536 avih: budget rejection, contained
-    avi = bytearray(
-        _encode_avi([[[list((1, 2, 3))] * 4 for _ in range(4)]], 4, 4)
-    )
-    pos = avi.find(b"avih") + 8
-    struct.pack_into("<II", avi, pos + 32, 65536, 65536)
-    assert _decode_avi_safe(bytes(avi)) == (None, "unsupported")
-
-
-def test_wav_codec_tolerates_malformed_payloads(spark):
-    """One corrupt/unsupported audio payload must not fail the whole batch
-    job: the bad row yields features=NULL, every good row still decodes."""
-    import math
-    import struct
-
-    good = _make_wav(amplitude=0.5)
-    # 24-bit PCM: wave parses the header fine but the sample width is
-    # unsupported by the decoder (the ValueError arm)
-    w24 = bytearray(good)
-    # RIFF fmt chunk: BitsPerSample at offset 34, BlockAlign at 32
-    struct.pack_into("<H", w24, 32, 3)
-    struct.pack_into("<H", w24, 34, 24)
-    media = spark.createDataFrame(
-        [
-            (0, "audio", bytearray(good), None),
-            (1, "audio", bytearray(b"not RIFF at all"), None),  # wave.Error
-            (2, "audio", bytearray(w24), None),  # unsupported width
-            (3, "audio", None, None),  # null payload
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_id"]: r
-        for r in extract_media_features(media, decode_stub="wav").collect()
-    }
-    assert all(
-        abs(f - 0.5 / math.sqrt(2)) < 0.02 for f in rows[0]["features"]
-    )
-    assert rows[1]["features"] is None
-    assert rows[2]["features"] is None
-    assert rows[3]["features"] is None  # empty bytes -> wave.Error, contained
-    # hashes still computed for every row (decode failure is per-field)
-    assert all(rows[k]["content_hash"] for k in rows)
-
-
-def test_decode_status_distinguishes_unsupported_from_malformed(spark):
-    """The judge's round-4 finding: a 90%-NULL features column must be
-    diagnosable. decode_status says whether NULL means corrupt bytes
-    ("malformed") or a legitimate shape the stdlib decoder deliberately
-    skips ("unsupported" — compressed AVI, 16-bit PNG, 24-bit WAV)."""
-    import struct
-
-    good_png = _encode_png(
-        [[[128] for _ in range(8)] for _ in range(8)], 0, [0] * 8
-    )
-    # 16-bit PNG: legitimate format, deliberately unsupported — patch the
-    # IHDR bit-depth byte (offset 8+4+4+8 = 24)
-    png16 = bytearray(good_png)
-    png16[24] = 16
-    # compressed AVI: patch biCompression (strf data + 16) to MJPG-ish
-    solid = [[[10, 20, 30]] * 4 for _ in range(4)]
-    good_avi = _encode_avi([solid], 4, 4)
-    avi_mjpg = bytearray(good_avi)
-    struct.pack_into("<I", avi_mjpg, avi_mjpg.find(b"strf") + 8 + 16, 1)
-    # 24-bit WAV: wave parses the header, the width is unsupported
-    w24 = bytearray(_make_wav())
-    struct.pack_into("<H", w24, 32, 3)
-    struct.pack_into("<H", w24, 34, 24)
-
-    media = spark.createDataFrame(
-        [
-            (0, "image", bytearray(good_png), None),
-            (1, "image", bytearray(b"\x89PNG\r\n\x1a\ngarbage"), None),
-            (2, "image", png16, None),
-            (3, "video", bytearray(good_avi), None),
-            (4, "video", avi_mjpg, None),
-            (5, "video", bytearray(b"not a riff"), None),
-            (6, "audio", w24, None),
-            (7, "audio", bytearray(_make_wav()), None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_id"]: r
-        for r in extract_media_features(media, decode_stub="codecs").collect()
-    }
-    expect = {
-        0: "ok", 1: "malformed", 2: "unsupported", 3: "ok",
-        4: "unsupported", 5: "malformed", 6: "unsupported", 7: "ok",
-    }
-    for mid, status in expect.items():
-        assert rows[mid]["decode_status"] == status, mid
-        assert (rows[mid]["features"] is not None) == (status == "ok"), mid
-    # the deterministic-stub mode reports "ok" for every row
-    stub_rows = extract_media_features(media).collect()
-    assert {r["decode_status"] for r in stub_rows} == {"ok"}
-
-
-def test_avi_nested_list_bomb_is_contained():
-    """~24 KB of nested LISTs used to blow Python's recursion limit in the
-    recursive RIFF scan — RecursionError escaped per-row containment and
-    failed the whole job. The walk is iterative now: the payload parses to
-    'missing avih' and is contained as malformed."""
-    import struct
-
-    from named_entity_algorithm_project_spark.operators.multimodal import (
-        _decode_avi_safe,
-    )
-
-    body = b""
-    for _ in range(3000):  # depth 3000 >> default recursion limit
-        inner = b"hdrl" + body
-        body = b"LIST" + struct.pack("<I", len(inner)) + inner
-    payload = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"AVI " + body
-    assert len(payload) > 20000
-    assert _decode_avi_safe(payload) == (None, "malformed")
-
-
-def test_png_sequential_filter_budget(monkeypatch):
-    """Average/Paeth scanlines run a per-byte Python pass; past the
-    sequential-bytes budget the image is refused as "unsupported" instead
-    of stalling an executor worker (None/Sub/Up are vectorized and only
-    bounded by the pixel budget)."""
-    import named_entity_algorithm_project_spark.operators.multimodal as mm
-
-    px = [[[7] for _ in range(8)] for _ in range(8)]
-    paeth_png = _encode_png(px, color_type=0, filters=[4] * 8)
-    vec_png = _encode_png(px, color_type=0, filters=[1] * 8)
-
-    monkeypatch.setattr(mm, "MAX_SEQ_FILTER_BYTES", 10)
-    assert mm._decode_png_safe(paeth_png) == (None, "unsupported")
-    # fully-vectorized filters are NOT subject to the sequential budget
-    feats, status = mm._decode_png_safe(vec_png)
-    assert status == "ok" and all(abs(f - 7 / 255.0) < 1e-9 for f in feats)

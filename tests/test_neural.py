@@ -313,12 +313,13 @@ def test_neural_wordpiece_long_turn_parity():
     assert _mention_keys(neu) == _mention_keys(det)
 
 
-def test_harvest_abbreviation_tokens_size_guard(spark):
+def test_harvest_abbreviation_tokens_size_guard(spark, monkeypatch):
     """Pathological corpus: the harvest truncates deterministically at
-    max_tokens (lexicographic prefix) with a warning instead of shipping
-    an unbounded closure."""
+    HARVEST_MAX_TOKENS (lexicographic prefix) with a warning instead of
+    shipping an unbounded closure."""
     import warnings
 
+    from named_entity_algorithm_project_spark.operators import neural
     from named_entity_algorithm_project_spark.operators.neural import (
         harvest_abbreviation_tokens,
     )
@@ -333,11 +334,13 @@ def test_harvest_abbreviation_tokens_size_guard(spark):
     )
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        toks = harvest_abbreviation_tokens(df, max_tokens=2)
+        monkeypatch.setattr(neural, "HARVEST_MAX_TOKENS", 2)
+        toks = harvest_abbreviation_tokens(df)
     assert toks == ["BHJ", "OFET"]
-    assert any("max_tokens" in str(w.message) for w in caught)
+    assert any("HARVEST_MAX_TOKENS" in str(w.message) for w in caught)
     # under the cap: untruncated, no warning
-    assert harvest_abbreviation_tokens(df, max_tokens=10) == [
+    monkeypatch.setattr(neural, "HARVEST_MAX_TOKENS", 10)
+    assert harvest_abbreviation_tokens(df) == [
         "BHJ", "OFET", "PCE",
     ]
 
@@ -445,10 +448,11 @@ def test_edge_suppression_overlap_coincident_entity_survives_once():
     assert [(s, e) for s, e, _, _, _ in spans2] == [(12, 20)]
 
 
-def test_chunk_text_slow_tokenizer_offsets_fallback():
+def test_chunk_text_slow_tokenizer_offsets_fallback(monkeypatch):
     """A slow (non-fast) HF tokenizer tokenizes fine but raises on
     return_offsets_mapping — chunk_text must take the word-fallback path
     instead of crashing the UDF."""
+    from named_entity_algorithm_project_spark.operators import neural
     from named_entity_algorithm_project_spark.operators.neural import chunk_text
 
     class _SlowTokenizer:
@@ -465,8 +469,9 @@ def test_chunk_text_slow_tokenizer_offsets_fallback():
             return {"input_ids": list(range(n))}
 
     text = " ".join(f"w{i:02d}" for i in range(20))
-    chunks = chunk_text(text, max_tokens=10, overlap=2,
-                        tokenizer=_SlowTokenizer())
+    monkeypatch.setattr(neural, "MAX_TOKENS", 10)
+    monkeypatch.setattr(neural, "OVERLAP", 2)
+    chunks = chunk_text(text, tokenizer=_SlowTokenizer())
     assert len(chunks) > 1  # word fallback actually chunked
     for start, chunk in chunks:
         assert text[start:start + len(chunk)] == chunk  # exact slices
@@ -695,20 +700,21 @@ class _SpecialTokenLeakTokenizer(StubWordPieceTokenizer):
         return out
 
 
-def test_chunk_text_strips_leaked_special_token_offsets():
+def test_chunk_text_strips_leaked_special_token_offsets(monkeypatch):
     """The token-budget branch must survive special-token offset leakage
     (zero-width entries stripped, counts re-checked) instead of silently
     degrading to the word fallback — chunks identical to the clean
     tokenizer's."""
+    from named_entity_algorithm_project_spark.operators import neural
     from named_entity_algorithm_project_spark.operators.neural import (
         chunk_text,
     )
 
     text = " ".join(f"characterization{i:04d}" for i in range(300))
-    clean = chunk_text(text, max_tokens=128, overlap=16,
-                       tokenizer=StubWordPieceTokenizer(piece_len=4))
-    leaky = chunk_text(text, max_tokens=128, overlap=16,
-                       tokenizer=_SpecialTokenLeakTokenizer(piece_len=4))
+    monkeypatch.setattr(neural, "MAX_TOKENS", 128)
+    monkeypatch.setattr(neural, "OVERLAP", 16)
+    clean = chunk_text(text, tokenizer=StubWordPieceTokenizer(piece_len=4))
+    leaky = chunk_text(text, tokenizer=_SpecialTokenLeakTokenizer(piece_len=4))
     assert len(clean) > 1  # the budget branch actually chunked
     assert leaky == clean
     for start, chunk in leaky:

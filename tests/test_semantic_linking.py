@@ -37,7 +37,7 @@ def test_stub_embedder_deterministic_and_normalized():
     assert np.array_equal(embed_text("PCE"), embed_text("pce"))
 
 
-def test_gram_memo_identical_to_direct_hashing():
+def test_gram_memo_identical_to_direct_hashing(monkeypatch):
     # the per-process (gram, dim) memo is a pure cache: cold-path,
     # warm-path and a cache-bypassing from-scratch computation must
     # produce bit-identical vectors (r6 embed_batch 2.5x)
@@ -61,7 +61,8 @@ def test_gram_memo_identical_to_direct_hashing():
         assert np.array_equal(c, w), t
         assert np.array_equal(c, direct(t)), t
     # a different dim keys separately (no cross-dim collisions)
-    assert np.array_equal(E.embed_text("ZnO", dim=32), direct("ZnO", dim=32))
+    monkeypatch.setattr(E, "DEFAULT_EMBED_DIM", 32)
+    assert np.array_equal(E.embed_text("ZnO"), direct("ZnO", dim=32))
 
 
 def _dense_cosines():

@@ -1,6 +1,7 @@
 """Triple-stage units: nearest-property tie-breaking (J1), value-unit
 interval join (J2 / Measurement semantics)."""
 
+from named_entity_algorithm_project_spark.operators import triples as triples_ops
 from named_entity_algorithm_project_spark.operators.triples import (
     build_triples,
     link_value_units,
@@ -56,11 +57,12 @@ def test_value_unit_follows_preferred(spark):
     assert linked[0]["measurement"] == "123 eV"
 
 
-def test_value_unit_gap_cutoff(spark):
+def test_value_unit_gap_cutoff(spark, monkeypatch):
     rows = [
         _mention("c1", "42", "PROP_VALUE", 0, 2),
         _mention("c1", "Pa", "PROP_VALUE", 50, 52),  # gap 48 > 30
     ]
     df = spark.createDataFrame(rows, MENTION_COLS)
     assert link_value_units(df).count() == 0
-    assert link_value_units(df, max_distance=60).count() == 1
+    monkeypatch.setattr(triples_ops, "VALUE_UNIT_MAX_DISTANCE", 60)
+    assert link_value_units(df).count() == 1
