@@ -27,6 +27,9 @@ MODEL_ID2LABEL = {
     "8": "PROP_VALUE",
 }
 ENTITY_TYPES = sorted(set(MODEL_ID2LABEL.values()))
+#: The value types: numeric property values and material amounts. They are
+#: the objects of has_value triples and never link (app.py:3256).
+VALUE_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
 LABEL2ID = {label: int(idx) for idx, label in MODEL_ID2LABEL.items()}
 
 # app.py:603

@@ -239,11 +239,12 @@ def commit_buckets_batch(
                 for b in buckets
             }
         except Exception:
-            # obs.get trips a JVM assertion when the observed write had
-            # zero rows (the CollectMetrics row never materializes) — but
-            # an observe failure on a NON-empty write must not silently
-            # persist zeroed lineage counters: fall back to the re-read
-            # stats path whenever any bucket actually wrote files.
+            # a zero-row write observes zeros (tests/test_resume.py's
+            # empty-input case), so this guards only against the observed
+            # metrics never reaching the driver. Such a failure on a
+            # NON-empty write must not silently persist zeroed lineage
+            # counters: fall back to the re-read stats path whenever any
+            # bucket actually wrote files.
             if written:
                 import warnings
 

@@ -27,18 +27,17 @@ from typing import Dict, Iterable, Mapping, Optional, Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..dictionaries import ACRONYM_SET
+from ..dictionaries import ACRONYM_SET, VALUE_TYPES
 from ..functions.localrel import local_df
 from ..functions.textnorm import normalize_entity_col
-from .linking import SKIP_TYPES
 
 #: the reference's apply_canonical_merge_map skip set (app.py:1824) is
-#: WIDER than the linking skip set: it also bypasses bare VALUE rows.
+#: WIDER than VALUE_TYPES: it also bypasses bare VALUE rows.
 #: Currently latent here — the detector clamps entity types to
 #: ENTITY_TYPES, which excludes VALUE — but the merge-map/display-rewrite
 #: path mirrors the reference's 3-type set so a VALUE-typed row arriving
 #: from user input or an external mention table behaves identically.
-MERGE_SKIP_TYPES = ("VALUE",) + tuple(SKIP_TYPES)
+MERGE_SKIP_TYPES = ("VALUE",) + VALUE_TYPES
 
 
 def pick_canonicals(components: DataFrame, norms: DataFrame) -> DataFrame:
@@ -82,7 +81,7 @@ def apply_canonical_map(
     non-value norm) — broadcast it.
     """
     linkable_norm = normalize_entity_col(F.col("entity"))
-    is_value = F.upper(F.col("entity_type")).isin(*SKIP_TYPES)
+    is_value = F.upper(F.col("entity_type")).isin(*VALUE_TYPES)
 
     with_norm = mentions.withColumn("norm", linkable_norm)
     joined = with_norm.join(
@@ -165,7 +164,7 @@ def apply_user_overrides(
         ]
         if rows:
             dim = local_df(spark, rows, "variant string, user_canonical string")
-            is_value = F.upper(F.col("entity_type")).isin(*SKIP_TYPES)
+            is_value = F.upper(F.col("entity_type")).isin(*VALUE_TYPES)
             out = (
                 out.withColumn("_k", F.lower(F.trim(F.col("entity"))))
                 .join(F.broadcast(dim), F.col("_k") == F.col("variant"), "left")

@@ -1,30 +1,26 @@
 """Stage D(i) — connected components over the linking edge list.
 
-Distributed min-label propagation ("hash-to-min") with iterative joins:
-every node repeatedly adopts the smallest component label among itself and
-its neighbors; convergence when no label changes. Labels are the norm
-strings themselves (total lexicographic order), so the component id is the
-lexicographically smallest member — fully deterministic, no
-monotonically_increasing_id anywhere.
+Up to the driver bounds (LOCAL_MAX_NODES / LOCAL_MAX_EDGES) the graph is
+collected and solved by union-find on the driver, like the reference's
+single-process DFS. Above them the distributed path runs the alternating
+large-star/small-star rounds of Kiveris et al., "Connected Components in
+MapReduce and Beyond" (SoCC'14): O(log n) rounds on any graph shape, long
+chains included. Labels are the norm strings themselves (total
+lexicographic order), so the component id is the lexicographically
+smallest member — fully deterministic, no monotonically_increasing_id
+anywhere.
 
 Reference equivalent: the driver-side DFS at app.py:3185-3211 — verified
 equal by tests/test_components.py against a Python DFS oracle.
 
 Scale notes:
-* iterations = O(component diameter); linking components are alias
-  groups/similarity cliques with tiny diameters (≤ ~6), so the loop
-  terminates in a handful of rounds even at 10^12-turn vocabularies.
-  When a pathological graph (long chains) blows past HASH_TO_MIN_ROUNDS,
-  the O(log n)-round large-star/small-star variant (:func:`_star_labels`,
-  Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
-  takes over behind the same nodes+edges -> labels contract.
-* each round is a shuffle on node id; hub nodes (e.g. "polymer") are heavy
-  keys, but the neighbour min() is one aggregation whose map-side partial
-  aggregation (Spark hash-aggregate) collapses a hub's rows to one partial
-  min per map task before the exchange; AQE skew handling covers the join
-  side.
+* each round is a few shuffles on node id; hub nodes (e.g. "polymer") are
+  heavy keys, but the per-node min() is one aggregation whose map-side
+  partial aggregation (Spark hash-aggregate) collapses a hub's rows to one
+  partial min per map task before the exchange; AQE skew handling covers
+  the join side.
 * localCheckpoint() every round truncates the lineage so the plan doesn't
-  grow exponentially across iterations.
+  grow across iterations.
 """
 
 from __future__ import annotations
@@ -47,10 +43,6 @@ from ..functions.localrel import local_df
 #: LOCAL_MAX_NODES = 0.
 LOCAL_MAX_NODES = 200_000
 LOCAL_MAX_EDGES = 2_000_000
-#: Hash-to-min rounds before the switch to large/small-star: O(diameter)
-#: is cheapest for the common tiny-diameter alias graphs, O(log n) star
-#: rounds bound the long-chain worst case.
-HASH_TO_MIN_ROUNDS = 8
 #: Large/small-star round cap; a graph still changing after it raises
 #: rather than return partial labels.
 STAR_MAX_ROUNDS = 25
@@ -70,10 +62,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     spark = nodes.sparkSession
     if LOCAL_MAX_NODES > 0:
         # ONE bounded limit-collect per input doubles as the size gate AND
-        # the driver-path data (was: checkpoint + limit-count + full
-        # collect per input — four extra jobs). The collects are bounded
-        # by the thresholds (+1 row), so driver memory stays capped even
-        # when the gate says "too big" and the distributed path runs.
+        # the driver-path data. The collects are bounded by the thresholds
+        # (+1 row), so driver memory stays capped even when the gate says
+        # "too big" and the distributed path runs.
         node_rows = nodes.limit(LOCAL_MAX_NODES + 1).collect()
         if len(node_rows) <= LOCAL_MAX_NODES:
             edge_rows = edges.limit(LOCAL_MAX_EDGES + 1).collect()
@@ -87,62 +78,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                     sorted(mapping.items()),
                     "norm string, component string",
                 )
-    # Distributed path: materialize inputs once — the iterative rounds
-    # otherwise re-execute the full upstream DAG (TF-IDF similarity join
-    # included) per consumption. (The driver path above deliberately skips
-    # this: its single collect per input is the only consumption, and the
-    # pipeline already hands it checkpointed linking tables.)
-    nodes = nodes.localCheckpoint(eager=True)
-    edges = edges.localCheckpoint(eager=True)
-    # Materialize the edge list once: without this every iteration would
-    # re-execute the full upstream DAG (TF-IDF similarity join included).
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    # neighbor lists never materialize; we only ever join (node -> label)
-    labels = nodes.select(
-        F.col("norm"), F.col("norm").alias("component")
-    ).localCheckpoint(eager=True)
-
-    for _ in range(HASH_TO_MIN_ROUNDS):
-        neighbor_min = (
-            sym.join(
-                labels.select(
-                    F.col("norm").alias("dst"),
-                    F.col("component").alias("n_component"),
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("norm"))
-            .agg(F.min("n_component").alias("neighbor_component"))
-        )
-        updated = (
-            labels.join(neighbor_min, "norm", "left")
-            .select(
-                "norm",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("neighbor_component"), F.col("component")),
-                ).alias("component"),
-                F.col("component").alias("prev_component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = updated.filter(
-            F.col("component") != F.col("prev_component")
-        ).limit(1).count()
-        labels = updated.drop("prev_component")
-        if changed == 0:
-            return labels
-
-    # diameter exceeded the hash-to-min rounds (long-chain graph) — switch
-    # to the O(log n)-round star algorithm from scratch (the hash-to-min
-    # rounds are sunk cost; correctness is unaffected)
-    return _star_labels(nodes, edges)
+    # the distributed result is lazy over `nodes` (its singletons):
+    # materialize them once so no consumer re-runs their upstream DAG
+    return _star_labels(nodes.localCheckpoint(eager=True), edges)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -158,8 +96,6 @@ def _large_star(e: DataFrame) -> DataFrame:
         sym.join(mins, "src")
         .filter(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
 
 
@@ -182,38 +118,39 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _edges_differ(new: DataFrame, old: DataFrame) -> bool:
-    """Exact set-inequality probe for convergence detection — one job, same
-    shape as the hash-to-min loop's changed-row limit(1) check (a checksum
-    comparison would admit an astronomically-unlikely hash-collision false
-    convergence; this is exact at the same cost). Both inputs are distinct
-    edge sets, so a full-outer join with a one-sided-null filter finds a
-    differing row iff the sets differ."""
-    lhs = new.select("src", "dst", F.lit(1).alias("_new"))
-    rhs = old.select("src", "dst", F.lit(1).alias("_old"))
-    return (
-        lhs.join(rhs, ["src", "dst"], "full_outer")
-        .filter(F.col("_new").isNull() | F.col("_old").isNull())
-        .limit(1)
-        .count()
-        > 0
+def _is_star_forest(e: DataFrame) -> bool:
+    """Exact convergence probe, one limit(1) job over one aggregation. After
+    a small-star round every edge points from a larger node to a smaller
+    one. Such an edge set is a star forest when no node has two out-edges
+    and no node has both an out-edge and an in-edge; a star forest is a
+    fixed point of both rounds, and the rounds converge to one (Kiveris et
+    al.). They preserve connectivity, so each star's centre is then its
+    component's minimum. Stopping here saves the round that would only
+    confirm the fixed point."""
+    ends = e.select(
+        F.col("src").alias("node"), F.lit(1).alias("out"), F.lit(0).alias("in")
+    ).unionByName(
+        e.select(
+            F.col("dst").alias("node"), F.lit(0).alias("out"), F.lit(1).alias("in")
+        )
     )
+    degrees = ends.groupBy("node").agg(
+        F.sum("out").alias("n_out"), F.sum("in").alias("n_in")
+    )
+    not_star = (F.col("n_out") > 1) | ((F.col("n_out") > 0) & (F.col("n_in") > 0))
+    return degrees.filter(not_star).limit(1).count() == 0
 
 
 def _star_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Alternating large-star/small-star to convergence: O(log n) rounds on
-    any graph shape (the long-chain worst case hash-to-min handles poorly).
-    At the fixed point every edge is (member -> component minimum)."""
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    any graph shape. At the fixed point every edge is (member -> component
+    minimum)."""
+    # read once, by the first round; every round ends in a distinct, so
+    # duplicate input edges need no pass of their own
+    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     for _ in range(STAR_MAX_ROUNDS):
-        prev = e
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        if not _edges_differ(e, prev):
+        if _is_star_forest(e):
             break
     else:
         raise RuntimeError(

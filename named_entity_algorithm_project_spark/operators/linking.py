@@ -83,7 +83,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
+from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS, VALUE_TYPES
 from ..functions.embed import DEFAULT_EMBED_DIM, embed_batch, embedding_udf
 from ..functions.localrel import local_df
 from ..functions.ngrams import char_wb_ngrams_col, tfidf_vectors
@@ -97,8 +97,6 @@ from ..functions.textnorm import (
 )
 from .similarity import _signature_udf, band_join, band_rows, dot
 
-SKIP_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
-
 #: A heavy df-cap can strip so much squared mass that the
 #: Cauchy–Schwarz suffix rule yields an EMPTY prefix; this
 #: guarantees the top-MIN_PREFIX_RANK sub-cap grams (rarest, most
@@ -110,19 +108,16 @@ MIN_PREFIX_RANK = 4
 #: The one vocabulary tier. Above AUTO_BLOCK_MIN_VOCAB unique norms the
 #: linker (1) caps candidate generation: the similarity join drops n-grams
 #: with df > min(max(AUTO_BLOCK_DF_FRAC·N, 100), AUTO_BLOCK_DF_ABS) (see the
-#: module docstring and :func:`auto_df_cap`); (2) pins the
-#: vocabulary-sized join inputs (gram keep-lists, weights, per-norm stats,
-#: candidate pairs, effective-type profiles) to sort-merge with
-#: .hint("merge"); and (3), through LOCAL_MAX_VOCAB (a separate name only
-#: as the tests' seam), runs the distributed cascade instead of the
-#: driver-local one, for either scorer. The merge hints
-#: exist because at the 640k-norm tier the estimate-driven broadcast of
-#: these string-heavy tables OOM'd (hash relations inflate 5-10x their
-#: shuffle size — BENCH.md round-5 curve). At or below the tier the same
-#: hint is pure overhead: AQE's runtime-size broadcast decision is both
-#: safe (actual sizes, well under the 64 MiB session threshold) and
-#: shuffle-free. 50k norms ≈ 650k grams ≈ ~20 MB exchange-side — inside
-#: the broadcast envelope with the measured 5-10x inflation on an 8g driver.
+#: module docstring and :func:`auto_df_cap`); and (2), through
+#: LOCAL_MAX_VOCAB (a separate name only as the tests' seam), runs the
+#: distributed cascade instead of the driver-local one, for either scorer.
+#: That cascade pins every vocabulary-sized join input (gram keep-lists,
+#: weights, per-norm stats, candidate pairs, effective-type profiles) to
+#: sort-merge with .hint("merge"), at every size: at the 640k-norm tier the
+#: estimate-driven broadcast of these string-heavy tables OOM'd (hash
+#: relations inflate 5-10x their shuffle size — BENCH.md round-5 curve).
+#: Below the tier only the fused-row overflow guard (LOCAL_FUSED_ROW_CAP)
+#: and tests reach the cascade, so it keeps no second plan for them.
 AUTO_BLOCK_MIN_VOCAB = 50_000
 AUTO_BLOCK_DF_FRAC = 0.05
 AUTO_BLOCK_DF_ABS = 4_000
@@ -148,12 +143,6 @@ AUTO_BLOCK_DF_ABS = 4_000
 #: TB-scale shuffle dirs lower it toward ~500k to take the shuffle plan
 #: before executor heaps become the binding constraint.
 SCORE_PIN_MIN_VOCAB = int(os.environ.get("KG_SCORE_PIN_MIN_VOCAB", "2000000"))
-
-
-def _dim_hint(df: DataFrame, large_vocab: bool) -> DataFrame:
-    """Sort-merge-pin a vocabulary-sized join input at large vocab; let the
-    planner/AQE pick (runtime-size broadcast) below the bound."""
-    return df.hint("merge") if large_vocab else df
 
 
 @dataclass
@@ -190,15 +179,14 @@ def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_counts = tf.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-    large_vocab = n_norms > AUTO_BLOCK_MIN_VOCAB
-    # merge-join hints (large vocab only — see AUTO_BLOCK_MIN_VOCAB) on
-    # BOTH weight-assembly joins: df_counts is gram-vocabulary-sized and
-    # norms_sq is norm-vocabulary-sized — at the 640k-norm tier an
-    # estimate-driven broadcast of either OOMs the driver building the
-    # hash relation (string keys inflate 5-10x their shuffle size;
-    # BENCH.md round-5 curve). Both joins share the tf frame's own shuffle
+    # merge-join hints (see AUTO_BLOCK_MIN_VOCAB) on BOTH weight-assembly
+    # joins: df_counts is gram-vocabulary-sized and norms_sq is
+    # norm-vocabulary-sized — at the 640k-norm tier an estimate-driven
+    # broadcast of either OOMs the driver building the hash relation
+    # (string keys inflate 5-10x their shuffle size; BENCH.md round-5
+    # curve). Both joins share the tf frame's own shuffle
     # keys, so sort-merge costs no extra exchange there.
-    weighted = tf.join(_dim_hint(df_counts, large_vocab), "ngram").withColumn(
+    weighted = tf.join(df_counts.hint("merge"), "ngram").withColumn(
         "w_raw",
         F.col("tf")
         * (
@@ -210,13 +198,13 @@ def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
         F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("l2")
     )
     return (
-        weighted.join(_dim_hint(norms_sq, large_vocab), "norm")
+        weighted.join(norms_sq.hint("merge"), "norm")
         .select("norm", "ngram", (F.col("w_raw") / F.col("l2")).alias("w"))
     )
 
 
 def _drop_capped_grams(
-    weights: DataFrame, candidate_max_df: Optional[int], large_vocab: bool
+    weights: DataFrame, candidate_max_df: Optional[int]
 ) -> DataFrame:
     """``weights`` without the n-grams whose df (number of norms carrying
     the gram) exceeds the cap (unchanged when uncapped) — the df-cap
@@ -224,15 +212,16 @@ def _drop_capped_grams(
     if candidate_max_df is None:
         return weights
     df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-    # merge-join hint (large vocab only): `keep` is GRAM-vocabulary-sized
-    # (~10-15x the norm count). An explicit broadcast OOM'd the 640k-norm
-    # tier, and even AQE's own estimate-driven broadcast choice did
-    # (string-heavy gram tables inflate 5-10x their estimated size as hash
-    # relations) — BENCH.md round-5 curve. The join key is ngram, which the
-    # postings join shuffles on anyway.
-    keep = _dim_hint(
-        df_counts.filter(F.col("df") <= candidate_max_df).select("ngram"),
-        large_vocab,
+    # merge-join hint: `keep` is GRAM-vocabulary-sized (~10-15x the norm
+    # count). An explicit broadcast OOM'd the 640k-norm tier, and even
+    # AQE's own estimate-driven broadcast choice did (string-heavy gram
+    # tables inflate 5-10x their estimated size as hash relations) —
+    # BENCH.md round-5 curve. The join key is ngram, which the postings
+    # join shuffles on anyway.
+    keep = (
+        df_counts.filter(F.col("df") <= candidate_max_df)
+        .select("ngram")
+        .hint("merge")
     )
     return weights.join(keep, "ngram")
 
@@ -246,12 +235,10 @@ def _pair_sum(joined: DataFrame) -> DataFrame:
 
 
 def similarity_pairs(
-    weights: DataFrame,
-    candidate_max_df: Optional[int] = None,
-    large_vocab: bool = True,
+    weights: DataFrame, candidate_max_df: Optional[int] = None
 ) -> DataFrame:
     """Exact cosine for every norm pair sharing an n-gram: (a, b, score)."""
-    weights = _drop_capped_grams(weights, candidate_max_df, large_vocab)
+    weights = _drop_capped_grams(weights, candidate_max_df)
     left = weights.select(
         F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
     )
@@ -265,7 +252,6 @@ def similarity_pairs_prefix(
     weights: DataFrame,
     gate_floor: float,
     candidate_max_df: Optional[int] = None,
-    large_vocab: bool = True,
     score_pin: bool = False,
 ) -> DataFrame:
     """Prefix-filtered similarity join (AllPairs/ppjoin family — Bayardo
@@ -306,7 +292,7 @@ def similarity_pairs_prefix(
     join, the score sides): pass it materialized (``localCheckpoint``) so
     the TF-IDF explode/agg DAG runs once.
     """
-    cand_weights = _drop_capped_grams(weights, candidate_max_df, large_vocab)
+    cand_weights = _drop_capped_grams(weights, candidate_max_df)
     # float-safety margin widens prefixes slightly (never prunes a pair the
     # exact arithmetic could pass)
     t_eff = max(gate_floor - 1e-9, 0.0)
@@ -343,9 +329,7 @@ def similarity_pairs_prefix(
         # prefix is ~MIN_PREFIX_RANK..8 rows per norm — far past any sane
         # broadcast at vocab scale; same merge-hint rationale as `keep`
         .join(
-            _dim_hint(
-                prefix.select(F.col("norm").alias("y"), "ngram"), large_vocab
-            ),
+            prefix.select(F.col("norm").alias("y"), "ngram").hint("merge"),
             "ngram",
         )
         .filter(F.col("x") != F.col("y"))
@@ -365,13 +349,14 @@ def similarity_pairs_prefix(
     # √(n_a/n_b) count-ratio bound is NOT sound for TF-IDF weights and is
     # deliberately not used). Stats come from the full vectors because the
     # emitted score is the full cosine.
-    stats = _dim_hint(  # vocabulary-sized — sort-merge at large vocab
-        weights.groupBy("norm").agg(
+    stats = (  # vocabulary-sized — sort-merge
+        weights.groupBy("norm")
+        .agg(
             F.max("w").alias("_maxw"),
             F.sum("w").alias("_l1"),
             F.count(F.lit(1)).alias("_n"),
-        ),
-        large_vocab,
+        )
+        .hint("merge")
     )
     cand = (
         cand.join(
@@ -415,25 +400,18 @@ def similarity_pairs_prefix(
     # zstd-compressed (b, ngram) shuffle of the side measures UNDER the
     # adaptive broadcast threshold while the string-keyed hash relation it
     # would build is 512 MB+ — the r6 tier-4 OOM (see the constant's doc).
-    left = _dim_hint(
-        weights.select(
-            F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
-        ),
-        score_pin,
+    left = weights.select(
+        F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
     )
-    right = _dim_hint(
-        weights.select(
-            F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
-        ),
-        score_pin,
+    right = weights.select(
+        F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
     )
-    # merge hint (large vocab only): the candidate-pair table is
-    # |pairs|-sized (millions at vocab scale) — an estimate-driven
-    # broadcast of it into the score join was the last of the four OOM
-    # sites the 640k-norm tier exposed
-    joined = (
-        _dim_hint(cand, large_vocab).join(left, "a").join(right, ["b", "ngram"])
-    )
+    if score_pin:
+        left, right = left.hint("merge"), right.hint("merge")
+    # merge hint: the candidate-pair table is |pairs|-sized (millions at
+    # vocab scale) — an estimate-driven broadcast of it into the score join
+    # was the last of the four OOM sites the 640k-norm tier exposed
+    joined = cand.hint("merge").join(left, "a").join(right, ["b", "ngram"])
     return _pair_sum(joined).filter(F.col("score") >= F.lit(t_eff))
 
 
@@ -588,33 +566,24 @@ def gate_scored_pairs(
     profiles_eff: DataFrame,
     protected: list,
     base: float,
-    large_vocab: bool = True,
 ) -> DataFrame:
     """The reference's edge gate cascade (app.py:3140-3183), applied to ANY
     (a, b, score) candidate source — TF-IDF inverted-index scores and
     semantic-embedding scores go through the identical gates, exactly as
     _build_cluster_maps treats its similarity_lookup regardless of origin."""
-    # merge-join hints (large vocab only): profiles_eff is
-    # vocabulary-sized, and at the 640k-norm tier TWO concurrent
-    # estimate-driven broadcasts of it (string-keyed hash relations
-    # inflate 5-10x) OOM'd the shared local heap while evaluating the
-    # edges checkpoint (BENCH.md round-5 curve); on a real cluster the
-    # same build happens per executor. The scored pairs are already
-    # shuffled, so sort-merge adds only the profile-side exchange.
-    eff_a = _dim_hint(
-        profiles_eff.select(
-            F.col("norm").alias("a"),
-            F.col("types").alias("types_a"),
-        ),
-        large_vocab,
-    )
-    eff_b = _dim_hint(
-        profiles_eff.select(
-            F.col("norm").alias("b"),
-            F.col("types").alias("types_b"),
-        ),
-        large_vocab,
-    )
+    # merge-join hints: profiles_eff is vocabulary-sized, and at the
+    # 640k-norm tier TWO concurrent estimate-driven broadcasts of it
+    # (string-keyed hash relations inflate 5-10x) OOM'd the shared local
+    # heap while evaluating the edges checkpoint (BENCH.md round-5 curve);
+    # on a real cluster the same build happens per executor. The scored
+    # pairs are already shuffled, so sort-merge adds only the profile-side
+    # exchange.
+    eff_a = profiles_eff.select(
+        F.col("norm").alias("a"), F.col("types").alias("types_a")
+    ).hint("merge")
+    eff_b = profiles_eff.select(
+        F.col("norm").alias("b"), F.col("types").alias("types_b")
+    ).hint("merge")
     return (
         scored.join(eff_a, "a")
         .join(eff_b, "b")
@@ -653,7 +622,7 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
         ),
         # skip-type filter on the UNTRIMMED upper(entity_type); non-empty
         # trimmed norm
-        lambda s: ~s["_raw"].isin(*SKIP_TYPES) & (s["k1"] != ""),
+        lambda s: ~s["_raw"].isin(*VALUE_TYPES) & (s["k1"] != ""),
     )
     a_structs = F.filter(
         F.transform(
@@ -805,9 +774,6 @@ def build_linking_tables(
     candidate_max_df = auto_df_cap(n_norms)
 
     protected = sorted(PROTECTED_TERMS)
-    # all vocabulary-sized dim hints key off the MEASURED vocabulary — the
-    # same tier the df-cap uses (see AUTO_BLOCK_MIN_VOCAB)
-    large_vocab = n_norms > AUTO_BLOCK_MIN_VOCAB
 
     # --- abbreviation edges, gated on ORIGINAL type sets -------------------
     # distinct (src=abbr_norm, dst=expansion_norm) pairs from the per-turn
@@ -816,24 +782,18 @@ def build_linking_tables(
     abbr_raw = fused.filter(F.col("kind") == "A").select(
         F.col("k1").alias("src"), F.col("k2").alias("dst")
     )
-    # merge hints (large vocab only): these profile projections are
-    # vocabulary-sized, and LeftOuter can only build-right — an
-    # estimate-driven broadcast of the 917k-norm profiles (compressed
-    # shuffle bytes under the threshold, string-keyed hash relation
-    # inflating 5-10x at build) OOM'd the edges checkpoint at 1 GiB/core
-    # (r6 tier-4 finding; same class as the r5 profiles_eff pins)
-    prof_src = _dim_hint(
-        profiles.select(
-            F.col("norm").alias("src"), F.col("types").alias("types_src")
-        ),
-        large_vocab,
-    )
-    prof_dst = _dim_hint(
-        profiles.select(
-            F.col("norm").alias("dst"), F.col("types").alias("types_dst")
-        ),
-        large_vocab,
-    )
+    # merge hints: these profile projections are vocabulary-sized, and
+    # LeftOuter can only build-right — an estimate-driven broadcast of the
+    # 917k-norm profiles (compressed shuffle bytes under the threshold,
+    # string-keyed hash relation inflating 5-10x at build) OOM'd the edges
+    # checkpoint at 1 GiB/core (r6 tier-4 finding; same class as the r5
+    # profiles_eff pins)
+    prof_src = profiles.select(
+        F.col("norm").alias("src"), F.col("types").alias("types_src")
+    ).hint("merge")
+    prof_dst = profiles.select(
+        F.col("norm").alias("dst"), F.col("types").alias("types_dst")
+    ).hint("merge")
     abbr_gated = (
         abbr_raw.join(prof_src, "src", "left")
         .join(prof_dst, "dst", "left")
@@ -852,10 +812,7 @@ def build_linking_tables(
     neighbor_types = (
         abbr_sym.join(
             # vocabulary-sized dim — same hint rationale as prof_src/dst
-            _dim_hint(
-                profiles.select(F.col("norm").alias("dst"), "types"),
-                large_vocab,
-            ),
+            profiles.select(F.col("norm").alias("dst"), "types").hint("merge"),
             "dst",
             "left",
         )
@@ -870,11 +827,11 @@ def build_linking_tables(
         .agg(F.array_sort(F.collect_set("t")).alias("types"))
     )
     # norms with no original profile (abbrev-only endpoints) default UNKNOWN
-    # (merge hint at large vocab: effective_types is vocabulary-sized —
-    # same broadcast-OOM rationale as gate_scored_pairs)
+    # (merge hint: effective_types is vocabulary-sized — same broadcast-OOM
+    # rationale as gate_scored_pairs)
     profiles_eff = (
         profiles.select("norm", "freq")
-        .join(_dim_hint(effective_types, large_vocab), "norm", "left")
+        .join(effective_types.hint("merge"), "norm", "left")
         .withColumn("types", F.coalesce(F.col("types"), F.array(F.lit("UNKNOWN"))))
     )
 
@@ -906,13 +863,10 @@ def build_linking_tables(
             weights,
             gate_floor=adaptive_threshold_floor(base),
             candidate_max_df=candidate_max_df,
-            large_vocab=large_vocab,
             score_pin=n_norms > SCORE_PIN_MIN_VOCAB,
         )
 
-    sim_edges = gate_scored_pairs(
-        scored, profiles_eff, protected, base, large_vocab=large_vocab
-    )
+    sim_edges = gate_scored_pairs(scored, profiles_eff, protected, base)
 
     edges = (
         abbr_gated.unionByName(alias_edges)

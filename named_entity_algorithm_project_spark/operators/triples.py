@@ -24,9 +24,8 @@ from typing import Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..dictionaries import VALUE_TYPES
 from .extract import KEY_COLS
-
-VALUE_TYPES = ("PROP_VALUE", "MATERIAL_AMOUNT")
 
 #: link_value_units' gap cutoff in characters (read at call time)
 VALUE_UNIT_MAX_DISTANCE = 30

@@ -24,7 +24,12 @@ import numpy as np
 import pandas as pd
 
 from .detector import extract_turn
-from .dictionaries import ACRONYM_SET, DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS
+from .dictionaries import (
+    ACRONYM_SET,
+    DOMAIN_ALIAS_SUBSTRINGS,
+    PROTECTED_TERMS,
+    VALUE_TYPES,
+)
 from .functions.ngrams import tfidf_vectors
 from .functions.textnorm import (
     adaptive_threshold,
@@ -33,8 +38,6 @@ from .functions.textnorm import (
     normalize_entity,
     types_compatible,
 )
-
-SKIP_TYPES = {"PROP_VALUE", "MATERIAL_AMOUNT"}
 
 
 def oracle_mentions(
@@ -195,7 +198,7 @@ def oracle_vocabulary(
     """The linking vocabulary of a mention/abbreviation table: mention count
     and type set per trimmed linkable norm (value types skipped, app.py:
     3256-3263), and the trimmed non-empty abbreviation pairs."""
-    linkable = mentions[~mentions["entity_type"].str.upper().isin(SKIP_TYPES)]
+    linkable = mentions[~mentions["entity_type"].str.upper().isin(VALUE_TYPES)]
     norms = linkable["entity"].map(normalize_entity)
     keep = norms != ""
     freq = Counter(norms[keep])
@@ -276,7 +279,7 @@ def oracle_apply_canonical(
 ) -> pd.DataFrame:
     df = mentions.copy()
     df["norm"] = df["entity"].map(normalize_entity)
-    is_value = df["entity_type"].str.upper().isin(SKIP_TYPES)
+    is_value = df["entity_type"].str.upper().isin(VALUE_TYPES)
     df["canonical"] = np.where(
         is_value,
         df["norm"],
@@ -297,7 +300,7 @@ def oracle_triples(mentions_canonical: pd.DataFrame) -> pd.DataFrame:
     ):
         etype = group["entity_type"].str.upper()
         props = group[etype == "PROP_NAME"]
-        values = group[etype.isin(SKIP_TYPES)]
+        values = group[etype.isin(VALUE_TYPES)]
         prop_starts = props["start"].astype("float")
         max_start = prop_starts.max()
         for v in values.itertuples(index=False):

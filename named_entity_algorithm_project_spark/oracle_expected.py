@@ -55,9 +55,12 @@ def _transcripts_pdf(n_convs: int, seed: int) -> pd.DataFrame:
     )
 
 
-def expected_q19() -> pd.DataFrame:
-    """Per-type mention rollup over the q19 transcripts."""
-    mentions, _ = oracle_mentions(_transcripts_pdf(KG_N_CONVS, KG_SEED))
+def _type_rollup(span_fn) -> pd.DataFrame:
+    """Per-type mention rollup over the q19 transcripts, spans from
+    ``span_fn`` (None: the deterministic scanner)."""
+    mentions, _ = oracle_mentions(
+        _transcripts_pdf(KG_N_CONVS, KG_SEED), span_fn=span_fn
+    )
     out = (
         mentions.groupby("entity_type")
         .agg(
@@ -69,6 +72,32 @@ def expected_q19() -> pd.DataFrame:
     out["n_mentions"] = out["n_mentions"].astype("int64")
     out["n_unique"] = out["n_unique"].astype("int64")
     return out[["entity_type", "n_mentions", "n_unique"]]
+
+
+def _group_size_histogram(score_source: str) -> pd.DataFrame:
+    """Alias-group size histogram over the full linking + components path
+    of the q21 transcripts, similarity scored by ``score_source``."""
+    from collections import Counter
+
+    mentions, abbrevs = oracle_mentions(
+        _transcripts_pdf(KG_LINKING_N_CONVS, KG_LINKING_SEED)
+    )
+    canonical_map, _groups = oracle_linking(
+        mentions, abbrevs, score_source=score_source
+    )
+    sizes = Counter(canonical_map.values())
+    hist = Counter(sizes.values())
+    out = pd.DataFrame(
+        sorted(hist.items()), columns=["group_size", "n_groups"]
+    )
+    out["group_size"] = out["group_size"].astype("int64")
+    out["n_groups"] = out["n_groups"].astype("int64")
+    return out
+
+
+def expected_q19() -> pd.DataFrame:
+    """Per-type mention rollup over the q19 transcripts."""
+    return _type_rollup(None)
 
 
 def expected_q20() -> pd.DataFrame:
@@ -94,41 +123,13 @@ def expected_q20() -> pd.DataFrame:
 
 def expected_q21() -> pd.DataFrame:
     """Alias-group size histogram over the full linking + components path."""
-    from collections import Counter
-
-    mentions, abbrevs = oracle_mentions(
-        _transcripts_pdf(KG_LINKING_N_CONVS, KG_LINKING_SEED)
-    )
-    canonical_map, _groups = oracle_linking(mentions, abbrevs)
-    sizes = Counter(canonical_map.values())
-    hist = Counter(sizes.values())
-    out = pd.DataFrame(
-        sorted(hist.items()), columns=["group_size", "n_groups"]
-    )
-    out["group_size"] = out["group_size"].astype("int64")
-    out["n_groups"] = out["n_groups"].astype("int64")
-    return out
+    return _group_size_histogram("tfidf")
 
 
 def expected_q31() -> pd.DataFrame:
     """q21's histogram with the L4 semantic scorer (reference use_semantic
     path, app.py:3084-3110) feeding the same gates."""
-    from collections import Counter
-
-    mentions, abbrevs = oracle_mentions(
-        _transcripts_pdf(KG_LINKING_N_CONVS, KG_LINKING_SEED)
-    )
-    canonical_map, _groups = oracle_linking(
-        mentions, abbrevs, score_source="semantic"
-    )
-    sizes = Counter(canonical_map.values())
-    hist = Counter(sizes.values())
-    out = pd.DataFrame(
-        sorted(hist.items()), columns=["group_size", "n_groups"]
-    )
-    out["group_size"] = out["group_size"].astype("int64")
-    out["n_groups"] = out["n_groups"].astype("int64")
-    return out
+    return _group_size_histogram("semantic")
 
 
 def expected_q32() -> pd.DataFrame:
@@ -137,21 +138,7 @@ def expected_q32() -> pd.DataFrame:
     divergence from the Spark neural path is a chunking/remap/dedup bug."""
     from .operators.neural import StubTokenClassifier, neural_span_fn
 
-    span_fn = neural_span_fn(StubTokenClassifier())
-    mentions, _ = oracle_mentions(
-        _transcripts_pdf(KG_N_CONVS, KG_SEED), span_fn=span_fn
-    )
-    out = (
-        mentions.groupby("entity_type")
-        .agg(
-            n_mentions=("entity", "size"),
-            n_unique=("entity_norm", "nunique"),
-        )
-        .reset_index()
-    )
-    out["n_mentions"] = out["n_mentions"].astype("int64")
-    out["n_unique"] = out["n_unique"].astype("int64")
-    return out[["entity_type", "n_mentions", "n_unique"]]
+    return _type_rollup(neural_span_fn(StubTokenClassifier()))
 
 
 _BUILDERS = {

@@ -6,7 +6,8 @@
                             skips committed buckets)
       Stage B  link       — TF-IDF inverted-index similarity + abbrev/alias
                             edges
-      Stage C  canonical  — iterative-join connected components + pick
+      Stage C  canonical  — connected components (driver union-find, or
+                            large/small-star rounds above its bounds) + pick
       Stage D  triples    — nearest-property join -> (subj, pred, obj)
       Stage E  materialize— entities, triples, alias_groups, canonical_map,
                             metrics tables
@@ -176,10 +177,9 @@ def run_pipeline(
     # write job), and — unlike checkpoint blocks, which store full rows —
     # the parquet read-back COLUMN-PRUNES per branch (each triple branch
     # touches 4-7 narrow columns of the 12-column table), so the five
-    # downstream passes scan a fraction of the bytes. (History: the r2-r5
-    # localCheckpoint solved the 3-4x re-extraction of the same frame; the
-    # write-then-read form keeps that property and adds pruning + cluster
-    # durability.)
+    # downstream passes scan a fraction of the bytes. Reading the written
+    # table back also spares the 3-4x re-extraction of the same frame, and
+    # the parquet copy is durable on a cluster.
     entities = mentions.select(
         "conv_id",
         "turn_idx",
@@ -270,36 +270,17 @@ def run_pipeline(
     # partitionBy(pred) with NO pre-repartition: every task writes at most
     # one file per predicate, so the write parallelizes across the union
     # branches' existing partitions (window shuffles + fine scan splits)
-    # without another 13M-row exchange. (History: repartition on pred
-    # alone was a 3-task serial choke; (pred, conv_id) fixed parallelism
-    # but kept a bandwidth-bound shuffle; fine scan splits make both
-    # unnecessary.)
+    # without another 13M-row exchange. A repartition on pred alone would
+    # be a 3-task serial choke, and one on (pred, conv_id) a
+    # bandwidth-bound shuffle.
     write_table(
         triples_observed,
         os.path.join(output_dir, "triples"),
         partition_by=["pred"],
     )
     _phase("stage_e_metrics_small_tables")
-    try:
-        pred_counts = obs.get
-    except Exception:
-        # zero-row input: the CollectMetrics row never materializes and
-        # obs.get trips a JVM assertion — fall back to counting the (empty)
-        # written table directly
-        rb = spark.read.schema(triples.schema).parquet(
-            os.path.join(output_dir, "triples")
-        )
-        cnt = {
-            r["pred"]: r["n"]
-            for r in rb.groupBy("pred")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        pred_counts = {
-            f"n_{p}": cnt.get(p, 0)
-            for p in ("has_value", "mentions", "same_as")
-        }
-    # one multi-agg job for both canonical-map counters (was two jobs)
+    pred_counts = obs.get
+    # one multi-agg job for both canonical-map counters
     cm_stats = canonical_map.agg(
         F.count(F.lit(1)).alias("n_norms"),
         F.coalesce(

@@ -135,56 +135,43 @@ def main() -> None:
     out.append("```")
 
     # the linker hands the prefix join materialized weights (one TF-IDF
-    # pass for its several consumers) — audit the same shape
-    weights_ckpt = weights.localCheckpoint(eager=True)
-    scored_prefix = similarity_pairs_prefix(
-        weights_ckpt, gate_floor=0.82, large_vocab=False
-    )
-    out.append(
-        "\n## kg: tfidf similarity scoring, DEFAULT prefix-filtered path\n"
-        "\n(ppjoin candidate generation: window marks each norm's"
-        "\nhigh-weight prefix, postings join only against prefixes, then"
-        "\nexact rescoring over candidates — note the candidate join keys"
-        "\nand the same final pair-sum; 15x the naive join at"
-        "\n60k norms, BENCH.md. Below AUTO_BLOCK_MIN_VOCAB the"
-        "\nvocabulary-sized inputs may broadcast — AQE decides from runtime"
-        "\nsizes.)\n```"
-    )
-    out.extend(key_lines(formatted(scored_prefix)))
-    out.append("```")
-
-    # LARGE-VOCAB hint contract (VERDICT r5 item 3): with the measured
-    # vocabulary above AUTO_BLOCK_MIN_VOCAB the prefix path must pin the
-    # estimate-unreliable vocabulary-sized inputs (prefix postings, the
+    # pass for its several consumers) — audit the same shape.
+    # Hint contract (VERDICT r5 item 3): the distributed prefix path pins
+    # the estimate-unreliable vocabulary-sized inputs (prefix postings, the
     # per-norm stats pair, candidate pairs; plus the keep-list under a
     # df-cap) to sort-merge — the estimate-driven broadcast of these OOM'd
     # the 640k-norm tier — and the AllPairs maxweight filter must sit
     # before the score join. The score SIDES read the materialized weights
     # checkpoint (accurate statistics), so AQE's runtime-size broadcast of
-    # them is allowed — pinning them measured 2.2x slower at the 62k tier.
-    scored_prefix_large = similarity_pairs_prefix(
-        weights_ckpt, gate_floor=0.82, large_vocab=True
+    # them is allowed below SCORE_PIN_MIN_VOCAB — pinning them measured
+    # 2.2x slower at the 62k tier.
+    weights_ckpt = weights.localCheckpoint(eager=True)
+    plan_prefix = formatted(
+        similarity_pairs_prefix(weights_ckpt, gate_floor=0.82)
     )
-    plan_large = formatted(scored_prefix_large)
-    n_smj = plan_large.count(") SortMergeJoin")
+    n_smj = plan_prefix.count(") SortMergeJoin")
     assert n_smj >= 4, (
         f"expected >=4 sort-merge-pinned joins (prefix, stats x2, cand) in "
-        f"the large-vocab prefix plan, found {n_smj}:\n" + plan_large
+        f"the prefix plan, found {n_smj}:\n" + plan_prefix
     )
-    assert "_maxw" in plan_large, (
+    assert "_maxw" in plan_prefix, (
         "AllPairs maxweight filter missing from the prefix plan"
     )
     out.append(
-        "\n## kg: prefix path, large-vocab hint contract (asserted)\n"
-        "\nSame DAG with large_vocab=True (the shape the AUTO tier runs"
-        "\nabove AUTO_BLOCK_MIN_VOCAB norms): the prefix-postings join, both"
-        "\nper-norm-stats joins and the candidate-pair score join are"
-        "\nsort-merge-pinned (>=4 SortMergeJoin asserted — these are the"
-        "\nr5-measured broadcast-OOM sites), and the maxweight-filter join"
-        "\nis present. The audit FAILS if a future change re-broadcasts"
-        "\nthem.\n```"
+        "\n## kg: tfidf similarity scoring, prefix-filtered path (hint"
+        "\ncontract asserted)\n"
+        "\n(ppjoin candidate generation: window marks each norm's"
+        "\nhigh-weight prefix, postings join only against prefixes, then"
+        "\nexact rescoring over candidates — note the candidate join keys"
+        "\nand the same final pair-sum; 15x the naive join at 60k norms,"
+        "\nBENCH.md.) The prefix-postings join, both per-norm-stats joins"
+        "\nand the candidate-pair score join are sort-merge-pinned (>=4"
+        "\nSortMergeJoin asserted — these are the r5-measured broadcast-OOM"
+        "\nsites), and the maxweight-filter join is present. The audit"
+        "\nFAILS if a future change re-broadcasts them; tests/test_linking.py"
+        "\nasserts the same on the plan a distributed build runs.\n```"
     )
-    out.extend(key_lines(plan_large))
+    out.extend(key_lines(plan_prefix))
     out.append("```")
 
     components.LOCAL_MAX_NODES = 0  # the distributed rounds

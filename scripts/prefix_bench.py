@@ -52,7 +52,6 @@ from named_entity_algorithm_project_spark.operators.extract import (
     extract_combined,
 )
 from named_entity_algorithm_project_spark.operators.linking import (
-    AUTO_BLOCK_MIN_VOCAB,
     auto_df_cap,
     gate_scored_pairs,
     similarity_pairs,
@@ -91,7 +90,6 @@ def main():
     profiles = tables.norms
     n_norms = tables.n_norms
     base = tables.base_threshold
-    large_vocab = n_norms > AUTO_BLOCK_MIN_VOCAB
     if cap_arg == "auto":
         cap = auto_df_cap(n_norms)
     elif cap_arg == "none":
@@ -104,14 +102,11 @@ def main():
 
     def scored(leg):
         if leg == "naive":
-            return similarity_pairs(
-                weights, candidate_max_df=cap, large_vocab=large_vocab
-            )
+            return similarity_pairs(weights, candidate_max_df=cap)
         return similarity_pairs_prefix(
             weights,
             gate_floor=adaptive_threshold_floor(base),
             candidate_max_df=cap,
-            large_vocab=large_vocab,
         )
 
     results = {}
@@ -119,8 +114,7 @@ def main():
     for leg in legs:
         t0 = time.time()
         edges = gate_scored_pairs(
-            scored(leg), profiles, sorted(PROTECTED_TERMS), base,
-            large_vocab=large_vocab,
+            scored(leg), profiles, sorted(PROTECTED_TERMS), base
         ).localCheckpoint(eager=True)
         edge_rows = sorted((r["src"], r["dst"]) for r in edges.collect())
         wall = time.time() - t0

@@ -1,5 +1,6 @@
-"""Connected components: iterative-join implementation vs a Python DFS
-oracle on seeded random graphs (SURVEY §2.5 L8)."""
+"""Connected components: the driver union-find and the distributed
+large/small-star rounds vs a Python DFS oracle on seeded random graphs
+(SURVEY §2.5 L8)."""
 
 import random
 
@@ -34,7 +35,10 @@ def _dfs_components(nodes, edges):
     return out
 
 
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [(1, 30, 20), (2, 60, 80), (3, 100, 40)])
+@pytest.mark.parametrize(
+    "seed,n_nodes,n_edges",
+    [(1, 30, 20), (2, 60, 80), (3, 100, 40), (4, 50, 35), (5, 80, 100)],
+)
 def test_random_graphs_match_dfs(spark, monkeypatch, seed, n_nodes, n_edges):
     rng = random.Random(seed)
     nodes = [f"n{i:03d}" for i in range(n_nodes)]
@@ -46,8 +50,8 @@ def test_random_graphs_match_dfs(spark, monkeypatch, seed, n_nodes, n_edges):
 
     nodes_df = spark.createDataFrame([(n,) for n in nodes], "norm string")
     edges_df = spark.createDataFrame(sorted(edges), "src string, dst string")
-    # distributed iterative-join path (LOCAL_MAX_NODES=0 disables the
-    # driver-side small-graph shortcut)
+    # distributed star rounds (LOCAL_MAX_NODES=0 disables the driver-side
+    # small-graph shortcut)
     with monkeypatch.context() as m:
         m.setattr(components, "LOCAL_MAX_NODES", 0)
         got = {
@@ -75,31 +79,9 @@ def test_chain_graph_converges(spark, monkeypatch):
     assert {r["component"] for r in got} == {nodes[0]}
 
 
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [(4, 50, 35), (5, 80, 100)])
-def test_star_algorithm_matches_dfs(spark, monkeypatch, seed, n_nodes, n_edges):
-    rng = random.Random(seed)
-    nodes = [f"s{i:03d}" for i in range(n_nodes)]
-    edges = set()
-    while len(edges) < n_edges:
-        a, b = rng.sample(nodes, 2)
-        edges.add((min(a, b), max(a, b)))
-    expected = _dfs_components(nodes, edges)
-    nodes_df = spark.createDataFrame([(n,) for n in nodes], "norm string")
-    edges_df = spark.createDataFrame(sorted(edges), "src string, dst string")
-    # no hash-to-min rounds: large/small-star from the start
-    monkeypatch.setattr(components, "LOCAL_MAX_NODES", 0)
-    monkeypatch.setattr(components, "HASH_TO_MIN_ROUNDS", 0)
-    got = {
-        r["norm"]: r["component"]
-        for r in connected_components(nodes_df, edges_df).collect()
-    }
-    assert got == expected
-
-
 def test_adversarial_long_chain_auto_fallback(spark, monkeypatch):
-    """Diameter-120 path: hash-to-min is O(diameter) and blows its rounds;
-    components must switch to large/small-star (O(log n) rounds) and still
-    produce the exact DFS labels."""
+    """Diameter-120 path: the large/small-star rounds converge in O(log n)
+    rounds, well inside STAR_MAX_ROUNDS, to the exact DFS labels."""
     n = 120
     nodes = [f"x{i:03d}" for i in range(n)]
     edges = [(nodes[i], nodes[i + 1]) for i in range(n - 1)]
@@ -107,16 +89,13 @@ def test_adversarial_long_chain_auto_fallback(spark, monkeypatch):
     nodes_df = spark.createDataFrame([(x,) for x in nodes], "norm string")
     edges_df = spark.createDataFrame(edges, "src string, dst string")
     monkeypatch.setattr(components, "LOCAL_MAX_NODES", 0)
-    monkeypatch.setattr(components, "HASH_TO_MIN_ROUNDS", 5)
     got = {
         r["norm"]: r["component"]
         for r in connected_components(nodes_df, edges_df).collect()
     }
     assert got == expected
 
-    # a star phase with too few rounds must raise, not silently return
-    # partial labels
-    monkeypatch.setattr(components, "HASH_TO_MIN_ROUNDS", 1)
+    # too few rounds must raise, not silently return partial labels
     monkeypatch.setattr(components, "STAR_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes_df, edges_df)

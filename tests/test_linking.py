@@ -530,6 +530,47 @@ def test_prefix_filter_gated_edges_identical(spark):
     ) >= naive_capped
 
 
+def test_distributed_prefix_plan_pins_vocabulary_joins(spark, monkeypatch):
+    """The hint contract of the distributed prefix join, on the plan a
+    forced-distributed build_linking_tables runs at test scale: the
+    prefix-postings join, both per-norm-stats joins and the candidate-pair
+    score join are sort-merge-pinned (>= 4 SortMergeJoin — the broadcasts
+    the 640k-norm tier OOM'd on), and the AllPairs maxweight filter sits
+    before the score join."""
+    from named_entity_algorithm_project_spark.datagen import (
+        TRANSCRIPTS_SCHEMA,
+        generate_rows,
+    )
+    from named_entity_algorithm_project_spark.operators import linking
+    from named_entity_algorithm_project_spark.operators.extract import (
+        extract_combined,
+    )
+
+    scored = []
+    prefix_join = linking.similarity_pairs_prefix
+
+    def capture(*args, **kwargs):
+        out = prefix_join(*args, **kwargs)
+        scored.append(out)
+        return out
+
+    monkeypatch.setattr(linking, "similarity_pairs_prefix", capture)
+    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
+    rows = generate_rows(n_convs=60, seed=17)
+    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
+    lt = linking.build_linking_tables(extract_combined(df))
+    assert not lt.edges.isLocal() and lt.n_norms < linking.AUTO_BLOCK_MIN_VOCAB
+    assert len(scored) == 1
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    plan = scored[0]._jdf.queryExecution().explainString(mode)
+    n_smj = plan.count(") SortMergeJoin")
+    assert n_smj >= 4, f"{n_smj} SortMergeJoin in the prefix plan:\n{plan}"
+    assert "_maxw" in plan, "AllPairs maxweight filter missing:\n" + plan
+
+
 def test_planted_pair_recall_under_cap(spark, monkeypatch):
     """Linking QUALITY under the df-cap, measured on ground truth the
     generator itself plants (datagen.planted_alias_pairs: dash/fused

@@ -145,3 +145,46 @@ def test_batch_stats_observe_equals_reread(spark, tmp_path, monkeypatch):
         via_fallback = run(tmp_path / "fb", cap=64)
     assert via_fallback == via_reread
     assert sum(v[1] for v in via_observe.values()) > 0
+
+
+def test_empty_input_pipeline(spark, tmp_path, monkeypatch):
+    """Zero-row transcripts run end to end: empty output tables, all-zero
+    metrics at the reference's 0.80 base threshold, and one all-zero
+    lineage row per bucket. Both write-riding observations (the Stage-A
+    batch stats and the per-pred triple counts) must report zeros on a
+    zero-row write rather than fail."""
+    import pyspark.sql
+
+    observed = []
+    real_get = pyspark.sql.Observation.get
+
+    def spy(self):
+        metrics = real_get.fget(self)
+        observed.append(dict(metrics))
+        return metrics
+
+    monkeypatch.setattr(pyspark.sql.Observation, "get", property(spy))
+    df = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
+    n_buckets = 3
+    out = str(tmp_path / "empty")
+    result = run_pipeline(
+        spark, df, out, config=PipelineConfig(n_buckets=n_buckets), resume=False
+    )
+
+    assert result.triples.count() == 0
+    assert result.entities.count() == 0
+    assert result.canonical_map.count() == 0
+    metrics = {r["metric"]: r["value"] for r in result.metrics.collect()}
+    assert metrics.pop("base_threshold") == 0.80
+    assert metrics and set(metrics.values()) == {0.0}
+    zero = (0, 0, 0)
+    assert sorted(
+        (r["bucket"], (r["n_turns"], r["n_mentions"], r["n_abbrevs"]))
+        for r in result.lineage
+    ) == [(b, zero) for b in range(n_buckets)]
+    assert sorted(
+        (r["bucket"], (r["n_turns"], r["n_mentions"], r["n_abbrevs"]))
+        for r in read_lineage(spark, StageAPaths(out)).collect()
+    ) == [(b, zero) for b in range(n_buckets)]
+    assert len(observed) == 2
+    assert all(v == 0 for m in observed for v in m.values())
