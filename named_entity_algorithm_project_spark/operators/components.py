@@ -1,14 +1,15 @@
 """Stage D(i) — connected components over the linking edge list.
 
-Up to the driver bounds (LOCAL_MAX_NODES / LOCAL_MAX_EDGES) the graph is
-collected and solved by union-find on the driver, like the reference's
-single-process DFS. Above them the distributed path runs the alternating
-large-star/small-star rounds of Kiveris et al., "Connected Components in
-MapReduce and Beyond" (SoCC'14): O(log n) rounds on any graph shape, long
-chains included. Labels are the norm strings themselves (total
-lexicographic order), so the component id is the lexicographically
-smallest member — fully deterministic, no monotonically_increasing_id
-anywhere.
+Only edge endpoints need labelling: a node with no edge is its own
+component, labelled by one shared singleton step on either path. Up to
+LOCAL_MAX_EDGES edges the edge list is collected and solved by union-find
+on the driver, like the reference's single-process DFS. Above it the
+distributed path runs the alternating large-star/small-star rounds of
+Kiveris et al., "Connected Components in MapReduce and Beyond" (SoCC'14):
+O(log n) rounds on any graph shape, long chains included. Labels are the
+norm strings themselves (total lexicographic order), so the component id
+is the lexicographically smallest member — fully deterministic, no
+monotonically_increasing_id anywhere.
 
 Reference equivalent: the driver-side DFS at app.py:3185-3211 — verified
 equal by tests/test_components.py against a Python DFS oracle.
@@ -31,17 +32,13 @@ from pyspark.sql import functions as F
 from ..functions.localrel import local_df
 
 
-#: Driver-path bounds: a graph with at most LOCAL_MAX_NODES nodes AND at
-#: most LOCAL_MAX_EDGES edges is collected and solved by union-find on the
-#: driver. A vocabulary graph far smaller than the corpus is a
-#: broadcast-scale dimension, so collecting it is the same judgement call
-#: as broadcasting the canonical map; the edge bound catches a small node
-#: set with a dense gated similarity edge set (hub vocabulary, low
-#: thresholds), which could still collect tens of millions of rows.
-#: Beyond either bound the distributed rounds run. Every constant here is
-#: read at call time; tests force the distributed path with
-#: LOCAL_MAX_NODES = 0.
-LOCAL_MAX_NODES = 200_000
+#: Driver-path bound: an edge list of at most LOCAL_MAX_EDGES rows is
+#: collected and solved by union-find on the driver. The vocabulary graph
+#: is a broadcast-scale dimension; the bound catches a dense gated
+#: similarity edge set (hub vocabulary, low thresholds), which could still
+#: collect tens of millions of rows. Nodes are not gated: singletons never
+#: leave the JVM. Every constant here is read at call time; tests force the
+#: distributed path with LOCAL_MAX_EDGES = 0.
 LOCAL_MAX_EDGES = 2_000_000
 #: Large/small-star round cap; a graph still changing after it raises
 #: rather than return partial labels.
@@ -59,28 +56,22 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         DataFrame (norm, component) where component = lexicographic min of
         the node's component.
     """
-    spark = nodes.sparkSession
-    if LOCAL_MAX_NODES > 0:
-        # ONE bounded limit-collect per input doubles as the size gate AND
-        # the driver-path data. The collects are bounded by the thresholds
-        # (+1 row), so driver memory stays capped even when the gate says
-        # "too big" and the distributed path runs.
-        node_rows = nodes.limit(LOCAL_MAX_NODES + 1).collect()
-        if len(node_rows) <= LOCAL_MAX_NODES:
-            edge_rows = edges.limit(LOCAL_MAX_EDGES + 1).collect()
-            if len(edge_rows) <= LOCAL_MAX_EDGES:
-                mapping = _local_components(
-                    [r[0] for r in node_rows],
-                    [(r[0], r[1]) for r in edge_rows],
-                )
-                return local_df(
-                    spark,
-                    sorted(mapping.items()),
-                    "norm string, component string",
-                )
-    # the distributed result is lazy over `nodes` (its singletons):
-    # materialize them once so no consumer re-runs their upstream DAG
-    return _star_labels(nodes.localCheckpoint(eager=True), edges)
+    # one bounded limit-collect doubles as the size gate AND the driver-path
+    # data; the +1 row keeps driver memory capped when the gate says "too big"
+    edge_rows = edges.limit(LOCAL_MAX_EDGES + 1).collect()
+    if len(edge_rows) <= LOCAL_MAX_EDGES:
+        labels = local_df(
+            nodes.sparkSession,
+            sorted(_local_components(edge_rows).items()),
+            "norm string, component string",
+        )
+    else:
+        labels = _star_labels(edges)
+    # every edge endpoint is labelled; the nodes left over label themselves
+    singletons = nodes.join(
+        labels.select("norm"), "norm", "left_anti"
+    ).select("norm", F.col("norm").alias("component"))
+    return labels.unionByName(singletons)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -141,10 +132,10 @@ def _is_star_forest(e: DataFrame) -> bool:
     return degrees.filter(not_star).limit(1).count() == 0
 
 
-def _star_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+def _star_labels(edges: DataFrame) -> DataFrame:
     """Alternating large-star/small-star to convergence: O(log n) rounds on
     any graph shape. At the fixed point every edge is (member -> component
-    minimum)."""
+    minimum), so the result labels every endpoint of a non-loop edge."""
     # read once, by the first round; every round ends in a distinct, so
     # duplicate input edges need no pass of their own
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
@@ -156,18 +147,15 @@ def _star_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         raise RuntimeError(
             f"star components did not converge in {STAR_MAX_ROUNDS} rounds"
         )
-    # fixed point: e is exactly {(member, min)}; singletons label themselves
-    labels = e.select(F.col("src").alias("norm"), F.col("dst").alias("component"))
-    singletons = nodes.join(
-        labels.select("norm"), "norm", "left_anti"
-    ).select("norm", F.col("norm").alias("component"))
-    return labels.unionByName(singletons)
+    # fixed point: e is exactly {(member, min)}
+    return e.select(F.col("src").alias("norm"), F.col("dst").alias("component"))
 
 
-def _local_components(nodes: list, edges: list) -> dict:
-    """Driver-side union-find for broadcast-scale graphs (same output
-    contract as the distributed path: component = lexicographic min)."""
-    parent = {n: n for n in nodes}
+def _local_components(edges: list) -> dict:
+    """Driver-side union-find over the edge endpoints of a broadcast-scale
+    graph (same output contract as the distributed path: component =
+    lexicographic min)."""
+    parent = {}
     for a, b in edges:
         parent.setdefault(a, a)
         parent.setdefault(b, b)

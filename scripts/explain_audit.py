@@ -174,7 +174,7 @@ def main() -> None:
     out.extend(key_lines(plan_prefix))
     out.append("```")
 
-    components.LOCAL_MAX_NODES = 0  # the distributed rounds
+    components.LOCAL_MAX_EDGES = 0  # the distributed rounds
     comps = connected_components(tables.nodes, tables.edges)
     cmap = pick_canonicals(comps, tables.norms)
     mc = apply_canonical_map(mentions, cmap)

@@ -7,7 +7,9 @@ AUTO df-cap the similarity join engaged, edge counts, and stage walls —
 the evidence that the linking path handles a corpus whose vocabulary looks
 like real transcripts (tens of thousands of distinct entities) rather than
 a recycled toy pool. ``linking_local`` says which path ran: driver-local
-or distributed.
+or distributed. Stage C runs on the same tables: ``n_nodes``,
+``components_local`` (driver union-find, or the distributed star rounds)
+and ``t_components_s`` (``connected_components`` plus a count).
 
 Run serially (no concurrent Spark jobs). Usage:
   PYTHONPATH=/root/repo python scripts/linking_scale_run.py [n_convs] [vocab_scale]
@@ -30,6 +32,7 @@ from named_entity_algorithm_project_spark.datagen import (
     planted_hard_pairs,
     planted_pair_edge_stats,
 )
+from named_entity_algorithm_project_spark.operators import components
 from named_entity_algorithm_project_spark.operators.extract import (
     extract_combined,
 )
@@ -47,6 +50,16 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    # path probe: every call of the distributed rounds is recorded
+    star_calls = []
+    star_labels = components._star_labels
+
+    def spy(edges):
+        star_calls.append(edges)
+        return star_labels(edges)
+
+    components._star_labels = spy
+
     for scale in (1, vocab_scale):
         transcripts = generate_transcripts(
             spark, n_convs=n_convs, seed=42, vocab_scale=scale
@@ -58,6 +71,11 @@ def main():
         linking = build_linking_tables(extracted)
         n_edges = linking.edges.count()
         t_link = time.time() - t0
+        n_nodes = linking.nodes.count()
+        n_star = len(star_calls)
+        t0 = time.time()
+        components.connected_components(linking.nodes, linking.edges).count()
+        t_components = time.time() - t0
 
         # planted-pair QUALITY under the engaged cap (VERDICT r3 item 2):
         # of the generator's dash/fused alias pairs whose BOTH spellings
@@ -83,6 +101,9 @@ def main():
                     "base_threshold": linking.base_threshold,
                     "t_extract_s": round(t_extract, 1),
                     "t_link_s": round(t_link, 1),
+                    "n_nodes": n_nodes,
+                    "components_local": len(star_calls) == n_star,
+                    "t_components_s": round(t_components, 1),
                     "planted_pairs_present": m_present,
                     "planted_pairs_linked": m_hit,
                     "planted_edge_recall": (
