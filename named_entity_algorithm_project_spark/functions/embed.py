@@ -10,8 +10,8 @@ embeds a norm as an L2-normalized bag of feature-hashed char n-grams
 deterministic everywhere, cheap, and string-similar norms (shared n-grams)
 get high cosine — the geometry the linking gates need. A production
 deployment swaps :func:`embed_batch` for a model forward pass; every piece
-of Spark plumbing around it (Arrow-batched UDF, LSH bucketing, gated edge
-union) is unchanged.
+of Spark plumbing around it (the block-pair ``applyInPandas`` scorer,
+gated edge union) is unchanged.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import hashlib
 from typing import List, Sequence
 
 import numpy as np
-import pandas as pd
 
 from .ngrams import char_wb_ngrams
 
@@ -71,24 +70,6 @@ def embed_text(text: str) -> np.ndarray:
 def embed_batch(texts: Sequence[str]) -> np.ndarray:
     """(n, dim) matrix of embeddings — the model-swap point."""
     return np.stack([embed_text(t) for t in texts])
-
-
-def embedding_udf():
-    """Arrow-batched pandas UDF: string column -> array<double> embedding."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    # float64 so Spark-side cosines agree with the numpy parity oracle to
-    # ~1e-15 (a real model swap would emit float32 and halve the bytes —
-    # the threshold gates tolerate either)
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _embed(texts: pd.Series) -> pd.Series:
-        if len(texts) == 0:
-            return pd.Series([], dtype="object")
-        mat = embed_batch([t or "" for t in texts])
-        return pd.Series(list(mat))
-
-    return _embed
 
 
 def cosine_matrix(texts: List[str]) -> np.ndarray:

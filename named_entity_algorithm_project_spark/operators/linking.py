@@ -65,8 +65,10 @@ embedding cosine). At that size the distributed cascade is ~40 Spark jobs
 whose cost is scheduling, not data: the TF-IDF scorer takes about half a
 second on 8k datagen norms, and a whole local linking run on 50k Zipf
 norms 18 s against the cascade's 39 s (BENCH.md). Above the tier the
-distributed path runs: the df-capped prefix join for TF-IDF, the 10x6
-banded LSH (:func:`semantic_pairs_lsh`) for the semantic scorer.
+distributed path runs: the df-capped prefix join for TF-IDF, and for the
+semantic scorer :func:`semantic_block_pairs`, which hashes the norms into
+blocks and runs :func:`embedding_pairs` once per block pair, so semantic
+linking is the exact dense cosine at every size.
 """
 
 from __future__ import annotations
@@ -79,12 +81,13 @@ from functools import partial
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
+import pandas as pd
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS, VALUE_TYPES
-from ..functions.embed import DEFAULT_EMBED_DIM, embed_batch, embedding_udf
+from ..functions.embed import embed_batch
 from ..functions.localrel import local_df
 from ..functions.ngrams import char_wb_ngrams_col, tfidf_vectors
 from ..functions.textnorm import (
@@ -95,7 +98,6 @@ from ..functions.textnorm import (
     normalize_entity_col,
     types_compatible_col,
 )
-from .similarity import _signature_udf, band_join, band_rows, dot
 
 #: A heavy df-cap can strip so much squared mass that the
 #: Cauchy–Schwarz suffix rule yields an EMPTY prefix; this
@@ -470,69 +472,99 @@ def tfidf_prefix_pairs(
 
 
 def embedding_pairs(
-    norms: List[str], gate_floor: float
+    *blocks: List[str], gate_floor: float
 ) -> Dict[Tuple[str, str], float]:
-    """The driver-local linker's semantic scorer: the reference's dense
-    embedding cosine (app.py:3084-3110) over :func:`embed.embed_batch`,
-    returning ``{(a, b): score}`` (a < b) for the pairs scoring
+    """The semantic kernel: the reference's dense embedding cosine
+    (app.py:3084-3110) over :func:`embed.embed_batch`, returning
+    ``{(a, b): score}`` (a < b) for the pairs scoring
     >= ``gate_floor - 1e-9``, the contract of :func:`tfidf_prefix_pairs`.
+    One block of norms scores the pairs within it (the driver-local
+    linker's scorer); two blocks score the pairs across them (one block
+    pair of :func:`semantic_block_pairs`).
 
-    A row-blocked matmul over the upper triangle prefilters the pairs (one
-    more 1e-9 of margin, so BLAS rounding never drops one); each survivor's
-    score is then recomputed as a sequential float64 sum over the
-    dimensions, the summation order of :func:`similarity.dot`, so a pair
-    :func:`semantic_pairs_lsh` also emits carries the same bits."""
-    if not norms:
+    A row-chunked matmul prefilters the pairs (one more 1e-9 of margin, so
+    BLAS rounding never drops one); each survivor's score is then
+    recomputed as a sequential float64 sum over the dimensions, so a
+    pair's score bits never depend on which block scored it."""
+    lo, hi = blocks[0], blocks[-1]
+    if not lo or not hi:
         return {}
-    mat = embed_batch(norms)
-    n = len(norms)
+    same = len(blocks) == 1
+    mat_lo = embed_batch(lo)
+    mat_hi = mat_lo if same else embed_batch(hi)
     t_eff = max(gate_floor - 1e-9, 0.0)
-    # ~8M similarities (64 MB) per block, whatever the vocabulary size
-    block = max(1, (1 << 23) // n)
+    # ~8M similarities (64 MB) per row chunk, whatever the block sizes
+    chunk = max(1, (1 << 23) // len(hi))
     out: Dict[Tuple[str, str], float] = {}
-    for i0 in range(0, n, block):
-        sims = mat[i0 : i0 + block] @ mat[i0:].T
+    for i0 in range(0, len(lo), chunk):
+        # within one block only the upper triangle is scored
+        j0 = i0 if same else 0
+        sims = mat_lo[i0 : i0 + chunk] @ mat_hi[j0:].T
         ii, jj = np.nonzero(sims >= t_eff - 1e-9)
-        upper = jj > ii
-        i, j = ii[upper] + i0, jj[upper] + i0
-        scores = np.cumsum(mat[i] * mat[j], axis=1)[:, -1]
+        if same:
+            upper = jj > ii
+            ii, jj = ii[upper], jj[upper]
+        i, j = ii + i0, jj + j0
+        scores = np.cumsum(mat_lo[i] * mat_hi[j], axis=1)[:, -1]
         for a, b, score in zip(i.tolist(), j.tolist(), scores.tolist()):
             if score >= t_eff:
-                x, y = norms[a], norms[b]
+                x, y = lo[a], hi[b]
                 out[(x, y) if x < y else (y, x)] = score
     return out
 
 
-def semantic_pairs_lsh(
-    norms: DataFrame, bands: int = 10, band_bits: int = 6
-) -> DataFrame:
-    """The distributed semantic scorer: banded random-hyperplane LSH blocks
-    the candidate space (a pair is a candidate when ANY band of
-    sign-projection bits matches exactly), then exact cosine re-ranks
-    inside the blocks.
+def semantic_block_pairs(norms: DataFrame, gate_floor: float) -> DataFrame:
+    """The semantic scorer above the local tier: exactly
+    :func:`embedding_pairs` of the whole vocabulary, as (a, b, score)
+    rows, partitioned so no Python worker holds more than two blocks.
 
-    Recall for a pair with cosine c: per-plane agreement p = 1 - acos(c)/π,
-    candidate prob = 1 - (1 - p^band_bits)^bands. The 10x6 default keeps
-    candidate volume bounded above the local tier and measured 0.96 recall
-    at the 0.80 gate at 40k and 100k norms (BENCH.md); raise ``bands`` for
-    more recall, ``band_bits`` for tighter blocks. Every emitted score is
-    exact, so the pairs are a subset of the dense cosine's (tested)."""
-    n_planes = bands * band_bits
-    if n_planes > 63:
-        # the signature packs one bit per plane into a single signed long
-        raise ValueError(
-            f"bands*band_bits={n_planes} exceeds the 63-bit signature; "
-            "raise band_bits (tighter blocks) instead of bands past this"
+    Each norm goes to block ``pmod(xxhash64(norm), nb)`` and is copied to
+    every block pair ``(lo, hi)`` holding its block; one
+    ``applyInPandas`` task per pair runs the kernel (the self pair scores
+    within its block, the others across their two). ``nb`` is the
+    smallest count giving at least ``spark.sql.shuffle.partitions`` block
+    pairs, raised until no block exceeds ``AUTO_BLOCK_MIN_VOCAB`` norms
+    (one driver-tier vocabulary). The explicit repartition fixes the stage
+    at nb(nb+1)/2 tasks, which AQE does not coalesce (without it AQE
+    folded 10 block pairs into 2 tasks); the pairs are hash-partitioned,
+    so one task can still hold several."""
+    spark = norms.sparkSession
+    n_pairs = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nb = 1
+    while nb * (nb + 1) // 2 < n_pairs:
+        nb += 1
+    while True:
+        blocked = norms.select(
+            "norm", F.pmod(F.xxhash64("norm"), F.lit(nb)).alias("block")
         )
-    emb = norms.select("norm", embedding_udf()(F.col("norm")).alias("v")).withColumn(
-        "sig", _signature_udf(DEFAULT_EMBED_DIM, n_planes)(F.col("v"))
-    )
+        sizes = blocked.groupBy("block").count()
+        if (sizes.agg(F.max("count")).first()[0] or 0) <= AUTO_BLOCK_MIN_VOCAB:
+            break
+        nb += 1
+
+    def score(key, pdf):
+        blocks = [pdf.norm[pdf.block == b].tolist() for b in sorted(set(key))]
+        pairs = embedding_pairs(*blocks, gate_floor=gate_floor)
+        return pd.DataFrame(
+            {
+                "a": [a for a, _ in pairs],
+                "b": [b for _, b in pairs],
+                "score": np.fromiter(pairs.values(), np.float64, len(pairs)),
+            }
+        )
+
+    k = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
     return (
-        band_join(band_rows(emb, "sig", bands, band_bits), "norm", "v")
-        .select("a", "b", dot(F.col("v_a"), F.col("v_b")).alias("score"))
-        # a pair can collide in several bands; scores are identical
-        .groupBy("a", "b")
-        .agg(F.max("score").alias("score"))
+        blocked.select("norm", "block", k.alias("k"))
+        .select(
+            "norm",
+            "block",
+            F.least("block", "k").alias("lo"),
+            F.greatest("block", "k").alias("hi"),
+        )
+        .repartition(nb * (nb + 1) // 2, "lo", "hi")
+        .groupBy("lo", "hi")
+        .applyInPandas(score, "a string, b string, score double")
     )
 
 
@@ -648,8 +680,10 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
 #: Python scorers (:func:`tfidf_prefix_pairs`, :func:`embedding_pairs`)
 #: beat the ~40-job Spark cascade, whose cost is job scheduling at this
 #: size (BENCH.md, driver-local crossover). Above it the distributed path
-#: runs. Read at call time, so tests force the distributed path by setting
-#: it to 0.
+#: runs; its semantic scorer splits the vocabulary into blocks of at most
+#: ``AUTO_BLOCK_MIN_VOCAB`` norms (one such tier each) and scores the same
+#: pairs with the same bits. Read at call time, so tests force the
+#: distributed path by setting it to 0.
 LOCAL_MAX_VOCAB = AUTO_BLOCK_MIN_VOCAB
 #: bounded-collect guard for the fused table: one row per (norm, type) and
 #: per abbreviation pair, 1.1-1.25 rows per norm on datagen vocabularies,
@@ -721,7 +755,8 @@ def build_linking_tables(
     "semantic" (L4, the embedding cosine — the reference's use_semantic
     path, app.py:3084-3110); anything else raises ``ValueError``. Up to
     ``LOCAL_MAX_VOCAB`` norms either scorer links exactly on the driver;
-    above it "semantic" runs the banded LSH of :func:`semantic_pairs_lsh`.
+    above it "semantic" runs the same exact kernel per block pair
+    (:func:`semantic_block_pairs`).
 
     The df-cap is :func:`auto_df_cap` of the measured vocabulary: exact (no
     n-gram dropped) up to ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else
@@ -852,7 +887,9 @@ def build_linking_tables(
 
     # --- similarity edges -----------------------------------------------------
     if score_source == "semantic":
-        scored = semantic_pairs_lsh(profiles.select("norm"))
+        scored = semantic_block_pairs(
+            profiles.select("norm"), adaptive_threshold_floor(base)
+        )
     else:
         # the df-cap keep-list and the prefix join both consume the weights
         # — materialize them once

@@ -1,8 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
   dot / cosine        the dense dot product and cosine Column expressions
-                      (zip_with + aggregate, double accumulation) — every
-                      embedding scorer in the package builds on these two
+                      (zip_with + aggregate, double accumulation), serving
+                      q14/q15 and lsh_topk's re-rank (semantic linking
+                      scores in numpy: linking.embedding_pairs)
   cosine_scores       (id, cos_sim) against a literal query vector; the
                       exact re-rank inside lsh_topk (q14/q15's brute-force
                       top-k is queries._topk_to_vec0 over ``cosine``)
@@ -11,9 +12,6 @@
                       matmul, not dim x n_planes expression nodes)
   lsh_topk            bucketed ANN: probe matching buckets only, exact
                       re-rank inside — the scale path
-  band_rows/band_join banded-signature candidate pairs: a pair is a
-                      candidate when its signatures agree on any band
-                      (semantic-LSH linking)
 
 At 100 TB the brute-force scan is one full pass (fine for one-off queries,
 wrong for query streams); rp_lsh assigns each vector to a signature bucket
@@ -150,39 +148,3 @@ def lsh_topk(
         .limit(k)
     )
 
-
-def band_rows(frame: DataFrame, sig_col: str, bands: int, bits: int) -> DataFrame:
-    """``frame`` with one row per signature band, plus (band, key): band k
-    of the integer signature is ``(sig >> k*bits) & (2^bits - 1)``."""
-    mask = F.lit((1 << bits) - 1)
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright(F.col(sig_col), k * bits).bitwiseAND(mask).alias("key"),
-            )
-            for k in range(bands)
-        ]
-    )
-    return frame.withColumn("_bk", F.explode(keys)).select(
-        *frame.columns, "_bk.band", "_bk.key"
-    )
-
-
-def band_join(
-    banded: DataFrame, id_col: str, payload: str | None = None
-) -> DataFrame:
-    """Candidate pairs from banded rows (``id_col``, band, key[, payload]):
-    every id pair agreeing on at least one band's key, as (a, b) with
-    a < b, plus ``payload_a``/``payload_b`` when a payload column is
-    named. A pair appears once per agreeing band; callers dedup."""
-
-    def side(name: str) -> DataFrame:
-        cols = [F.col(id_col).alias(name), "band", "key"]
-        if payload is not None:
-            cols.append(F.col(payload).alias(f"{payload}_{name}"))
-        return banded.select(*cols)
-
-    return side("a").join(side("b"), ["band", "key"]).filter(
-        F.col("a") < F.col("b")
-    )

@@ -68,8 +68,8 @@ class PipelineConfig:
     # no-op for the deterministic detector
     extend_vocab: bool = False
     # linking candidate scorer: "tfidf" (reference primary path) or
-    # "semantic" (L4 embedding cosine: exact on the driver up to
-    # linking.LOCAL_MAX_VOCAB norms, banded LSH above it)
+    # "semantic" (L4 embedding cosine: exact at every size, on the driver
+    # up to linking.LOCAL_MAX_VOCAB norms, per block pair above it)
     score_source: str = "tfidf"
 
 

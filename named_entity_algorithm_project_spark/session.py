@@ -74,10 +74,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     measured) inside whatever query happens to run it. One tiny untimed
     mapInPandas here makes that cost a session-setup constant instead of a
     per-workload surprise; workers persist via spark.python.worker.reuse
-    (the default). Disable with SPARK_GRAFT_PREWARM_PYTHON=0 (pure-JVM
-    workloads that never cross the Python boundary)."""
-    if os.environ.get("SPARK_GRAFT_PREWARM_PYTHON", "1") == "0":
-        return
+    (the default)."""
     if getattr(spark, "_kg_python_prewarmed", False):
         return
     try:

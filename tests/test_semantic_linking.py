@@ -1,9 +1,7 @@
-"""L4 semantic-embedding linking: stub embedder, driver-local and LSH
-scoring parity vs the numpy N² oracle, and end-to-end canonical-map parity
-through the shared gate cascade (reference use_semantic path,
-app.py:3084-3110)."""
-
-import inspect
+"""L4 semantic-embedding linking: stub embedder, driver-local and
+block-pair scoring parity vs the numpy N² oracle, and end-to-end
+canonical-map parity through the shared gate cascade (reference
+use_semantic path, app.py:3084-3110)."""
 
 import numpy as np
 import pandas as pd
@@ -16,7 +14,7 @@ from named_entity_algorithm_project_spark.functions.embed import (
 )
 from named_entity_algorithm_project_spark.operators.linking import (
     embedding_pairs,
-    semantic_pairs_lsh,
+    semantic_block_pairs,
 )
 
 NORMS = [
@@ -86,36 +84,11 @@ def test_semantic_exact_matches_numpy_oracle():
     assert embedding_pairs([], gate_floor=0.82) == {}
 
 
-def test_semantic_lsh_subset_with_exact_scores_and_recall(spark):
-    df = spark.createDataFrame([(x,) for x in NORMS], "norm string")
-    exact = _dense_cosines()
-    lsh = {
-        (r["a"], r["b"]): r["score"]
-        for r in semantic_pairs_lsh(df, bands=8, band_bits=4).collect()
-    }
-    # candidates are a subset; every emitted score is the exact cosine
-    assert set(lsh) <= set(exact)
-    for k, v in lsh.items():
-        assert v == pytest.approx(exact[k], abs=1e-12)
-    # the driver-local scorer sums in the same order as the Spark dot, so a
-    # pair both emit carries the same bits
-    local = embedding_pairs(NORMS, gate_floor=0.5)
-    shared = set(lsh) & set(local)
-    assert shared
-    assert all(lsh[k] == local[k] for k in shared)
-    # banded-LSH recall on high-cosine pairs (deterministic planes: this is
-    # a fixed fact of the seeded fixture, not a flaky sample)
-    hot = {k for k, v in exact.items() if v >= 0.9}
-    assert hot
-    recall = len(hot & set(lsh)) / len(hot)
-    assert recall >= 0.8, f"banded-LSH recall {recall:.2f} on cosine>=0.9"
-
-
 def test_semantic_end_to_end_canonical_parity(spark, monkeypatch):
     """Full Stage B+C with score_source=semantic vs the pandas oracle
     running the SAME gates over the numpy N² cosine matrix. The vocabulary
     is below the local tier, so the driver-local linker runs; the forced
-    distributed (LSH) linker finds a subset of its edges."""
+    distributed (block-pair) linker finds the same edges."""
     from named_entity_algorithm_project_spark import oracle as okg
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
@@ -164,8 +137,86 @@ def test_semantic_end_to_end_canonical_parity(spark, monkeypatch):
     assert not dist.edges.isLocal()
     edges = {(r["src"], r["dst"]) for r in tables.edges.collect()}
     dist_edges = {(r["src"], r["dst"]) for r in dist.edges.collect()}
-    assert dist_edges <= edges, dist_edges - edges
+    assert dist_edges == edges, dist_edges ^ edges
 
+
+def _block_of(spark, nb):
+    """{norm: block} for NORMS, by the block-pair scorer's routing rule."""
+    df = spark.createDataFrame([(x,) for x in NORMS], "norm string")
+    return {
+        r["norm"]: r["block"]
+        for r in df.select(
+            "norm", F.pmod(F.xxhash64("norm"), F.lit(nb)).alias("block")
+        ).collect()
+    }
+
+
+def test_block_pair_scorer_equals_embedding_pairs(spark, monkeypatch):
+    """The partitioned semantic scorer is embedding_pairs of the whole
+    vocabulary, bit for bit, and its applyInPandas stage runs
+    nb(nb+1)/2 tasks. Leg 1: 171 shuffle partitions give 18 blocks for
+    15 norms, so some blocks are empty, and one hot pair shares a block.
+    Leg 2: a 3-norm block bound raises nb past the 4 blocks that 8
+    partitions give."""
+    from named_entity_algorithm_project_spark.operators import linking
+
+    floor = 0.5
+    want = embedding_pairs(NORMS, gate_floor=floor)
+    df = spark.createDataFrame([(x,) for x in NORMS], "norm string")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(n_partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
+        try:
+            scored = semantic_block_pairs(df, floor)
+            got = {(r["a"], r["b"]): r["score"] for r in scored.collect()}
+            n_tasks = scored.rdd.getNumPartitions()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        assert got == want  # float == float: the same bits
+        nb = next(nb for nb in range(1, 64) if nb * (nb + 1) // 2 >= n_tasks)
+        assert n_tasks == nb * (nb + 1) // 2
+        return nb, _block_of(spark, nb)
+
+    nb, block = run(171)
+    assert nb == 18 and len(set(block.values())) < nb  # an empty block
+    assert any(block[a] != block[b] for a, b in want)  # a cross-block pair
+    assert any(block[a] == block[b] for a, b in want)  # a same-block pair
+
+    monkeypatch.setattr(linking, "AUTO_BLOCK_MIN_VOCAB", 3)
+    nb, block = run(8)
+    assert nb > 4
+    assert max(list(block.values()).count(b) for b in range(nb)) <= 3
+
+    # the two-block kernel alone: exactly the pairs across the split
+    lo, hi = NORMS[:7], NORMS[7:]
+    across = embedding_pairs(lo, hi, gate_floor=floor)
+    assert across == {
+        k: v for k, v in want.items() if (k[0] in lo) != (k[1] in lo)
+    }
+
+
+def test_distributed_semantic_links_what_the_driver_links(spark, monkeypatch):
+    """4,000 Zipf norms (scripts/linking_bench.build_vocab, seed 5): the
+    forced-distributed semantic linker gates the same edges as the driver.
+    The size is chosen so an approximate scorer shows: a 10x6 banded LSH
+    drops 2 of the 60 gated edges here."""
+    from named_entity_algorithm_project_spark.operators import linking
+    from scripts.linking_bench import build_vocab
+
+    mentions = [(n, "MATERIAL") for n in build_vocab(4000, seed=5)]
+    frame = spark.createDataFrame(
+        [((mentions, []),)],
+        "ex struct<mentions: array<struct<entity: string, entity_type: string>>,"
+        " abbreviations: array<struct<abbr: string, expansion: string>>>",
+    )
+    local = linking.build_linking_tables(frame, score_source="semantic")
+    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
+    dist = linking.build_linking_tables(frame, score_source="semantic")
+    assert local.edges.isLocal() and not dist.edges.isLocal()
+    want = {(r["src"], r["dst"]) for r in local.edges.collect()}
+    got = {(r["src"], r["dst"]) for r in dist.edges.collect()}
+    assert want and got == want, (len(want), got ^ want)
 
 def test_pipeline_accepts_semantic_score_source(spark, tmp_path):
     from named_entity_algorithm_project_spark.datagen import (
@@ -187,70 +238,6 @@ def test_pipeline_accepts_semantic_score_source(spark, tmp_path):
         resume=False,
     )
     assert res.triples.count() > 0
-
-
-def test_band_knobs_thread_through_and_cap_enforced(spark):
-    """semantic_pairs_lsh's bands/band_bits dials: more bands -> more
-    candidates at identical exact scores, and the 63-plane signature cap
-    raises a clear error."""
-    from named_entity_algorithm_project_spark.operators.linking import (
-        semantic_pairs_lsh,
-    )
-
-    norms = [f"poly{i}material" for i in range(60)] + [
-        "polyAmaterial", "polyAmateria1",
-    ]
-    df = spark.createDataFrame([(n,) for n in norms], "norm string")
-    # NOTE: different (bands, band_bits) combos reseed the hyperplane set
-    # (n_planes changes), so candidate sets are NOT nested across configs —
-    # the invariant is that every emitted score is the exact cosine.
-    import numpy as np
-
-    from named_entity_algorithm_project_spark.functions.embed import embed_batch
-
-    emb = {n: v for n, v in zip(norms, embed_batch(norms))}
-    few = semantic_pairs_lsh(df, bands=2, band_bits=4).collect()
-    many = semantic_pairs_lsh(df, bands=12, band_bits=4).collect()
-    assert len(many) > len(few)  # 12 bands collide far more than 2
-    for r in few + many:
-        assert abs(r["score"] - float(emb[r["a"]] @ emb[r["b"]])) < 1e-9
-
-    with pytest.raises(ValueError, match="63"):
-        semantic_pairs_lsh(df, bands=16, band_bits=4)  # 64 planes
-
-
-def test_distributed_semantic_build_runs_lsh_at_10x6(spark, monkeypatch):
-    """Above the local tier the semantic scorer is the banded LSH at the
-    measured 10x6 scale tier, taken from the function's defaults."""
-    from named_entity_algorithm_project_spark.datagen import (
-        TRANSCRIPTS_SCHEMA,
-        generate_rows,
-    )
-    from named_entity_algorithm_project_spark.operators import linking
-    from named_entity_algorithm_project_spark.operators.extract import (
-        extract_combined,
-    )
-
-    rows = generate_rows(n_convs=10, seed=5)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    extracted = extract_combined(df).localCheckpoint(eager=True)
-
-    calls = []
-    real = linking.semantic_pairs_lsh
-
-    def spy(*args, **kwargs):
-        bound = inspect.signature(real).bind(*args, **kwargs)
-        bound.apply_defaults()
-        calls.append((bound.arguments["bands"], bound.arguments["band_bits"]))
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(linking, "semantic_pairs_lsh", spy)
-    local = linking.build_linking_tables(extracted, score_source="semantic")
-    assert calls == [] and local.edges.isLocal()
-
-    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
-    linking.build_linking_tables(extracted, score_source="semantic")
-    assert calls == [(10, 6)]
 
 
 @pytest.mark.parametrize(
