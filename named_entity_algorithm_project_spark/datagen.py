@@ -164,8 +164,8 @@ def planted_pair_edge_stats(
     """(n_present, n_linked) for a ground-truth pair list against a linking
     result: how many pairs have BOTH norms in the extracted vocabulary, and
     how many of those are a direct (least, greatest) edge. Shared by
-    scripts/linking_scale_run.py, scripts/prefix_bench.py and the recall
-    test so the 'planted recall' definition cannot drift between them."""
+    scripts/linking_scale_run.py and the recall test so the 'planted
+    recall' definition cannot drift between them."""
     from pyspark.sql import functions as F
 
     if not pairs:

@@ -3,9 +3,11 @@
 The reference scores entity-linking candidates with
 ``TfidfVectorizer(analyzer="char_wb", ngram_range=(3, 5))`` + cosine
 (app.py:3046-3067). To reproduce those scores exactly — while replacing the
-O(N²) dense matrix with a distributed inverted-index join — both the Spark
-stage and the pandas oracle share this generator and the same TF-IDF
-formula (smooth idf: ln((1+N)/(1+df)) + 1, raw tf, L2 normalization).
+O(N²) dense matrix with a partitioned prefix-filtered join — the linker's
+kernel and the pandas oracle share this generator and the same TF-IDF
+formula (smooth idf: ln((1+N)/(1+df)) + 1, raw tf, L2 normalization); the
+distributed linker counts each gram's document frequency with the Column
+form (:func:`char_wb_ngrams_col`).
 
 The vectorizer's default preprocessing (``lowercase=True``) applies here
 too: case variants of a term (PCE / pce) must share n-grams exactly as the
@@ -16,7 +18,7 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Dict, List
+from typing import Dict, List, Mapping, Optional, Tuple
 
 _WS = re.compile(r"\s\s+")
 
@@ -93,17 +95,23 @@ def tf_counts(text: str) -> Dict[str, int]:
     return counts
 
 
-def tfidf_vectors(texts: List[str]) -> List[Dict[str, float]]:
-    """The Python form of ``linking.tfidf_weights``: one L2-normalized
-    smooth TF-IDF vector (raw tf, idf = ln((1+N)/(1+df)) + 1) per text,
-    keyed by n-gram in first-occurrence order; ``{}`` when a text has no
-    n-grams. Both Python similarity scorers build their vectors here."""
-    n = len(texts)
+def tfidf_vectors(
+    texts: List[str], doc_freq: Optional[Tuple[int, Mapping[str, int]]] = None
+) -> List[Dict[str, float]]:
+    """One L2-normalized smooth TF-IDF vector (raw tf, idf =
+    ln((1+N)/(1+df)) + 1) per text, keyed by n-gram in first-occurrence
+    order; ``{}`` when a text has no n-grams. ``doc_freq`` is the
+    vocabulary's ``(N, {gram: df})`` when ``texts`` are only part of it (a
+    block of the distributed linker); by default ``texts`` are the whole
+    vocabulary. Every Python similarity scorer builds its vectors here."""
     counts = [tf_counts(t) for t in texts]
-    df: Dict[str, int] = {}
-    for c in counts:
-        for g in c:
-            df[g] = df.get(g, 0) + 1
+    if doc_freq is None:
+        df: Dict[str, int] = {}
+        for c in counts:
+            for g in c:
+                df[g] = df.get(g, 0) + 1
+        doc_freq = (len(texts), df)
+    n, df = doc_freq
     idf = {g: math.log((1.0 + n) / (1.0 + d)) + 1.0 for g, d in df.items()}
     vecs: List[Dict[str, float]] = []
     for c in counts:

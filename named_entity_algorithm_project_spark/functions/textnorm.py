@@ -1,20 +1,25 @@
 """Text normalization scalars (reference: app.py:1419-1422, 2793-3024).
 
 Each has a pure-python form (used inside Arrow-batched UDFs and the pandas
-test oracle) and, where useful, a Column-expression form so Catalyst can run
-it JVM-side in relational stages. The linking rules (norm trim, short-vs-long
-guard, adaptive threshold, type compatibility) have exactly one definition
-each here; the oracle, the driver-local linker and the distributed gate all
-use them.
+test oracle) and, where a relational stage needs it, a Column-expression form
+so Catalyst can run it JVM-side (the norm trim in the vocabulary scan, type
+compatibility in the abbreviation gate). The linking rules (norm trim,
+short-vs-long guard, adaptive threshold, type compatibility) have exactly one
+definition each here, and :func:`gate_pair_scores` is the one cascade
+over them: the oracle, the driver-local linker and every block-pair task of
+the distributed linker run it.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from typing import Dict, Iterable, Mapping, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..dictionaries import PROTECTED_TERMS
 
 _WS_RE = re.compile(r"\s+")
 _NON_ALNUM_RE = re.compile(r"[^a-z0-9\s]")
@@ -73,16 +78,6 @@ def can_merge_terms(a: str, b: str) -> bool:
     return True
 
 
-def can_merge_terms_col(a: Column, b: Column) -> Column:
-    """Column form of :func:`can_merge_terms`."""
-    min_len = F.least(F.length(a), F.length(b))
-    return (
-        (a != b)
-        & (min_len > 0)
-        & ((min_len > 2) | (F.length(a) == F.length(b)))
-    )
-
-
 def adaptive_threshold(term: str, base: float) -> float:
     """Per-term similarity floor by compact length (app.py:3003-3012)."""
     length = len((term or "").replace(" ", ""))
@@ -102,18 +97,6 @@ def adaptive_threshold_floor(base: float) -> float:
     gate below ``max(base, 0.82)``. This is the exactness bound the
     prefix-filtered similarity join prunes against (linking.py)."""
     return max(base, 0.82)
-
-
-def adaptive_threshold_col(term: Column, base: float) -> Column:
-    """Column form of :func:`adaptive_threshold` for the candidate-pair table."""
-    length = F.length(F.replace(term, F.lit(" "), F.lit("")))
-    b = F.lit(float(base))
-    return (
-        F.when(length <= 3, F.greatest(F.lit(0.95), b))
-        .when(length <= 4, F.greatest(F.lit(0.92), b))
-        .when(length <= 6, F.greatest(F.lit(0.88), b))
-        .otherwise(F.greatest(b, F.lit(0.82)))
-    )
 
 
 def types_compatible(types_a, types_b) -> bool:
@@ -137,6 +120,27 @@ def types_compatible_col(types_a: Column, types_b: Column) -> Column:
     return F.when(both_clean, F.arrays_overlap(clean_a, clean_b)).otherwise(
         both_empty
     )
+
+
+def gate_pair_scores(
+    pairs: Mapping[Tuple[str, str], float],
+    types: Mapping[str, Iterable[str]],
+    base: float,
+) -> Dict[Tuple[str, str], float]:
+    """The reference's similarity-edge gate (app.py:3140-3183) over scored
+    ``{(a, b): score}`` pairs, whatever scorer produced them: a pair passes
+    unless both ends are protected, if its score reaches the lower of the
+    two per-term :func:`adaptive_threshold` floors (the reference takes
+    the *min*, app.py:3172-3176), if :func:`can_merge_terms` allows it and
+    if the ends' effective ``types`` are compatible."""
+    return {
+        (a, b): score
+        for (a, b), score in pairs.items()
+        if not (a in PROTECTED_TERMS and b in PROTECTED_TERMS)
+        and score >= min(adaptive_threshold(a, base), adaptive_threshold(b, base))
+        and can_merge_terms(a, b)
+        and types_compatible(types[a], types[b])
+    }
 
 
 def compute_base_threshold(n_rows: int) -> float:

@@ -4,49 +4,15 @@ The reference builds an all-pairs TF-IDF cosine matrix over unique entity
 norms (O(N²), app.py:3046-3067) and gates edges with adaptive thresholds,
 length guards, protected terms and type compatibility (app.py:3140-3183).
 
-Here the same *scores* come from a distributed inverted-index self-join:
+Here one Python kernel per scorer computes the same *scores* without the
+N² matrix: :func:`tfidf_prefix_pairs` (ppjoin-style prefix filtering —
+Bayardo et al., "Scaling Up All Pairs Similarity Search", WWW'07 — then
+the exact cosine of each surviving candidate) or :func:`embedding_pairs`
+(a blocked matmul over the dense embeddings). Each takes one block of
+norms (the pairs within it) or two (the pairs across them) and returns
+the pairs at or above the gate floor with the bits of the one-block run.
+The gate cascade (:func:`textnorm.gate_pair_scores`) runs on them:
 
-    norms --(ngrams UDF)--> explode --> tf --> idf (smooth) --> L2 weights
-    weights ⋈ weights ON ngram  (a.norm < b.norm)
-      --> pair-sum --> cosine per pair --> gate --> edges
-
-This is exact (same formula as sklearn TfidfVectorizer char_wb 3-5 +
-cosine_similarity) but never materializes N² — only pairs that share at
-least one n-gram, which is also the only set that can score > 0.
-
-The candidate join tightens this further with ppjoin-style prefix
-filtering (:func:`similarity_pairs_prefix`): only pairs sharing a gram in
-one side's high-weight PREFIX can reach the gate floor (Cauchy–Schwarz
-over the low-weight suffixes), so the join volume falls from Σ_g df_g² to
-Σ_g df_g·prefix_df_g — measured 15× on a 62k-norm corpus with the
-identical gated edge set (scripts/prefix_bench.py). The naive
-:func:`similarity_pairs` stays as the tests' reference for it.
-
-Skew: the pair-sum is one groupBy(a, b). A pair has at most as many
-partial products as shared n-grams, and Spark's partial aggregation
-combines them map-side, so a hub pair reaches its reducer as a handful of
-partial sums; AQE splits skewed join partitions. The real hazard is the
-join *output*, quadratic in per-n-gram document frequency: an n-gram
-present in 10⁶ norms emits ~10¹² candidate rows before any aggregation.
-The df-cap drops such n-grams from candidate generation entirely (the
-classic prefix-filtered similarity join). The linker sets it from the
-measured vocabulary alone (:func:`auto_df_cap`): above
-``AUTO_BLOCK_MIN_VOCAB`` unique norms (50k) it is ``min(5% of the
-vocabulary, AUTO_BLOCK_DF_ABS)`` — the absolute bound matters because the
-join output is Σ_g df_g², quadratic in per-gram df whatever the fraction;
-at or below the tier the small-corpus reference parity is exact; above
-it the cap is what makes the join feasible at all. The operator-level
-joins (:func:`similarity_pairs`, :func:`similarity_pairs_prefix`) take
-the cap as ``candidate_max_df``. Dropping a df>5%·N
-n-gram loses little signal (its smooth idf is near the 1.0 floor, so it
-contributes the least cosine mass): the capped score is a LOWER BOUND on
-the exact cosine, measured short by <=0.06 with >=0.99 retention of pairs
-0.05 above the threshold (tests/test_linking.py::test_auto_blocking_recall),
-and the abbreviation/alias edge unions carry most true merges anyway
-(SURVEY §7.4).
-
-Edge gates (reference parity, app.py:3140-3183; each scalar rule has one
-Python and one Column definition in functions/textnorm.py):
   * protected-term pairs never merge (both endpoints protected)
   * score >= min(adaptive_threshold(a), adaptive_threshold(b))   [sic — the
     reference takes the *min* of the two per-term floors, app.py:3172-3176]
@@ -56,29 +22,41 @@ Python and one Column definition in functions/textnorm.py):
     reference mutates type sets sequentially per link — we pin the
     order-free one-round union, gated on the original sets)
 
-Every vocabulary up to ``AUTO_BLOCK_MIN_VOCAB`` norms skips Spark,
-whichever scorer is selected: the driver collects the fused vocabulary
-table and runs the same cascade in Python (:func:`oracle.link_vocabulary`,
-shared with the pandas oracle), scored by :func:`tfidf_prefix_pairs` (the
-Python form of the prefix join) or :func:`embedding_pairs` (the dense
-embedding cosine). At that size the distributed cascade is ~40 Spark jobs
-whose cost is scheduling, not data: the TF-IDF scorer takes about half a
-second on 8k datagen norms, and a whole local linking run on 50k Zipf
-norms 18 s against the cascade's 39 s (BENCH.md). Above the tier the
-distributed path runs: the df-capped prefix join for TF-IDF, and for the
-semantic scorer :func:`semantic_block_pairs`, which hashes the norms into
-blocks and runs :func:`embedding_pairs` once per block pair, so semantic
-linking is the exact dense cosine at every size.
+Every vocabulary up to ``LOCAL_MAX_VOCAB`` norms skips Spark, whichever
+scorer is selected: the driver collects the fused vocabulary table and
+runs the cascade (:func:`oracle.link_vocabulary`, shared with the pandas
+oracle) with the one-block kernel. At that size a distributed cascade is
+dozens of Spark jobs whose cost is scheduling, not data: the TF-IDF scorer
+takes about half a second on 8k datagen norms, and a whole local linking
+run on 50k Zipf norms 18 s against the former Column cascade's 39 s
+(BENCH.md). Above the tier :func:`gated_block_pairs` partitions the
+vocabulary (the split-join-verify-once plan of "Scalable and Robust Set
+Similarity Join", ICDE'18): each norm is hashed to one of ``nb`` blocks
+and one ``applyInPandas`` task per block pair runs the kernel and the gate
+on its one or two blocks, so every pair is scored once, by the kernel the
+driver runs. The TF-IDF tasks take each gram's vocabulary document
+frequency from one Spark count, so their vectors are the whole
+vocabulary's.
+
+The df-cap: above ``AUTO_BLOCK_MIN_VOCAB`` norms (50k) n-grams with df
+over :func:`auto_df_cap` drop out of TF-IDF candidate generation — the
+Σ_g df_g² candidate volume is quadratic in per-gram df whatever the
+vocabulary's size, so the cap has an absolute bound. Capped grams still
+score: every emitted score is the exact full-vector cosine, and the
+rarest ``MIN_PREFIX_RANK`` sub-cap grams of every norm stay candidates,
+so case/morphology variants whose similarity lives in rare grams stay
+reachable (tests/test_linking.py pins the margin recall and the
+planted-pair recall under the cap). The abbreviation/alias edge unions
+carry most true merges anyway (SURVEY §7.4).
 """
 
 from __future__ import annotations
 
-import os
-from collections import defaultdict
+from collections import Counter, defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import partial
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Mapping, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -91,10 +69,9 @@ from ..functions.embed import embed_batch
 from ..functions.localrel import local_df
 from ..functions.ngrams import char_wb_ngrams_col, tfidf_vectors
 from ..functions.textnorm import (
-    adaptive_threshold_col,
     adaptive_threshold_floor,
-    can_merge_terms_col,
     compute_base_threshold,
+    gate_pair_scores,
     normalize_entity_col,
     types_compatible_col,
 )
@@ -108,43 +85,16 @@ from ..functions.textnorm import (
 MIN_PREFIX_RANK = 4
 
 #: The one vocabulary tier. Above AUTO_BLOCK_MIN_VOCAB unique norms the
-#: linker (1) caps candidate generation: the similarity join drops n-grams
-#: with df > min(max(AUTO_BLOCK_DF_FRAC·N, 100), AUTO_BLOCK_DF_ABS) (see the
-#: module docstring and :func:`auto_df_cap`); and (2), through
-#: LOCAL_MAX_VOCAB (a separate name only as the tests' seam), runs the
-#: distributed cascade instead of the driver-local one, for either scorer.
-#: That cascade pins every vocabulary-sized join input (gram keep-lists,
-#: weights, per-norm stats, candidate pairs, effective-type profiles) to
-#: sort-merge with .hint("merge"), at every size: at the 640k-norm tier the
-#: estimate-driven broadcast of these string-heavy tables OOM'd (hash
-#: relations inflate 5-10x their shuffle size — BENCH.md round-5 curve).
-#: Below the tier only the fused-row overflow guard (LOCAL_FUSED_ROW_CAP)
-#: and tests reach the cascade, so it keeps no second plan for them.
+#: linker (1) caps TF-IDF candidate generation at n-grams with df <=
+#: min(max(AUTO_BLOCK_DF_FRAC·N, 100), AUTO_BLOCK_DF_ABS) (see the module
+#: docstring and :func:`auto_df_cap`); (2), through LOCAL_MAX_VOCAB (a
+#: separate name only as the tests' seam), links on the executors instead
+#: of the driver; and (3) bounds each block of :func:`gated_block_pairs`
+#: to this many norms, so no block-pair task holds more than two
+#: driver-tier vocabularies.
 AUTO_BLOCK_MIN_VOCAB = 50_000
 AUTO_BLOCK_DF_FRAC = 0.05
 AUTO_BLOCK_DF_ABS = 4_000
-
-#: Second, higher bound for the prefix score SIDES (the weights views):
-#: below it they stay UNPINNED — they read the materialized weights
-#: checkpoint, AQE's runtime broadcast of them is safe in that regime, and
-#: pinning measured 2.2x slower at the 62k-norm tier (OPTIMIZATION_r06 §5b).
-#: The r6 tier-4 leg (917k norms, 27M weight rows) measured the two
-#: failure modes this bound arbitrates between. UNPINNED, the SMJ sides
-#: shuffle on (b, ngram); zstd compresses gram postings so well that the
-#: weights side measures UNDER the 64 MiB adaptive threshold, and AQE's
-#: runtime SMJ->BHJ conversion builds a 2^26-slot (512 MB+) hash relation:
-#: fine at 3 GiB/core (24g leg green, 1334s), OOM at 1 GiB/core. PINNED,
-#: the score join streams |candidates| x |grams-per-norm| rows through the
-#: (b, ngram) shuffle instead (~80 GB+ scratch at 917k norms) — the plan
-#: that survives cluster scale (shuffle grows linearly and spills to
-#: executor-local disk; a broadcast relation grows ~600 B/norm and
-#: eventually kills ANY executor heap), but more than this sandbox's
-#: scratch disk. Deployment-keyed (env), defaulting high enough that every
-#: sandbox-runnable tier keeps the broadcast-eligible plan with a sized
-#: heap (BENCH.md: 24g at >=900k norms); cluster deployments with
-#: TB-scale shuffle dirs lower it toward ~500k to take the shuffle plan
-#: before executor heaps become the binding constraint.
-SCORE_PIN_MIN_VOCAB = int(os.environ.get("KG_SCORE_PIN_MIN_VOCAB", "2000000"))
 
 
 @dataclass
@@ -154,300 +104,88 @@ class LinkingTables:
     nodes: DataFrame  # norm: component universe (norms + abbrev/alias endpoints)
     base_threshold: float
     # observability: unique linkable norms and the EFFECTIVE df cap the
-    # similarity join ran with (None = uncapped / semantic scorer)
+    # TF-IDF scorer ran with (None = uncapped / semantic scorer)
     n_norms: int = 0
     candidate_max_df: Optional[int] = None
 
 
-# NOTE: the n-gram generator is a pure Column expression
-# (functions.ngrams.char_wb_ngrams_col) — the former pandas UDF made every
-# consuming task block on a Python worker and its non-canonicalizable
-# PythonUDF expression defeated AQE exchange reuse (the TF-IDF explode
-# stage measurably executed once per DAG branch, 4x).
-
-
-def tfidf_weights(norms: DataFrame, n_norms: int) -> DataFrame:
-    """L2-normalized smooth TF-IDF weights: (norm, ngram, w).
-
-    ``n_norms`` is the vocabulary size (a single scalar — computed once by
-    the caller; keeping it a Python literal lets Catalyst constant-fold the
-    idf expression).
-    """
-    tf = (
-        norms.select(
-            "norm", F.explode(char_wb_ngrams_col(F.col("norm"))).alias("ngram")
-        )
-        .groupBy("norm", "ngram")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_counts = tf.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-    # merge-join hints (see AUTO_BLOCK_MIN_VOCAB) on BOTH weight-assembly
-    # joins: df_counts is gram-vocabulary-sized and norms_sq is
-    # norm-vocabulary-sized — at the 640k-norm tier an estimate-driven
-    # broadcast of either OOMs the driver building the hash relation
-    # (string keys inflate 5-10x their shuffle size; BENCH.md round-5
-    # curve). Both joins share the tf frame's own shuffle
-    # keys, so sort-merge costs no extra exchange there.
-    weighted = tf.join(df_counts.hint("merge"), "ngram").withColumn(
-        "w_raw",
-        F.col("tf")
-        * (
-            F.log((F.lit(1.0 + n_norms)) / (F.lit(1.0) + F.col("df")))
-            + F.lit(1.0)
-        ),
-    )
-    norms_sq = weighted.groupBy("norm").agg(
-        F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("l2")
-    )
-    return (
-        weighted.join(norms_sq.hint("merge"), "norm")
-        .select("norm", "ngram", (F.col("w_raw") / F.col("l2")).alias("w"))
-    )
-
-
-def _drop_capped_grams(
-    weights: DataFrame, candidate_max_df: Optional[int]
-) -> DataFrame:
-    """``weights`` without the n-grams whose df (number of norms carrying
-    the gram) exceeds the cap (unchanged when uncapped) — the df-cap
-    keep-list of both similarity joins."""
-    if candidate_max_df is None:
-        return weights
-    df_counts = weights.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-    # merge-join hint: `keep` is GRAM-vocabulary-sized (~10-15x the norm
-    # count). An explicit broadcast OOM'd the 640k-norm tier, and even
-    # AQE's own estimate-driven broadcast choice did (string-heavy gram
-    # tables inflate 5-10x their estimated size as hash relations) —
-    # BENCH.md round-5 curve. The join key is ngram, which the postings
-    # join shuffles on anyway.
-    keep = (
-        df_counts.filter(F.col("df") <= candidate_max_df)
-        .select("ngram")
-        .hint("merge")
-    )
-    return weights.join(keep, "ngram")
-
-
-def _pair_sum(joined: DataFrame) -> DataFrame:
-    """(a, b, score): the sum of wa*wb over each pair's shared n-grams, in
-    one aggregation (see the module docstring on skew)."""
-    return joined.groupBy("a", "b").agg(
-        F.sum(F.col("wa") * F.col("wb")).alias("score")
-    )
-
-
-def similarity_pairs(
-    weights: DataFrame, candidate_max_df: Optional[int] = None
-) -> DataFrame:
-    """Exact cosine for every norm pair sharing an n-gram: (a, b, score)."""
-    weights = _drop_capped_grams(weights, candidate_max_df)
-    left = weights.select(
-        F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
-    )
-    right = weights.select(
-        F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
-    )
-    return _pair_sum(left.join(right, "ngram").filter(F.col("a") < F.col("b")))
-
-
-def similarity_pairs_prefix(
-    weights: DataFrame,
+def tfidf_prefix_pairs(
+    *blocks: List[str],
     gate_floor: float,
+    doc_freq: Optional[Tuple[int, Mapping[str, int]]] = None,
     candidate_max_df: Optional[int] = None,
-    score_pin: bool = False,
-) -> DataFrame:
-    """Prefix-filtered similarity join (AllPairs/ppjoin family — Bayardo
-    et al., "Scaling Up All Pairs Similarity Search", WWW'07): a fraction
-    of the naive join volume, with provable relations to
-    :func:`similarity_pairs`'s output.
+) -> Dict[Tuple[str, str], float]:
+    """The TF-IDF kernel: the reference's char n-gram TF-IDF cosine
+    (:func:`ngrams.tfidf_vectors`), returning ``{(a, b): score}`` (a < b)
+    for the pairs scoring >= ``gate_floor - 1e-9``. One block of norms
+    scores the pairs within it; two blocks score the pairs across them.
+    ``doc_freq`` is the vocabulary's ``(N, {gram: df})`` when the blocks
+    are only part of it; by default the blocks are the vocabulary.
 
     The edge gate never passes a pair below ``gate_floor``
-    (= adaptive_threshold_floor(base) — the minimum of the reference's
-    per-term thresholds, app.py:3003-3012). Split each norm's n-gram
-    vector into a high-weight PREFIX and a low-weight SUFFIX such that the
-    suffix's squared mass stays under the floor; by Cauchy–Schwarz a pair
-    whose shared grams all fall in both suffixes scores
-    ≤ ‖suf_a‖·‖suf_b‖ < gate_floor, so only pairs sharing at least one
-    PREFIX gram can ever pass the gate. Candidate generation joins
-    postings × prefix-postings (Σ_g df_g·prefix_df_g rows instead of the
-    naive Σ_g df_g² — the high-df grams that dominate the quadratic term
-    carry the least idf weight, so they land in suffixes and their df²
-    blowup disappears), then the cosine is recomputed per candidate with
-    the same pair-sum as the naive join. UNCAPPED,
-    the gated edge set is IDENTICAL to the naive join's (pinned in
-    tests/test_linking.py).
+    (= adaptive_threshold_floor(base)). Split each norm's vector into a
+    high-weight PREFIX (descending weight, ties by gram) and a SUFFIX
+    whose squared mass stays under the floor: by Cauchy–Schwarz a pair
+    whose shared grams all lie in both suffixes scores under the floor,
+    so the candidates are the pairs sharing a gram in one side's prefix.
+    The AllPairs maxweight/length bound (Bayardo §3.1, adapted to
+    weighted cosine: dot <= maxw(b)·‖a‖₁, maxw(a)·‖b‖₁ and
+    min(n_a, n_b)·maxw(a)·maxw(b); the binary-cosine count-ratio bound is
+    not sound for TF-IDF weights) drops more; every survivor is scored
+    exactly. Float margins of 1e-9 keep both prunes conservative.
 
-    ``candidate_max_df`` bounds CANDIDATE GENERATION only (grams with
-    df>cap never join), while scoring runs over the FULL vectors — every
-    emitted score is the EXACT cosine. The gated edge set is a SUPERSET of
-    the naive capped path's: a naive-capped edge shares a sub-cap gram
-    scoring ≥ the gate, which cannot happen with all shared sub-cap grams
-    in both suffixes (the Cauchy–Schwarz bound), so the pair is a
-    candidate here too, and its exact score ≥ the naive lower bound. This
-    closes the measured quality hole where a morphology-heavy vocabulary
-    (every gram of a planted alias pair moderately common) drove even
-    cosine-1.0 case variants' capped lower-bound scores under the gate —
-    planted-pair recall collapsed to 0 while the exact join held 0.5+
-    (test_planted_pair_recall_under_cap pins the recovery).
+    ``candidate_max_df`` drops the grams whose df exceeds it from
+    candidate generation only: prefixes are taken over the sub-cap
+    grams, and the ``MIN_PREFIX_RANK`` top ones always join (a heavy cap
+    can leave a vector under the floor). The bound and the score use the
+    full vectors, so every score is the exact cosine.
 
-    ``weights`` feeds several consumers (prefix marking, the candidate
-    join, the score sides): pass it materialized (``localCheckpoint``) so
-    the TF-IDF explode/agg DAG runs once.
-    """
-    cand_weights = _drop_capped_grams(weights, candidate_max_df)
-    # float-safety margin widens prefixes slightly (never prunes a pair the
-    # exact arithmetic could pass)
+    Each pair sums its shared grams in sorted gram order, the order of the
+    oracle's naive scorer (``oracle._tfidf_cosine_pairs``), so a pair's
+    score bits depend only on the pair."""
+    lo, hi = blocks[0], blocks[-1]
+    norms = list(lo) if len(blocks) == 1 else list(lo) + list(hi)
+    vecs = tfidf_vectors(norms, doc_freq)
     t_eff = max(gate_floor - 1e-9, 0.0)
-
-    w2 = F.col("w") * F.col("w")
-    order_win = Window.partitionBy("norm").orderBy(F.desc("w"), F.asc("ngram"))
-    cum = F.sum(w2).over(
-        order_win.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    total = F.sum(w2).over(Window.partitionBy("norm"))
-    # suffix mass BEFORE this row (descending-weight order): the row joins
-    # the prefix while the not-yet-covered tail could still reach the floor
-    marked = cand_weights.withColumn("_suffix_before", total - cum + w2)
-    keep_prefix = F.col("_suffix_before") >= t_eff
+    capped = set()
     if candidate_max_df is not None:
-        # Under a heavy cap a vector can lose so much squared mass that the
-        # suffix rule yields an EMPTY prefix (capped total < gate floor) —
-        # consistent with the naive capped gate (its lower-bound score
-        # cannot pass either) but fatal for exact scoring. Guarantee a
-        # minimum prefix of the top-weight SUB-CAP grams: those are the
-        # rarest, most identity-carrying grams (df of a few), so the extra
-        # candidate volume is tiny while pairs whose similarity lives in
-        # rare grams (case/morphology variants of the same surface form)
-        # stay reachable.
-        rank = F.row_number().over(order_win)
-        keep_prefix = keep_prefix | (rank <= F.lit(MIN_PREFIX_RANK))
-    marked = marked.withColumn("_keep", keep_prefix)
-    prefix = marked.filter(F.col("_keep")).select("norm", "ngram")
+        df = doc_freq[1] if doc_freq else Counter(g for v in vecs for g in v)
+        capped = {g for g, d in df.items() if d > candidate_max_df}
 
-    # ONE postings×prefix join covers both orientations: a pair sharing a
-    # gram in EITHER side's prefix appears (normalized to a < b)
-    cand = (
-        cand_weights.select(F.col("norm").alias("x"), "ngram")
-        # prefix is ~MIN_PREFIX_RANK..8 rows per norm — far past any sane
-        # broadcast at vocab scale; same merge-hint rationale as `keep`
-        .join(
-            prefix.select(F.col("norm").alias("y"), "ngram").hint("merge"),
-            "ngram",
-        )
-        .filter(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-        )
-        .distinct()
+    # one side per block: a candidate pairs a prefix gram of one side with
+    # the postings of the other (of the same side, for one block)
+    sides = (
+        [range(len(norms))]
+        if len(blocks) == 1
+        else [range(len(lo)), range(len(lo), len(norms))]
     )
-
-    # AllPairs length/maxweight filter (Bayardo §3.1, adapted to weighted
-    # cosine): before paying the per-gram score join, drop candidates whose
-    # vector-level stats bound the dot product under the gate. For the
-    # shared-gram sum,  dot ≤ maxw(b)·Σ_shared wa ≤ maxw(b)·‖a‖₁  and
-    # symmetrically, and  dot ≤ |shared|·maxw(a)·maxw(b) ≤
-    # min(n_a,n_b)·maxw(a)·maxw(b)  — both exact inequalities, so pruning
-    # on their min keeps the gated edge set IDENTICAL (the binary-cosine
-    # √(n_a/n_b) count-ratio bound is NOT sound for TF-IDF weights and is
-    # deliberately not used). Stats come from the full vectors because the
-    # emitted score is the full cosine.
-    stats = (  # vocabulary-sized — sort-merge
-        weights.groupBy("norm")
-        .agg(
-            F.max("w").alias("_maxw"),
-            F.sum("w").alias("_l1"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        .hint("merge")
-    )
-    cand = (
-        cand.join(
-            stats.select(
-                F.col("norm").alias("a"),
-                F.col("_maxw").alias("_maxw_a"),
-                F.col("_l1").alias("_l1_a"),
-                F.col("_n").alias("_n_a"),
-            ),
-            "a",
-        )
-        .join(
-            stats.select(
-                F.col("norm").alias("b"),
-                F.col("_maxw").alias("_maxw_b"),
-                F.col("_l1").alias("_l1_b"),
-                F.col("_n").alias("_n_b"),
-            ),
-            "b",
-        )
-        .filter(
-            F.least(
-                F.col("_maxw_b") * F.col("_l1_a"),
-                F.col("_maxw_a") * F.col("_l1_b"),
-                F.col("_maxw_a")
-                * F.col("_maxw_b")
-                * F.least("_n_a", "_n_b").cast("double"),
-            )
-            # extra 1e-9 margin: the bound dominates the score in EXACT
-            # arithmetic; the margin makes the float64-computed comparison
-            # safe too, so the gated edge set stays md5-identical
-            >= F.lit(t_eff - 1e-9)
-        )
-        .select("a", "b")
-    )
-
-    # The score SIDES stay unpinned in the mid-vocabulary regime (AQE's
-    # runtime broadcast of the materialized weights is safe there, and
-    # pinning measured 2.2x slower at the 62k-norm tier) but are
-    # sort-merge-pinned above SCORE_PIN_MIN_VOCAB: at weights scale the
-    # zstd-compressed (b, ngram) shuffle of the side measures UNDER the
-    # adaptive broadcast threshold while the string-keyed hash relation it
-    # would build is 512 MB+ — the r6 tier-4 OOM (see the constant's doc).
-    left = weights.select(
-        F.col("norm").alias("a"), "ngram", F.col("w").alias("wa")
-    )
-    right = weights.select(
-        F.col("norm").alias("b"), "ngram", F.col("w").alias("wb")
-    )
-    if score_pin:
-        left, right = left.hint("merge"), right.hint("merge")
-    # merge hint: the candidate-pair table is |pairs|-sized (millions at
-    # vocab scale) — an estimate-driven broadcast of it into the score join
-    # was the last of the four OOM sites the 640k-norm tier exposed
-    joined = cand.hint("merge").join(left, "a").join(right, ["b", "ngram"])
-    return _pair_sum(joined).filter(F.col("score") >= F.lit(t_eff))
-
-
-def tfidf_prefix_pairs(
-    norms: List[str], gate_floor: float
-) -> Dict[Tuple[str, str], float]:
-    """The Python form of the uncapped :func:`similarity_pairs_prefix`, the
-    driver-local linker's scorer: the same suffix-mass prefix rule, the
-    same maxweight/length filter and margins, then the exact cosine of each
-    surviving candidate. Returns ``{(a, b): score}`` (a < b) for the pairs
-    scoring >= ``gate_floor - 1e-9``: exactly the naive scorer's
-    (``oracle._tfidf_cosine_pairs``) pairs in that range, with bit-equal
-    scores, because the shared n-grams are summed in the naive scorer's
-    order (first occurrence over the vocabulary)."""
-    vecs = tfidf_vectors(norms)
-    t_eff = max(gate_floor - 1e-9, 0.0)
-    gram_id: Dict[str, int] = {}
-    postings: Dict[str, List[int]] = defaultdict(list)
-    for i, v in enumerate(vecs):
-        for g in v:
-            gram_id.setdefault(g, len(gram_id))
-            postings[g].append(i)
-
+    postings: List[Dict[str, List[int]]] = [defaultdict(list) for _ in sides]
+    for side, members in zip(postings, sides):
+        for i in members:
+            for g in vecs[i]:
+                if g not in capped:
+                    side[g].append(i)
     cand = set()
-    for y, v in enumerate(vecs):
-        total = sum(w * w for w in v.values())
-        cum = 0.0
-        for g, w in sorted(v.items(), key=lambda gw: (-gw[1], gw[0])):
-            cum += w * w
-            # the Column form's _suffix_before >= t_eff, row by row
-            if total - cum + w * w >= t_eff:
-                cand.update(
-                    (x, y) if x < y else (y, x) for x in postings[g] if x != y
-                )
+    for s, members in enumerate(sides):
+        other = postings[len(sides) - 1 - s]
+        for y in members:
+            sub = vecs[y]
+            if capped:
+                sub = {g: w for g, w in sub.items() if g not in capped}
+            total = sum(w * w for w in sub.values())
+            cum = 0.0
+            ranked = sorted(sub.items(), key=lambda gw: (-gw[1], gw[0]))
+            for rank, (g, w) in enumerate(ranked, 1):
+                cum += w * w
+                # the suffix mass from this gram on can still reach the floor
+                if total - cum + w * w >= t_eff or (
+                    candidate_max_df is not None and rank <= MIN_PREFIX_RANK
+                ):
+                    cand.update(
+                        (x, y) if x < y else (y, x)
+                        for x in other.get(g, ())
+                        if x != y
+                    )
     stats = [
         (max(v.values(), default=0.0), sum(v.values()), len(v)) for v in vecs
     ]
@@ -456,14 +194,13 @@ def tfidf_prefix_pairs(
     for a, b in cand:
         maxw_a, l1_a, n_a = stats[a]
         maxw_b, l1_b, n_b = stats[b]
-        # the Column form's maxweight/length filter, same 1e-9 margin
         if min(
             maxw_b * l1_a, maxw_a * l1_b, maxw_a * maxw_b * min(n_a, n_b)
         ) < t_eff - 1e-9:
             continue
         va, vb = vecs[a], vecs[b]
         score = 0.0
-        for g in sorted(va.keys() & vb.keys(), key=gram_id.__getitem__):
+        for g in sorted(va.keys() & vb.keys()):
             score += va[g] * vb[g]
         if score >= t_eff:
             x, y = norms[a], norms[b]
@@ -480,7 +217,7 @@ def embedding_pairs(
     >= ``gate_floor - 1e-9``, the contract of :func:`tfidf_prefix_pairs`.
     One block of norms scores the pairs within it (the driver-local
     linker's scorer); two blocks score the pairs across them (one block
-    pair of :func:`semantic_block_pairs`).
+    pair of :func:`gated_block_pairs`).
 
     A row-chunked matmul prefilters the pairs (one more 1e-9 of margin, so
     BLAS rounding never drops one); each survivor's score is then
@@ -513,38 +250,132 @@ def embedding_pairs(
     return out
 
 
-def semantic_block_pairs(norms: DataFrame, gate_floor: float) -> DataFrame:
-    """The semantic scorer above the local tier: exactly
-    :func:`embedding_pairs` of the whole vocabulary, as (a, b, score)
-    rows, partitioned so no Python worker holds more than two blocks.
-
-    Each norm goes to block ``pmod(xxhash64(norm), nb)`` and is copied to
-    every block pair ``(lo, hi)`` holding its block; one
-    ``applyInPandas`` task per pair runs the kernel (the self pair scores
-    within its block, the others across their two). ``nb`` is the
-    smallest count giving at least ``spark.sql.shuffle.partitions`` block
-    pairs, raised until no block exceeds ``AUTO_BLOCK_MIN_VOCAB`` norms
-    (one driver-tier vocabulary). The explicit repartition fixes the stage
-    at nb(nb+1)/2 tasks, which AQE does not coalesce (without it AQE
-    folded 10 block pairs into 2 tasks); the pairs are hash-partitioned,
-    so one task can still hold several."""
-    spark = norms.sparkSession
-    n_pairs = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nb = 1
+def _block_count(norms: DataFrame, n_norms: int) -> int:
+    """Blocks for :func:`gated_block_pairs`: the smallest count giving at
+    least ``spark.sql.shuffle.partitions`` block pairs and, once the
+    vocabulary exceeds ``AUTO_BLOCK_MIN_VOCAB``, no block over that many
+    norms. No smaller count than ceil(n_norms / AUTO_BLOCK_MIN_VOCAB) can
+    pass, so the search starts there and usually runs one job."""
+    n_pairs = int(norms.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    nb = max(1, -(-n_norms // AUTO_BLOCK_MIN_VOCAB))
     while nb * (nb + 1) // 2 < n_pairs:
         nb += 1
-    while True:
-        blocked = norms.select(
-            "norm", F.pmod(F.xxhash64("norm"), F.lit(nb)).alias("block")
-        )
-        sizes = blocked.groupBy("block").count()
-        if (sizes.agg(F.max("count")).first()[0] or 0) <= AUTO_BLOCK_MIN_VOCAB:
+    while n_norms > AUTO_BLOCK_MIN_VOCAB:
+        sizes = norms.groupBy(F.pmod(F.xxhash64("norm"), F.lit(nb))).count()
+        if sizes.agg(F.max("count")).first()[0] <= AUTO_BLOCK_MIN_VOCAB:
             break
         nb += 1
+    return nb
+
+
+def _pair_keys(spark, n_tasks: int) -> List[int]:
+    """One int key per task index ``p`` that Spark's hash partitioning
+    (``pmod(hash(key), n_tasks)``) sends to task ``p``. Spark evaluates
+    the hashes itself, over a local relation (no job)."""
+    hashed = (
+        local_df(spark, [(k,) for k in range(64 * n_tasks)], "k int")
+        .select("k", F.pmod(F.hash("k"), F.lit(n_tasks)).alias("p"))
+        .collect()
+    )
+    first: Dict[int, int] = {}
+    for k, p in hashed:
+        first.setdefault(p, k)
+    return [first[p] for p in range(n_tasks)]
+
+
+def _route_block_pairs(rows: DataFrame, nb: int) -> DataFrame:
+    """``rows`` copied to every block pair ``(lo, hi)`` holding the row's
+    block ``pmod(xxhash64(norm), nb)``, with the pair's ``key`` column,
+    partitioned one block pair per task: nb(nb+1)/2 tasks, which AQE does
+    not coalesce (without the explicit repartition it folded 10 block
+    pairs into 2 tasks)."""
+    n_tasks = nb * (nb + 1) // 2
+    keys = F.array(*[F.lit(k) for k in _pair_keys(rows.sparkSession, n_tasks)])
+    block = F.pmod(F.xxhash64("norm"), F.lit(nb)).cast("int")
+    k = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
+    lo, hi = F.col("lo"), F.col("hi")
+    return (
+        rows.withColumn("block", block)
+        .withColumn("k", k)
+        .withColumn("lo", F.least("block", "k"))
+        .withColumn("hi", F.greatest("block", "k"))
+        .drop("k")
+        # the pair's index in (0,0), (0,1), (1,1), (0,2), ... order
+        .withColumn(
+            "key", F.element_at(keys, F.shiftright(hi * (hi + 1), 1) + lo + 1)
+        )
+        .repartition(n_tasks, "key")
+    )
+
+
+def gated_block_pairs(
+    rows: DataFrame,
+    score_source: str,
+    base: float,
+    n_norms: int,
+    candidate_max_df: Optional[int],
+) -> DataFrame:
+    """The similarity edges above the local tier, as (a, b, score) rows:
+    exactly the one-block kernel of ``score_source`` over the whole
+    vocabulary, gated by :func:`textnorm.gate_pair_scores`, with no
+    Python worker holding more than two blocks.
+
+    ``rows`` holds one (norm, types) row per vocabulary norm, ``types``
+    the effective type set. The rows go to ``nb`` blocks
+    (:func:`_block_count`) and to every block pair holding their block
+    (:func:`_route_block_pairs`); one ``applyInPandas`` task per pair runs
+    the kernel (the self pair scores within its block, the others across
+    their two) and the gate. For TF-IDF each row also carries its grams'
+    vocabulary document frequencies, counted once by Spark, and
+    ``candidate_max_df`` is the df-cap."""
+    floor = adaptive_threshold_floor(base)
+    nb = _block_count(rows.select("norm"), n_norms)
+    if score_source == "semantic":
+
+        def kernel(*blocks):
+            return embedding_pairs(
+                *(b.norm.tolist() for b in blocks), gate_floor=floor
+            )
+
+    else:
+        grams = rows.select(
+            "norm",
+            F.explode(F.array_distinct(char_wb_ngrams_col(F.col("norm")))).alias(
+                "gram"
+            ),
+        ).withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("gram")))
+        doc_freqs = grams.groupBy("norm").agg(
+            F.collect_list(F.struct("gram", "df")).alias("g")
+        )
+        # merge hint: both sides are vocabulary-sized, and a broadcast of
+        # either string-keyed relation inflates 5-10x its shuffle size
+        # (the 640k-norm tier OOM'd on such builds — BENCH.md round 5)
+        rows = rows.join(
+            doc_freqs.select(
+                "norm", F.col("g.gram").alias("grams"), F.col("g.df").alias("dfs")
+            ).hint("merge"),
+            "norm",
+            "left",
+        )
+
+        def kernel(*blocks):
+            df: Dict[str, int] = {}
+            for b in blocks:
+                for grams, dfs in zip(b.grams, b.dfs):
+                    if grams is not None:
+                        df.update(zip(grams.tolist(), dfs.tolist()))
+            return tfidf_prefix_pairs(
+                *(b.norm.tolist() for b in blocks),
+                gate_floor=floor,
+                doc_freq=(n_norms, df),
+                candidate_max_df=candidate_max_df,
+            )
 
     def score(key, pdf):
-        blocks = [pdf.norm[pdf.block == b].tolist() for b in sorted(set(key))]
-        pairs = embedding_pairs(*blocks, gate_floor=gate_floor)
+        _, lo, hi = key
+        blocks = [pdf[pdf.block == b] for b in sorted({lo, hi})]
+        types = {n: list(t) for n, t in zip(pdf.norm, pdf.types)}
+        pairs = gate_pair_scores(kernel(*blocks), types, base)
         return pd.DataFrame(
             {
                 "a": [a for a, _ in pairs],
@@ -553,17 +384,9 @@ def semantic_block_pairs(norms: DataFrame, gate_floor: float) -> DataFrame:
             }
         )
 
-    k = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
     return (
-        blocked.select("norm", "block", k.alias("k"))
-        .select(
-            "norm",
-            "block",
-            F.least("block", "k").alias("lo"),
-            F.greatest("block", "k").alias("hi"),
-        )
-        .repartition(nb * (nb + 1) // 2, "lo", "hi")
-        .groupBy("lo", "hi")
+        _route_block_pairs(rows, nb)
+        .groupBy("key", "lo", "hi")
         .applyInPandas(score, "a string, b string, score double")
     )
 
@@ -591,46 +414,6 @@ def domain_alias_edges(all_nodes: DataFrame) -> DataFrame:
     for frame in frames[1:]:
         out = out.unionByName(frame)
     return out.distinct()
-
-
-def gate_scored_pairs(
-    scored: DataFrame,
-    profiles_eff: DataFrame,
-    protected: list,
-    base: float,
-) -> DataFrame:
-    """The reference's edge gate cascade (app.py:3140-3183), applied to ANY
-    (a, b, score) candidate source — TF-IDF inverted-index scores and
-    semantic-embedding scores go through the identical gates, exactly as
-    _build_cluster_maps treats its similarity_lookup regardless of origin."""
-    # merge-join hints: profiles_eff is vocabulary-sized, and at the
-    # 640k-norm tier TWO concurrent estimate-driven broadcasts of it
-    # (string-keyed hash relations inflate 5-10x) OOM'd the shared local
-    # heap while evaluating the edges checkpoint (BENCH.md round-5 curve);
-    # on a real cluster the same build happens per executor. The scored
-    # pairs are already shuffled, so sort-merge adds only the profile-side
-    # exchange.
-    eff_a = profiles_eff.select(
-        F.col("norm").alias("a"), F.col("types").alias("types_a")
-    ).hint("merge")
-    eff_b = profiles_eff.select(
-        F.col("norm").alias("b"), F.col("types").alias("types_b")
-    ).hint("merge")
-    return (
-        scored.join(eff_a, "a")
-        .join(eff_b, "b")
-        .filter(~(F.col("a").isin(*protected) & F.col("b").isin(*protected)))
-        .filter(
-            F.col("score")
-            >= F.least(
-                adaptive_threshold_col(F.col("a"), base),
-                adaptive_threshold_col(F.col("b"), base),
-            )
-        )
-        .filter(can_merge_terms_col(F.col("a"), F.col("b")))
-        .filter(types_compatible_col(F.col("types_a"), F.col("types_b")))
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
 
 
 def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
@@ -676,14 +459,13 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
 
 #: Vocabulary size up to which the linking cascade runs driver-side from
 #: the collected fused table, for both scorers: exactly the vocabularies
-#: the TF-IDF join runs UNCAPPED (see :func:`auto_df_cap`). There the
-#: Python scorers (:func:`tfidf_prefix_pairs`, :func:`embedding_pairs`)
-#: beat the ~40-job Spark cascade, whose cost is job scheduling at this
-#: size (BENCH.md, driver-local crossover). Above it the distributed path
-#: runs; its semantic scorer splits the vocabulary into blocks of at most
-#: ``AUTO_BLOCK_MIN_VOCAB`` norms (one such tier each) and scores the same
-#: pairs with the same bits. Read at call time, so tests force the
-#: distributed path by setting it to 0.
+#: TF-IDF scores UNCAPPED (see :func:`auto_df_cap`). There the one-block
+#: kernels (:func:`tfidf_prefix_pairs`, :func:`embedding_pairs`) beat any
+#: Spark plan, whose cost is job scheduling at this size (BENCH.md,
+#: driver-local crossover). Above it :func:`gated_block_pairs` runs the
+#: same kernels over blocks of at most ``AUTO_BLOCK_MIN_VOCAB`` norms (one
+#: such tier each) and scores the same pairs with the same bits. Read at
+#: call time, so tests force the distributed path by setting it to 0.
 LOCAL_MAX_VOCAB = AUTO_BLOCK_MIN_VOCAB
 #: bounded-collect guard for the fused table: one row per (norm, type) and
 #: per abbreviation pair, 1.1-1.25 rows per norm on datagen vocabularies,
@@ -755,16 +537,15 @@ def build_linking_tables(
     "semantic" (L4, the embedding cosine — the reference's use_semantic
     path, app.py:3084-3110); anything else raises ``ValueError``. Up to
     ``LOCAL_MAX_VOCAB`` norms either scorer links exactly on the driver;
-    above it "semantic" runs the same exact kernel per block pair
-    (:func:`semantic_block_pairs`).
+    above it the same kernel and gate run per block pair
+    (:func:`gated_block_pairs`).
 
     The df-cap is :func:`auto_df_cap` of the measured vocabulary: exact (no
     n-gram dropped) up to ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else
-    capped at ``min(AUTO_BLOCK_DF_FRAC * n_norms, AUTO_BLOCK_DF_ABS)``. The
-    join's output is Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic
-    in N (5% of 10⁶ is a 50k-df gram emitting 2.5G candidate rows), so the
-    absolute bound is what actually caps per-gram fanout at web scale;
-    scripts/linking_bench.py records the measured curves.
+    ``min(AUTO_BLOCK_DF_FRAC * n_norms, AUTO_BLOCK_DF_ABS)``. Candidate
+    volume is Σ_g df_g² — a FRACTIONAL cap alone leaves it quadratic in N
+    (5% of 10⁶ is a 50k-df gram pairing 2.5G candidates), so the absolute
+    bound is what actually caps per-gram fanout at web scale.
     """
     if score_source not in ("tfidf", "semantic"):
         raise ValueError(f"unknown score_source {score_source!r}")
@@ -862,8 +643,8 @@ def build_linking_tables(
         .agg(F.array_sort(F.collect_set("t")).alias("types"))
     )
     # norms with no original profile (abbrev-only endpoints) default UNKNOWN
-    # (merge hint: effective_types is vocabulary-sized — same broadcast-OOM
-    # rationale as gate_scored_pairs)
+    # (merge hint: effective_types is vocabulary-sized — a broadcast of it
+    # OOM'd the 640k-norm tier, BENCH.md round-5 curve)
     profiles_eff = (
         profiles.select("norm", "freq")
         .join(effective_types.hint("merge"), "norm", "left")
@@ -886,24 +667,16 @@ def build_linking_tables(
     all_nodes_full = all_nodes.unionByName(alias_nodes).distinct()
 
     # --- similarity edges -----------------------------------------------------
-    if score_source == "semantic":
-        scored = semantic_block_pairs(
-            profiles.select("norm"), adaptive_threshold_floor(base)
-        )
-    else:
-        # the df-cap keep-list and the prefix join both consume the weights
-        # — materialize them once
-        weights = tfidf_weights(profiles.select("norm"), n_norms).localCheckpoint(
-            eager=True
-        )
-        scored = similarity_pairs_prefix(
-            weights,
-            gate_floor=adaptive_threshold_floor(base),
-            candidate_max_df=candidate_max_df,
-            score_pin=n_norms > SCORE_PIN_MIN_VOCAB,
-        )
-
-    sim_edges = gate_scored_pairs(scored, profiles_eff, protected, base)
+    # the norm table is both an output and the block-pair stage's input
+    norms = profiles_eff.localCheckpoint(eager=True)
+    scored = gated_block_pairs(
+        norms.select("norm", "types"),
+        score_source,
+        base,
+        n_norms,
+        candidate_max_df if score_source == "tfidf" else None,
+    )
+    sim_edges = scored.select(F.col("a").alias("src"), F.col("b").alias("dst"))
 
     edges = (
         abbr_gated.unionByName(alias_edges)
@@ -916,24 +689,24 @@ def build_linking_tables(
         .distinct()
     )
 
-    # Materialize the three output tables eagerly (they are vocabulary-sized,
-    # tiny next to the corpus), then release the cached intermediates so
-    # repeated invocations in one session don't accumulate cache blocks.
-    # The three materializations are independent — submit them from a small
-    # thread pool so their stages back-fill each other's scheduling gaps
-    # (guide §2.6); Spark's scheduler handles concurrent jobs natively. The
-    # pool threads inherit the caller's local properties (the kg:<phase>
-    # job description), which a plain thread does not.
+    # Materialize the two other output tables eagerly (they are
+    # vocabulary-sized, tiny next to the corpus), then release the cached
+    # intermediates so repeated invocations in one session don't accumulate
+    # cache blocks. The two materializations are independent — submit them
+    # from a small thread pool so their stages back-fill each other's
+    # scheduling gaps (guide §2.6); Spark's scheduler handles concurrent
+    # jobs natively. The pool threads inherit the caller's local properties
+    # (the kg:<phase> job description), which a plain thread does not.
     def checkpoint(frame: DataFrame) -> DataFrame:
         return frame.localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_norms, f_edges, f_nodes = (
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_edges, f_nodes = (
             pool.submit(inheritable_thread_target(spark)(checkpoint), frame)
-            for frame in (profiles_eff, edges, all_nodes_full)
+            for frame in (edges, all_nodes_full)
         )
         out = LinkingTables(
-            norms=f_norms.result(),
+            norms=norms,
             edges=f_edges.result(),
             nodes=f_nodes.result(),
             base_threshold=base,

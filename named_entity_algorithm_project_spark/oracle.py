@@ -32,9 +32,8 @@ from .dictionaries import (
 )
 from .functions.ngrams import tfidf_vectors
 from .functions.textnorm import (
-    adaptive_threshold,
-    can_merge_terms,
     compute_base_threshold,
+    gate_pair_scores,
     normalize_entity,
     types_compatible,
 )
@@ -96,8 +95,9 @@ def _tfidf_cosine_pairs(norms: List[str]) -> Dict[Tuple[str, str], float]:
     for i, v in enumerate(vecs):
         for g in v:
             postings[g].append(i)
+    # shared grams sum in sorted gram order, as the linker's kernel sums them
     scores: Dict[Tuple[int, int], float] = defaultdict(float)
-    for g, idxs in postings.items():
+    for g, idxs in sorted(postings.items()):
         for ii in range(len(idxs)):
             for jj in range(ii + 1, len(idxs)):
                 a, b = idxs[ii], idxs[jj]
@@ -135,8 +135,9 @@ def link_vocabulary(
     base: float,
     pair_scores: Callable = _tfidf_cosine_pairs,
 ) -> Tuple[Dict[str, List[str]], Set[Tuple[str, str]], Set[str]]:
-    """The edge cascade (app.py:3140-3183) over a collected vocabulary: the
-    one Python form of the rules the distributed gate runs as Columns.
+    """The edge cascade (app.py:3140-3183) over a collected vocabulary,
+    gating the similarity pairs with :func:`textnorm.gate_pair_scores`
+    (the gate every block-pair task of the distributed linker runs).
 
     ``freq`` keys are the trimmed linkable norms, ``types`` their trimmed
     upper-cased type sets, ``abbr_pairs`` the trimmed non-empty
@@ -176,14 +177,7 @@ def link_vocabulary(
         }
 
     # similarity edges over corpus norms
-    sim_edges = {
-        (a, b)
-        for (a, b), score in pair_scores(norms).items()
-        if not (a in PROTECTED_TERMS and b in PROTECTED_TERMS)
-        and score >= min(adaptive_threshold(a, base), adaptive_threshold(b, base))
-        and can_merge_terms(a, b)
-        and types_compatible(eff_types[a], eff_types[b])
-    }
+    sim_edges = set(gate_pair_scores(pair_scores(norms), eff_types, base))
     edges = {
         (min(s, t), max(s, t))
         for s, t in gated_abbr | alias_edges | sim_edges

@@ -40,7 +40,7 @@ KEY_MARKERS = (
     "Window",
     "InMemory",
     "ArrowEval",
-    "MapInPandas",
+    "InPandas",
 )
 
 AUDITED_QUERIES = [
@@ -94,18 +94,10 @@ def main() -> None:
     # KG pipeline stage frames. build_linking_tables localCheckpoints its
     # outputs (cache-hygiene), which truncates the lineage .explain would
     # show — so audit the operator-level plans the linker executes.
-    from pyspark.sql import functions as F
-
     from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
         split_extraction,
     )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        similarity_pairs,
-        similarity_pairs_prefix,
-        tfidf_weights,
-    )
-
     t = generate_transcripts(spark, n_convs=50, seed=42)
     combined = extract_combined(t)
     out.append(
@@ -126,52 +118,23 @@ def main() -> None:
     # not driver-local relations
     linking.LOCAL_MAX_VOCAB = 0
     tables = build_linking_tables(extracted)
-    weights = tfidf_weights(tables.norms.select("norm"), 1000)
-    scored = similarity_pairs(weights)
-    out.append(
-        "\n## kg: tfidf similarity scoring (inverted-index join + pair-sum)\n```"
-    )
-    out.extend(key_lines(formatted(scored.filter(F.col("score") >= 0.8))))
-    out.append("```")
-
-    # the linker hands the prefix join materialized weights (one TF-IDF
-    # pass for its several consumers) — audit the same shape.
-    # Hint contract (VERDICT r5 item 3): the distributed prefix path pins
-    # the estimate-unreliable vocabulary-sized inputs (prefix postings, the
-    # per-norm stats pair, candidate pairs; plus the keep-list under a
-    # df-cap) to sort-merge — the estimate-driven broadcast of these OOM'd
-    # the 640k-norm tier — and the AllPairs maxweight filter must sit
-    # before the score join. The score SIDES read the materialized weights
-    # checkpoint (accurate statistics), so AQE's runtime-size broadcast of
-    # them is allowed below SCORE_PIN_MIN_VOCAB — pinning them measured
-    # 2.2x slower at the 62k tier.
-    weights_ckpt = weights.localCheckpoint(eager=True)
-    plan_prefix = formatted(
-        similarity_pairs_prefix(weights_ckpt, gate_floor=0.82)
-    )
-    n_smj = plan_prefix.count(") SortMergeJoin")
-    assert n_smj >= 4, (
-        f"expected >=4 sort-merge-pinned joins (prefix, stats x2, cand) in "
-        f"the prefix plan, found {n_smj}:\n" + plan_prefix
-    )
-    assert "_maxw" in plan_prefix, (
-        "AllPairs maxweight filter missing from the prefix plan"
+    scored = linking.gated_block_pairs(
+        tables.norms.select("norm", "types"),
+        "tfidf",
+        tables.base_threshold,
+        tables.n_norms,
+        None,
     )
     out.append(
-        "\n## kg: tfidf similarity scoring, prefix-filtered path (hint"
-        "\ncontract asserted)\n"
-        "\n(ppjoin candidate generation: window marks each norm's"
-        "\nhigh-weight prefix, postings join only against prefixes, then"
-        "\nexact rescoring over candidates — note the candidate join keys"
-        "\nand the same final pair-sum; 15x the naive join at 60k norms,"
-        "\nBENCH.md.) The prefix-postings join, both per-norm-stats joins"
-        "\nand the candidate-pair score join are sort-merge-pinned (>=4"
-        "\nSortMergeJoin asserted — these are the r5-measured broadcast-OOM"
-        "\nsites), and the maxweight-filter join is present. The audit"
-        "\nFAILS if a future change re-broadcasts them; tests/test_linking.py"
-        "\nasserts the same on the plan a distributed build runs.\n```"
+        "\n## kg: tfidf similarity edges (the block-pair stage)\n"
+        "\nOne Spark count gives each gram's document frequency (window over"
+        "\nthe exploded grams); each norm row carries its grams' counts, is"
+        "\ncopied to every block pair holding its block, and one"
+        "\nFlatMapGroupsInPandas task per pair runs the TF-IDF kernel and the"
+        "\ngate. The doc-frequency join is sort-merge-pinned (both sides are"
+        "\nvocabulary-sized).\n```"
     )
-    out.extend(key_lines(plan_prefix))
+    out.extend(key_lines(formatted(scored)))
     out.append("```")
 
     components.LOCAL_MAX_EDGES = 0  # the distributed rounds

@@ -1,22 +1,22 @@
 """Linking-stage scale bench.
 
-Default mode: exact vs df-capped similarity join. Measures the TF-IDF
-inverted-index similarity join (tfidf_weights + similarity_pairs) over
-synthetic Zipf-ish vocabularies at growing sizes, with and without the
-candidate_max_df prefix filter (the df-cap build_linking_tables sets
-above 50k norms at 5% of the vocabulary). The join OUTPUT is quadratic in
-per-n-gram df, so the exact path's cost grows superlinearly with vocabulary
-while the capped path stays near-linear.
+Default mode: exact vs df-capped TF-IDF linking above the local tier.
+Runs the block-pair stage the linker runs above LOCAL_MAX_VOCAB
+(``linking.gated_block_pairs``: the TF-IDF kernel and the gate, one
+``applyInPandas`` task per block pair) over synthetic Zipf-ish
+vocabularies at growing sizes, with and without the df-cap
+(``auto_df_cap``'s 5% of the vocabulary, at least 100). Candidate volume
+is quadratic in per-n-gram df, so the cap bounds it on vocabularies whose
+common grams are very common; every emitted score stays exact.
 
-``crossover`` mode: the driver-local linker (the Python prefix scorer)
-beside the distributed prefix-join cascade on the same vocabulary, the
-evidence for where LOCAL_MAX_VOCAB sits. Each vocabulary is linked
-twice by build_linking_tables, once by default (local below the tier) and
-once with the local path switched off, and reports each leg's wall time,
-the peak RSS of the Python driver and of the JVM during the leg, and
-whether both legs gave the same edges. Vocabularies: datagen corpora at
-vocab_scale=20000 (``--convs``) and this script's Zipf vocabulary
-(``--zipf``, one MATERIAL mention per norm, no abbreviations).
+``crossover`` mode: the driver-local linker beside the distributed one on
+the same vocabulary, the evidence for where LOCAL_MAX_VOCAB sits. Each
+vocabulary is linked twice by build_linking_tables, once by default (local
+below the tier) and once with the local path switched off, and reports
+each leg's wall time, the peak RSS of the Python driver and of the JVM
+during the leg, and whether both legs gave the same edges. Vocabularies:
+datagen corpora at vocab_scale=20000 (``--convs``) and this script's Zipf
+vocabulary (``--zipf``, one MATERIAL mention per norm, no abbreviations).
 
 Run serially (no concurrent Spark jobs — BENCH.md JVM-bandwidth note).
 
@@ -38,16 +38,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 from named_entity_algorithm_project_spark.datagen import generate_transcripts
 from named_entity_algorithm_project_spark.operators import linking
 from named_entity_algorithm_project_spark.operators.extract import (
     extract_combined,
-)
-from named_entity_algorithm_project_spark.operators.linking import (
-    similarity_pairs,
-    tfidf_weights,
 )
 from named_entity_algorithm_project_spark.session import get_spark
 
@@ -77,22 +71,19 @@ def build_vocab(n: int, seed: int = 5) -> list:
 
 def bench_one(spark, n: int, capped: bool) -> dict:
     norms = build_vocab(n)
-    df = spark.createDataFrame([(x,) for x in norms], "norm string")
-    t0 = time.time()
-    weights = tfidf_weights(df, len(norms)).localCheckpoint(eager=True)
-    t_weights = time.time() - t0
+    rows = spark.createDataFrame(
+        [(x, ["MATERIAL"]) for x in norms], "norm string, types array<string>"
+    )
     cap = max(int(0.05 * len(norms)), 100) if capped else None
     t0 = time.time()
-    pairs = similarity_pairs(weights, candidate_max_df=cap)
-    n_pairs = pairs.filter(F.col("score") >= 0.8).count()
-    t_join = time.time() - t0
+    n_edges = linking.gated_block_pairs(rows, "tfidf", 0.8, len(norms), cap).count()
+    t_link = time.time() - t0
     return {
         "n_norms": len(norms),
         "capped": capped,
         "cap": cap,
-        "t_weights_s": round(t_weights, 2),
-        "t_join_s": round(t_join, 2),
-        "pairs_ge_0.8": n_pairs,
+        "t_link_s": round(t_link, 2),
+        "gated_edges": n_edges,
     }
 
 
@@ -184,20 +175,12 @@ def main():
         app_name="linking-bench", master="local[8]", shuffle_partitions=16
     )
     spark.sparkContext.setLogLevel("ERROR")
-    results = []
-    # exact arm: tiny tiers only — the join output is quadratic in gram df
-    # (at 5k norms on this vocabulary it already exceeds 10^8 rows)
     for n in (1_000, 2_000, 4_000):
         for capped in (False, True):
-            r = bench_one(spark, n, capped)
-            results.append(r)
-            print(json.dumps(r), flush=True)
-    # capped arm scales 10x and 25x beyond the exact arm's ceiling — the
-    # regime build_linking_tables auto-enables the cap for
-    for n in (40_000, 100_000):
-        r = bench_one(spark, n, True)
-        results.append(r)
-        print(json.dumps(r), flush=True)
+            print(json.dumps(bench_one(spark, n, capped)), flush=True)
+    # the capped arm at the sizes build_linking_tables caps at
+    for n in (100_000, 200_000):
+        print(json.dumps(bench_one(spark, n, True)), flush=True)
     spark.stop()
 
 

@@ -2,21 +2,26 @@
 gates, type compatibility, canonical pick (SURVEY §2.5 L3-L9)."""
 
 import math
+from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
-from named_entity_algorithm_project_spark.functions.ngrams import char_wb_ngrams
+from named_entity_algorithm_project_spark.functions.ngrams import (
+    char_wb_ngrams,
+    tfidf_vectors,
+)
 from named_entity_algorithm_project_spark.functions.textnorm import (
     adaptive_threshold,
+    adaptive_threshold_floor,
     can_merge_terms,
     compute_base_threshold,
+    gate_pair_scores,
     types_compatible,
 )
 from named_entity_algorithm_project_spark.operators.canonical import pick_canonicals
 from named_entity_algorithm_project_spark.operators.linking import (
-    similarity_pairs,
-    tfidf_weights,
+    tfidf_prefix_pairs,
 )
 from named_entity_algorithm_project_spark.oracle import _tfidf_cosine_pairs
 
@@ -93,45 +98,15 @@ def test_tfidf_matches_sklearn_exactly():
             assert ours.get(key, 0.0) == pytest.approx(sk[i][j], abs=1e-9)
 
 
-def test_spark_tfidf_matches_oracle(spark):
-    norms = [
-        "polymer blend", "polymer blends", "P3HT", "organic solar cell",
-        "organic solar cells", "bandgap", "band gap", "mobility",
-        "PCE", "pce",
-    ]
-    oracle = _tfidf_cosine_pairs(norms)
-    df = spark.createDataFrame([(n,) for n in norms], "norm string")
-    weights = tfidf_weights(df, len(norms))
-    pairs = {
-        (r["a"], r["b"]): r["score"]
-        for r in similarity_pairs(weights).collect()
-    }
-    assert set(pairs) == set(oracle)
-    for k, v in oracle.items():
-        assert pairs[k] == pytest.approx(v, abs=1e-9), k
-    # TfidfVectorizer's default lowercase=True preprocessing: case variants
-    # are identical vectors (app.py:3050 uses the sklearn default)
-    assert pairs[("PCE", "pce")] == pytest.approx(1.0, abs=1e-9)
-
-
-def test_df_cap_alone_drops_pairs(spark):
-    """A df-cap is honored on its own: both similarity joins derive the
-    gram document frequencies from the weights. At cap 1 no shared gram
-    survives, so no pair can be scored."""
-    from named_entity_algorithm_project_spark.operators.linking import (
-        similarity_pairs_prefix,
-    )
-
+def test_df_cap_alone_drops_pairs():
+    """A df-cap is honored on its own: the one-block kernel counts the
+    gram document frequencies itself. At cap 1 no shared gram survives
+    candidate generation, so no pair is scored."""
     norms = ["polymer blend", "polymer blends", "band gap", "bandgap", "PCE", "pce"]
-    df = spark.createDataFrame([(n,) for n in norms], "norm string")
-    weights = tfidf_weights(df, len(norms)).localCheckpoint(eager=True)
-    assert similarity_pairs(weights).count() > 0
-    assert similarity_pairs(weights, candidate_max_df=1).count() == 0
-    assert similarity_pairs_prefix(weights, gate_floor=0.5).count() > 0
-    assert (
-        similarity_pairs_prefix(weights, gate_floor=0.5, candidate_max_df=1).count()
-        == 0
-    )
+    naive = {k: s for k, s in _tfidf_cosine_pairs(norms).items() if s >= 0.5}
+    assert naive
+    assert tfidf_prefix_pairs(norms, gate_floor=0.5) == naive
+    assert tfidf_prefix_pairs(norms, gate_floor=0.5, candidate_max_df=1) == {}
 
 
 def test_base_threshold_formula():
@@ -308,82 +283,33 @@ def test_fused_row_overflow_links_distributed(spark, monkeypatch):
     assert over.base_threshold == loc.base_threshold
 
 
-def test_auto_blocking_recall(spark):
+def test_auto_blocking_recall():
     """The auto df-cap (5% of the vocabulary — the default above 50k unique
-    norms) is a prefix-filter with BOUNDED loss: the capped score is a lower
-    bound on the exact cosine, short by at most the mass of the dropped
-    (idf-floor) n-grams. Contract verified here at a vocabulary where the
-    cap actually operates (the generator corpus is too small):
+    norms) drops the common n-grams from candidate generation only, with
+    BOUNDED loss. Contract verified here at a vocabulary where the cap
+    actually operates (the generator corpus is too small):
 
-      1. capped candidate pairs/scores are a subset / lower bound
-      2. the loss is small: score delta <= 0.06 on every exact pair >= 0.8
-      3. margin recall: >= 0.99 of pairs scoring >= threshold+0.05 in the
-         exact path still clear the threshold after capping (true merges
-         score well above the floor; abbrev/alias edges cover the rest —
+      1. every capped score is the exact cosine (the naive scorer's bits)
+      2. margin recall: >= 0.99 of pairs scoring >= threshold+0.05 in the
+         exact path are still candidates after capping (true merges score
+         well above the floor; abbrev/alias edges cover the rest —
          SURVEY §7.4)
     """
-    import random
-    import string
-
-    from named_entity_algorithm_project_spark.operators.linking import (
-        similarity_pairs,
-        tfidf_weights,
-    )
-
-    rng = random.Random(5)
-    # Zipf-ish vocabulary: short COMMON prefixes (their grams exceed the df
-    # cap, like real morphological stopgrams) + long RARE cores that carry
-    # each near-duplicate pair's similarity mass.
-    prefixes = ["pol", "met", "oxi", "ben", "ami", "chl", "flu", "nan"]
-    words = sorted(
-        {
-            rng.choice(prefixes)
-            + "".join(
-                rng.choice(string.ascii_lowercase)
-                for _ in range(rng.randint(8, 12))
-            )
-            for _ in range(400)
-        }
-    )
-    base = sorted(
-        {
-            " ".join(rng.choice(words) for _ in range(rng.randint(1, 3)))
-            for _ in range(700)
-        }
-    )[:600]
-    variants = []
-    for t in base[:200]:
-        variants.append(t + "s" if rng.random() < 0.5 else t.replace(" ", "-", 1))
-    norms = sorted(set(base) | set(variants))
-    n = len(norms)
-    cap = max(int(0.05 * n), 1)
+    norms = _random_vocab()
+    cap = max(int(0.05 * len(norms)), 1)
     thresh = 0.8
 
-    df = spark.createDataFrame([(x,) for x in norms], "norm string")
-    weights = tfidf_weights(df, n).localCheckpoint(eager=True)
-
-    def scores(capped):
-        pairs = similarity_pairs(weights, candidate_max_df=cap if capped else None)
-        return {
-            (r["a"], r["b"]): r["score"]
-            for r in pairs.filter(F.col("score") >= 0.5).collect()
-        }
-
-    exact = scores(False)
-    capped = scores(True)
+    exact = _tfidf_cosine_pairs(norms)
+    capped = tfidf_prefix_pairs(norms, gate_floor=thresh, candidate_max_df=cap)
     hot = {k for k, s in exact.items() if s >= thresh}
     assert len(hot) >= 100, "fixture produced too few above-threshold pairs"
-    # 1. lower bound
-    for k in hot:
-        assert capped.get(k, 0.0) <= exact[k] + 1e-9
-    # 2. bounded loss
-    max_delta = max(exact[k] - capped.get(k, 0.0) for k in hot)
-    assert max_delta <= 0.06, f"df-cap dropped {max_delta:.3f} cosine mass"
-    # 3. margin recall
+    # 1. exact scores
+    assert all(exact[k] == s for k, s in capped.items())
+    # 2. margin recall
     margin = {k for k, s in exact.items() if s >= thresh + 0.05}
-    kept = {k for k in margin if capped.get(k, 0.0) >= thresh}
+    kept = margin & set(capped)
     recall = len(kept) / max(len(margin), 1)
-    assert recall >= 0.99, f"margin recall {recall:.4f} at cap {cap} (n={n})"
+    assert recall >= 0.99, f"margin recall {recall:.4f} at cap {cap}"
 
 
 def _random_vocab(seed=5, n_words=400, n_base=700, n_keep=600, n_var=200):
@@ -417,158 +343,86 @@ def _random_vocab(seed=5, n_words=400, n_base=700, n_keep=600, n_var=200):
     return sorted(set(base) | set(variants))
 
 
-def test_prefix_filter_scores_match_naive(spark):
-    """similarity_pairs_prefix contracts against the naive join:
+def _naive_capped_pairs(norms, cap):
+    """The naive capped reference: the oracle's inverted-index sum over
+    its TF-IDF vectors with the grams of df > ``cap`` removed (so each
+    score is a lower bound on the exact cosine)."""
+    vecs = tfidf_vectors(norms)
+    df = Counter(g for v in vecs for g in v)
+    postings = defaultdict(list)
+    for i, v in enumerate(vecs):
+        for g in v:
+            if df[g] <= cap:
+                postings[g].append(i)
+    scores = defaultdict(float)
+    for g, idxs in sorted(postings.items()):
+        for ii, a in enumerate(idxs):
+            for b in idxs[ii + 1 :]:
+                scores[tuple(sorted((norms[a], norms[b])))] += (
+                    vecs[a][g] * vecs[b][g]
+                )
+    return dict(scores)
 
-    * UNCAPPED: every naive pair at/above the gate floor survives with the
-      identical score (the filter only prunes pairs that cannot reach the
-      floor);
-    * capped: every emitted score is the EXACT cosine (equals the uncapped
-      naive score), and every naive CAPPED pair at/above the floor is a
-      superset member;
-    * the Python form (tfidf_prefix_pairs, the driver-local scorer) returns
-      exactly the naive pairs at/above the floor, with the same scores."""
-    from named_entity_algorithm_project_spark.functions.textnorm import (
-        adaptive_threshold_floor,
-    )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        similarity_pairs_prefix,
-        tfidf_prefix_pairs,
-    )
 
+def test_prefix_filter_scores_match_naive():
+    """The TF-IDF kernel against the oracle's naive scorer:
+
+    * UNCAPPED: exactly the naive pairs at/above the gate floor, with the
+      same score bits (the prefix and maxweight filters only prune pairs
+      that cannot reach the floor; both sum in sorted gram order);
+    * capped: every emitted score is the EXACT cosine, and every naive
+      CAPPED pair at/above the floor is a superset member."""
     norms = _random_vocab(seed=9)
-    n = len(norms)
     floor = adaptive_threshold_floor(0.80)
-    df = spark.createDataFrame([(x,) for x in norms], "norm string")
-    weights = tfidf_weights(df, n).localCheckpoint(eager=True)
-    cap = max(int(0.05 * n), 1)
-
-    def collect(frame):
-        return {(r["a"], r["b"]): r["score"] for r in frame.collect()}
-
-    naive_exact = collect(similarity_pairs(weights))
-    naive_capped = collect(similarity_pairs(weights, candidate_max_df=cap))
+    cap = max(int(0.05 * len(norms)), 1)
+    naive_exact = _tfidf_cosine_pairs(norms)
 
     # --- uncapped: identical above the floor --------------------------------
-    pref = collect(
-        similarity_pairs_prefix(weights, gate_floor=floor)
-    )
-    above = {k for k, s in naive_exact.items() if s >= floor}
+    above = {k: s for k, s in naive_exact.items() if s >= floor}
     assert len(above) >= 50, "fixture produced too few above-floor pairs"
-    assert above <= set(pref)
-    for k, s in pref.items():
-        assert s == pytest.approx(naive_exact[k], abs=1e-9), k
-    assert all(s >= floor - 1e-6 for s in pref.values())
+    assert tfidf_prefix_pairs(norms, gate_floor=floor) == above
 
     # --- capped: exact scores, superset of naive capped ---------------------
-    capped_above = {k for k, s in naive_capped.items() if s >= floor}
-    exact_capped = collect(
-        similarity_pairs_prefix(weights, gate_floor=floor, candidate_max_df=cap)
-    )
+    exact_capped = tfidf_prefix_pairs(norms, gate_floor=floor, candidate_max_df=cap)
+    capped_above = {
+        k for k, s in _naive_capped_pairs(norms, cap).items() if s >= floor
+    }
+    assert capped_above
     assert capped_above <= set(exact_capped), (
-        "the capped prefix join lost a naive-capped above-floor pair"
+        "the capped kernel lost a naive-capped above-floor pair"
     )
-    for k, s in exact_capped.items():
-        # every emitted score is the TRUE cosine, not the capped lower bound
-        assert s == pytest.approx(naive_exact[k], abs=1e-9), k
-
-    # --- Python form: the naive pairs above the floor, same scores ----------
-    py_pref = tfidf_prefix_pairs(norms, floor)
-    assert set(py_pref) == above
-    for k, s in py_pref.items():
-        assert s == pytest.approx(naive_exact[k], abs=1e-9), k
-    oracle_naive = _tfidf_cosine_pairs(norms)
-    assert py_pref == {k: s for k, s in oracle_naive.items() if s >= floor}
+    # every emitted score is the TRUE cosine, not the capped lower bound
+    assert all(naive_exact[k] == s for k, s in exact_capped.items())
 
 
-def test_prefix_filter_gated_edges_identical(spark):
-    """Gated edge-set contracts of the prefix join against the naive join,
-    through the shared gate cascade: uncapped, the prefix join's gated
-    edges equal the naive join's exactly; capped, they are a superset of
-    the naive capped join's (the prefix join scores exactly)."""
-    from named_entity_algorithm_project_spark.functions.textnorm import (
-        adaptive_threshold_floor,
-    )
-    from named_entity_algorithm_project_spark.operators.linking import (
-        gate_scored_pairs,
-        similarity_pairs_prefix,
-    )
-
+def test_prefix_filter_gated_edges_identical():
+    """Gated edge-set contracts of the kernel against the naive scorer,
+    through the shared gate cascade: uncapped, the kernel's gated edges
+    equal the naive scorer's exactly; capped, they are a superset of the
+    naive capped scorer's (the kernel scores exactly)."""
     norms = _random_vocab(seed=9)
-    n = len(norms)
     base = 0.80
     # family types: near-duplicates share a prefix family; every fifth
     # norm is UNKNOWN, so the type gate blocks some high-scoring pairs
-    profiles = spark.createDataFrame(
-        [
-            (x, 1, ["UNKNOWN"] if i % 5 == 0 else [x[:3].upper()])
-            for i, x in enumerate(norms)
-        ],
-        "norm string, freq bigint, types array<string>",
-    )
-    weights = tfidf_weights(profiles.select("norm"), n).localCheckpoint(
-        eager=True
-    )
-    cap = max(int(0.05 * n), 1)
+    types = {
+        x: ["UNKNOWN"] if i % 5 == 0 else [x[:3].upper()]
+        for i, x in enumerate(norms)
+    }
+    cap = max(int(0.05 * len(norms)), 1)
     floor = adaptive_threshold_floor(base)
 
-    def gated(scored):
-        return {
-            (r["src"], r["dst"])
-            for r in gate_scored_pairs(scored, profiles, [], base).collect()
-        }
+    def gated(pairs):
+        return set(gate_pair_scores(pairs, types, base))
 
-    naive = gated(similarity_pairs(weights))
+    naive = gated(_tfidf_cosine_pairs(norms))
     assert len(naive) >= 20, "fixture produced too few gated edges"
-    assert gated(
-        similarity_pairs_prefix(weights, gate_floor=floor)
-    ) == naive
-    naive_capped = gated(similarity_pairs(weights, candidate_max_df=cap))
+    assert gated(tfidf_prefix_pairs(norms, gate_floor=floor)) == naive
+    naive_capped = gated(_naive_capped_pairs(norms, cap))
     assert naive_capped
-    assert gated(
-        similarity_pairs_prefix(weights, gate_floor=floor, candidate_max_df=cap)
-    ) >= naive_capped
-
-
-def test_distributed_prefix_plan_pins_vocabulary_joins(spark, monkeypatch):
-    """The hint contract of the distributed prefix join, on the plan a
-    forced-distributed build_linking_tables runs at test scale: the
-    prefix-postings join, both per-norm-stats joins and the candidate-pair
-    score join are sort-merge-pinned (>= 4 SortMergeJoin — the broadcasts
-    the 640k-norm tier OOM'd on), and the AllPairs maxweight filter sits
-    before the score join."""
-    from named_entity_algorithm_project_spark.datagen import (
-        TRANSCRIPTS_SCHEMA,
-        generate_rows,
+    assert (
+        gated(tfidf_prefix_pairs(norms, gate_floor=floor, candidate_max_df=cap))
+        >= naive_capped
     )
-    from named_entity_algorithm_project_spark.operators import linking
-    from named_entity_algorithm_project_spark.operators.extract import (
-        extract_combined,
-    )
-
-    scored = []
-    prefix_join = linking.similarity_pairs_prefix
-
-    def capture(*args, **kwargs):
-        out = prefix_join(*args, **kwargs)
-        scored.append(out)
-        return out
-
-    monkeypatch.setattr(linking, "similarity_pairs_prefix", capture)
-    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
-    rows = generate_rows(n_convs=60, seed=17)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    lt = linking.build_linking_tables(extract_combined(df))
-    assert not lt.edges.isLocal() and lt.n_norms < linking.AUTO_BLOCK_MIN_VOCAB
-    assert len(scored) == 1
-
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = scored[0]._jdf.queryExecution().explainString(mode)
-    n_smj = plan.count(") SortMergeJoin")
-    assert n_smj >= 4, f"{n_smj} SortMergeJoin in the prefix plan:\n{plan}"
-    assert "_maxw" in plan, "AllPairs maxweight filter missing:\n" + plan
 
 
 def test_planted_pair_recall_under_cap(spark, monkeypatch):

@@ -2,7 +2,7 @@
 for both scorers.
 
 The pandas oracle (``oracle_vocabulary`` + ``link_vocabulary``), the
-driver-local linker and the distributed Column cascade must produce the
+driver-local linker and the distributed linker (block-pair stage) must produce the
 same (norm, freq, effective types) rows, the same gated edge set and the
 same component node set, with either scorer. The generator datagen never
 produces the inputs that separate them, so the vocabularies here are built directly, seeded, with:

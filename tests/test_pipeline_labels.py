@@ -45,10 +45,11 @@ def test_pool_thread_jobs_carry_phase_label(spark, tmp_path, monkeypatch):
         config=pipeline.PipelineConfig(n_buckets=2),
         resume=False,
     )
-    # linking's three output checkpoints + Stage E's three small writes
+    # linking's edges and nodes checkpoints (the norms table is
+    # checkpointed on the calling thread, before the block-pair stage reads
+    # it) + Stage E's three small writes
     assert sorted(what for what, _ in pooled) == [
-        "alias_groups", "canonical_map", "checkpoint", "checkpoint",
-        "checkpoint", "metrics",
+        "alias_groups", "canonical_map", "checkpoint", "checkpoint", "metrics",
     ]
     for what, label in pooled:
         assert label is not None and label.startswith("kg:"), (what, label)

@@ -35,7 +35,6 @@ ALLOWED = {
     "io_tables.read_lineage": "test_resume reads the lineage table through it",
     "oracle.run_oracle": "the reference test_parity compares against",
     "oracle.oracle_apply_canonical": "the reference test_parity compares against",
-    "operators.linking.similarity_pairs": "naive parity baseline of test_linking and scripts",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

@@ -1,7 +1,9 @@
-"""L4 semantic-embedding linking: stub embedder, driver-local and
-block-pair scoring parity vs the numpy N² oracle, and end-to-end
-canonical-map parity through the shared gate cascade (reference
-use_semantic path, app.py:3084-3110)."""
+"""L4 semantic-embedding linking: stub embedder, driver-local scoring
+parity vs the numpy N² oracle, the block-pair stage (both scorers) vs
+the one-block kernels, and end-to-end canonical-map parity through the
+shared gate cascade (reference use_semantic path, app.py:3084-3110)."""
+
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -12,9 +14,15 @@ from named_entity_algorithm_project_spark.functions.embed import (
     cosine_matrix,
     embed_text,
 )
+from named_entity_algorithm_project_spark.functions.ngrams import char_wb_ngrams
+from named_entity_algorithm_project_spark.functions.textnorm import (
+    adaptive_threshold_floor,
+    gate_pair_scores,
+)
 from named_entity_algorithm_project_spark.operators.linking import (
     embedding_pairs,
-    semantic_block_pairs,
+    gated_block_pairs,
+    tfidf_prefix_pairs,
 )
 
 NORMS = [
@@ -140,9 +148,19 @@ def test_semantic_end_to_end_canonical_parity(spark, monkeypatch):
     assert dist_edges == edges, dist_edges ^ edges
 
 
+#: the block-pair stage's fixture: NORMS plus upper-case and plural
+#: variants (hot pairs for both scorers); every fifth norm is UNKNOWN, so
+#: the type gate blocks some of them
+VOCAB = sorted(set(NORMS) | {n.upper() for n in NORMS} | {n + "s" for n in NORMS})
+VOCAB_TYPES = {
+    x: ["UNKNOWN"] if i % 5 == 0 else ["MATERIAL"] for i, x in enumerate(VOCAB)
+}
+BASE = 0.80
+
+
 def _block_of(spark, nb):
-    """{norm: block} for NORMS, by the block-pair scorer's routing rule."""
-    df = spark.createDataFrame([(x,) for x in NORMS], "norm string")
+    """{norm: block} for VOCAB, by the block-pair stage's routing rule."""
+    df = spark.createDataFrame([(x,) for x in VOCAB], "norm string")
     return {
         r["norm"]: r["block"]
         for r in df.select(
@@ -151,24 +169,49 @@ def _block_of(spark, nb):
     }
 
 
-def test_block_pair_scorer_equals_embedding_pairs(spark, monkeypatch):
-    """The partitioned semantic scorer is embedding_pairs of the whole
-    vocabulary, bit for bit, and its applyInPandas stage runs
-    nb(nb+1)/2 tasks. Leg 1: 171 shuffle partitions give 18 blocks for
-    15 norms, so some blocks are empty, and one hot pair shares a block.
-    Leg 2: a 3-norm block bound raises nb past the 4 blocks that 8
+@pytest.mark.parametrize(
+    "score_source, cap",
+    [("semantic", None), ("tfidf", None), ("tfidf", 5)],
+    ids=["semantic", "tfidf", "tfidf_capped"],
+)
+def test_block_pair_stage_equals_one_block_kernel(
+    spark, monkeypatch, score_source, cap
+):
+    """The block-pair stage is the gated one-block kernel of the whole
+    vocabulary, bit for bit, for each scorer (TF-IDF also under a df-cap),
+    and its applyInPandas stage runs nb(nb+1)/2 tasks. Leg 1: 171 shuffle
+    partitions give 18 blocks, some of them empty, and a hot pair shares a
+    block. Leg 2: a 3-norm block bound raises nb past the 4 blocks that 8
     partitions give."""
     from named_entity_algorithm_project_spark.operators import linking
 
-    floor = 0.5
-    want = embedding_pairs(NORMS, gate_floor=floor)
-    df = spark.createDataFrame([(x,) for x in NORMS], "norm string")
+    floor = adaptive_threshold_floor(BASE)
+    doc_freq = (
+        len(VOCAB),
+        Counter(g for x in VOCAB for g in set(char_wb_ngrams(x))),
+    )
+
+    def kernel(*blocks):
+        if score_source == "semantic":
+            return embedding_pairs(*blocks, gate_floor=floor)
+        return tfidf_prefix_pairs(
+            *blocks, gate_floor=floor, doc_freq=doc_freq, candidate_max_df=cap
+        )
+
+    scores = kernel(VOCAB)
+    if cap is not None:  # the cap drops some candidates
+        assert len(scores) < len(tfidf_prefix_pairs(VOCAB, gate_floor=floor))
+    want = gate_pair_scores(scores, VOCAB_TYPES, BASE)
+    assert len(want) >= 10 and len(want) < len(scores)  # the gate acts
+    df = spark.createDataFrame(
+        list(VOCAB_TYPES.items()), "norm string, types array<string>"
+    )
     old = spark.conf.get("spark.sql.shuffle.partitions")
 
     def run(n_partitions):
         spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
         try:
-            scored = semantic_block_pairs(df, floor)
+            scored = gated_block_pairs(df, score_source, BASE, len(VOCAB), cap)
             got = {(r["a"], r["b"]): r["score"] for r in scored.collect()}
             n_tasks = scored.rdd.getNumPartitions()
         finally:
@@ -189,11 +232,30 @@ def test_block_pair_scorer_equals_embedding_pairs(spark, monkeypatch):
     assert max(list(block.values()).count(b) for b in range(nb)) <= 3
 
     # the two-block kernel alone: exactly the pairs across the split
-    lo, hi = NORMS[:7], NORMS[7:]
-    across = embedding_pairs(lo, hi, gate_floor=floor)
-    assert across == {
-        k: v for k, v in want.items() if (k[0] in lo) != (k[1] in lo)
+    lo, hi = VOCAB[::2], VOCAB[1::2]
+    assert kernel(lo, hi) == {
+        k: v for k, v in scores.items() if (k[0] in lo) != (k[1] in lo)
     }
+
+
+def test_block_pairs_run_one_per_task(spark):
+    """The routed rows land one block pair per task: with every block
+    non-empty, all nb(nb+1)/2 tasks of the stage receive rows (plain hash
+    partitioning of (lo, hi) left 13 of 36 tasks empty at nb = 8)."""
+    from named_entity_algorithm_project_spark.operators import linking
+
+    df = spark.createDataFrame(
+        [(f"norm {i}",) for i in range(400)], "norm string"
+    )
+    for nb in (4, 8):
+        routed = linking._route_block_pairs(df, nb)
+        per_task = routed.groupBy(F.spark_partition_id().alias("p")).agg(
+            F.countDistinct("lo", "hi").alias("pairs")
+        )
+        assert routed.rdd.getNumPartitions() == nb * (nb + 1) // 2
+        assert sorted(r["pairs"] for r in per_task.collect()) == [1] * (
+            nb * (nb + 1) // 2
+        )
 
 
 def test_distributed_semantic_links_what_the_driver_links(spark, monkeypatch):
