@@ -6,8 +6,8 @@ The reference scores entity-linking candidates with
 O(N²) dense matrix with a partitioned prefix-filtered join — the linker's
 kernel and the pandas oracle share this generator and the same TF-IDF
 formula (smooth idf: ln((1+N)/(1+df)) + 1, raw tf, L2 normalization); the
-distributed linker counts each gram's document frequency with the Column
-form (:func:`char_wb_ngrams_col`).
+linker's block-pair stage counts each gram's document frequency with the
+Column form (:func:`char_wb_ngrams_col`).
 
 The vectorizer's default preprocessing (``lowercase=True``) applies here
 too: case variants of a term (PCE / pce) must share n-grams exactly as the
@@ -102,7 +102,7 @@ def tfidf_vectors(
     ln((1+N)/(1+df)) + 1) per text, keyed by n-gram in first-occurrence
     order; ``{}`` when a text has no n-grams. ``doc_freq`` is the
     vocabulary's ``(N, {gram: df})`` when ``texts`` are only part of it (a
-    block of the distributed linker); by default ``texts`` are the whole
+    block of the linker's block-pair stage); by default ``texts`` are the whole
     vocabulary. Every Python similarity scorer builds its vectors here."""
     counts = [tf_counts(t) for t in texts]
     if doc_freq is None:

@@ -1,13 +1,13 @@
 """Text normalization scalars (reference: app.py:1419-1422, 2793-3024).
 
-Each has a pure-python form (used inside Arrow-batched UDFs and the pandas
-test oracle) and, where a relational stage needs it, a Column-expression form
-so Catalyst can run it JVM-side (the norm trim in the vocabulary scan, type
-compatibility in the abbreviation gate). The linking rules (norm trim,
-short-vs-long guard, adaptive threshold, type compatibility) have exactly one
-definition each here, and :func:`gate_pair_scores` is the one cascade
-over them: the oracle, the driver-local linker and every block-pair task of
-the distributed linker run it.
+Each has a pure-python form (used inside Arrow-batched UDFs, the linking
+cascade and the pandas test oracle); the norm trim also has a
+Column-expression form so Catalyst runs it JVM-side in the vocabulary scan.
+The linking rules (norm trim, short-vs-long guard, adaptive threshold, type
+compatibility) have exactly one definition each here, and
+:func:`gate_pair_scores` is the one gate over them: the linking cascade
+(:func:`oracle.link_vocabulary`) and every block-pair task of the
+linker's distributed pair scoring run it.
 """
 
 from __future__ import annotations
@@ -107,19 +107,6 @@ def types_compatible(types_a, types_b) -> bool:
     if clean_a and clean_b:
         return not clean_a.isdisjoint(clean_b)
     return not clean_a and not clean_b
-
-
-def types_compatible_col(types_a: Column, types_b: Column) -> Column:
-    """Column form of :func:`types_compatible` on two array<string>
-    columns (NULL = missing set)."""
-    unknown = F.array(F.lit(""), F.lit("UNKNOWN"))
-    clean_a = F.array_except(F.coalesce(types_a, F.array()), unknown)
-    clean_b = F.array_except(F.coalesce(types_b, F.array()), unknown)
-    both_clean = (F.size(clean_a) > 0) & (F.size(clean_b) > 0)
-    both_empty = (F.size(clean_a) == 0) & (F.size(clean_b) == 0)
-    return F.when(both_clean, F.arrays_overlap(clean_a, clean_b)).otherwise(
-        both_empty
-    )
 
 
 def gate_pair_scores(

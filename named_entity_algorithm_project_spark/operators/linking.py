@@ -22,21 +22,29 @@ The gate cascade (:func:`textnorm.gate_pair_scores`) runs on them:
     reference mutates type sets sequentially per link — we pin the
     order-free one-round union, gated on the original sets)
 
-Every vocabulary up to ``LOCAL_MAX_VOCAB`` norms skips Spark, whichever
-scorer is selected: the driver collects the fused vocabulary table and
-runs the cascade (:func:`oracle.link_vocabulary`, shared with the pandas
-oracle) with the one-block kernel. At that size a distributed cascade is
-dozens of Spark jobs whose cost is scheduling, not data: the TF-IDF scorer
-takes about half a second on 8k datagen norms, and a whole local linking
-run on 50k Zipf norms 18 s against the former Column cascade's 39 s
-(BENCH.md). Above the tier :func:`gated_block_pairs` partitions the
-vocabulary (the split-join-verify-once plan of "Scalable and Robust Set
-Similarity Join", ICDE'18): each norm is hashed to one of ``nb`` blocks
-and one ``applyInPandas`` task per block pair runs the kernel and the gate
-on its one or two blocks, so every pair is scored once, by the kernel the
-driver runs. The TF-IDF tasks take each gram's vocabulary document
-frequency from one Spark count, so their vectors are the whole
-vocabulary's.
+One cascade links every vocabulary, on the driver. One corpus pass builds
+the fused ``(kind, k1, k2, cnt)`` vocabulary aggregate, one Arrow collect
+brings it to the driver, and :func:`oracle.link_vocabulary` (the pandas
+oracle's cascade) runs the abbreviation gate, the type propagation, the
+domain aliases and the similarity gate over it. Only pair scoring is not
+linear in the vocabulary, so only it may leave the driver process. Up to
+``LOCAL_MAX_VOCAB`` norms the one-block kernel scores the pairs on the
+driver: at that size a Spark stage costs scheduling, not data (the TF-IDF
+scorer takes about half a second on 8k datagen norms, BENCH.md). Above the
+tier :func:`gated_block_pairs` partitions the vocabulary (the
+split-join-verify-once plan of "Scalable and Robust Set Similarity Join",
+ICDE'18): each norm is hashed to one of ``nb`` blocks and one
+``applyInPandas`` task per block pair runs the kernel and the gate on its
+one or two blocks, so every pair is scored once, by the kernel the driver
+runs, and only the gated pairs come back. The TF-IDF tasks take each gram's
+vocabulary document frequency from one Spark count, so their vectors are
+the whole vocabulary's.
+
+The trade-off: driver memory is O(vocabulary). The collected aggregate and
+the cascade's dicts cost about 1 KB of Python heap per norm: linking 233k
+norms took the Python driver from 113 MB to a 369 MB peak, and the cascade
+alone peaked at 898 MB on 917k norms (BENCH.md). So an 8 GiB driver holds
+a few million norms; no linker of this package has been run above 917k.
 
 The df-cap: above ``AUTO_BLOCK_MIN_VOCAB`` norms (50k) n-grams with df
 over :func:`auto_df_cap` drop out of TF-IDF candidate generation — the
@@ -53,18 +61,15 @@ carry most true merges anyway (SURVEY §7.4).
 from __future__ import annotations
 
 from collections import Counter, defaultdict
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from functools import partial
 from typing import Dict, List, Mapping, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..dictionaries import DOMAIN_ALIAS_SUBSTRINGS, PROTECTED_TERMS, VALUE_TYPES
+from ..dictionaries import VALUE_TYPES
 from ..functions.embed import embed_batch
 from ..functions.localrel import local_df
 from ..functions.ngrams import char_wb_ngrams_col, tfidf_vectors
@@ -73,8 +78,8 @@ from ..functions.textnorm import (
     compute_base_threshold,
     gate_pair_scores,
     normalize_entity_col,
-    types_compatible_col,
 )
+from ..oracle import link_vocabulary
 
 #: A heavy df-cap can strip so much squared mass that the
 #: Cauchy–Schwarz suffix rule yields an EMPTY prefix; this
@@ -88,10 +93,10 @@ MIN_PREFIX_RANK = 4
 #: linker (1) caps TF-IDF candidate generation at n-grams with df <=
 #: min(max(AUTO_BLOCK_DF_FRAC·N, 100), AUTO_BLOCK_DF_ABS) (see the module
 #: docstring and :func:`auto_df_cap`); (2), through LOCAL_MAX_VOCAB (a
-#: separate name only as the tests' seam), links on the executors instead
-#: of the driver; and (3) bounds each block of :func:`gated_block_pairs`
-#: to this many norms, so no block-pair task holds more than two
-#: driver-tier vocabularies.
+#: separate name only as the tests' seam), scores the linking pairs in the
+#: block-pair stage instead of the driver process; and (3) bounds each
+#: block of :func:`gated_block_pairs` to this many norms, so no block-pair
+#: task holds more than two driver-tier vocabularies.
 AUTO_BLOCK_MIN_VOCAB = 50_000
 AUTO_BLOCK_DF_FRAC = 0.05
 AUTO_BLOCK_DF_ABS = 4_000
@@ -99,12 +104,14 @@ AUTO_BLOCK_DF_ABS = 4_000
 
 @dataclass
 class LinkingTables:
-    norms: DataFrame  # norm, freq, types:array<string>
+    # local relations, built on the driver from link_vocabulary's output
+    norms: DataFrame  # norm, freq, types:array<string> (effective types)
     edges: DataFrame  # src, dst (deduped, src < dst)
     nodes: DataFrame  # norm: component universe (norms + abbrev/alias endpoints)
     base_threshold: float
     # observability: unique linkable norms and the EFFECTIVE df cap the
-    # TF-IDF scorer ran with (None = uncapped / semantic scorer)
+    # TF-IDF scorer ran with (None = uncapped / semantic scorer); the pairs
+    # were scored by the block-pair stage iff n_norms > LOCAL_MAX_VOCAB
     n_norms: int = 0
     candidate_max_df: Optional[int] = None
 
@@ -215,9 +222,9 @@ def embedding_pairs(
     (app.py:3084-3110) over :func:`embed.embed_batch`, returning
     ``{(a, b): score}`` (a < b) for the pairs scoring
     >= ``gate_floor - 1e-9``, the contract of :func:`tfidf_prefix_pairs`.
-    One block of norms scores the pairs within it (the driver-local
-    linker's scorer); two blocks score the pairs across them (one block
-    pair of :func:`gated_block_pairs`).
+    One block of norms scores the pairs within it (the driver's scorer up
+    to ``LOCAL_MAX_VOCAB``); two blocks score the pairs across them (one
+    block pair of :func:`gated_block_pairs`).
 
     A row-chunked matmul prefilters the pairs (one more 1e-9 of margin, so
     BLAS rounding never drops one); each survivor's score is then
@@ -315,7 +322,8 @@ def gated_block_pairs(
     n_norms: int,
     candidate_max_df: Optional[int],
 ) -> DataFrame:
-    """The similarity edges above the local tier, as (a, b, score) rows:
+    """The gated similarity pairs above ``LOCAL_MAX_VOCAB``, as (a, b,
+    score) rows for the driver's cascade to collect:
     exactly the one-block kernel of ``score_source`` over the whole
     vocabulary, gated by :func:`textnorm.gate_pair_scores`, with no
     Python worker holding more than two blocks.
@@ -391,31 +399,6 @@ def gated_block_pairs(
     )
 
 
-def domain_alias_edges(all_nodes: DataFrame) -> DataFrame:
-    """Substring-alias edges (app.py:2976-2982, 3157-3164): a term containing
-    a known domain substring links to its short alias. Protected endpoints
-    are skipped (app.py:3158-3159)."""
-    frames = []
-    for needle, alias in sorted(DOMAIN_ALIAS_SUBSTRINGS.items()):
-        if alias in PROTECTED_TERMS:
-            continue
-        frames.append(
-            all_nodes.filter(
-                F.col("norm").contains(F.lit(needle))
-                & (F.col("norm") != F.lit(alias))
-                & ~F.col("norm").isin(*sorted(PROTECTED_TERMS))
-            ).select(F.col("norm").alias("src"), F.lit(alias).alias("dst"))
-        )
-    if not frames:
-        return local_df(
-            all_nodes.sparkSession, [], "src string, dst string"
-        )
-    out = frames[0]
-    for frame in frames[1:]:
-        out = out.unionByName(frame)
-    return out.distinct()
-
-
 def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
     """(kind, k1, k2) rows for the fused vocabulary aggregate from the
     Stage-A extraction frame in ONE scan + ONE generate: "M" rows are
@@ -457,22 +440,16 @@ def _fused_rows_from_extracted(extracted: DataFrame) -> DataFrame:
     )
 
 
-#: Vocabulary size up to which the linking cascade runs driver-side from
-#: the collected fused table, for both scorers: exactly the vocabularies
-#: TF-IDF scores UNCAPPED (see :func:`auto_df_cap`). There the one-block
-#: kernels (:func:`tfidf_prefix_pairs`, :func:`embedding_pairs`) beat any
-#: Spark plan, whose cost is job scheduling at this size (BENCH.md,
-#: driver-local crossover). Above it :func:`gated_block_pairs` runs the
-#: same kernels over blocks of at most ``AUTO_BLOCK_MIN_VOCAB`` norms (one
-#: such tier each) and scores the same pairs with the same bits. Read at
-#: call time, so tests force the distributed path by setting it to 0.
+#: Vocabulary size up to which the driver scores the linking pairs itself
+#: with the one-block kernel (:func:`tfidf_prefix_pairs`,
+#: :func:`embedding_pairs`): exactly the vocabularies TF-IDF scores
+#: UNCAPPED (see :func:`auto_df_cap`). There the kernel beats any Spark
+#: stage, whose cost is job scheduling at this size (BENCH.md, driver-local
+#: crossover). Above it :func:`gated_block_pairs` scores the same pairs
+#: with the same bits over blocks of at most ``AUTO_BLOCK_MIN_VOCAB`` norms.
+#: The cascade around the scorer runs on the driver either way. Read at
+#: call time, so tests force the block-pair stage by setting it to 0.
 LOCAL_MAX_VOCAB = AUTO_BLOCK_MIN_VOCAB
-#: bounded-collect guard for the fused table: one row per (norm, type) and
-#: per abbreviation pair, 1.1-1.25 rows per norm on datagen vocabularies,
-#: so 4 rows per local-tier norm. It bounds what the collect holds on the
-#: driver when the vocabulary is too big for the local path: 200k rows,
-#: about 100 MB of Python Row objects (~500 bytes a row).
-LOCAL_FUSED_ROW_CAP = 4 * LOCAL_MAX_VOCAB
 
 
 def auto_df_cap(n_norms: int) -> Optional[int]:
@@ -480,49 +457,6 @@ def auto_df_cap(n_norms: int) -> Optional[int]:
     if n_norms <= AUTO_BLOCK_MIN_VOCAB:
         return None
     return min(max(int(AUTO_BLOCK_DF_FRAC * n_norms), 100), AUTO_BLOCK_DF_ABS)
-
-
-def _build_linking_tables_local(
-    spark, fused_rows, score_source: str
-) -> LinkingTables:
-    """Driver-side LinkingTables from the COLLECTED fused (kind, k1, k2,
-    cnt) table: the oracle's cascade (:func:`oracle.link_vocabulary`) over
-    the collected vocabulary, scored by :func:`tfidf_prefix_pairs` or
-    :func:`embedding_pairs`, returned as local relations. Parity with the
-    oracle and the distributed path is pinned by
-    tests/test_linking.py::test_local_path_parity and the adversarial
-    differential test."""
-    from ..oracle import link_vocabulary
-
-    freq: dict = defaultdict(int)
-    types: dict = defaultdict(set)
-    abbr_pairs = set()
-    for r in fused_rows:
-        if r["kind"] == "M":
-            freq[r["k1"]] += int(r["cnt"])
-            types[r["k1"]].add(r["k2"])
-        else:
-            abbr_pairs.add((r["k1"], r["k2"]))
-    base = compute_base_threshold(sum(freq.values()))
-    scorer = embedding_pairs if score_source == "semantic" else tfidf_prefix_pairs
-    eff_types, edges, nodes = link_vocabulary(
-        freq,
-        types,
-        abbr_pairs,
-        base,
-        partial(scorer, gate_floor=adaptive_threshold_floor(base)),
-    )
-    return LinkingTables(
-        norms=local_df(
-            spark,
-            [(n, freq[n], eff_types[n]) for n in sorted(freq)],
-            "norm string, freq bigint, types array<string>",
-        ),
-        edges=local_df(spark, sorted(edges), "src string, dst string"),
-        nodes=local_df(spark, [(n,) for n in sorted(nodes)], "norm string"),
-        base_threshold=base,
-        n_norms=len(freq),
-    )
 
 
 def build_linking_tables(
@@ -535,10 +469,12 @@ def build_linking_tables(
     ``score_source`` selects the candidate scorer feeding the (shared) gate
     cascade: "tfidf" (default — the reference's primary path) or
     "semantic" (L4, the embedding cosine — the reference's use_semantic
-    path, app.py:3084-3110); anything else raises ``ValueError``. Up to
-    ``LOCAL_MAX_VOCAB`` norms either scorer links exactly on the driver;
+    path, app.py:3084-3110); anything else raises ``ValueError``. The
+    cascade is :func:`oracle.link_vocabulary` over the collected
+    vocabulary; up to ``LOCAL_MAX_VOCAB`` norms the driver scores its pairs,
     above it the same kernel and gate run per block pair
-    (:func:`gated_block_pairs`).
+    (:func:`gated_block_pairs`). Parity with the oracle on both scoring
+    paths is pinned by tests/test_linking_differential.py.
 
     The df-cap is :func:`auto_df_cap` of the measured vocabulary: exact (no
     n-gram dropped) up to ``AUTO_BLOCK_MIN_VOCAB`` unique norms, else
@@ -552,170 +488,58 @@ def build_linking_tables(
     spark = extracted.sparkSession
     # ONE corpus pass for BOTH corpus-scale inputs: the norm profiles and
     # the distinct abbreviation pairs ride a single fused groupBy over one
-    # scan + generate (:func:`_fused_rows_from_extracted`). The fused
-    # aggregate is vocabulary-scale, so every downstream derivation
-    # (profiles, abbr edges, scalar stats) works on the checkpointed small
-    # table.
+    # scan + generate (:func:`_fused_rows_from_extracted`), collected once
+    # over Arrow. freq = mention count per norm, types = set of
+    # upper(normalize_entity(entity_type)) (app.py:3256-3263)
     fused = (
         _fused_rows_from_extracted(extracted)
         .groupBy("kind", "k1", "k2")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+        .toPandas()
     )
-    # --- driver-local path up to the tier (see LOCAL_MAX_VOCAB) -----------
-    # One bounded collect of the fused table doubles as the size gate and
-    # the data.
-    if LOCAL_MAX_VOCAB > 0:
-        sample = fused.limit(LOCAL_FUSED_ROW_CAP + 1).collect()
-        if len(sample) <= LOCAL_FUSED_ROW_CAP:
-            n_local = len({r["k1"] for r in sample if r["kind"] == "M"})
-            if n_local <= LOCAL_MAX_VOCAB:
-                return _build_linking_tables_local(spark, sample, score_source)
-    # freq = mention count per norm, types = sorted set of
-    # upper(normalize_entity(entity_type)) (app.py:3256-3263)
-    profiles = (
-        fused.filter(F.col("kind") == "M")
-        .groupBy(F.col("k1").alias("norm"))
-        .agg(
-            F.sum("cnt").alias("freq"),
-            F.array_sort(F.collect_set("k2")).alias("types"),
+    freq: dict = defaultdict(int)
+    types: dict = defaultdict(set)
+    abbr_pairs = set()
+    for kind, k1, k2, cnt in zip(fused.kind, fused.k1, fused.k2, fused.cnt):
+        if kind == "M":
+            freq[k1] += int(cnt)
+            types[k1].add(k2)
+        else:
+            abbr_pairs.add((k1, k2))
+    n_norms = len(freq)
+    base = compute_base_threshold(sum(freq.values()))
+    candidate_max_df = auto_df_cap(n_norms) if score_source == "tfidf" else None
+
+    def pair_scores(norms, eff_types):
+        if n_norms > LOCAL_MAX_VOCAB:
+            rows = local_df(
+                spark,
+                [(n, eff_types[n]) for n in norms],
+                "norm string, types array<string>",
+            )
+            gated = gated_block_pairs(
+                rows, score_source, base, n_norms, candidate_max_df
+            ).toPandas()
+            return dict(zip(zip(gated.a, gated.b), gated.score))
+        floor = adaptive_threshold_floor(base)
+        if score_source == "semantic":
+            return embedding_pairs(norms, gate_floor=floor)
+        return tfidf_prefix_pairs(
+            norms, gate_floor=floor, candidate_max_df=candidate_max_df
         )
-    ).persist()
-    stats = profiles.agg(
-        F.coalesce(F.sum("freq"), F.lit(0)).alias("n_rows"),
-        F.count(F.lit(1)).alias("n_norms"),
-    ).collect()[0]
-    n_rows, n_norms = int(stats["n_rows"]), int(stats["n_norms"])
-    base = compute_base_threshold(n_rows)
-    candidate_max_df = auto_df_cap(n_norms)
 
-    protected = sorted(PROTECTED_TERMS)
-
-    # --- abbreviation edges, gated on ORIGINAL type sets -------------------
-    # distinct (src=abbr_norm, dst=expansion_norm) pairs from the per-turn
-    # abbreviation registry (app.py:3027-3043), derived from the fused
-    # single-pass aggregate (already trimmed/non-empty/distinct)
-    abbr_raw = fused.filter(F.col("kind") == "A").select(
-        F.col("k1").alias("src"), F.col("k2").alias("dst")
+    eff_types, edges, nodes = link_vocabulary(
+        freq, types, abbr_pairs, base, pair_scores
     )
-    # merge hints: these profile projections are vocabulary-sized, and
-    # LeftOuter can only build-right — an estimate-driven broadcast of the
-    # 917k-norm profiles (compressed shuffle bytes under the threshold,
-    # string-keyed hash relation inflating 5-10x at build) OOM'd the edges
-    # checkpoint at 1 GiB/core (r6 tier-4 finding; same class as the r5
-    # profiles_eff pins)
-    prof_src = profiles.select(
-        F.col("norm").alias("src"), F.col("types").alias("types_src")
-    ).hint("merge")
-    prof_dst = profiles.select(
-        F.col("norm").alias("dst"), F.col("types").alias("types_dst")
-    ).hint("merge")
-    abbr_gated = (
-        abbr_raw.join(prof_src, "src", "left")
-        .join(prof_dst, "dst", "left")
-        .filter(
-            ~(F.col("src").isin(*protected) & F.col("dst").isin(*protected))
-        )
-        .filter(types_compatible_col(F.col("types_src"), F.col("types_dst")))
-        .select("src", "dst")
-    ).persist()
-
-    # one-round abbreviation type-union propagation (see module docstring):
-    # every endpoint's effective set gains its abbrev-neighbors' types.
-    abbr_sym = abbr_gated.unionByName(
-        abbr_gated.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return LinkingTables(
+        norms=local_df(
+            spark,
+            [(n, freq[n], eff_types[n]) for n in sorted(freq)],
+            "norm string, freq bigint, types array<string>",
+        ),
+        edges=local_df(spark, sorted(edges), "src string, dst string"),
+        nodes=local_df(spark, [(n,) for n in sorted(nodes)], "norm string"),
+        base_threshold=base,
+        n_norms=n_norms,
+        candidate_max_df=candidate_max_df,
     )
-    neighbor_types = (
-        abbr_sym.join(
-            # vocabulary-sized dim — same hint rationale as prof_src/dst
-            profiles.select(F.col("norm").alias("dst"), "types").hint("merge"),
-            "dst",
-            "left",
-        )
-        .select(F.col("src").alias("norm"), "types")
-        .filter(F.col("types").isNotNull())
-        .select("norm", F.explode("types").alias("t"))
-    )
-    own_types = profiles.select("norm", F.explode("types").alias("t"))
-    effective_types = (
-        own_types.unionByName(neighbor_types)
-        .groupBy("norm")
-        .agg(F.array_sort(F.collect_set("t")).alias("types"))
-    )
-    # norms with no original profile (abbrev-only endpoints) default UNKNOWN
-    # (merge hint: effective_types is vocabulary-sized — a broadcast of it
-    # OOM'd the 640k-norm tier, BENCH.md round-5 curve)
-    profiles_eff = (
-        profiles.select("norm", "freq")
-        .join(effective_types.hint("merge"), "norm", "left")
-        .withColumn("types", F.coalesce(F.col("types"), F.array(F.lit("UNKNOWN"))))
-    )
-
-    # --- node universe ------------------------------------------------------
-    abbr_nodes = (
-        abbr_gated.select(F.col("src").alias("norm"))
-        .unionByName(abbr_gated.select(F.col("dst").alias("norm")))
-        .distinct()
-    )
-    all_nodes = (
-        profiles.select("norm").unionByName(abbr_nodes).distinct().persist()
-    )
-
-    # --- domain alias edges --------------------------------------------------
-    alias_edges = domain_alias_edges(all_nodes)
-    alias_nodes = alias_edges.select(F.col("dst").alias("norm")).distinct()
-    all_nodes_full = all_nodes.unionByName(alias_nodes).distinct()
-
-    # --- similarity edges -----------------------------------------------------
-    # the norm table is both an output and the block-pair stage's input
-    norms = profiles_eff.localCheckpoint(eager=True)
-    scored = gated_block_pairs(
-        norms.select("norm", "types"),
-        score_source,
-        base,
-        n_norms,
-        candidate_max_df if score_source == "tfidf" else None,
-    )
-    sim_edges = scored.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-
-    edges = (
-        abbr_gated.unionByName(alias_edges)
-        .unionByName(sim_edges)
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .distinct()
-    )
-
-    # Materialize the two other output tables eagerly (they are
-    # vocabulary-sized, tiny next to the corpus), then release the cached
-    # intermediates so repeated invocations in one session don't accumulate
-    # cache blocks. The two materializations are independent — submit them
-    # from a small thread pool so their stages back-fill each other's
-    # scheduling gaps (guide §2.6); Spark's scheduler handles concurrent
-    # jobs natively. The pool threads inherit the caller's local properties
-    # (the kg:<phase> job description), which a plain thread does not.
-    def checkpoint(frame: DataFrame) -> DataFrame:
-        return frame.localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_edges, f_nodes = (
-            pool.submit(inheritable_thread_target(spark)(checkpoint), frame)
-            for frame in (edges, all_nodes_full)
-        )
-        out = LinkingTables(
-            norms=norms,
-            edges=f_edges.result(),
-            nodes=f_nodes.result(),
-            base_threshold=base,
-            n_norms=int(n_norms),
-            candidate_max_df=(
-                candidate_max_df if score_source == "tfidf" else None
-            ),
-        )
-    profiles.unpersist()
-    abbr_gated.unpersist()
-    all_nodes.unpersist()
-    return out

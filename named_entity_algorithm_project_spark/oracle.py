@@ -8,10 +8,11 @@ canonical-map parity are tested exactly.
 
 Shared with Spark: the per-turn detector (detector.py), scalar functions
 (functions/), n-gram generator (functions/ngrams.py), and the linking edge
-cascade :func:`link_vocabulary`, which the driver-local linker also runs.
-Independent here: the orchestration — pandas groupbys, N² numpy cosine, DFS
-components — so a mismatch with the distributed linker isolates Spark
-plumbing bugs.
+cascade :func:`link_vocabulary`, which the Spark linker runs on the driver
+at every vocabulary size. Independent here: the orchestration — pandas
+groupbys, the naive N² pair scorers, DFS components — so a mismatch with
+the Spark linker isolates its vocabulary aggregate and pair-scoring
+plumbing.
 """
 
 from __future__ import annotations
@@ -133,18 +134,24 @@ def link_vocabulary(
     types: Mapping[str, Set[str]],
     abbr_pairs: Iterable[Tuple[str, str]],
     base: float,
-    pair_scores: Callable = _tfidf_cosine_pairs,
+    pair_scores: Callable[
+        [List[str], Mapping[str, List[str]]], Mapping[Tuple[str, str], float]
+    ],
 ) -> Tuple[Dict[str, List[str]], Set[Tuple[str, str]], Set[str]]:
-    """The edge cascade (app.py:3140-3183) over a collected vocabulary,
-    gating the similarity pairs with :func:`textnorm.gate_pair_scores`
-    (the gate every block-pair task of the distributed linker runs).
+    """The edge cascade (app.py:3140-3183) over a collected vocabulary: the
+    one definition of it, run by the oracle and by the Spark linker
+    (:func:`linking.build_linking_tables`) at every vocabulary size.
 
     ``freq`` keys are the trimmed linkable norms, ``types`` their trimmed
     upper-cased type sets, ``abbr_pairs`` the trimmed non-empty
-    (abbr, expansion) pairs. Returns the effective types per norm (sorted,
-    ``["UNKNOWN"]`` when empty), the edges as ``(min, max)`` pairs without
-    self-loops, and the component nodes: the norms plus every abbreviation
-    or alias endpoint.
+    (abbr, expansion) pairs. ``pair_scores(norms, effective_types)``
+    returns ``{(a, b): score}`` (a < b) for the candidate similarity
+    pairs; it gets the effective types so a scorer may gate its pairs
+    itself, and the cascade gates them again with
+    :func:`textnorm.gate_pair_scores` (the gate is idempotent). Returns
+    the effective types per norm (sorted, ``["UNKNOWN"]`` when empty), the
+    edges as ``(min, max)`` pairs without self-loops, and the component
+    nodes: the norms plus every abbreviation or alias endpoint.
     """
     norms = sorted(freq)
     # abbreviation links, gated on the original type sets
@@ -177,7 +184,9 @@ def link_vocabulary(
         }
 
     # similarity edges over corpus norms
-    sim_edges = set(gate_pair_scores(pair_scores(norms), eff_types, base))
+    sim_edges = set(
+        gate_pair_scores(pair_scores(norms, eff_types), eff_types, base)
+    )
     edges = {
         (min(s, t), max(s, t))
         for s, t in gated_abbr | alias_edges | sim_edges
@@ -228,7 +237,7 @@ def oracle_linking(
         type_lookup,
         abbr_pairs,
         compute_base_threshold(sum(freq_map.values())),
-        scorer,
+        lambda norms, _types: scorer(norms),
     )
 
     adjacency: Dict[str, Set[str]] = defaultdict(set)

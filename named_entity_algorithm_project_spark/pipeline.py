@@ -68,8 +68,9 @@ class PipelineConfig:
     # no-op for the deterministic detector
     extend_vocab: bool = False
     # linking candidate scorer: "tfidf" (reference primary path) or
-    # "semantic" (L4 embedding cosine: exact at every size, on the driver
-    # up to linking.LOCAL_MAX_VOCAB norms, per block pair above it)
+    # "semantic" (L4 embedding cosine). Either is exact at every size and
+    # feeds the one driver-side cascade; it scores pairs on the driver up
+    # to linking.LOCAL_MAX_VOCAB norms and per block pair above it.
     score_source: str = "tfidf"
 
 

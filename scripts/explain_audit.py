@@ -91,9 +91,10 @@ def main() -> None:
         out.extend(key_lines(formatted(QUERIES[name](spark, sf))))
         out.append("```")
 
-    # KG pipeline stage frames. build_linking_tables localCheckpoints its
-    # outputs (cache-hygiene), which truncates the lineage .explain would
-    # show — so audit the operator-level plans the linker executes.
+    # KG pipeline stage frames. build_linking_tables runs its cascade on
+    # the driver and returns local relations, which carry no lineage for
+    # .explain to show — so audit the operator-level plans the linker
+    # executes.
     from named_entity_algorithm_project_spark.operators.extract import (
         extract_combined,
         split_extraction,
@@ -114,9 +115,8 @@ def main() -> None:
 
     extracted = combined.localCheckpoint(eager=True)
     mentions, _ = split_extraction(extracted)
-    # the distributed path, as at vocabulary scale: checkpointed tables,
-    # not driver-local relations
-    linking.LOCAL_MAX_VOCAB = 0
+    # the block-pair stage the linker runs above LOCAL_MAX_VOCAB, over the
+    # local relation of (norm, effective types) it builds there
     tables = build_linking_tables(extracted)
     scored = linking.gated_block_pairs(
         tables.norms.select("norm", "types"),

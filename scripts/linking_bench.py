@@ -9,14 +9,17 @@ vocabularies at growing sizes, with and without the df-cap
 is quadratic in per-n-gram df, so the cap bounds it on vocabularies whose
 common grams are very common; every emitted score stays exact.
 
-``crossover`` mode: the driver-local linker beside the distributed one on
-the same vocabulary, the evidence for where LOCAL_MAX_VOCAB sits. Each
-vocabulary is linked twice by build_linking_tables, once by default (local
-below the tier) and once with the local path switched off, and reports
-each leg's wall time, the peak RSS of the Python driver and of the JVM
-during the leg, and whether both legs gave the same edges. Vocabularies:
-datagen corpora at vocab_scale=20000 (``--convs``) and this script's Zipf
-vocabulary (``--zipf``, one MATERIAL mention per norm, no abbreviations).
+``crossover`` mode: the two ways build_linking_tables scores its pairs,
+side by side on the same vocabulary under its one driver-side cascade
+(``oracle.link_vocabulary``), the evidence for where LOCAL_MAX_VOCAB
+sits. Each vocabulary is linked twice, once by default (the driver's
+one-block kernel below the tier) and once with LOCAL_MAX_VOCAB = 0 (the
+block-pair stage), and reports each leg's wall time, whether its pairs
+went through the block-pair stage, the peak RSS of the Python driver and
+of the JVM during the leg, and whether both legs gave the same edges.
+Vocabularies: datagen corpora at vocab_scale=20000 (``--convs``) and this
+script's Zipf vocabulary (``--zipf``, one MATERIAL mention per norm, no
+abbreviations).
 
 Run serially (no concurrent Spark jobs — BENCH.md JVM-bandwidth note).
 
@@ -100,11 +103,13 @@ def _peak_rss_mb(pid) -> float:
 
 
 def crossover_leg(spark, extracted, local: bool) -> dict:
-    """One build_linking_tables run, timed until its tables exist (both
-    paths return materialized tables), with the driver's peak RSS."""
+    """One build_linking_tables run, timed until its tables exist (it
+    returns local relations), with the driver's peak RSS. ``local`` keeps
+    the default tier; otherwise the block-pair stage scores the pairs."""
     pids = {"py": os.getpid(), "jvm": spark.sparkContext._gateway.proc.pid}
     saved = linking.LOCAL_MAX_VOCAB
-    linking.LOCAL_MAX_VOCAB = saved if local else 0
+    tier = saved if local else 0
+    linking.LOCAL_MAX_VOCAB = tier
     try:
         for pid in pids.values():
             _peak_rss_reset(pid)
@@ -116,7 +121,7 @@ def crossover_leg(spark, extracted, local: bool) -> dict:
     edges = {(r["src"], r["dst"]) for r in tables.edges.collect()}
     return {
         "leg": "local" if local else "distributed",
-        "ran_local": tables.edges.isLocal(),
+        "block_pairs": tables.n_norms > tier,
         "n_norms": tables.n_norms,
         "wall_s": round(wall, 2),
         **{f"{k}_peak_rss_mb": _peak_rss_mb(pid) for k, pid in pids.items()},

@@ -6,8 +6,11 @@ extraction -> build_linking_tables, and reports unique linkable norms, the
 AUTO df-cap the similarity join engaged, edge counts, and stage walls —
 the evidence that the linking path handles a corpus whose vocabulary looks
 like real transcripts (tens of thousands of distinct entities) rather than
-a recycled toy pool. ``linking_local`` says which path ran: driver-local
-or distributed. Stage C runs on the same tables: ``n_nodes``,
+a recycled toy pool. ``block_pairs`` says where the pairs were scored:
+on the driver (up to LOCAL_MAX_VOCAB norms) or in the block-pair stage.
+``edges_md5`` is the md5 of the sorted ``src<TAB>dst`` edge lines joined
+by newlines, the form the scale legs' edge hashes are quoted in. Stage C runs
+on the same tables: ``n_nodes``,
 ``components_local`` (driver union-find, or the distributed star rounds)
 and ``t_components_s`` (``connected_components`` plus a count).
 
@@ -17,6 +20,7 @@ Run serially (no concurrent Spark jobs). Usage:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -32,12 +36,9 @@ from named_entity_algorithm_project_spark.datagen import (
     planted_hard_pairs,
     planted_pair_edge_stats,
 )
-from named_entity_algorithm_project_spark.operators import components
+from named_entity_algorithm_project_spark.operators import components, linking
 from named_entity_algorithm_project_spark.operators.extract import (
     extract_combined,
-)
-from named_entity_algorithm_project_spark.operators.linking import (
-    build_linking_tables,
 )
 from named_entity_algorithm_project_spark.session import get_spark
 
@@ -68,13 +69,15 @@ def main():
         extracted = extract_combined(transcripts).localCheckpoint(eager=True)
         t_extract = time.time() - t0
         t0 = time.time()
-        linking = build_linking_tables(extracted)
-        n_edges = linking.edges.count()
+        tables = linking.build_linking_tables(extracted)
+        edge_lines = sorted(
+            f"{r['src']}\t{r['dst']}" for r in tables.edges.collect()
+        )
         t_link = time.time() - t0
-        n_nodes = linking.nodes.count()
+        n_nodes = tables.nodes.count()
         n_star = len(star_calls)
         t0 = time.time()
-        components.connected_components(linking.nodes, linking.edges).count()
+        components.connected_components(tables.nodes, tables.edges).count()
         t_components = time.time() - t0
 
         # planted-pair QUALITY under the engaged cap (VERDICT r3 item 2):
@@ -82,23 +85,24 @@ def main():
         # exist in the extracted vocabulary, how many did the gated
         # similarity join actually connect with a direct edge?
         m_present, m_hit = planted_pair_edge_stats(
-            spark, linking.norms, linking.edges, planted_alias_pairs(scale)
+            spark, tables.norms, tables.edges, planted_alias_pairs(scale)
         )
         h_present, h_hit = planted_pair_edge_stats(
-            spark, linking.norms, linking.edges, planted_hard_pairs(scale)
+            spark, tables.norms, tables.edges, planted_hard_pairs(scale)
         )
         print(
             json.dumps(
                 {
                     "n_convs": n_convs,
                     "vocab_scale": scale,
-                    "n_norms": linking.n_norms,
-                    # which path ran: driver-local (uncapped tfidf up to
-                    # LOCAL_MAX_VOCAB norms) or distributed
-                    "linking_local": linking.edges.isLocal(),
-                    "auto_df_cap": linking.candidate_max_df,
-                    "n_edges": n_edges,
-                    "base_threshold": linking.base_threshold,
+                    "n_norms": tables.n_norms,
+                    "block_pairs": tables.n_norms > linking.LOCAL_MAX_VOCAB,
+                    "auto_df_cap": tables.candidate_max_df,
+                    "n_edges": len(edge_lines),
+                    "edges_md5": hashlib.md5(
+                        "\n".join(edge_lines).encode()
+                    ).hexdigest(),
+                    "base_threshold": tables.base_threshold,
                     "t_extract_s": round(t_extract, 1),
                     "t_link_s": round(t_link, 1),
                     "n_nodes": n_nodes,

@@ -37,6 +37,44 @@ def test_char_wb_ngrams_matches_sklearn_semantics():
     assert char_wb_ngrams("") == []
 
 
+def test_tfidf_vectors_hand_derived():
+    """The TF-IDF formula pinned by hand-derived literals (sklearn's
+    documented TfidfVectorizer(char_wb, 3-5) semantics: raw tf, smooth idf
+    ln((1+N)/(1+df)) + 1, L2-normalised rows), so it is checked where
+    sklearn is not installed.
+
+    Vocabulary "ab", "ab ac", "ad" (N = 3). A 2-char token padded to 4
+    chars emits exactly three grams, each once: A = {" ab", "ab ", " ab "},
+    C = {" ac", "ac ", " ac "}, D = {" ad", "ad ", " ad "}. So "ab" = A,
+    "ab ac" = A + C, "ad" = D, with df(A) = 2 and df(C) = df(D) = 1:
+
+      idf_A = ln(4/3) + 1 = 1.2876820724517808
+      idf_C = ln(4/2) + 1 = 1.6931471805599454
+      "ab ac": w_A = idf_A / sqrt(3·idf_A² + 3·idf_C²) = 0.3494981241087058
+               w_C = idf_C / sqrt(3·idf_A² + 3·idf_C²) = 0.45954803293870056
+      "ab":    w_A = 1 / sqrt(3) = 0.5773502691896258
+      cos("ab", "ab ac") = 3 · w_A("ab") · w_A("ab ac")
+                         = idf_A / sqrt(idf_A² + idf_C²) = 0.6053485081062916
+    """
+    ab, ab_ac, ad = tfidf_vectors(["ab", "ab ac", "ad"])
+    grams_a, grams_c = [" ab", "ab ", " ab "], [" ac", "ac ", " ac "]
+    assert list(ab) == grams_a and list(ab_ac) == grams_a + grams_c
+    # the smooth idf, read back as the ratio of two weights of one row
+    assert ab_ac[" ac"] / ab_ac[" ab"] == pytest.approx(
+        1.6931471805599454 / 1.2876820724517808, abs=1e-12
+    )
+    for g in grams_a:
+        assert ab[g] == pytest.approx(0.5773502691896258, abs=1e-12)
+        assert ab_ac[g] == pytest.approx(0.3494981241087058, abs=1e-12)
+    for g in grams_c:
+        assert ab_ac[g] == pytest.approx(0.45954803293870056, abs=1e-12)
+    assert set(ad) == {" ad", "ad ", " ad "}
+    # the one pair sharing a gram, by the naive scorer and the kernel
+    want = pytest.approx({("ab", "ab ac"): 0.6053485081062916}, abs=1e-12)
+    assert _tfidf_cosine_pairs(["ab", "ab ac", "ad"]) == want
+    assert tfidf_prefix_pairs(["ab", "ab ac", "ad"], gate_floor=0.5) == want
+
+
 def test_char_wb_ngrams_col_parity(spark):
     """The pure-Column n-gram generator must reproduce char_wb_ngrams
     exactly (same list, same order, same duplicates) — including the
@@ -199,11 +237,12 @@ def test_candidate_max_df_blocking_is_subset(spark, monkeypatch):
     assert blocked <= exact
 
 
-def test_local_path_parity(spark, monkeypatch):
-    """The driver-local small-vocab linking path (collected fused table +
-    python gate cascade) must produce the identical LinkingTables as the
-    distributed cascade: same (norm, freq, effective-types) rows, same
-    gated edge set, same node universe, same base threshold."""
+def test_local_path_parity(spark, monkeypatch, block_pair_runs):
+    """Scoring the pairs on the driver (the default up to LOCAL_MAX_VOCAB)
+    and in the block-pair stage (forced with LOCAL_MAX_VOCAB = 0) must give
+    identical LinkingTables under the one cascade: same (norm, freq,
+    effective-types) rows, same gated edge set, same node universe, same
+    base threshold."""
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
         generate_rows,
@@ -222,11 +261,14 @@ def test_local_path_parity(spark, monkeypatch):
         df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
         extracted = extract_combined(df).localCheckpoint(eager=True)
 
+        block_pair_runs.clear()
         with monkeypatch.context() as m:
             m.setattr(linking, "LOCAL_MAX_VOCAB", 0)
             dist = linking.build_linking_tables(extracted)
+        assert block_pair_runs == [dist.n_norms]
         loc = linking.build_linking_tables(extracted)
-        assert loc.norms.isLocal() and not dist.norms.isLocal()
+        # the default leg scored its pairs on the driver
+        assert block_pair_runs == [dist.n_norms]
         if vocab_scale > 1:
             assert loc.n_norms > 5_000, loc.n_norms
         assert loc.candidate_max_df is None and dist.candidate_max_df is None
@@ -246,41 +288,6 @@ def test_local_path_parity(spark, monkeypatch):
         assert {r[0] for r in loc.nodes.collect()} == {
             r[0] for r in dist.nodes.collect()
         }, (n_convs, seed)
-
-
-def test_fused_row_overflow_links_distributed(spark, monkeypatch):
-    """A fused table over LOCAL_FUSED_ROW_CAP rows leaves the driver-local
-    path even when its vocabulary is under LOCAL_MAX_VOCAB: the build is
-    distributed and its tables equal the default local build's."""
-    from named_entity_algorithm_project_spark.datagen import (
-        TRANSCRIPTS_SCHEMA,
-        generate_rows,
-    )
-    from named_entity_algorithm_project_spark.operators.extract import (
-        extract_combined,
-    )
-    from named_entity_algorithm_project_spark.operators import linking
-
-    rows = generate_rows(n_convs=60, seed=17)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    extracted = extract_combined(df).localCheckpoint(eager=True)
-
-    def tables(lt):
-        return (
-            {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()},
-            {(r["src"], r["dst"]) for r in lt.edges.collect()},
-            {r["norm"] for r in lt.nodes.collect()},
-        )
-
-    loc = linking.build_linking_tables(extracted)
-    monkeypatch.setattr(linking, "LOCAL_FUSED_ROW_CAP", 10)
-    over = linking.build_linking_tables(extracted)
-    assert loc.edges.isLocal() and not over.edges.isLocal()
-    assert 10 < loc.n_norms <= linking.LOCAL_MAX_VOCAB
-    want = tables(loc)
-    assert want[1], "the corpus must link some pair"
-    assert tables(over) == want
-    assert over.base_threshold == loc.base_threshold
 
 
 def test_auto_blocking_recall():

@@ -2,9 +2,10 @@
 for both scorers.
 
 The pandas oracle (``oracle_vocabulary`` + ``link_vocabulary``), the
-driver-local linker and the distributed linker (block-pair stage) must produce the
-same (norm, freq, effective types) rows, the same gated edge set and the
-same component node set, with either scorer. The generator datagen never
+Spark linker scoring its pairs on the driver, and the Spark linker
+scoring them in the block-pair stage must produce the same (norm, freq,
+effective types) rows, the same gated edge set and the same component
+node set, with either scorer. The generator datagen never
 produces the inputs that separate them, so the vocabularies here are built directly, seeded, with:
 whitespace variants (edge and inner tabs/newlines, NBSP), empty,
 lower-case, padded and ``UNKNOWN`` types, protected pairs, abbreviation
@@ -111,8 +112,9 @@ def _oracle_tables(mentions, abbrevs, score_source):
         pd.DataFrame(abbrevs, columns=["abbr", "expansion"]),
     )
     base = compute_base_threshold(sum(freq.values()))
+    scorer = ORACLE_SCORERS[score_source]
     eff_types, edges, nodes = link_vocabulary(
-        freq, types, abbr_pairs, base, ORACLE_SCORERS[score_source]
+        freq, types, abbr_pairs, base, lambda norms, _types: scorer(norms)
     )
     norms = {(n, freq[n], tuple(eff_types[n])) for n in freq}
     return norms, edges, nodes
@@ -120,15 +122,12 @@ def _oracle_tables(mentions, abbrevs, score_source):
 
 def _spark_tables(extracted, score_source):
     """Linking tables from a Stage-A frame, as (norms, edges, nodes)
-    sets, plus the base threshold and which of the three tables are
-    JVM-local relations (all of them when the driver-local path ran, empty
-    tables included)."""
+    sets, plus the base threshold."""
     lt = linking.build_linking_tables(extracted, score_source)
     norms = {(r["norm"], r["freq"], tuple(r["types"])) for r in lt.norms.collect()}
     edges = {(r["src"], r["dst"]) for r in lt.edges.collect()}
     nodes = {r["norm"] for r in lt.nodes.collect()}
-    tables = (lt.norms, lt.edges, lt.nodes)
-    return (norms, edges, nodes), lt.base_threshold, [t.isLocal() for t in tables]
+    return (norms, edges, nodes), lt.base_threshold
 
 
 def _frame(spark, mentions, abbrevs):
@@ -145,8 +144,9 @@ def _frame(spark, mentions, abbrevs):
     )
 
 
-def _build_both_paths(spark, monkeypatch, score_source):
-    """(vocabularies, local builds, distributed builds) for one scorer."""
+def _build_both_paths(spark, monkeypatch, block_pair_runs, score_source):
+    """(vocabularies, driver-scored builds, block-pair-scored builds) for
+    one scorer."""
     for needle, alias in EXTRA_ALIASES.items():
         monkeypatch.setitem(DOMAIN_ALIAS_SUBSTRINGS, needle, alias)
     vocabularies = [_vocabulary(seed) for seed in range(N_VOCABULARIES)]
@@ -156,22 +156,27 @@ def _build_both_paths(spark, monkeypatch, score_source):
     build = partial(_spark_tables, score_source=score_source)
     # a small linking run is mostly Spark job latency: building several
     # vocabularies at once overlaps it. Each map is drained before the
-    # local-path gate is switched, so no build sees the other setting.
+    # scoring tier is switched, so no build sees the other setting.
     with ThreadPoolExecutor(max_workers=4) as pool:
         local = list(pool.map(build, inputs, timeout=600))
+        # the default leg scored every vocabulary on the driver
+        assert block_pair_runs == []
         monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
         dist = list(pool.map(build, inputs, timeout=600))
+    # the forced leg ran the block-pair stage once per vocabulary
+    assert len(block_pair_runs) == len(inputs) and all(block_pair_runs)
     return vocabularies, local, dist
 
 
-def test_oracle_local_distributed_agree(spark, monkeypatch):
-    vocabularies, local, dist = _build_both_paths(spark, monkeypatch, "tfidf")
+def test_oracle_local_distributed_agree(spark, monkeypatch, block_pair_runs):
+    vocabularies, local, dist = _build_both_paths(
+        spark, monkeypatch, block_pair_runs, "tfidf"
+    )
     n_edges = 0
     for seed, (mentions, abbrevs) in enumerate(vocabularies):
         expected = _oracle_tables(mentions, abbrevs, "tfidf")
-        got_local, base_local, ran_local = local[seed]
-        got_dist, base_dist, ran_dist = dist[seed]
-        assert all(ran_local) and not ran_dist[0], seed
+        got_local, base_local = local[seed]
+        got_dist, base_dist = dist[seed]
         for name, want, table_local, table_dist in zip(
             ("norms", "edges", "nodes"), expected, got_local, got_dist
         ):
@@ -185,14 +190,15 @@ def test_oracle_local_distributed_agree(spark, monkeypatch):
     assert local_df(spark, [], "src string, dst string").isLocal()
 
 
-def test_semantic_oracle_local_distributed_agree(spark, monkeypatch):
-    vocabularies, local, dist = _build_both_paths(spark, monkeypatch, "semantic")
+def test_semantic_oracle_local_distributed_agree(spark, monkeypatch, block_pair_runs):
+    vocabularies, local, dist = _build_both_paths(
+        spark, monkeypatch, block_pair_runs, "semantic"
+    )
     n_scorer_diffs = 0
     for seed, (mentions, abbrevs) in enumerate(vocabularies):
         expected = _oracle_tables(mentions, abbrevs, "semantic")
-        got_local, base_local, ran_local = local[seed]
-        got_dist, base_dist, ran_dist = dist[seed]
-        assert all(ran_local) and not ran_dist[0], seed
+        got_local, base_local = local[seed]
+        got_dist, base_dist = dist[seed]
         for name, want, table_local, table_dist in zip(
             ("norms", "edges", "nodes"), expected, got_local, got_dist
         ):

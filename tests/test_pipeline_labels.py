@@ -10,7 +10,6 @@ from named_entity_algorithm_project_spark.datagen import (
     TRANSCRIPTS_SCHEMA,
     generate_rows,
 )
-from named_entity_algorithm_project_spark.operators import linking
 
 
 def test_pool_thread_jobs_carry_phase_label(spark, tmp_path, monkeypatch):
@@ -36,8 +35,6 @@ def test_pool_thread_jobs_carry_phase_label(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(type(df), "localCheckpoint", checkpoint)
     monkeypatch.setattr(pipeline, "write_table", write_table)
-    # the distributed linker is the one that checkpoints from a pool
-    monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
     pipeline.run_pipeline(
         spark,
         df,
@@ -45,11 +42,9 @@ def test_pool_thread_jobs_carry_phase_label(spark, tmp_path, monkeypatch):
         config=pipeline.PipelineConfig(n_buckets=2),
         resume=False,
     )
-    # linking's edges and nodes checkpoints (the norms table is
-    # checkpointed on the calling thread, before the block-pair stage reads
-    # it) + Stage E's three small writes
+    # Stage E's three small writes
     assert sorted(what for what, _ in pooled) == [
-        "alias_groups", "canonical_map", "checkpoint", "checkpoint", "metrics",
+        "alias_groups", "canonical_map", "metrics",
     ]
     for what, label in pooled:
         assert label is not None and label.startswith("kg:"), (what, label)

@@ -92,11 +92,13 @@ def test_semantic_exact_matches_numpy_oracle():
     assert embedding_pairs([], gate_floor=0.82) == {}
 
 
-def test_semantic_end_to_end_canonical_parity(spark, monkeypatch):
+def test_semantic_end_to_end_canonical_parity(
+    spark, monkeypatch, block_pair_runs
+):
     """Full Stage B+C with score_source=semantic vs the pandas oracle
     running the SAME gates over the numpy N² cosine matrix. The vocabulary
-    is below the local tier, so the driver-local linker runs; the forced
-    distributed (block-pair) linker finds the same edges."""
+    is below the local tier, so the driver scores its pairs; scoring them
+    in the block-pair stage (forced) finds the same edges."""
     from named_entity_algorithm_project_spark import oracle as okg
     from named_entity_algorithm_project_spark.datagen import (
         TRANSCRIPTS_SCHEMA,
@@ -142,7 +144,7 @@ def test_semantic_end_to_end_canonical_parity(spark, monkeypatch):
 
     monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
     dist = linking.build_linking_tables(extracted, score_source="semantic")
-    assert not dist.edges.isLocal()
+    assert block_pair_runs == [dist.n_norms]
     edges = {(r["src"], r["dst"]) for r in tables.edges.collect()}
     dist_edges = {(r["src"], r["dst"]) for r in dist.edges.collect()}
     assert dist_edges == edges, dist_edges ^ edges
@@ -258,9 +260,12 @@ def test_block_pairs_run_one_per_task(spark):
         )
 
 
-def test_distributed_semantic_links_what_the_driver_links(spark, monkeypatch):
+def test_distributed_semantic_links_what_the_driver_links(
+    spark, monkeypatch, block_pair_runs
+):
     """4,000 Zipf norms (scripts/linking_bench.build_vocab, seed 5): the
-    forced-distributed semantic linker gates the same edges as the driver.
+    semantic linker gates the same edges when the block-pair stage scores
+    its pairs (forced) as when the driver does.
     The size is chosen so an approximate scorer shows: a 10x6 banded LSH
     drops 2 of the 60 gated edges here."""
     from named_entity_algorithm_project_spark.operators import linking
@@ -273,9 +278,10 @@ def test_distributed_semantic_links_what_the_driver_links(spark, monkeypatch):
         " abbreviations: array<struct<abbr: string, expansion: string>>>",
     )
     local = linking.build_linking_tables(frame, score_source="semantic")
+    assert block_pair_runs == []
     monkeypatch.setattr(linking, "LOCAL_MAX_VOCAB", 0)
     dist = linking.build_linking_tables(frame, score_source="semantic")
-    assert local.edges.isLocal() and not dist.edges.isLocal()
+    assert block_pair_runs == [dist.n_norms]
     want = {(r["src"], r["dst"]) for r in local.edges.collect()}
     got = {(r["src"], r["dst"]) for r in dist.edges.collect()}
     assert want and got == want, (len(want), got ^ want)
